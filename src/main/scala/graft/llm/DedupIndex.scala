@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
+import graft.store.{StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,8 +41,7 @@ import org.apache.spark.sql.functions._
   *     candidate ids.
   *   - `tombstones/` — merge-on-read deletes ([[delete]]); every probe
   *     anti-joins it, [[compact]] folds it away rewriting ONLY affected
-  *     partitions (stage-and-swap, crash-recoverable — the
-  *     [[VectorIndex]] pattern).
+  *     partitions (crash-safe under [[graft.store.StageSwap]]).
   *   - `gramdf/` — incrementally-maintained per-gram document
   *     frequency (base + signed per-batch deltas, merge-on-read like
   *     the tombstones, folded at maintenance), so the hot-gram refresh
@@ -335,16 +335,15 @@ object DedupIndex {
   private def foldGramDf(spark: SparkSession, dir: String): Unit = {
     if (!hasGramDf(spark, dir) ||
       !graft.util.Fs.exists(spark, gramDfDelta(dir))) return
-    val staging = s"$dir/gramdf/base_staging"
     graft.util.IngestMarker.write(spark, dir, "gramdf delta fold in flight")
     // the fold rewrites to the BUCKET-PARTITIONED layout (upgrading a
     // legacy unpartitioned base in passing), PRESERVING the store's
     // recorded gramdf bucket count
     val nb = gramDfBucketsOf(spark, dir)
-    writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L),
-      staging, nb)
-    graft.util.Fs.rmTree(spark, gramDfBase(dir))
-    graft.util.Fs.rename(spark, staging, gramDfBase(dir)): Unit
+    StageSwap.replace(spark, Table(gramDfBase(dir))) { staging =>
+      writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L),
+        staging, nb)
+    }
     writeGramDfLayout(spark, dir, nb)
     graft.util.Fs.rmTree(spark, gramDfDelta(dir))
     graft.util.IngestMarker.clear(spark, dir)
@@ -372,6 +371,10 @@ object DedupIndex {
 
   private def readMeta(spark: SparkSession, dir: String) =
     graft.util.Sidecar.readHead(spark, s"$dir/meta")
+
+  private def prefixT(dir: String) = Table(s"$dir/prefix", "bucket")
+  private def setsT(dir: String) = Table(s"$dir/sets", "sbucket")
+  private def tombs(dir: String) = Tombstones(dir, "nid")
 
   /** Per-bucket prefix-row STATISTICS (`prefstats/`) — the
     * [[graft.plans.RangeJoinNative.rangeJoinChosen]] pattern applied
@@ -423,7 +426,7 @@ object DedupIndex {
 
   /** (total prefix rows, rows appended since last maintenance), or
     * None when the table is absent/unreadable (legacy store). */
-  private def statsTotals(spark: SparkSession,
+  private[llm] def statsTotals(spark: SparkSession,
       dir: String): Option[(Long, Long)] =
     if (!graft.util.Fs.exists(spark, statsPath(dir))) None
     else try {
@@ -446,6 +449,21 @@ object DedupIndex {
     graft.util.Sidecar.write(spark, statsPath(dir), statsSchema,
       counts.map { case (b, n) => Seq[Any](b, n, "maint") })
   }
+
+  /** Every [[append]] adds one prefstats file, and every probe reads
+    * them all; past [[GramDfFoldFiles]] files they fold to one file of
+    * one row per (bucket, src) holding the summed count, so
+    * [[statsTotals]] and the probe router's per-bucket sums read the
+    * same. Runs inside the append's marker window. */
+  private def maybeFoldStats(spark: SparkSession, dir: String): Unit =
+    if (graft.util.Fs.dataFileCount(spark, statsPath(dir)) > GramDfFoldFiles) {
+      val rows = readStatsRows(spark, dir)
+        .groupBy { case (b, _, src) => (b, src) }.toSeq.sortBy(_._1)
+        .map { case ((b, src), rs) => Seq[Any](b, rs.map(_._2).sum, src) }
+      StageSwap.replace(spark, Table(statsPath(dir))) { staging =>
+        graft.util.Sidecar.write(spark, staging, statsSchema, rows)
+      }
+    }
 
   /** The store tables' fixed schemas ([[Dedup.shingleHashes]] casts the
     * id to long, so these hold for every store regardless of the
@@ -725,15 +743,9 @@ object DedupIndex {
     * pruning, plan-asserted in PlanGuardSpec) with tombstoned docs
     * anti-joined out ABOVE the pruned scan (merge-on-read). */
   private[llm] def storePrefixScan(spark: SparkSession, dir: String,
-      probeBuckets: Seq[Int], idCol: String): DataFrame = {
-    val tombPath = s"$dir/tombstones"
-    val rawPref = readPrefixTable(spark, dir, idCol)
-      .filter(col("bucket").isin(probeBuckets.map(Int.box): _*))
-    if (graft.util.Fs.exists(spark, tombPath))
-      rawPref.join(spark.read.parquet(tombPath)
-        .select(col("nid").as(idCol)), Seq(idCol), "left_anti")
-    else rawPref
-  }
+      probeBuckets: Seq[Int], idCol: String): DataFrame =
+    tombs(dir).live(spark, readPrefixTable(spark, dir, idCol)
+      .filter(col("bucket").isin(probeBuckets.map(Int.box): _*)), idCol)
 
   /** Kept batch ids after dedup against the live store and the batch
     * itself — [[Dedup.incrementalDedup]] semantics, O(batch) cost. */
@@ -795,12 +807,13 @@ object DedupIndex {
     // store WITHOUT the table gets a one-time full rewrite instead — a
     // delta-only table would under-count the base rows and could
     // mis-route a huge store to the broadcast join.
-    if (graft.util.Fs.exists(spark, statsPath(dir)))
+    if (graft.util.Fs.exists(spark, statsPath(dir))) {
       graft.util.Sidecar.append(spark, statsPath(dir), statsSchema,
         prefS.groupBy("bucket").agg(count(lit(1)).as("n_rows"))
           .collect().map(r => Seq[Any](r.getInt(0), r.getLong(1), "append"))
           .toSeq)
-    else rewriteStats(spark, dir)
+      maybeFoldStats(spark, dir)
+    } else rewriteStats(spark, dir)
     // df DELTA: one tiny aggregate of the survivors' grams, inside the
     // same marker window as the data writes. A legacy store without
     // gramdf/ skips it — the refresh's legacy path recomputes and
@@ -846,7 +859,7 @@ object DedupIndex {
     val audit = deleted.agg(
       count(lit(1)),
       count(col(textCol)),
-      countDistinct(col(idCol)),
+      countDistinct(col(idCol).cast("long")),
       expr(s"bit_xor(CASE WHEN $textCol IS NOT NULL " +
         s"THEN xxhash64($idCol, $textCol) END)")).head()
     val nDel = audit.getLong(0)
@@ -861,14 +874,13 @@ object DedupIndex {
       Seq("nid"), "left_semi").count()
     require(nStored == nDel,
       s"${nDel - nStored} of $nDel ${idCol}s are not in the index at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(spark.read.parquet(s"$dir/tombstones")
-        .select("nid"), Seq("nid"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel ${idCol}s are already tombstoned (double delete)")
-    }
+    tombs(dir).requireFresh(spark, ids, nDel, s"${idCol}s")
     val dn = nIdx
     val dsum = if (audit.isNullAt(3)) 0L else audit.getLong(3)
+    // planned (not run) before the marker: a non-integral id column
+    // fails here, before the first write, instead of mid-window
+    val delGrams = Dedup.shingleHashes(indexable(deleted, idCol, textCol),
+      idCol, textCol)
     // tombstones, the NEGATIVE df delta, and the meta commit are one
     // atomicity domain now that gramdf/ must stay exact (a crash
     // between them would leave df overstated and the fingerprint
@@ -876,11 +888,9 @@ object DedupIndex {
     // a crash fails later ops LOUD and ensure() rebuilds.
     graft.util.IngestMarker.write(spark, dir,
       s"delete of $nDel docs in flight")
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
+    tombs(dir).append(ids)
     if (hasGramDf(spark, dir))
-      writeGramDfDelta(spark, dir,
-        Dedup.shingleHashes(indexable(deleted, idCol, textCol),
-          idCol, textCol), sign = -1)
+      writeGramDfDelta(spark, dir, delGrams, sign = -1)
     writeMeta(spark, dir, meta.getAs[Long]("n_docs") - dn,
       meta.getAs[Long]("checksum") ^ dsum, meta.getAs[Long]("max_id"),
       meta.getAs[Double]("threshold"), meta.getAs[Int]("n_buckets"),
@@ -890,40 +900,16 @@ object DedupIndex {
   }
 
   /** Fold tombstones into the store: rewrite ONLY the prefix buckets
-    * and set sbuckets that contain deleted rows — stage-and-swap with
-    * crash recovery, the [[VectorIndex.compact]] shape applied to two
-    * partitioned tables. Tombstones drop LAST, so merge-on-read stays
-    * correct through any crash; a staged partition whose live directory
-    * is missing (crash between rm and rename) is the only copy of its
-    * survivors and is renamed in before anything else. */
-  /** Finish any crashed stage-and-swap ([[compact]] or
-    * [[compactFiles]] — they share staging paths, so either pass
-    * recovers the other's crash): a staged partition whose live
-    * directory is missing is the only copy of its rows and is renamed
-    * in; staged partitions whose live directory survived are stale
-    * duplicates and are discarded with the staging root. */
-  private def recoverStaging(spark: SparkSession, dir: String): Unit = {
-    def recover(staging: String, live: String, part: String): Unit = {
-      graft.util.Fs.listDirNames(spark, staging)
-        .filter(_.startsWith(s"$part="))
-        .foreach { d =>
-          if (!graft.util.Fs.exists(spark, s"$live/$d"))
-            graft.util.Fs.rename(spark, s"$staging/$d", s"$live/$d"): Unit
-        }
-      graft.util.Fs.rmTree(spark, staging)
-    }
-    recover(s"$dir/prefix_staging", s"$dir/prefix", "bucket")
-    recover(s"$dir/sets_staging", s"$dir/sets", "sbucket")
-  }
-
+    * and set sbuckets that contain deleted rows, crash-safe under the
+    * [[graft.store.StageSwap]] contract (its recovery runs first, and
+    * tombstones drop LAST). Also the heavyweight gramdf commit: deltas
+    * are evaluated and folded back to one exact base. */
   def compact(spark: SparkSession, dir: String): Unit = {
     graft.util.StoreLease.withLease(spark, dir, "compact") {
     graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
     require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
       s"dedup index at $dir has an unexpected format — rebuild via ensure()")
-    val prefStaging = s"$dir/prefix_staging"
-    val setsStaging = s"$dir/sets_staging"
-    recoverStaging(spark, dir)
+    StageSwap.recover(spark, prefixT(dir), setsT(dir))
     // gramdf maintenance first (compact is the heavyweight commit):
     // when unfolded deltas exist, evaluate — the cheap candidate tick
     // unless deletes lowered the threshold — then FORCE-fold them back
@@ -939,45 +925,14 @@ object DedupIndex {
       refreshHotGramsLocked(spark, dir): Unit
       maybeFoldGramDf(spark, dir, force = true)
     }
-    if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
-    val tomb = spark.read.parquet(s"$dir/tombstones").select(col("nid"))
+    val tomb = tombs(dir)
+    if (!tomb.exists(spark)) return
     val idCol = spark.read.parquet(s"$dir/sets").columns
       .find(c => c != "sh" && c != "sbucket").get
-    val rawPref = spark.read.parquet(s"$dir/prefix")
-    val rawSets = spark.read.parquet(s"$dir/sets")
-    val affB = rawPref.join(tomb.withColumnRenamed("nid", idCol),
-        Seq(idCol), "left_semi")
-      .select("bucket").distinct().collect().map(_.getInt(0))
-    val affS = rawSets.join(tomb.withColumnRenamed("nid", idCol),
-        Seq(idCol), "left_semi")
-      .select("sbucket").distinct().collect().map(_.getInt(0))
-    if (affB.nonEmpty) {
-      rawPref.filter(col("bucket").isin(affB.map(Int.box).toSeq: _*))
-        .join(tomb.withColumnRenamed("nid", idCol), Seq(idCol), "left_anti")
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(prefStaging)
-      affB.foreach { b =>
-        graft.util.Fs.rmTree(spark, s"$dir/prefix/bucket=$b")
-        if (graft.util.Fs.exists(spark, s"$prefStaging/bucket=$b"))
-          graft.util.Fs.rename(spark, s"$prefStaging/bucket=$b",
-            s"$dir/prefix/bucket=$b"): Unit
-      }
-      graft.util.Fs.rmTree(spark, prefStaging)
-    }
-    if (affS.nonEmpty) {
-      rawSets.filter(col("sbucket").isin(affS.map(Int.box).toSeq: _*))
-        .join(tomb.withColumnRenamed("nid", idCol), Seq(idCol), "left_anti")
-        .repartition(col("sbucket"))
-        .write.mode("overwrite").partitionBy("sbucket").parquet(setsStaging)
-      affS.foreach { s =>
-        graft.util.Fs.rmTree(spark, s"$dir/sets/sbucket=$s")
-        if (graft.util.Fs.exists(spark, s"$setsStaging/sbucket=$s"))
-          graft.util.Fs.rename(spark, s"$setsStaging/sbucket=$s",
-            s"$dir/sets/sbucket=$s"): Unit
-      }
-      graft.util.Fs.rmTree(spark, setsStaging)
-    }
-    graft.util.Fs.rmTree(spark, s"$dir/tombstones")
+    tomb.foldInto(spark, prefixT(dir), readPrefixTable(spark, dir, idCol),
+      idCol)
+    tomb.foldInto(spark, setsT(dir), readSets(spark, dir, idCol), idCol)
+    tomb.drop(spark)
     rewriteStats(spark, dir) // folded rows leave the stats too
     }
   }
@@ -988,15 +943,13 @@ object DedupIndex {
     * accumulates O(K) files per bucket and probe SCAN TASKS grow with
     * history rather than data (measured:
     * `graft.tools.StoreHistoryBench`, SCALE.md append-history curve).
-    * This pass rewrites ONLY partition directories whose data-file
-    * count exceeds `maxFiles`, merging each back to one task's output
-    * (one file per directory at probe-batch row counts;
-    * `maxRecordsPerFile` re-splits a genuinely huge bucket so a merge
-    * can never produce an unsplittable monster file). Stage-and-swap
-    * through the SAME staging paths as [[compact]], so either pass
-    * recovers the other's crash; rows pass through verbatim —
-    * tombstones are deliberately NOT folded here, the two maintenance
-    * costs stay independently schedulable.
+    * This pass rewrites ONLY the prefix/sets partition directories
+    * whose data-file count exceeds `maxFiles`
+    * ([[graft.store.StageSwap.mergeFiles]]: one task's output per
+    * directory, `maxRecordsPerFile` re-splitting a genuinely huge
+    * bucket); rows pass through verbatim — tombstones are deliberately
+    * NOT folded here, the two maintenance costs stay independently
+    * schedulable. `refreshHot` runs the [[refreshHotGrams]] tick first.
     *
     * Trigger rule: run when the per-partition file count approaches
     * the store's append cadence budget — at one append per
@@ -1010,38 +963,14 @@ object DedupIndex {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
     require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
       s"dedup index at $dir has an unexpected format — rebuild via ensure()")
-    recoverStaging(spark, dir)
+    StageSwap.recover(spark, prefixT(dir), setsT(dir))
     // hot-gram drift maintenance rides the file-merge cadence (r14
     // verdict item 1): recutting affected docs' prefixes rewrites
     // whole buckets to one task's output anyway, so refresh-then-fold
     // never merges a bucket twice
     if (refreshHot) refreshHotGramsLocked(spark, dir): Unit
-    def fold(table: String, part: String): Unit = {
-      val live = s"$dir/$table"
-      val staging = s"$dir/${table}_staging"
-      val over = graft.util.Fs.listDirNames(spark, live)
-        .filter(_.startsWith(s"$part="))
-        .filter(d =>
-          graft.util.Fs.dataFileCount(spark, s"$live/$d") > maxFiles)
-        .map(_.stripPrefix(s"$part=").toInt)
-      if (over.nonEmpty) {
-        spark.read.parquet(live)
-          .filter(col(part).isin(over.map(Int.box): _*))
-          .repartition(col(part))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-          .partitionBy(part).parquet(staging)
-        over.foreach { v =>
-          graft.util.Fs.rmTree(spark, s"$live/$part=$v")
-          if (graft.util.Fs.exists(spark, s"$staging/$part=$v"))
-            graft.util.Fs.rename(spark, s"$staging/$part=$v",
-              s"$live/$part=$v"): Unit
-        }
-        graft.util.Fs.rmTree(spark, staging)
-      }
-    }
-    fold("prefix", "bucket")
-    fold("sets", "sbucket")
+    Seq(prefixT(dir), setsT(dir))
+      .foreach(StageSwap.mergeFiles(spark, _, maxFiles, maxRecordsPerFile))
     }
   }
 
@@ -1096,7 +1025,7 @@ object DedupIndex {
       graft.util.IngestMarker.requireAbsent(spark, dir, "refreshHotGrams")
       require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
         s"dedup index at $dir has an unexpected format — rebuild via ensure()")
-      recoverStaging(spark, dir)
+      StageSwap.recover(spark, prefixT(dir), setsT(dir))
       refreshHotGramsLocked(spark, dir, force)
     }
 
@@ -1126,14 +1055,8 @@ object DedupIndex {
     val nBuckets = meta.getAs[Int]("n_buckets")
     val idCol = spark.read.parquet(s"$dir/sets").columns
       .find(c => c != "sh" && c != "sbucket").get
-    val tombPath = s"$dir/tombstones"
-    val liveSets = {
-      val raw = readSets(spark, dir, idCol).select(col(idCol), col("sh"))
-      if (graft.util.Fs.exists(spark, tombPath))
-        raw.join(spark.read.parquet(tombPath)
-          .select(col("nid").as(idCol)), Seq(idCol), "left_anti")
-      else raw
-    }
+    val liveSets = tombs(dir).live(spark,
+      readSets(spark, dir, idCol).select(col(idCol), col("sh")), idCol)
     val tNow = hotThresholdFor(nDocs)
     // bounded collect: ≤ (grams/doc)/HotGramFraction newly-hot grams.
     // Three tiers, cheapest first (r15 verdict item 1 — the tick must
@@ -1244,28 +1167,16 @@ object DedupIndex {
       .localCheckpoint(eager = true)
     // bounded collects: ≤ nBuckets values each — the buckets holding
     // affected docs' OLD rows and those receiving their NEW rows
-    val oldB = readPrefixTable(spark, dir, idCol)
-      .join(affIds, Seq(idCol), "left_semi")
-      .select("bucket").distinct().collect().map(_.getInt(0))
-    val newB = newPref.select("bucket").distinct().collect().map(_.getInt(0))
-    val affB = (oldB ++ newB).distinct.toSeq
-    if (affB.nonEmpty) {
-      val staging = s"$dir/prefix_staging"
+    val prefix = prefixT(dir)
+    val affB = (StageSwap.leavesOf(prefix, readPrefixTable(spark, dir, idCol)
+        .join(affIds, Seq(idCol), "left_semi")) ++
+      StageSwap.leavesOf(prefix, newPref)).distinct
+    StageSwap.rewrite(spark, prefix,
       readPrefixTable(spark, dir, idCol)
-        .filter(col("bucket").isin(affB.map(Int.box): _*))
+        .filter(StageSwap.within(prefix, affB))
         .join(affIds, Seq(idCol), "left_anti")
-        .unionByName(newPref
-          .filter(col("bucket").isin(affB.map(Int.box): _*)))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-      affB.foreach { b =>
-        graft.util.Fs.rmTree(spark, s"$dir/prefix/bucket=$b")
-        if (graft.util.Fs.exists(spark, s"$staging/bucket=$b"))
-          graft.util.Fs.rename(spark, s"$staging/bucket=$b",
-            s"$dir/prefix/bucket=$b"): Unit
-      }
-      graft.util.Fs.rmTree(spark, staging)
-    }
+        .unionByName(newPref.filter(StageSwap.within(prefix, affB))),
+      affB)
     rewriteStats(spark, dir) // recut buckets + re-armed trigger
     graft.util.IngestMarker.clear(spark, dir)
     // promotion COMPLETE — only now may evalmeta advance (a crash
@@ -1301,12 +1212,11 @@ object DedupIndex {
     val hotFiles = graft.util.Fs.dataFileCount(spark, s"$dir/hotgrams")
     if ((force && hotFiles > 1) || hotFiles > GramDfFoldFiles) {
       val hot = readHotGramsArr(spark, dir)
-      val staging = s"$dir/hotgrams_staging"
       graft.util.IngestMarker.write(spark, dir, "hotgrams fold in flight")
-      graft.util.Sidecar.write(spark, staging, hotGramsSchema,
-        hot.toSeq.map(g => Seq[Any](g)))
-      graft.util.Fs.rmTree(spark, s"$dir/hotgrams")
-      graft.util.Fs.rename(spark, staging, s"$dir/hotgrams"): Unit
+      StageSwap.replace(spark, Table(s"$dir/hotgrams")) { staging =>
+        graft.util.Sidecar.write(spark, staging, hotGramsSchema,
+          hot.toSeq.map(g => Seq[Any](g)))
+      }
       graft.util.IngestMarker.clear(spark, dir)
       System.err.println(s"[DedupIndex] hotgrams at $dir folded to one " +
         s"file: ${hot.length} grams (broadcast-sized by the df lemma)")

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
+import graft.store.{StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -255,6 +256,10 @@ object GraphAnn {
       2 * m)
   }
 
+  private def edgesT(dir: String) = Table(s"$dir/edges")
+  private def nodesT(dir: String) = Table(s"$dir/nodes")
+  private def tombs(dir: String) = Tombstones(dir, "nid")
+
   private def fingerprint(corpus: DataFrame): (Long, Long) = {
     val r = corpus
       .agg(count(lit(1)), expr("bit_xor(xxhash64(vec_id, embedding))"))
@@ -266,15 +271,8 @@ object GraphAnn {
     * tombstoned node — a deleted node must vanish BOTH as a source
     * (its out-edges) and as a destination (its appearances in other
     * nodes' top-M), so the anti-join runs on both endpoints. */
-  def load(spark: SparkSession, dir: String): DataFrame = {
-    val edges = spark.read.parquet(s"$dir/edges")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val tomb = spark.read.parquet(s"$dir/tombstones")
-      edges
-        .join(tomb.select(col("nid").as("src")), Seq("src"), "left_anti")
-        .join(tomb.select(col("nid").as("dst")), Seq("dst"), "left_anti")
-    } else edges
-  }
+  def load(spark: SparkSession, dir: String): DataFrame =
+    tombs(dir).live(spark, spark.read.parquet(s"$dir/edges"), "src", "dst")
 
   /** Load the stored graph if its fingerprint matches `corpus`, else
     * (re)build and persist — v19's build-once contract. Since round 12
@@ -346,15 +344,9 @@ object GraphAnn {
       Seq("nid"), "left_semi").count()
     require(nMember == nDel,
       s"${nDel - nMember} of $nDel vec_ids are not indexed nodes at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(
-        spark.read.parquet(s"$dir/tombstones").select("nid"),
-        Seq("nid"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel vec_ids are already tombstoned (double delete)")
-    }
+    tombs(dir).requireFresh(spark, ids, nDel, "vec_ids")
     val (dn, dsum) = fingerprint(deleted)
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
+    tombs(dir).append(ids)
     writeGraphMeta(spark, dir, meta.getAs[Long]("n_vectors") - dn,
       meta.getAs[Long]("checksum") ^ dsum,
       meta.getAs[Int]("m"), meta.getAs[Int]("init_cell_size"),
@@ -372,12 +364,10 @@ object GraphAnn {
     * decays with churn. Only affected nodes re-rank; untouched nodes'
     * edge lists pass through byte-identical.
     *
-    * Crash-safe stage-and-swap like [[VectorIndex.compact]]: new
-    * `edges`/`nodes` tables land in staging first; a crash mid-swap is
-    * recovered on the next call (a staged table whose live directory
-    * is missing is the only copy — renamed in; otherwise the staged
-    * copy is stale and discarded). Tombstones are dropped last, so
-    * merge-on-read stays correct throughout.
+    * Crash-safe under the [[graft.store.StageSwap]] contract: both
+    * new `edges`/`nodes` tables are staged before either swaps, and
+    * tombstones are dropped last, so merge-on-read stays correct
+    * throughout.
     */
   def compact(corpus: DataFrame, dir: String): Unit = {
     val spark = corpus.sparkSession
@@ -387,17 +377,9 @@ object GraphAnn {
     // a different 2M cap than the rest of the graph, breaking the
     // graph-wide degree invariant v28's gate asserts.
     val m = readGraphMeta(spark, dir).getAs[Int]("m")
-    // recovery: finish a previous compact that crashed mid-swap
-    Seq("edges", "nodes").foreach { t =>
-      val stag = s"$dir/${t}_staging"
-      if (graft.util.Fs.exists(spark, stag)) {
-        if (!graft.util.Fs.exists(spark, s"$dir/$t"))
-          graft.util.Fs.rename(spark, stag, s"$dir/$t"): Unit
-        else graft.util.Fs.rmTree(spark, stag)
-      }
-    }
-    if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
-    val tomb = spark.read.parquet(s"$dir/tombstones").select(col("nid"))
+    StageSwap.recover(spark, edgesT(dir), nodesT(dir))
+    if (!tombs(dir).exists(spark)) return
+    val tomb = tombs(dir).ids(spark)
     val raw = spark.read.parquet(s"$dir/edges")
     val tombS = tomb.select(col("nid").as("src"))
     val tombD = tomb.select(col("nid").as("dst"))
@@ -426,15 +408,11 @@ object GraphAnn {
       .unionByName(bridges), 2 * m)
     val untouched = live.join(affected, Seq("src"), "left_anti")
     untouched.unionByName(repaired)
-      .write.mode("overwrite").parquet(s"$dir/edges_staging")
-    spark.read.parquet(s"$dir/nodes")
-      .join(tomb, Seq("nid"), "left_anti")
-      .write.mode("overwrite").parquet(s"$dir/nodes_staging")
-    Seq("edges", "nodes").foreach { t =>
-      graft.util.Fs.rmTree(spark, s"$dir/$t")
-      graft.util.Fs.rename(spark, s"$dir/${t}_staging", s"$dir/$t"): Unit
-    }
-    graft.util.Fs.rmTree(spark, s"$dir/tombstones")
+      .write.mode("overwrite").parquet(edgesT(dir).staging)
+    tombs(dir).live(spark, spark.read.parquet(s"$dir/nodes"))
+      .write.mode("overwrite").parquet(nodesT(dir).staging)
+    Seq(edgesT(dir), nodesT(dir)).foreach(StageSwap.swap(spark, _))
+    tombs(dir).drop(spark)
     // compaction re-ranked degrees: recompute sat_total exactly (the
     // rewrite above was already O(E)); the append odometer carries
     // over, and if it is due the repair folds in here too — the other
@@ -457,33 +435,15 @@ object GraphAnn {
     * K-ingest history accumulates O(K) node files and the membership
     * scans of delete/append grow with history rather than data.
     * Rewrites any table whose data-file count exceeds `maxFiles` to
-    * ~`targetBytes`-sized output files, stage-and-swap through
-    * [[compact]]'s staging paths (either pass recovers the other's
-    * crash — a staged table whose live dir is missing is renamed in). */
+    * ~`targetBytes`-sized output files
+    * ([[graft.store.StageSwap.mergeFiles]]). */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
       targetBytes: Long = 128L * 1024 * 1024): Unit = {
     graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    Seq("edges", "nodes").foreach { t =>
-      val stag = s"$dir/${t}_staging"
-      if (graft.util.Fs.exists(spark, stag)) {
-        if (!graft.util.Fs.exists(spark, s"$dir/$t"))
-          graft.util.Fs.rename(spark, stag, s"$dir/$t"): Unit
-        else graft.util.Fs.rmTree(spark, stag)
-      }
-    }
-    Seq("edges", "nodes").foreach { t =>
-      val live = s"$dir/$t"
-      if (graft.util.Fs.dataFileCount(spark, live) > maxFiles) {
-        val nOut = math.max(1L,
-          graft.util.Fs.dataSize(spark, live) / targetBytes + 1).toInt
-        val stag = s"$dir/${t}_staging"
-        spark.read.parquet(live).repartition(nOut)
-          .write.mode("overwrite").parquet(stag)
-        graft.util.Fs.rmTree(spark, live)
-        graft.util.Fs.rename(spark, stag, live): Unit
-      }
-    }
+    StageSwap.recover(spark, edgesT(dir), nodesT(dir))
+    Seq(edgesT(dir), nodesT(dir)).foreach(
+      StageSwap.mergeFiles(spark, _, maxFiles, targetBytes = targetBytes))
       }
   }
 
@@ -655,7 +615,7 @@ object GraphAnn {
     // caller-supplied m diverging from the stored value would break
     // the graph-wide 2M degree invariant.
     val m = meta.getAs[Int]("m")
-    require(!graft.util.Fs.exists(spark, s"$dir/tombstones"),
+    require(!tombs(dir).exists(spark),
       s"graph store at $dir has pending tombstones — compact before append")
     val ids = batch.select(col("vec_id").cast("long").as("nid"))
       .localCheckpoint(eager = true)
@@ -712,11 +672,10 @@ object GraphAnn {
     val untouched = graph.join(affectedSrc, Seq("src"), "left_anti")
     // stage-and-swap like compact; a crash before the meta write below
     // is recovered by ensure()'s fingerprint-mismatch rebuild
-    val staging = s"$dir/edges_staging"
-    untouched.unionByName(rewritten)
-      .write.mode("overwrite").parquet(staging)
-    graft.util.Fs.rmTree(spark, s"$dir/edges")
-    graft.util.Fs.rename(spark, staging, s"$dir/edges"): Unit
+    StageSwap.replace(spark, edgesT(dir)) { staging =>
+      untouched.unionByName(rewritten)
+        .write.mode("overwrite").parquet(staging)
+    }
     ids.write.mode("append").parquet(s"$dir/nodes")
     val (dn, dsum) = fingerprint(batch)
     writeGraphMeta(spark, dir, meta.getAs[Long]("n_vectors") + dn,
@@ -1231,7 +1190,7 @@ object GraphAnn {
     require(meta.getAs[Int]("format_version") == 3,
       s"graph store at $dir predates format 3 — rebuild via ensure()")
     val m = meta.getAs[Int]("m")
-    require(!graft.util.Fs.exists(spark, s"$dir/tombstones"),
+    require(!tombs(dir).exists(spark),
       s"graph store at $dir has pending tombstones — compact before " +
         "repairDensity")
     val edges = spark.read.parquet(s"$dir/edges")
@@ -1310,11 +1269,10 @@ object GraphAnn {
         col("kept._2").as("sim"))
       .localCheckpoint(eager = true)
     val untouched = edges.join(saturated, Seq("src"), "left_anti")
-    val staging = s"$dir/edges_staging"
-    untouched.unionByName(diversified)
-      .write.mode("overwrite").parquet(staging)
-    graft.util.Fs.rmTree(spark, s"$dir/edges")
-    graft.util.Fs.rename(spark, staging, s"$dir/edges"): Unit
+    StageSwap.replace(spark, edgesT(dir)) { staging =>
+      untouched.unionByName(diversified)
+        .write.mode("overwrite").parquet(staging)
+    }
     // odometer reset: post-repair sat_total = repaired nodes that
     // legitimately kept 2M diverse edges; appended mass back to zero
     // so those nodes never re-arm the trigger by themselves

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
+import graft.store.{StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +38,7 @@ import org.apache.spark.sql.functions._
   *     base at maintenance.
   *   - `tombstones/` — merge-on-read deletes; every search anti-joins
   *     it, [[compact]] folds it away rewriting ONLY affected
-  *     partitions (stage-and-swap, crash-recoverable).
+  *     partitions (crash-safe under [[graft.store.StageSwap]]).
   *   - `meta/` — doc count, Σdl (both exact-integer maintained), XOR
   *     fingerprint over the indexed (id, text) rows (append XORs in,
   *     delete XORs out — [[ensure]] validates a maintained store
@@ -155,6 +156,10 @@ object TextIndex {
 
   private def termBase(dir: String) = s"$dir/termstats/base"
   private def termDelta(dir: String) = s"$dir/termstats/delta"
+
+  private def postingsT(dir: String) = Table(s"$dir/postings", "bucket")
+  private def docidsT(dir: String) = Table(s"$dir/docids", "dbucket")
+  private def tombs(dir: String) = Tombstones(dir, "doc")
 
   /** Merged-on-read exact df per term: base plus signed deltas,
     * optionally pruned to the buckets in `buckets`. */
@@ -385,16 +390,11 @@ object TextIndex {
         .join(ids, Seq("doc"), "left_semi").count()
     require(nStored == nDel,
       s"${nDel - nStored} of $nDel ${idCol}s are not in the index at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(spark.read.parquet(s"$dir/tombstones")
-        .select("doc"), Seq("doc"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel ${idCol}s are already tombstoned (double delete)")
-    }
+    tombs(dir).requireFresh(spark, ids, nDel, s"${idCol}s")
     val (dn, dsum, dDl) = fingerprint(deleted, idCol, textCol)
     graft.util.IngestMarker.write(spark, dir,
       s"delete of $nDel docs in flight")
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
+    tombs(dir).append(ids)
     writeTermDelta(spark, dir,
       HybridRetrieval.postings(idx, idCol, textCol), sign = -1, nBuckets)
     ids.unpersist()
@@ -415,10 +415,7 @@ object TextIndex {
         .filter(col("bucket").isin(bs.map(Int.box): _*))
       case None => readPostings(spark, dir)
     }
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones"))
-      raw.join(spark.read.parquet(s"$dir/tombstones"), Seq("doc"),
-        "left_anti")
-    else raw
+    tombs(dir).live(spark, raw)
   }
 
   /** BM25 top-`topN` per query over the LIVE store — row-identical to
@@ -537,133 +534,62 @@ object TextIndex {
       .agg(count(lit(1)).as("n_matches"))
   }
 
-  /** Finish any crashed stage-and-swap — shared by [[compact]] and
-    * [[compactFiles]] (same staging paths): a staged partition whose
-    * live directory is missing is the only copy of its rows and is
-    * renamed in; the rest of the staging root is stale and dropped. */
-  private def recoverStaging(spark: SparkSession, dir: String): Unit = {
-    def recover(staging: String, live: String, part: String): Unit = {
-      graft.util.Fs.listDirNames(spark, staging)
-        .filter(_.startsWith(s"$part="))
-        .foreach { d =>
-          if (!graft.util.Fs.exists(spark, s"$live/$d"))
-            graft.util.Fs.rename(spark, s"$staging/$d", s"$live/$d"): Unit
-        }
-      graft.util.Fs.rmTree(spark, staging)
-    }
-    recover(s"$dir/postings_staging", s"$dir/postings", "bucket")
-    recover(s"$dir/docids_staging", s"$dir/docids", "dbucket")
-  }
-
-  /** Fold termstats deltas into an exact rewritten base. Marker-
-    * guarded (a crash between the base rewrite and the delta drop
-    * would double-count): fails later ops loud, ensure() rebuilds. */
+  /** Fold termstats deltas into an exact rewritten base
+    * ([[graft.store.StageSwap.replace]]). Marker-guarded (a crash
+    * between the base rewrite and the delta drop would double-count):
+    * fails later ops loud, ensure() rebuilds. */
   private def foldTermStats(spark: SparkSession, dir: String): Unit = {
     if (!graft.util.Fs.exists(spark, termDelta(dir))) return
-    val staging = s"$dir/termstats/base_staging"
     graft.util.IngestMarker.write(spark, dir, "termstats fold in flight")
-    mergedTermStats(spark, dir, None).filter(col("df") =!= 0L)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    graft.util.Fs.rmTree(spark, termBase(dir))
-    graft.util.Fs.rename(spark, staging, termBase(dir)): Unit
+    StageSwap.replace(spark, Table(termBase(dir))) { staging =>
+      mergedTermStats(spark, dir, None).filter(col("df") =!= 0L)
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+    }
     graft.util.Fs.rmTree(spark, termDelta(dir))
     graft.util.IngestMarker.clear(spark, dir)
   }
 
   /** Fold tombstones into the store: rewrite ONLY the posting buckets
-    * and docid dbuckets that contain deleted rows (stage-and-swap,
-    * crash-recoverable), drop the tombstone table, fold termstats.
-    * After compact a previously-deleted id may be re-ingested. */
+    * and docid dbuckets that contain deleted rows (crash-safe under the
+    * [[graft.store.StageSwap]] contract), drop the tombstone table,
+    * fold termstats. After compact a previously-deleted id may be
+    * re-ingested. */
   def compact(spark: SparkSession, dir: String): Unit = {
     graft.util.StoreLease.withLease(spark, dir, "compact") {
     graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
     requireFormat(readMeta(spark, dir), dir)
-    recoverStaging(spark, dir)
+    StageSwap.recover(spark, postingsT(dir), docidsT(dir))
     foldTermStats(spark, dir)
-    if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
-    val tomb = spark.read.parquet(s"$dir/tombstones").select(col("doc"))
+    val tomb = tombs(dir)
+    if (!tomb.exists(spark)) return
     val nDocBuckets = readMeta(spark, dir).getAs[Int]("n_doc_buckets")
-    // affected posting buckets: bounded IN-list (≤ nBuckets values)
-    val affB = readPostings(spark, dir)
-      .join(tomb, Seq("doc"), "left_semi")
-      .select("bucket").distinct().collect().map(_.getInt(0))
-    if (affB.nonEmpty) {
-      val staging = s"$dir/postings_staging"
-      readPostings(spark, dir)
-        .filter(col("bucket").isin(affB.map(Int.box).toSeq: _*))
-        .join(tomb, Seq("doc"), "left_anti")
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-      affB.foreach { b =>
-        graft.util.Fs.rmTree(spark, s"$dir/postings/bucket=$b")
-        if (graft.util.Fs.exists(spark, s"$staging/bucket=$b"))
-          graft.util.Fs.rename(spark, s"$staging/bucket=$b",
-            s"$dir/postings/bucket=$b"): Unit
-      }
-      graft.util.Fs.rmTree(spark, staging)
-    }
+    tomb.foldInto(spark, postingsT(dir), readPostings(spark, dir))
     // affected docid dbuckets: computed FROM the tombstones directly
-    val affD = tomb.select(pmod(col("doc"), lit(nDocBuckets)).cast("int")
-      .as("dbucket")).distinct().collect().map(_.getInt(0))
-    if (affD.nonEmpty) {
-      val staging = s"$dir/docids_staging"
-      readDocids(spark, dir)
-        .filter(col("dbucket").isin(affD.map(Int.box).toSeq: _*))
-        .join(tomb, Seq("doc"), "left_anti")
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(staging)
-      affD.foreach { d =>
-        graft.util.Fs.rmTree(spark, s"$dir/docids/dbucket=$d")
-        if (graft.util.Fs.exists(spark, s"$staging/dbucket=$d"))
-          graft.util.Fs.rename(spark, s"$staging/dbucket=$d",
-            s"$dir/docids/dbucket=$d"): Unit
-      }
-      graft.util.Fs.rmTree(spark, staging)
-    }
-    graft.util.Fs.rmTree(spark, s"$dir/tombstones")
+    val docids = docidsT(dir)
+    val affD = StageSwap.leavesOf(docids, tomb.ids(spark)
+      .select(pmod(col("doc"), lit(nDocBuckets)).cast("int").as("dbucket")))
+    StageSwap.rewrite(spark, docids, tomb.live(spark,
+      readDocids(spark, dir).filter(StageSwap.within(docids, affD))), affD)
+    tomb.drop(spark)
     }
   }
 
   /** FILE-MERGE maintenance (the append-history bound, the
     * [[DedupIndex.compactFiles]] shape): rewrite ONLY partition
-    * directories whose data-file count exceeds `maxFiles`, merging
-    * each back to one task's output; termstats deltas fold on the same
-    * trigger. Rows pass through verbatim — tombstones are deliberately
-    * NOT folded here. */
+    * directories whose data-file count exceeds `maxFiles`
+    * ([[graft.store.StageSwap.mergeFiles]]); termstats deltas fold on
+    * the same trigger. Rows pass through verbatim — tombstones are
+    * deliberately NOT folded here. */
   def compactFiles(spark: SparkSession, dir: String,
       maxFiles: Int = 16, maxRecordsPerFile: Long = 8000000L): Unit = {
     graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
     graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiles")
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
     requireFormat(readMeta(spark, dir), dir)
-    recoverStaging(spark, dir)
-    def fold(table: String, part: String): Unit = {
-      val live = s"$dir/$table"
-      val staging = s"$dir/${table}_staging"
-      val over = graft.util.Fs.listDirNames(spark, live)
-        .filter(_.startsWith(s"$part="))
-        .filter(d =>
-          graft.util.Fs.dataFileCount(spark, s"$live/$d") > maxFiles)
-        .map(_.stripPrefix(s"$part=").toInt)
-      if (over.nonEmpty) {
-        spark.read.parquet(live)
-          .filter(col(part).isin(over.map(Int.box): _*))
-          .repartition(col(part))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-          .partitionBy(part).parquet(staging)
-        over.foreach { v =>
-          graft.util.Fs.rmTree(spark, s"$live/$part=$v")
-          if (graft.util.Fs.exists(spark, s"$staging/$part=$v"))
-            graft.util.Fs.rename(spark, s"$staging/$part=$v",
-              s"$live/$part=$v"): Unit
-        }
-        graft.util.Fs.rmTree(spark, staging)
-      }
-    }
-    fold("postings", "bucket")
-    fold("docids", "dbucket")
+    StageSwap.recover(spark, postingsT(dir), docidsT(dir))
+    Seq(postingsT(dir), docidsT(dir))
+      .foreach(StageSwap.mergeFiles(spark, _, maxFiles, maxRecordsPerFile))
     if (graft.util.Fs.exists(spark, termDelta(dir)) &&
       graft.util.Fs.dataFileCount(spark, termDelta(dir)) > maxFiles)
       foldTermStats(spark, dir)

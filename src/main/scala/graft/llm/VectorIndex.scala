@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
+import graft.store.{StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,6 +80,14 @@ object VectorIndex {
       vMetaSchema(filterCol.isDefined), Seq(row))
   }
 
+  private def codesT(dir: String) = Table(s"$dir/codes", "cell")
+  // the filtered twin stages under its own root, so neither variant's
+  // recovery can ever sweep the other's in-flight staging
+  private def filteredCodesT(dir: String, filterCol: String) =
+    Table(s"$dir/codes", Seq(filterCol, "cell"),
+      s"$dir/codes_staging_filtered")
+  private def tombs(dir: String) = Tombstones(dir, "nid")
+
   private def fingerprint(corpus: DataFrame,
       extraCols: Seq[String] = Nil): (Long, Long) = {
     val hashed = ("vec_id" +: "embedding" +: extraCols).mkString(", ")
@@ -143,24 +152,10 @@ object VectorIndex {
     // merge-on-read: live codes = stored codes minus tombstones. The
     // anti-join's nid predicate sits ABOVE the scan, so search()'s
     // cell IN-list still pushes to the partition directories.
-    val raw = spark.read.parquet(s"$dir/codes")
-    val codes =
-      if (graft.util.Fs.exists(spark, s"$dir/tombstones"))
-        raw.join(spark.read.parquet(s"$dir/tombstones")
-          .select(col("nid")), Seq("nid"), "left_anti")
-      else raw
+    val codes = tombs(dir).live(spark, spark.read.parquet(s"$dir/codes"))
     Loaded(coarse, books, codes, meta.getAs[Long]("n_vectors"))
   }
 
-  /** Delete vectors WITHOUT touching the code partitions — the
-    * merge-on-read shape (Iceberg/Delta delete files): deleted ids land
-    * in a tombstone table; [[load]] anti-joins it so every search sees
-    * only live rows. `deleted` must be the actual (vec_id, embedding)
-    * rows being removed: the meta fingerprint updates INCREMENTALLY
-    * (XOR is its own inverse — old ⊕ xor(deleted) IS the live-corpus
-    * fingerprint), so a later [[ensure]] over the live corpus validates
-    * without rebuild. Cost: O(|deleted|), zero store rewrite.
-    */
   /** The plain maintenance entry points support the cell-partitioned
     * store only: a [[buildFiltered]] store's codes live under
     * (filterCol, cell) directories, so cell-keyed compaction paths and
@@ -173,70 +168,70 @@ object VectorIndex {
       s"$op does not support the FILTERED (label, cell)-partitioned " +
         s"store at $dir — use ${op}Filtered instead")
 
+  /** Delete vectors WITHOUT touching the code partitions — the
+    * merge-on-read shape (Iceberg/Delta delete files): deleted ids land
+    * in a tombstone table; [[load]] anti-joins it so every search sees
+    * only live rows. `deleted` must be the actual (vec_id, embedding)
+    * rows being removed: the meta fingerprint updates INCREMENTALLY
+    * (XOR is its own inverse — old ⊕ xor(deleted) IS the live-corpus
+    * fingerprint), so a later [[ensure]] over the live corpus validates
+    * without rebuild. Cost: O(|deleted|), zero store rewrite.
+    */
   def delete(deleted: DataFrame, dir: String): Unit = {
     val spark = deleted.sparkSession
     graft.util.StoreLease.withLease(spark, dir, "delete") {
-    import spark.implicits._
     graft.util.IngestMarker.requireAbsent(spark, dir, "delete")
     val meta = readVMeta(spark, dir)
     requireUnfiltered(meta, dir, "delete")
-    // The contract (every deleted row is a live stored row, exactly once)
-    // is ENFORCED, not just documented: XOR fingerprint maintenance is
-    // only exact under it — a double delete or a never-indexed row would
-    // silently drift n_vectors/checksum so a later ensure() validates
-    // against the wrong live corpus or rebuilds spuriously. Fail loud
-    // instead. Cost: one pass over the delete set + a semi-join against
-    // the (code-sized, not float-sized) store — cheap next to the
-    // corruption it prevents.
+    tombstone(deleted, dir, meta, None)
+    }
+  }
+
+  /** [[delete]]'s body for either layout (a filtered store's
+    * fingerprint also hashes `filterCol`). The contract (every deleted
+    * row is a live stored row, exactly once) is ENFORCED, not just
+    * documented: XOR fingerprint maintenance is only exact under it —
+    * a double delete or a never-indexed row would silently drift
+    * n_vectors/checksum so a later ensure() validates against the
+    * wrong live corpus or rebuilds spuriously. Fail loud instead. Cost:
+    * one pass over the delete set + a semi-join against the
+    * (code-sized, not float-sized) store. Ids are audited AFTER the
+    * long cast they are stored under, so "7" and "007" are one id.
+    * Caller holds the lease and has checked the layout. */
+  private def tombstone(deleted: DataFrame, dir: String,
+      meta: org.apache.spark.sql.Row, filterCol: Option[String]): Unit = {
+    val spark = deleted.sparkSession
     val ids = deleted.select(col("vec_id").cast("long").as("nid"))
       .localCheckpoint(eager = true)
     // one aggregate answers the row-shaped audits (total + distinct)
-    // AND the fingerprint — previously three separate jobs
+    // AND the fingerprint
     val audit = deleted.agg(count(lit(1)),
-      countDistinct(col("vec_id")),
-      expr("bit_xor(xxhash64(vec_id, embedding))")).head()
+      countDistinct(col("vec_id").cast("long")),
+      expr(s"bit_xor(xxhash64(${("vec_id" +: "embedding" +: filterCol.toSeq)
+        .mkString(", ")}))")).head()
     val nDel = audit.getLong(0)
-    val nDistinct = audit.getLong(1)
-    require(nDistinct == nDel,
-      s"delete set contains ${nDel - nDistinct} duplicate vec_ids")
+    require(audit.getLong(1) == nDel,
+      s"delete set contains ${nDel - audit.getLong(1)} duplicate vec_ids")
     val nStored = ids.join(spark.read.parquet(s"$dir/codes").select("nid"),
       Seq("nid"), "left_semi").count()
     require(nStored == nDel,
       s"${nDel - nStored} of $nDel vec_ids are not present in the index at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(
-        spark.read.parquet(s"$dir/tombstones").select("nid"),
-        Seq("nid"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel vec_ids are already tombstoned (double delete)")
-    }
-    val dn = nDel
+    tombs(dir).requireFresh(spark, ids, nDel, "vec_ids")
     val dsum = if (audit.isNullAt(2)) 0L else audit.getLong(2)
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") - dn,
+    tombs(dir).append(ids)
+    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") - nDel,
       meta.getAs[Long]("checksum") ^ dsum,
       meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
       meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      None, meta.getAs[Int]("format_version"))
-    }
+      filterCol, meta.getAs[Int]("format_version"))
   }
 
   /** Fold the tombstones into the store: rewrite ONLY the cell
     * partitions that contain deleted rows, then drop the tombstone
-    * table. The maintenance pass that bounds merge-on-read's growing
+    * table — the maintenance pass that bounds merge-on-read's growing
     * anti-join cost, exactly like s13 bounds small-file growth.
-    *
-    * Crash-safe via STAGE-AND-SWAP: survivors are written durably to
-    * `codes_staging/` first, then each affected `cell=` directory is
-    * removed and its staged replacement renamed in. Tombstones are
-    * dropped only after the full swap, so a crash anywhere leaves
-    * merge-on-read correct (the anti-join still hides deleted rows),
-    * and the next [[compact]] call RECOVERS: a staged cell whose live
-    * directory is missing (crash between rm and rename) is the only
-    * copy of that cell's survivors and is renamed into place before
-    * anything else; staged cells whose live directory survived are
-    * stale duplicates and are discarded.
-    */
+    * Crash-safe under the [[graft.store.StageSwap]] contract: its
+    * recovery runs first, and tombstones drop only after the swap. */
   def compact(spark: SparkSession, dir: String): Unit = {
     graft.util.StoreLease.withLease(spark, dir, "compact") {
     graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
@@ -244,52 +239,14 @@ object VectorIndex {
     // the meta read is independent of staging, and running the sweep
     // first on a FILTERED store would delete a crashed
     // compactFiltered's staged survivors (the only copy of its
-    // affected pairs) before the fail-loud guard ever fired. The two
-    // variants also use distinct staging paths (belt and braces).
-    requireUnfiltered(readVMeta(spark, dir), dir,
-      "compact")
-    val staging = s"$dir/codes_staging"
-    sweepPlainStaging(spark, dir, staging)
-    if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
-    val tomb = spark.read.parquet(s"$dir/tombstones").select(col("nid"))
-    val raw = spark.read.parquet(s"$dir/codes")
-    val affected = raw.join(tomb, Seq("nid"), "left_semi")
-      .select("cell").distinct().collect().map(_.getInt(0))
-    if (affected.nonEmpty) {
-      // stage: survivors land on STORAGE (not an executor-local
-      // checkpoint) before any live directory is touched. A fully-
-      // emptied cell simply writes no staging dir and gets no rename.
-      raw.filter(col("cell").isin(affected.map(Int.box).toSeq: _*))
-        .join(tomb, Seq("nid"), "left_anti")
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(staging)
-      // swap
-      affected.foreach { c =>
-        graft.util.Fs.rmTree(spark, s"$dir/codes/cell=$c")
-        if (graft.util.Fs.exists(spark, s"$staging/cell=$c"))
-          graft.util.Fs.rename(spark, s"$staging/cell=$c",
-            s"$dir/codes/cell=$c"): Unit
-      }
-      graft.util.Fs.rmTree(spark, staging)
+    // affected pairs) before the fail-loud guard ever fired.
+    requireUnfiltered(readVMeta(spark, dir), dir, "compact")
+    StageSwap.recover(spark, codesT(dir))
+    val tomb = tombs(dir)
+    if (!tomb.exists(spark)) return
+    tomb.foldInto(spark, codesT(dir), spark.read.parquet(s"$dir/codes"))
+    tomb.drop(spark)
     }
-    graft.util.Fs.rmTree(spark, s"$dir/tombstones")
-      }
-  }
-
-  /** Recovery for a crashed single-level stage-and-swap ([[compact]] /
-    * [[compactFiles]] — shared staging, either recovers the other): a
-    * staged cell whose live directory is missing is the only copy of
-    * its rows and is renamed in; the rest is stale and discarded. */
-  private def sweepPlainStaging(spark: SparkSession, dir: String,
-      staging: String): Unit = {
-    graft.util.Fs.listDirNames(spark, staging)
-      .filter(_.startsWith("cell="))
-      .foreach { cellDir =>
-        if (!graft.util.Fs.exists(spark, s"$dir/codes/$cellDir"))
-          graft.util.Fs.rename(spark, s"$staging/$cellDir",
-            s"$dir/codes/$cellDir")
-      }
-    graft.util.Fs.rmTree(spark, staging)
   }
 
   /** FILE-MERGE maintenance for the plain store (the append-history
@@ -297,41 +254,18 @@ object VectorIndex {
     * to the cell layout): every [[append]] lands one file per touched
     * `cell=` directory and [[compact]] only folds tombstones, so a
     * K-ingest history accumulates O(K) files per cell and search scan
-    * tasks grow with history rather than data. Rewrites ONLY cell
-    * directories whose data-file count exceeds `maxFiles`, verbatim
-    * rows, stage-and-swap through [[compact]]'s staging path (either
-    * pass recovers the other's crash). `maxRecordsPerFile` re-splits
-    * a genuinely huge cell so the merge cannot produce one monster
-    * file. */
+    * tasks grow with history rather than data. Rewrites, verbatim,
+    * ONLY the cell directories whose data-file count exceeds
+    * `maxFiles` ([[graft.store.StageSwap.mergeFiles]]). */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
       maxRecordsPerFile: Long = 8000000L): Unit = {
     graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
     graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiles")
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    requireUnfiltered(readVMeta(spark, dir), dir,
-      "compactFiles")
-    val staging = s"$dir/codes_staging"
-    sweepPlainStaging(spark, dir, staging)
-    val live = s"$dir/codes"
-    val over = graft.util.Fs.listDirNames(spark, live)
-      .filter(_.startsWith("cell="))
-      .filter(d => graft.util.Fs.dataFileCount(spark, s"$live/$d") > maxFiles)
-      .map(_.stripPrefix("cell=").toInt)
-    if (over.isEmpty) return
-    spark.read.parquet(live)
-      .filter(col("cell").isin(over.map(Int.box): _*))
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("cell").parquet(staging)
-    over.foreach { c =>
-      graft.util.Fs.rmTree(spark, s"$live/cell=$c")
-      if (graft.util.Fs.exists(spark, s"$staging/cell=$c"))
-        graft.util.Fs.rename(spark, s"$staging/cell=$c",
-          s"$live/cell=$c"): Unit
+    requireUnfiltered(readVMeta(spark, dir), dir, "compactFiles")
+    StageSwap.recover(spark, codesT(dir))
+    StageSwap.mergeFiles(spark, codesT(dir), maxFiles, maxRecordsPerFile)
     }
-    graft.util.Fs.rmTree(spark, staging)
-      }
   }
 
   /** Load if the stored fingerprint matches `corpus`, else (re)build.
@@ -539,71 +473,20 @@ object VectorIndex {
       filterCol: String): Unit = {
     val spark = deleted.sparkSession
     graft.util.StoreLease.withLease(spark, dir, "deleteFiltered") {
-    import spark.implicits._
     graft.util.IngestMarker.requireAbsent(spark, dir, "deleteFiltered")
     val meta = readVMeta(spark, dir)
     requireFiltered(meta, dir, filterCol, "deleteFiltered")
-    val ids = deleted.select(col("vec_id").cast("long").as("nid"))
-      .localCheckpoint(eager = true)
-    // one aggregate for audits + fingerprint (see [[delete]]); the
-    // filtered fingerprint hashes the filter column too
-    val audit = deleted.agg(count(lit(1)),
-      countDistinct(col("vec_id")),
-      expr(s"bit_xor(xxhash64(vec_id, embedding, $filterCol))")).head()
-    val nDel = audit.getLong(0)
-    require(audit.getLong(1) == nDel,
-      s"delete set contains duplicate vec_ids")
-    val nStored = ids.join(spark.read.parquet(s"$dir/codes").select("nid"),
-      Seq("nid"), "left_semi").count()
-    require(nStored == nDel,
-      s"${nDel - nStored} of $nDel vec_ids are not present in the index at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(
-        spark.read.parquet(s"$dir/tombstones").select("nid"),
-        Seq("nid"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel vec_ids are already tombstoned (double delete)")
-    }
-    val dn = nDel
-    val dsum = if (audit.isNullAt(2)) 0L else audit.getLong(2)
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") - dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      Some(filterCol), meta.getAs[Int]("format_version"))
+    tombstone(deleted, dir, meta, Some(filterCol))
     }
   }
 
   /** [[compact]] for the two-level (filterCol, cell) layout: rewrites
     * ONLY the (value, cell) partition pairs that contain tombstoned
-    * rows, stage-and-swap with the same crash-recovery contract.
-    * Partition directory names are reconstructed from the pair values,
-    * so the filter column must be PATH-SAFE (integral or simple
-    * strings — the same values Spark writes verbatim into
-    * `filterCol=value/` directory names). */
-  /** Recovery sweep for a crashed two-level stage-and-swap: a staged
-    * value=/cell= pair whose live dir is missing is the only copy of
-    * those survivors — rename it in; staged pairs whose live dir
-    * survived are stale and discarded with the staging root. */
-  private def sweepFilteredStaging(spark: SparkSession, dir: String,
-      filterCol: String, staging: String): Unit = {
-    graft.util.Fs.listDirNames(spark, staging)
-      .filter(_.startsWith(s"$filterCol="))
-      .foreach { vDir =>
-        graft.util.Fs.listDirNames(spark, s"$staging/$vDir")
-          .filter(_.startsWith("cell="))
-          .foreach { cDir =>
-            if (!graft.util.Fs.exists(spark, s"$dir/codes/$vDir/$cDir")) {
-              graft.util.Fs.mkdirs(spark, s"$dir/codes/$vDir")
-              graft.util.Fs.rename(spark, s"$staging/$vDir/$cDir",
-                s"$dir/codes/$vDir/$cDir"): Unit
-            }
-          }
-      }
-    graft.util.Fs.rmTree(spark, staging)
-  }
-
+    * rows, under the same [[graft.store.StageSwap]] contract. Partition
+    * directory names are reconstructed from the pair values, so the
+    * filter column must be PATH-SAFE (integral or simple strings — the
+    * same values Spark writes verbatim into `filterCol=value/`
+    * directory names). */
   def compactFiltered(spark: SparkSession, dir: String,
       filterCol: String): Unit = {
     graft.util.StoreLease.withLease(spark, dir, "compactFiltered") {
@@ -613,53 +496,34 @@ object VectorIndex {
     // it can delete a crashed plain compact's staged survivors.
     requireFiltered(readVMeta(spark, dir), dir,
       filterCol, "compactFiltered")
-    // distinct from the plain variant's codes_staging: even a caller
-    // bypassing the guard can never sweep the other variant's stage
-    val staging = s"$dir/codes_staging_filtered"
-    // LEGACY sweep first (r13 advice): before the staging dir was
-    // renamed to codes_staging_filtered, a filtered compact staged
-    // into codes_staging — a pre-upgrade crash mid-swap left its only
-    // copy of survivors there, which the renamed path's sweep would
-    // never restore (and the plain compact now REJECTS filtered
-    // stores before its own sweep runs). On a store whose meta says
-    // filtered, anything under codes_staging with the two-level shape
-    // is that crash state: recover it by the same staged-pair rule.
-    sweepFilteredStaging(spark, dir, filterCol, s"$dir/codes_staging")
-    sweepFilteredStaging(spark, dir, filterCol, staging)
-    if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
-    val tomb = spark.read.parquet(s"$dir/tombstones").select(col("nid"))
-    val raw = spark.read.parquet(s"$dir/codes")
-    val affected = raw.join(tomb, Seq("nid"), "left_semi")
-      .select(col(filterCol).cast("string").as("v"), col("cell"))
-      .distinct().collect().map(r => (r.getString(0), r.getInt(1)))
-    if (affected.nonEmpty) {
-      val affectedSet = affected.toSet
-      val pairOf = concat(col(filterCol).cast("string"), lit("\u0001"),
-        col("cell").cast("string"))
-      val affectedKeys = affected.map { case (v, c) => s"$v\u0001$c" }
-      raw.filter(pairOf.isin(affectedKeys.toSeq: _*))
-        .join(tomb, Seq("nid"), "left_anti")
-        .repartition(col(filterCol), col("cell"))
-        .write.mode("overwrite").partitionBy(filterCol, "cell")
-        .parquet(staging)
-      affectedSet.foreach { case (v, c) =>
-        graft.util.Fs.rmTree(spark, s"$dir/codes/$filterCol=$v/cell=$c")
-        if (graft.util.Fs.exists(spark, s"$staging/$filterCol=$v/cell=$c")) {
-          graft.util.Fs.mkdirs(spark, s"$dir/codes/$filterCol=$v")
-          graft.util.Fs.rename(spark, s"$staging/$filterCol=$v/cell=$c",
-            s"$dir/codes/$filterCol=$v/cell=$c"): Unit
-        }
-      }
-      graft.util.Fs.rmTree(spark, staging)
+    recoverFiltered(spark, dir, filterCol)
+    val tomb = tombs(dir)
+    if (!tomb.exists(spark)) return
+    tomb.foldInto(spark, filteredCodesT(dir, filterCol),
+      spark.read.parquet(s"$dir/codes"))
+    tomb.drop(spark)
     }
-    graft.util.Fs.rmTree(spark, s"$dir/tombstones")
-      }
+  }
+
+  /** Staging recovery for the filtered store. LEGACY sweep first (r13
+    * advice): before the staging dir was renamed to
+    * codes_staging_filtered, a filtered compact staged into
+    * codes_staging — a pre-upgrade crash mid-swap left its only copy
+    * of survivors there, which the renamed path's sweep would never
+    * restore (and the plain compact REJECTS filtered stores before its
+    * own sweep runs). On a store whose meta says filtered, anything
+    * under codes_staging with the two-level shape is that crash state:
+    * recover it by the same staged-leaf rule. */
+  private def recoverFiltered(spark: SparkSession, dir: String,
+      filterCol: String): Unit = {
+    val t = filteredCodesT(dir, filterCol)
+    StageSwap.recover(spark, t.copy(staging = s"$dir/codes_staging"), t)
   }
 
   /** [[compactFiles]] for the two-level (filterCol, cell) layout:
     * merges the (value, cell) partition pairs whose data-file count
-    * exceeds `maxFiles`, verbatim rows, stage-and-swap through
-    * [[compactFiltered]]'s staging path (and its legacy sweep). */
+    * exceeds `maxFiles`, verbatim rows, through [[compactFiltered]]'s
+    * staging path (after its legacy sweep). */
   def compactFilesFiltered(spark: SparkSession, dir: String,
       filterCol: String, maxFiles: Int = 16,
       maxRecordsPerFile: Long = 8000000L): Unit = {
@@ -669,40 +533,10 @@ object VectorIndex {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
     requireFiltered(readVMeta(spark, dir), dir,
       filterCol, "compactFilesFiltered")
-    sweepFilteredStaging(spark, dir, filterCol, s"$dir/codes_staging")
-    val staging = s"$dir/codes_staging_filtered"
-    sweepFilteredStaging(spark, dir, filterCol, staging)
-    val live = s"$dir/codes"
-    val over: Seq[(String, Int)] = graft.util.Fs
-      .listDirNames(spark, live).filter(_.startsWith(s"$filterCol="))
-      .flatMap { vDir =>
-        graft.util.Fs.listDirNames(spark, s"$live/$vDir")
-          .filter(_.startsWith("cell="))
-          .filter(cDir => graft.util.Fs.dataFileCount(spark,
-            s"$live/$vDir/$cDir") > maxFiles)
-          .map(cDir => (vDir.stripPrefix(s"$filterCol="),
-            cDir.stripPrefix("cell=").toInt))
-      }
-    if (over.isEmpty) return
-    val pairOf = concat(col(filterCol).cast("string"), lit("\u0001"),
-      col("cell").cast("string"))
-    val overKeys = over.map { case (v, c) => s"$v\u0001$c" }
-    spark.read.parquet(live)
-      .filter(pairOf.isin(overKeys: _*))
-      .repartition(col(filterCol), col("cell"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(filterCol, "cell").parquet(staging)
-    over.foreach { case (v, c) =>
-      graft.util.Fs.rmTree(spark, s"$live/$filterCol=$v/cell=$c")
-      if (graft.util.Fs.exists(spark, s"$staging/$filterCol=$v/cell=$c")) {
-        graft.util.Fs.mkdirs(spark, s"$live/$filterCol=$v")
-        graft.util.Fs.rename(spark, s"$staging/$filterCol=$v/cell=$c",
-          s"$live/$filterCol=$v/cell=$c"): Unit
-      }
+    recoverFiltered(spark, dir, filterCol)
+    StageSwap.mergeFiles(spark, filteredCodesT(dir, filterCol), maxFiles,
+      maxRecordsPerFile)
     }
-    graft.util.Fs.rmTree(spark, staging)
-      }
   }
 
   /** [[append]] for the filtered store: frozen quantizers, the batch

@@ -26,20 +26,8 @@ object Fs {
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true): Unit
   }
 
-  /** Rename through the Hadoop FileSystem API. Atomic on HDFS and local
-    * filesystems (the stage-and-swap primitive); object stores emulate it
-    * with copy+delete, which is why swap recovery must tolerate a
-    * half-finished rename. */
-  def rename(spark: org.apache.spark.sql.SparkSession, src: String,
-      dst: String): Boolean = {
-    val sp = new org.apache.hadoop.fs.Path(src)
-    sp.getFileSystem(spark.sessionState.newHadoopConf())
-      .rename(sp, new org.apache.hadoop.fs.Path(dst))
-  }
-
   /** Names of the immediate child DIRECTORIES of `path` (empty when the
-    * path does not exist). Used by swap recovery to enumerate staged
-    * `cell=N` partitions. */
+    * path does not exist). */
   def listDirNames(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -63,10 +51,7 @@ object Fs {
       .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
   }
 
-  /** Total bytes of data files directly inside `path` (0 when absent).
-    * Sizes the output file count of an unpartitioned file-merge so a
-    * rewrite targets ~`targetBytes` files instead of either one
-    * monster file or the input's fragmentation. */
+  /** Total bytes of data files directly inside `path` (0 when absent). */
   def dataSize(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)

@@ -726,4 +726,54 @@ class DedupIndexSpec extends SparkSpec {
     assert(DedupIndex.append(df(Seq((200L, doc(200)))), dir,
       threshold = 0.9).count() == 1)
   }
+
+  test("delete audits ids after the long cast: \"7\" and \"007\" are " +
+      "one id, so the set fails as a duplicate") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/cast"
+    val corpus = df((0L until 10L).map(i => (i, doc(i.toInt))))
+    DedupIndex.build(corpus, dir, threshold = 0.9)
+    val s = spark
+    import s.implicits._
+    val e = intercept[IllegalArgumentException] {
+      DedupIndex.delete(Seq(("7", doc(7)), ("007", doc(7)))
+        .toDF("doc_id", "text"), dir)
+    }
+    assert(e.getMessage.contains("duplicate"))
+    val b0 = DedupIndex.buildsThisProcess
+    DedupIndex.ensure(corpus, dir, threshold = 0.9)
+    assert(DedupIndex.buildsThisProcess == b0, "rejected delete drifted meta")
+  }
+
+  test("prefstats stays bounded over many appends with no maintenance, " +
+      "and its fold keeps the totals and per-bucket sums") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/prefstats"
+    val stats = s"$dir/prefstats"
+    DedupIndex.build(df((0L until 10L).map(i => (i, doc(i.toInt)))), dir,
+      threshold = 0.9, nBuckets = 4)
+    val prefix = s"$dir/prefix"
+    val built = spark.read.parquet(prefix).count()
+    def perBucket(rows: Seq[(Int, Long)]): Map[Int, Long] =
+      rows.groupBy(_._1).map { case (b, rs) => b -> rs.map(_._2).sum }
+    (0 until 18).foreach { k =>
+      val id = 100L + k
+      DedupIndex.append(df(Seq((id, doc(id.toInt)))), dir, threshold = 0.9)
+        .count()
+      val nFiles = graft.util.Fs.dataFileCount(spark, stats)
+      assert(nFiles <= 17, s"prefstats grew to $nFiles files")
+      // no deletes, so the stats are exact: totals equal the prefix
+      // table, and so does every bucket's sum (the probe router's input)
+      val total = spark.read.parquet(prefix).count()
+      assert(DedupIndex.statsTotals(spark, dir).contains((total,
+        total - built)), s"statsTotals drifted after append $k")
+      assert(perBucket(graft.util.Sidecar.readRows(spark, stats)
+          .map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("n_rows")))) ==
+        perBucket(spark.read.parquet(prefix).groupBy("bucket").count()
+          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq),
+        s"per-bucket stats drifted after append $k")
+    }
+    assert(graft.util.Fs.dataFileCount(spark, stats) < 17,
+      "fixture vacuous: the fold never fired")
+  }
 }

@@ -490,4 +490,24 @@ class GraphAnnSpec extends SparkSpec {
       s"expected the actionable format message, got: ${e.getMessage}")
     c.unpersist()
   }
+
+  test("delete audits ids after the long cast: \"7\" and \"007\" are " +
+      "one id, so the set fails as a duplicate") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/cast"
+    val c = corpus(120).cache()
+    GraphAnn.ensure(c, dir)
+    val row = c.filter(col("vec_id") === 7L)
+    val e = intercept[IllegalArgumentException] {
+      GraphAnn.delete(row.select(col("vec_id").cast("string").as("vec_id"),
+          col("embedding"))
+        .unionByName(row.select(lit("007").as("vec_id"), col("embedding"))),
+        dir)
+    }
+    assert(e.getMessage.contains("duplicate"))
+    val builds = GraphAnn.buildsThisProcess
+    GraphAnn.ensure(c, dir)
+    assert(GraphAnn.buildsThisProcess == builds)
+    c.unpersist()
+  }
 }

@@ -285,4 +285,62 @@ class TextIndexSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       s"no bucket partition filter in plan:\n${plan.take(2000)}")
   }
+
+  test("delete audits ids after the long cast: \"7\" and \"007\" are " +
+      "one id, so the set fails as a duplicate") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/cast"
+    val corpus = df((0L until 10L).map(i => (i, doc(i.toInt))))
+    TextIndex.build(corpus, dir)
+    val s = spark
+    import s.implicits._
+    val e = intercept[IllegalArgumentException] {
+      TextIndex.delete(Seq(("7", doc(7)), ("007", doc(7)))
+        .toDF("doc_id", "text"), dir)
+    }
+    assert(e.getMessage.contains("duplicate"))
+    val b0 = TextIndex.buildsThisProcess
+    TextIndex.ensure(corpus, dir)
+    assert(TextIndex.buildsThisProcess == b0, "rejected delete drifted meta")
+  }
+
+  test("compact recovers a crash between bucket removal and rename: " +
+      "search matches the uncrashed store") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val corpus = df((0L until 30L).map(i => (i, doc(i.toInt))))
+    val delSet = df(Seq((3L, doc(3)), (7L, doc(7)), (12L, doc(12))))
+    val dirs = Seq("crash", "clean").map(n => s"$base/$n")
+    dirs.foreach { d =>
+      TextIndex.build(corpus, d)
+      TextIndex.delete(delSet, d)
+    }
+    val dir = dirs.head
+    // fabricate the worst window: survivors of one affected bucket
+    // staged, its live directory removed, rename never ran,
+    // tombstones still present
+    val raw = spark.read.parquet(s"$dir/postings")
+    val deleted = delSet.select(col("doc_id").as("doc"))
+    val b = raw.join(deleted, Seq("doc"), "left_semi")
+      .select("bucket").distinct().orderBy("bucket").head().getInt(0)
+    raw.filter(col("bucket") === b).join(deleted, Seq("doc"), "left_anti")
+      .repartition(col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(s"$dir/postings_staging")
+    graft.util.Fs.rmTree(spark, s"$dir/postings/bucket=$b")
+    dirs.foreach(TextIndex.compact(spark, _))
+    assert(!new java.io.File(s"$dir/postings_staging").exists())
+    assert(!new java.io.File(s"$dir/tombstones").exists())
+    val panel = df((0L until 20L).filterNot(Set(3L, 7L, 12L))
+        .map(i => (i, doc(i.toInt))))
+      .select(col("doc_id").as("qid"), col("text"))
+    val results = dirs.map(d => TextIndex.searchBm25(panel, d, topN = 3)
+      .collect().map(_.toSeq).toSet)
+    assert(results.head.nonEmpty && results.head == results(1),
+      "recovered store searches differently from the uncrashed one")
+    val live = corpus.join(delSet.select("doc_id"), Seq("doc_id"),
+      "left_anti")
+    val b0 = TextIndex.buildsThisProcess
+    TextIndex.ensure(live, dir)
+    assert(TextIndex.buildsThisProcess == b0)
+  }
 }

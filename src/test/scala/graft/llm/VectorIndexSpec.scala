@@ -555,4 +555,38 @@ class VectorIndexSpec extends SparkSpec {
     assert(ix.codes.count() == live.count())
     c.unpersist()
   }
+
+  test("delete audits ids after the long cast: \"7\" and \"007\" are " +
+      "one id, so the set fails as a duplicate (plain and filtered)") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val c = corpus(120).withColumn("label", (col("vec_id") % 3).cast("long"))
+      .cache()
+    def sevenTwice(cols: String*): DataFrame = {
+      val row = c.filter(col("vec_id") === 7L)
+      row.select(col("vec_id").cast("string").as("vec_id") +:
+          cols.map(col): _*)
+        .unionByName(row.select(lit("007").as("vec_id") +: cols.map(col): _*))
+    }
+    val plain = s"$base/cast_plain"
+    VectorIndex.build(c.select("vec_id", "embedding"), plain)
+    val e1 = intercept[IllegalArgumentException] {
+      VectorIndex.delete(sevenTwice("embedding"), plain)
+    }
+    assert(e1.getMessage.contains("duplicate"))
+    val filtered = s"$base/cast_filtered"
+    VectorIndex.buildFiltered(c, filtered, "label")
+    val e2 = intercept[IllegalArgumentException] {
+      VectorIndex.deleteFiltered(sevenTwice("embedding", "label"), filtered,
+        "label")
+    }
+    assert(e2.getMessage.contains("duplicate"))
+    // neither rejected delete moved n_vectors: both stores still load
+    // as pure fingerprint-validated stores of the full corpus
+    val builds = VectorIndex.buildsThisProcess
+    assert(VectorIndex.ensure(c.select("vec_id", "embedding"), plain)
+      .nVectors == 120)
+    assert(VectorIndex.ensureFiltered(c, filtered, "label").nVectors == 120)
+    assert(VectorIndex.buildsThisProcess == builds)
+    c.unpersist()
+  }
 }
