@@ -225,7 +225,9 @@ object Bench {
     val timing = if (reps > 1) "warm-median" else "cold-single-shot"
     val total = times.values.sum
     val loadEnd = loadAvg()
-    val cores = Runtime.getRuntime.availableProcessors()
+    // the cores the session honours (the master is local[$cpus]), not
+    // the host's processor count
+    val cores = cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors())
     // names whose timing is the store-ops-only bench variant (full
     // gate choreography runs in Verify only) — self-describing artifact
     val variants = SparkEntry.benchVariantNames

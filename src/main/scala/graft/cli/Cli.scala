@@ -101,8 +101,8 @@ object Ingest {
       bundle = Deconfound.residualizeFeatures(bundle, covCols, "features", betas)
       bundle = Deconfound.residualizeLabel(bundle, covCols, "label", betaY)
     }
-    Bundle.write(bundle, cols, out)
-    println(s"ingested ${bundle.count()} rows x $p SNPs -> $out")
+    val n = Bundle.write(bundle, cols, out)
+    println(s"ingested $n rows x $p SNPs -> $out")
     Cli.stop(spark)
   }
 }
@@ -136,8 +136,8 @@ object Adjust {
     val betaY = Deconfound.labelBetas(bundle, covCols, "label")
     bundle = Deconfound.residualizeFeatures(bundle, covCols, "features", betas)
     bundle = Deconfound.residualizeLabel(bundle, covCols, "label", betaY)
-    Bundle.write(bundle, cols, out)
-    println(s"adjusted ${bundle.count()} rows x $p SNPs " +
+    val n = Bundle.write(bundle, cols, out)
+    println(s"adjusted $n rows x $p SNPs " +
       s"for ${covCols.size} covariates -> $out")
     Cli.stop(spark)
   }
@@ -172,7 +172,14 @@ object Cv {
 }
 
 /** `scripts/refit.py` — full-data two-stage refit + explanation
-  * (SURVEY §3.2). */
+  * (SURVEY §3.2). Two independent chains read the one cached bundle and
+  * run at the same time ([[Concurrent.both]]):
+  *   - the two-stage refit (M9) → `model/`, `used_cols/`, `shap/` and
+  *     `importances/`;
+  *   - the one-round CV out-of-fold fits (M7) → Platt fit (M10) →
+  *     `platt/`.
+  * Neither reads the other's output; both use the best CV params.
+  */
 object Refit {
   def main(args: Array[String]): Unit = {
     val a = Cli.parseArgs(args)
@@ -190,39 +197,46 @@ object Refit {
     val hp0 = Train.bestParams(hpDf, a.getOrElse("metric", "auc"))
     val hp = a.get("n-booster-override")
       .map(n => hp0.copy(nRounds = n.toInt)).getOrElse(hp0)
-    // fit #1 on all p, prune to used predictors, fit #2 (M9)
-    val (used, model) = Pipeline.shapRefit(bundle, hp, seed)
-    Sinks.saveModel(model, s"$out/model")
-    val spark2 = spark; import spark2.implicits._
-    Sinks.writeCsv(used.map(snpNames).toDF("predictors"),
-      s"$out/used_cols", coalesce1 = true)
-    val flat = Explain.flattenModel(model.trees)
-    val usedNames = used.map(snpNames)
-    var imp = Explain.importances(flat, usedNames, spark)
-    val pruned = Pipeline.sliceFeatures(bundle, used)
-    if (runShap) {
-      val shap = Explain.shapContributions(
-        pruned, flat, model.treeWeights, used.length)
-      shap.select(col("iid"), col("shap"), col("margin"))
-        .write.mode("overwrite").parquet(s"$out/shap")
-      imp = imp.join(
-        Explain.meanAbsShap(shap, used.length)
-          .join(usedNames.zipWithIndex.map { case (n, i) => (i, n) }
-            .toDF("pos", "predictors"), "pos")
-          .select(col("predictors"), col("shap_mean_abs")),
-        Seq("predictors"), "left")
-    }
-    Sinks.writeCsv(imp.orderBy(desc("total_gain")), s"$out/importances",
-      coalesce1 = true)
-    // Platt from one-round CV out-of-fold predictions (M7 + M10)
+    // also fills the bundle cache before both chains read it
     val nBlocks = bundle.agg(max("block_id")).head().getLong(0) + 1
-    val oof = Train.oneRoundCv(bundle, k = 3, nBlocks = nBlocks, hp = hp,
-      seed = seed, labelCol = labelCol)
-    val (pa, pb) = Pipeline.fitPlatt(oof)
-    Sinks.writeCsv(Seq((pa, pb)).toDF("platt_a", "platt_b"),
-      s"$out/platt", coalesce1 = true)
+    val spark2 = spark; import spark2.implicits._
+    val (nUsed, _) = Concurrent.both(
+      {
+        // fit #1 on all p, prune to used predictors, fit #2 (M9)
+        val (used, model) = Pipeline.shapRefit(bundle, hp, seed)
+        Sinks.saveModel(model, s"$out/model")
+        Sinks.writeCsv(used.map(snpNames).toDF("predictors"),
+          s"$out/used_cols", coalesce1 = true)
+        val flat = Explain.flattenModel(model.trees)
+        val usedNames = used.map(snpNames)
+        var imp = Explain.importances(flat, usedNames, spark)
+        val pruned = Pipeline.sliceFeatures(bundle, used)
+        if (runShap) {
+          val shap = Explain.shapContributions(
+            pruned, flat, model.treeWeights, used.length)
+          shap.select(col("iid"), col("shap"), col("margin"))
+            .write.mode("overwrite").parquet(s"$out/shap")
+          imp = imp.join(
+            Explain.meanAbsShap(shap, used.length)
+              .join(usedNames.zipWithIndex.map { case (n, i) => (i, n) }
+                .toDF("pos", "predictors"), "pos")
+              .select(col("predictors"), col("shap_mean_abs")),
+            Seq("predictors"), "left")
+        }
+        Sinks.writeCsv(imp.orderBy(desc("total_gain")), s"$out/importances",
+          coalesce1 = true)
+        used.length
+      },
+      {
+        // Platt from one-round CV out-of-fold predictions (M7 + M10)
+        val oof = Train.oneRoundCv(bundle, k = 3, nBlocks = nBlocks, hp = hp,
+          seed = seed, labelCol = labelCol)
+        val (pa, pb) = Pipeline.fitPlatt(oof)
+        Sinks.writeCsv(Seq((pa, pb)).toDF("platt_a", "platt_b"),
+          s"$out/platt", coalesce1 = true)
+      })
     bundle.unpersist()
-    println(s"refit done: ${used.length} used predictors -> $out")
+    println(s"refit done: $nUsed used predictors -> $out")
     Cli.stop(spark)
   }
 }

@@ -32,18 +32,22 @@ object Bundle {
     * write-once full check (a ragged bundle from a partial write or
     * schema drift would otherwise surface deep inside a kernel; the
     * fast one-row check in [[read]] cannot catch it). One column-pruned
-    * scan of the fresh files, paid once at ingest.
+    * scan of the fresh files, paid once at ingest. Returns the number
+    * of rows written, read off the written files (the validation scan
+    * counts them), so callers never re-run the bundle's lineage to
+    * report it.
     */
   def write(bundle: DataFrame, cols: DataFrame, dir: String,
-      validate: Boolean = true): Unit = {
+      validate: Boolean = true): Long = {
     bundle.write.mode("overwrite").parquet(bundleDir(dir))
     cols.coalesce(1).write.mode("overwrite").parquet(colsDir(dir))
+    val written = bundle.sparkSession.read.parquet(bundleDir(dir))
     if (validate) {
       // size(null) is NULL under ANSI and min/max SKIP nulls, so null
       // arrays need their own count — min/max alone would validate a
       // bundle where only some rows are null. Empty bundles and ragged
       // widths must likewise fail with a clear message, not an NPE.
-      val mm = bundle.sparkSession.read.parquet(bundleDir(dir))
+      val mm = written
         .agg(count(lit(1)).as("n"),
           sum(when(col("features").isNull, 1L).otherwise(0L)).as("nulls"),
           min(size(col("features"))).as("mn"),
@@ -54,7 +58,8 @@ object Bundle {
       require(mm.getInt(2) == mm.getInt(3),
         s"ragged features widths in written bundle at $dir: " +
           s"min=${mm.getInt(2)} max=${mm.getInt(3)}")
-    }
+      mm.getLong(0)
+    } else written.count()
   }
 
   /** S6 — the cols side table. */

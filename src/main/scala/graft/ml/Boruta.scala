@@ -143,6 +143,12 @@ object Boruta {
     * then two-sided binomial tests with BH-FDR + Bonferroni two-step
     * (boruta.py:127-157), tentative resolution by medians (45-46), and
     * O6 ranking assembly (55-71).
+    *
+    * The iterations run one after another on purpose. They are as
+    * independent as CV folds, but each one caches its own shadow-widened
+    * copy of the bundle (p + max(p, 5) features), so running them at
+    * once ([[Concurrent.all]], as the CV drivers do) would multiply the
+    * cached data by `nIter`.
     */
   def run(bundle: DataFrame, p: Int, nIter: Int, hp: HyperParams,
       seed: Long, alpha: Double = 0.05, perc: Double = 100.0,

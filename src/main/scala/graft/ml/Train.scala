@@ -27,9 +27,14 @@ final case class HyperParams(
   * Scale design notes:
   *   - fits/predicts are MLlib `GBTClassifier`/`GBTRegressor` — tree
   *     aggregation is Spark's own distributed histogram path;
-  *   - fold-major loop caches each fold's train/test ONCE and iterates
-  *     params inside (the reference's "build each DaskDMatrix once"
-  *     trick, crossvalidate.py:248-262);
+  *   - CV caches its vectorized input ONCE per call (the reference's
+  *     "build each DaskDMatrix once" trick, crossvalidate.py:248-262)
+  *     and takes every fold as a block_id filter over that cache;
+  *   - the k folds are independent, so they fit at the same time
+  *     ([[Concurrent.all]]): one fold's jobs use the cores while another
+  *     fold's driver plans its next tree level. Params stay sequential
+  *     inside each fold. Memory bound: one cached input plus k times
+  *     the binned training points MLlib persists for one fit;
   *   - CV result rows are folds×params-sized (≤ a few hundred) — a
   *     legitimate driver-side collect;
   *   - splits are chunk-aligned block_id predicates (zero shuffle).
@@ -134,38 +139,36 @@ object Train {
     org.apache.spark.sql.types.StructField("fold", org.apache.spark.sql.types.IntegerType),
     org.apache.spark.sql.types.StructField("n_boost_round", org.apache.spark.sql.types.IntegerType)))
 
-  /** M6 — fold-major CV: per fold cache train/test once, iterate params
-    * inside (crossvalidate.py:243-305). `metric` ∈ {"auc", "rmse"}
+  /** M6 — fold-major CV: one cache of the vectorized input, the k
+    * folds fitted at the same time, params iterated inside each fold
+    * (crossvalidate.py:243-305). `metric` ∈ {"auc", "rmse"}
     * (scripts/cv.py:90-99 regime switch). Returns the per-(param, fold)
-    * score table.
+    * score table, fold-major and param-minor.
     */
   def crossValidate(bundle: DataFrame, k: Int, nBlocks: Long,
       params: Seq[HyperParams], metric: String, seed: Long,
       labelCol: String = "label"): DataFrame = {
     val spark = bundle.sparkSession
-    val withFv = withVector(bundle)
-    val rows = scala.collection.mutable.ArrayBuffer[Row]()
-    Splits.chunkedKFold(withFv, k, nBlocks).zipWithIndex.foreach {
-      case ((train, test), fold) =>
-        val trainC = train.cache(); val testC = test.cache()
-        trainC.count(); testC.count() // materialization barrier before fit
-        try params.foreach { hp =>
+    val withFv = withVector(bundle).cache()
+    val rows = try Concurrent.all(
+      Splits.chunkedKFold(withFv, k, nBlocks).zipWithIndex.map {
+        case ((train, test), fold) => () => params.map { hp =>
           val (testScore, trainScore) =
             if (metric == "auc") {
-              val m = fitClassifier(trainC, hp, seed, labelCol)
-              (Scoring.auc(predictClassifier(m, testC), labelCol, "y_pred"),
-                Scoring.auc(predictClassifier(m, trainC), labelCol, "y_pred"))
+              val m = fitClassifier(train, hp, seed, labelCol)
+              (Scoring.auc(predictClassifier(m, test), labelCol, "y_pred"),
+                Scoring.auc(predictClassifier(m, train), labelCol, "y_pred"))
             } else {
-              val m = fitRegressor(trainC, hp, seed, labelCol)
-              (Scoring.rmse(predictRegressor(m, testC), labelCol, "y_pred"),
-                Scoring.rmse(predictRegressor(m, trainC), labelCol, "y_pred"))
+              val m = fitRegressor(train, hp, seed, labelCol)
+              (Scoring.rmse(predictRegressor(m, test), labelCol, "y_pred"),
+                Scoring.rmse(predictRegressor(m, train), labelCol, "y_pred"))
             }
-          rows += Row(hp.eta, hp.subsample, hp.colsampleBytree, hp.maxDepth,
+          Row(hp.eta, hp.subsample, hp.colsampleBytree, hp.maxDepth,
             metric, testScore, trainScore, fold, hp.nRounds)
-        } finally { trainC.unpersist(); testC.unpersist() }
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), cvSchema)
+        }
+      }).flatten
+    finally withFv.unpersist()
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), cvSchema)
   }
 
   /** A1/O1/O2 over CV results — grouped mean across folds, best combo
@@ -188,20 +191,23 @@ object Train {
       r.getAs[Int]("n_boost_round"))
   }
 
-  /** M7 — one-round CV: refit `hp` per fold, emit out-of-fold
-    * predictions (iid, y_true, y_pred, fold) — the Platt training table
-    * (crossvalidate.py:178-200).
+  /** M7 — one-round CV: refit `hp` per fold, the k fits at the same
+    * time over one cache of the vectorized input, and emit out-of-fold
+    * predictions (iid, y_true, y_pred, fold) in fold order — the Platt
+    * training table (crossvalidate.py:178-200). The predictions stay
+    * lazy; the cache is dropped once the fits are done.
     */
   def oneRoundCv(bundle: DataFrame, k: Int, nBlocks: Long, hp: HyperParams,
       seed: Long, labelCol: String = "label"): DataFrame = {
-    val withFv = withVector(bundle)
-    Splits.chunkedKFold(withFv, k, nBlocks).zipWithIndex.map {
-      case ((train, test), fold) =>
-        val m = fitClassifier(train.cache(), hp, seed, labelCol)
-        train.unpersist()
-        predictClassifier(m, test)
-          .select(col("iid"), col(labelCol).as("y_true"), col("y_pred"),
-            lit(fold).as("fold"))
+    val withFv = withVector(bundle).cache()
+    val folds = Splits.chunkedKFold(withFv, k, nBlocks)
+    val models = try Concurrent.all(folds.map { case (train, _) =>
+      () => fitClassifier(train, hp, seed, labelCol)
+    }) finally withFv.unpersist()
+    folds.zip(models).zipWithIndex.map { case (((_, test), m), fold) =>
+      predictClassifier(m, test)
+        .select(col("iid"), col(labelCol).as("y_true"), col("y_pred"),
+          lit(fold).as("fold"))
     }.reduce(_ unionByName _)
   }
 
