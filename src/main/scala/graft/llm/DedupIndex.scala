@@ -1,9 +1,10 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import graft.store.{StageSwap, Table, Tombstones}
+import graft.store.{Meta, Op, StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** Persisted n-gram-Jaccard DEDUP SIGNATURE STORE — the dedup analog of
   * the vector/graph index-maintenance matrix: build / ensure / probe /
@@ -47,11 +48,7 @@ import org.apache.spark.sql.functions._
   *     the tombstones, folded at maintenance), so the hot-gram refresh
   *     tick costs O(appended) instead of re-exploding the corpus while
   *     holding the writer lease.
-  *   - `meta/` — doc count, XOR fingerprint (incrementally maintained:
-  *     append XORs survivors in, delete XORs them back out, so
-  *     [[ensure]] over the live corpus validates WITHOUT rebuild),
-  *     store threshold t0, bucket counts, max indexed id (the
-  *     monotonic-id ingest contract), format_version.
+  *   - `meta/` — one row, [[StoreMeta]].
   *
   * Keeper semantics match [[Dedup.incrementalDedup]] (and its DuckDB
   * oracle): batch ids are all greater than every stored id (enforced),
@@ -75,7 +72,15 @@ object DedupIndex {
     * later [[ensure]] was a pure fingerprint-validated load. */
   @volatile var buildsThisProcess: Int = 0
 
-  private val Format = 2
+  /** `meta/`: doc count and XOR fingerprint (incrementally maintained:
+    * append XORs survivors in, delete XORs them back out, so [[ensure]]
+    * over the live corpus validates WITHOUT rebuild), max indexed id
+    * (the monotonic-id ingest contract), store threshold t0, bucket
+    * counts. */
+  private val StoreMeta = Meta("dedup index", 2,
+    "n_docs" -> LongType, "checksum" -> LongType, "max_id" -> LongType,
+    "threshold" -> DoubleType, "n_buckets" -> IntegerType,
+    "n_id_buckets" -> IntegerType)
   private val Eps = 1e-9
 
   private def indexable(docs: DataFrame, idCol: String,
@@ -329,25 +334,23 @@ object DedupIndex {
   /** Fold unfolded deltas into an exact rewritten base (maintenance
     * commit). The base rewrite and delta drop are one atomicity domain
     * — a crash in between would double-count every folded delta — so
-    * the fold sits behind an [[graft.util.IngestMarker]]: a crash fails
-    * every later op LOUD and ensure() rebuilds, the documented
-    * recovery. Caller holds the writer lease. */
-  private def foldGramDf(spark: SparkSession, dir: String): Unit = {
-    if (!hasGramDf(spark, dir) ||
-      !graft.util.Fs.exists(spark, gramDfDelta(dir))) return
-    graft.util.IngestMarker.write(spark, dir, "gramdf delta fold in flight")
-    // the fold rewrites to the BUCKET-PARTITIONED layout (upgrading a
-    // legacy unpartitioned base in passing), PRESERVING the store's
-    // recorded gramdf bucket count
-    val nb = gramDfBucketsOf(spark, dir)
-    StageSwap.replace(spark, Table(gramDfBase(dir))) { staging =>
-      writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L),
-        staging, nb)
-    }
-    writeGramDfLayout(spark, dir, nb)
-    graft.util.Fs.rmTree(spark, gramDfDelta(dir))
-    graft.util.IngestMarker.clear(spark, dir)
-  }
+    * the fold sits in an [[Op.window]]: a crash fails every later op
+    * LOUD and ensure() rebuilds, the documented recovery. Caller holds
+    * the writer lease. */
+  private def foldGramDf(spark: SparkSession, dir: String): Unit =
+    if (hasGramDf(spark, dir) && graft.util.Fs.exists(spark, gramDfDelta(dir)))
+      Op.window(spark, dir, "gramdf delta fold in flight") {
+        // the fold rewrites to the BUCKET-PARTITIONED layout (upgrading
+        // a legacy unpartitioned base in passing), PRESERVING the
+        // store's recorded gramdf bucket count
+        val nb = gramDfBucketsOf(spark, dir)
+        StageSwap.replace(spark, Table(gramDfBase(dir))) { staging =>
+          writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L),
+            staging, nb)
+        }
+        writeGramDfLayout(spark, dir, nb)
+        graft.util.Fs.rmTree(spark, gramDfDelta(dir))
+      }
 
   /** The frozen hot set, driver-side (bounded by the df lemma — every
     * consumer collected it anyway, so the Spark-job read bought
@@ -368,9 +371,6 @@ object DedupIndex {
       graft.util.Sidecar.append(spark, s"$dir/hotgrams",
         hotGramsSchema, rows)
   }
-
-  private def readMeta(spark: SparkSession, dir: String) =
-    graft.util.Sidecar.readHead(spark, s"$dir/meta")
 
   private def prefixT(dir: String) = Table(s"$dir/prefix", "bucket")
   private def setsT(dir: String) = Table(s"$dir/sets", "sbucket")
@@ -504,37 +504,9 @@ object DedupIndex {
       idCol: String): DataFrame =
     spark.read.schema(prefixSchema(idCol)).parquet(s"$dir/prefix")
 
-  private def metaSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_docs",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("checksum",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("max_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("threshold",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("n_buckets",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("n_id_buckets",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("format_version",
-        org.apache.spark.sql.types.IntegerType)))
-
-  // driver-side meta commit ([[graft.util.Sidecar]]) — read at the top
-  // of every op, written at the end of every mutation
-  private def writeMeta(spark: SparkSession, dir: String, nDocs: Long,
-      checksum: Long, maxId: Long, t0: Double, nBuckets: Int,
-      nIdBuckets: Int): Unit =
-    // Seq[Any]: mixed numeric literals must NOT unify to a wider type
-    // (a Long checksum widened through Double loses bits)
-    graft.util.Sidecar.write(spark, s"$dir/meta", metaSchema,
-      Seq(Seq[Any](nDocs, checksum, maxId, t0, nBuckets, nIdBuckets,
-        Format)))
-
   /** Shingle the corpus ONCE, write prefix + sets + meta. The
     * once-per-corpus cost every later [[probe]]/[[append]] amortizes.
-    * Holds the store's single-writer lease ([[graft.util.StoreLease]])
+    * Holds the store's single-writer lease ([[graft.store.Op.build]])
     * like every mutating op.
     *
     * `nBuckets`/`nIdBuckets` = 0 (the default) derives the partition
@@ -548,9 +520,8 @@ object DedupIndex {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1]: $threshold")
     val spark = docs.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "build") {
+    Op.build(spark, dir, "build") {
     buildsThisProcess += 1
-    graft.util.Fs.rmTree(spark, dir)
     val idx = indexable(docs, idCol, textCol)
     val grams = Dedup.shingleHashes(idx, idCol, textCol)
       .localCheckpoint(eager = true)
@@ -586,7 +557,7 @@ object DedupIndex {
     val (n, sum) = fingerprint(docs, idCol, textCol)
     val maxId = docs.agg(coalesce(max(col(idCol)).cast("long"),
       lit(Long.MinValue))).head().getLong(0)
-    writeMeta(spark, dir, n, sum, maxId, threshold, nb, nib)
+    StoreMeta.write(spark, dir, n, sum, maxId, threshold, nb, nib)
     }
   }
 
@@ -601,34 +572,23 @@ object DedupIndex {
     * corpus RETHROWS instead of being treated as a mismatch, because
     * the rebuild it would trigger starts by deleting the healthy store
     * — a transient error must never destroy the only copy of the
-    * index. A crashed-append marker ([[graft.util.IngestMarker]])
-    * counts as invalid: rebuild is exactly the documented recovery. */
+    * index. A crashed-op marker counts as invalid ([[Op.valid]]):
+    * rebuild is exactly the documented recovery. */
   def ensure(docs: DataFrame, dir: String, threshold: Double,
       nBuckets: Int = 0, nIdBuckets: Int = 0, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    val metaOpt =
-      if (graft.util.IngestMarker.present(spark, dir)) None
-      else try Some(readMeta(spark, dir))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val valid = metaOpt.exists { meta =>
-      val shapeOk = try {
-        // bucket counts are a LAYOUT fact the store carries in meta; a
-        // caller on the derive-default (0) accepts whatever the store
-        // was built with (a maintained store's corpus has grown since
-        // build, so re-deriving here would spuriously rebuild) — only
-        // an EXPLICIT count is a contract to enforce
-        meta.getAs[Int]("format_version") == Format &&
-          math.abs(meta.getAs[Double]("threshold") - threshold) < Eps &&
-          (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
-          (nIdBuckets == 0 ||
-            meta.getAs[Int]("n_id_buckets") == nIdBuckets)
-      } catch { case scala.util.control.NonFatal(_) => false }
-      shapeOk && {
-        val (n, sum) = fingerprint(docs, idCol, textCol) // NOT caught
-        meta.getAs[Long]("n_docs") == n &&
-          meta.getAs[Long]("checksum") == sum
-      }
+    // bucket counts are a LAYOUT fact the store carries in meta; a
+    // caller on the derive-default (0) accepts whatever the store was
+    // built with (a maintained store's corpus has grown since build, so
+    // re-deriving here would spuriously rebuild) — only an EXPLICIT
+    // count is a contract to enforce
+    val valid = Op.valid(docs.sparkSession, dir, StoreMeta) { meta =>
+      math.abs(meta.getAs[Double]("threshold") - threshold) < Eps &&
+        (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
+        (nIdBuckets == 0 || meta.getAs[Int]("n_id_buckets") == nIdBuckets)
+    }.exists { meta =>
+      val (n, sum) = fingerprint(docs, idCol, textCol) // NOT caught
+      meta.getAs[Long]("n_docs") == n && meta.getAs[Long]("checksum") == sum
     }
     if (!valid) build(docs, dir, threshold, nBuckets, nIdBuckets,
       idCol, textCol)
@@ -645,11 +605,7 @@ object DedupIndex {
   def probePairs(batch: DataFrame, dir: String, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = batch.sparkSession
-    graft.util.IngestMarker.requireAbsent(spark, dir, "probe")
-    val meta = readMeta(spark, dir)
-    require(meta.getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has format ${meta.getAs[Int]("format_version")}" +
-        s", expected $Format — rebuild via ensure()")
+    val meta = Op.read(spark, dir, StoreMeta, "probe")
     val t0 = meta.getAs[Double]("threshold")
     require(threshold >= t0 - Eps,
       s"probe threshold $threshold is below the store threshold $t0 — " +
@@ -765,9 +721,9 @@ object DedupIndex {
     * partitions are appended to, never rewritten.
     *
     * Crash contract (r13 advice): the data appends and the meta commit
-    * are two separate writes, so an [[graft.util.IngestMarker]] goes
-    * down BEFORE the first data file and clears AFTER the meta write.
-    * A crash in between leaves the marker, and every later
+    * are two separate writes, so they sit in one [[Op.window]]: the
+    * marker goes down BEFORE the first data file and clears AFTER the
+    * meta write. A crash in between leaves the marker, and every later
     * probe/append/delete/compact fails LOUD instead of letting a
     * redelivered batch self-match its half-ingested rows (J = 1) and
     * silently drop genuine survivors; [[ensure]] sees the marker and
@@ -775,12 +731,8 @@ object DedupIndex {
   def append(batch: DataFrame, dir: String, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "append") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "append")
-    val meta = readMeta(spark, dir)
-    require(meta.getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has format ${meta.getAs[Int]("format_version")}" +
-        s", expected $Format — rebuild via ensure()")
+    Op.mutate(spark, dir, StoreMeta, "append") { o =>
+    val meta = o.meta
     val t0 = meta.getAs[Double]("threshold")
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nIdBuckets = meta.getAs[Int]("n_id_buckets")
@@ -791,42 +743,42 @@ object DedupIndex {
       idCol, textCol).localCheckpoint(eager = true)
     // marker content is diagnostic only — naming the op costs nothing,
     // counting the survivors cost one extra job
-    graft.util.IngestMarker.write(spark, dir, "append in flight")
-    gramsS
-      .withColumn("sbucket", pmod(col(idCol), lit(nIdBuckets)).cast("int"))
-      .repartition(col("sbucket"))
-      .write.mode("append").partitionBy("sbucket").parquet(s"$dir/sets")
-    val prefS = prefixGrams(gramsS, idCol, t0, nBuckets,
-        readHotGramsArr(spark, dir))
-      .localCheckpoint(eager = true)
-    prefS
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$dir/prefix")
-    // stats DELTA: one tiny aggregate of the (checkpointed) batch
-    // prefix (≤ nBuckets result rows), committed driver-side. A legacy
-    // store WITHOUT the table gets a one-time full rewrite instead — a
-    // delta-only table would under-count the base rows and could
-    // mis-route a huge store to the broadcast join.
-    if (graft.util.Fs.exists(spark, statsPath(dir))) {
-      graft.util.Sidecar.append(spark, statsPath(dir), statsSchema,
-        prefS.groupBy("bucket").agg(count(lit(1)).as("n_rows"))
-          .collect().map(r => Seq[Any](r.getInt(0), r.getLong(1), "append"))
-          .toSeq)
-      maybeFoldStats(spark, dir)
-    } else rewriteStats(spark, dir)
-    // df DELTA: one tiny aggregate of the survivors' grams, inside the
-    // same marker window as the data writes. A legacy store without
-    // gramdf/ skips it — the refresh's legacy path recomputes and
-    // seeds the table there.
-    if (hasGramDf(spark, dir))
-      writeGramDfDelta(spark, dir, gramsS, sign = 1)
-    val (sn, ssum) = fingerprint(survivors, idCol, textCol)
-    val bMax = batch.agg(coalesce(max(col(idCol)).cast("long"),
-      lit(Long.MinValue))).head().getLong(0)
-    writeMeta(spark, dir, meta.getAs[Long]("n_docs") + sn,
-      meta.getAs[Long]("checksum") ^ ssum,
-      math.max(meta.getAs[Long]("max_id"), bMax), t0, nBuckets, nIdBuckets)
-    graft.util.IngestMarker.clear(spark, dir)
+    o.window("append in flight") {
+      gramsS
+        .withColumn("sbucket", pmod(col(idCol), lit(nIdBuckets)).cast("int"))
+        .repartition(col("sbucket"))
+        .write.mode("append").partitionBy("sbucket").parquet(s"$dir/sets")
+      val prefS = prefixGrams(gramsS, idCol, t0, nBuckets,
+          readHotGramsArr(spark, dir))
+        .localCheckpoint(eager = true)
+      prefS
+        .repartition(col("bucket"))
+        .write.mode("append").partitionBy("bucket").parquet(s"$dir/prefix")
+      // stats DELTA: one tiny aggregate of the (checkpointed) batch
+      // prefix (≤ nBuckets result rows), committed driver-side. A
+      // legacy store WITHOUT the table gets a one-time full rewrite
+      // instead — a delta-only table would under-count the base rows
+      // and could mis-route a huge store to the broadcast join.
+      if (graft.util.Fs.exists(spark, statsPath(dir))) {
+        graft.util.Sidecar.append(spark, statsPath(dir), statsSchema,
+          prefS.groupBy("bucket").agg(count(lit(1)).as("n_rows"))
+            .collect().map(r => Seq[Any](r.getInt(0), r.getLong(1), "append"))
+            .toSeq)
+        maybeFoldStats(spark, dir)
+      } else rewriteStats(spark, dir)
+      // df DELTA: one tiny aggregate of the survivors' grams, inside
+      // the same window as the data writes. A legacy store without
+      // gramdf/ skips it — the refresh's legacy path recomputes and
+      // seeds the table there.
+      if (hasGramDf(spark, dir))
+        writeGramDfDelta(spark, dir, gramsS, sign = 1)
+      val (sn, ssum) = fingerprint(survivors, idCol, textCol)
+      val bMax = batch.agg(coalesce(max(col(idCol)).cast("long"),
+        lit(Long.MinValue))).head().getLong(0)
+      o.commit("n_docs" -> (meta.getAs[Long]("n_docs") + sn),
+        "checksum" -> (meta.getAs[Long]("checksum") ^ ssum),
+        "max_id" -> math.max(meta.getAs[Long]("max_id"), bMax))
+    }
     kept
     }
   }
@@ -839,17 +791,12 @@ object DedupIndex {
   def delete(deleted: DataFrame, dir: String, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val spark = deleted.sparkSession
-    import spark.implicits._
-    graft.util.StoreLease.withLease(spark, dir, "delete") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "delete")
-    val meta = readMeta(spark, dir)
-    // same guard as probePairs/compact/compactFiles (r14 advice): a
-    // format-1 store must fail LOUD here too — without it, delete's
-    // writeMeta stamps the current format and silently relabels a
-    // legacy store that has no hotgrams/ table, wedging every later op
-    require(meta.getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has format ${meta.getAs[Int]("format_version")}" +
-        s", expected $Format — rebuild via ensure()")
+    // the frame's format check matters here too (r14 advice): without
+    // it, delete's meta commit stamps the current format and silently
+    // relabels a format-1 store that has no hotgrams/ table, wedging
+    // every later op
+    Op.mutate(spark, dir, StoreMeta, "delete") { o =>
+    val meta = o.meta
     val ids = deleted.select(col(idCol).cast("long").as("nid"))
       .localCheckpoint(eager = true)
     // ONE aggregate answers every row-shaped audit (total, indexable,
@@ -875,7 +822,6 @@ object DedupIndex {
     require(nStored == nDel,
       s"${nDel - nStored} of $nDel ${idCol}s are not in the index at $dir")
     tombs(dir).requireFresh(spark, ids, nDel, s"${idCol}s")
-    val dn = nIdx
     val dsum = if (audit.isNullAt(3)) 0L else audit.getLong(3)
     // planned (not run) before the marker: a non-integral id column
     // fails here, before the first write, instead of mid-window
@@ -884,18 +830,14 @@ object DedupIndex {
     // tombstones, the NEGATIVE df delta, and the meta commit are one
     // atomicity domain now that gramdf/ must stay exact (a crash
     // between them would leave df overstated and the fingerprint
-    // stale): marker down before the first write, cleared after —
-    // a crash fails later ops LOUD and ensure() rebuilds.
-    graft.util.IngestMarker.write(spark, dir,
-      s"delete of $nDel docs in flight")
-    tombs(dir).append(ids)
-    if (hasGramDf(spark, dir))
-      writeGramDfDelta(spark, dir, delGrams, sign = -1)
-    writeMeta(spark, dir, meta.getAs[Long]("n_docs") - dn,
-      meta.getAs[Long]("checksum") ^ dsum, meta.getAs[Long]("max_id"),
-      meta.getAs[Double]("threshold"), meta.getAs[Int]("n_buckets"),
-      meta.getAs[Int]("n_id_buckets"))
-    graft.util.IngestMarker.clear(spark, dir)
+    // stale), so they share one window
+    o.window(s"delete of $nDel docs in flight") {
+      tombs(dir).append(ids)
+      if (hasGramDf(spark, dir))
+        writeGramDfDelta(spark, dir, delGrams, sign = -1)
+      o.commit("n_docs" -> (meta.getAs[Long]("n_docs") - nIdx),
+        "checksum" -> (meta.getAs[Long]("checksum") ^ dsum))
+    }
     }
   }
 
@@ -905,10 +847,7 @@ object DedupIndex {
     * tombstones drop LAST). Also the heavyweight gramdf commit: deltas
     * are evaluated and folded back to one exact base. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compact") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
-    require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has an unexpected format — rebuild via ensure()")
+    Op.mutate(spark, dir, StoreMeta, "compact") { o =>
     StageSwap.recover(spark, prefixT(dir), setsT(dir))
     // gramdf maintenance first (compact is the heavyweight commit):
     // when unfolded deltas exist, evaluate — the cheap candidate tick
@@ -919,10 +858,10 @@ object DedupIndex {
     // content-preserving and safe either way.
     if (hasGramDf(spark, dir) &&
       graft.util.Fs.exists(spark, gramDfDelta(dir))) {
-      refreshHotGramsLocked(spark, dir, force = true): Unit
+      refreshHotGramsLocked(spark, dir, o.meta, force = true): Unit
       maybeFoldGramDf(spark, dir, force = true)
     } else {
-      refreshHotGramsLocked(spark, dir): Unit
+      refreshHotGramsLocked(spark, dir, o.meta): Unit
       maybeFoldGramDf(spark, dir, force = true)
     }
     val tomb = tombs(dir)
@@ -958,17 +897,14 @@ object DedupIndex {
     * 16 batches (amortized O(1) files touched per ingested row). */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
       maxRecordsPerFile: Long = 8000000L, refreshHot: Boolean = true): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiles")
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has an unexpected format — rebuild via ensure()")
+    Op.mutate(spark, dir, StoreMeta, "compactFiles") { o =>
     StageSwap.recover(spark, prefixT(dir), setsT(dir))
     // hot-gram drift maintenance rides the file-merge cadence (r14
     // verdict item 1): recutting affected docs' prefixes rewrites
     // whole buckets to one task's output anyway, so refresh-then-fold
     // never merges a bucket twice
-    if (refreshHot) refreshHotGramsLocked(spark, dir): Unit
+    if (refreshHot) refreshHotGramsLocked(spark, dir, o.meta): Unit
     Seq(prefixT(dir), setsT(dir))
       .foreach(StageSwap.mergeFiles(spark, _, maxFiles, maxRecordsPerFile))
     }
@@ -1005,9 +941,8 @@ object DedupIndex {
     *
     * Crash contract: steps 2–3 are one atomicity domain — a probe
     * against an extended hot set with un-recut prefixes (or vice
-    * versa) could silently miss pairs, so an [[graft.util
-    * .IngestMarker]] goes down before the first mutation and clears
-    * after the swap; a crash in between fails every later op LOUD and
+    * versa) could silently miss pairs, so they sit in one
+    * [[Op.window]]; a crash in between fails every later op LOUD and
     * ensure() rebuilds (the documented recovery).
     *
     * Runs automatically inside [[compactFiles]] (the maintenance
@@ -1021,20 +956,16 @@ object DedupIndex {
     * promoted. */
   def refreshHotGrams(spark: SparkSession, dir: String,
       force: Boolean = false): Long =
-    graft.util.StoreLease.withLease(spark, dir, "refreshHotGrams") {
-      graft.util.IngestMarker.requireAbsent(spark, dir, "refreshHotGrams")
-      require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
-        s"dedup index at $dir has an unexpected format — rebuild via ensure()")
+    Op.mutate(spark, dir, StoreMeta, "refreshHotGrams") { o =>
       StageSwap.recover(spark, prefixT(dir), setsT(dir))
-      refreshHotGramsLocked(spark, dir, force)
+      refreshHotGramsLocked(spark, dir, o.meta, force)
     }
 
-  /** [[refreshHotGrams]] body; caller holds the lease and has run the
-    * marker/format/staging gates. */
-  private def refreshHotGramsLocked(spark: SparkSession,
-      dir: String, force: Boolean = false): Long = {
+  /** [[refreshHotGrams]] body; runs inside the caller's [[Op.mutate]]
+    * frame (`meta` is its row) after the staging recovery. */
+  private def refreshHotGramsLocked(spark: SparkSession, dir: String,
+      meta: org.apache.spark.sql.Row, force: Boolean = false): Long = {
     import spark.implicits._
-    val meta = readMeta(spark, dir)
     val nDocs = meta.getAs[Long]("n_docs")
     if (nDocs == 0) return 0L
     val statsDue = statsTotals(spark, dir) match {
@@ -1139,46 +1070,46 @@ object DedupIndex {
     }
     // LOUD two-phase window: the extended order and the recut prefixes
     // must land together — a probe seeing one without the other could
-    // silently miss pairs, so the whole mutation sits behind a marker
-    graft.util.IngestMarker.write(spark, dir,
-      s"hot-gram refresh of ${newHot.length} grams in flight")
-    writeHotGrams(spark, dir, newHot.toSeq, overwrite = false)
-    val nhB = spark.sparkContext.broadcast {
-      val s = new java.util.HashSet[java.lang.Long](newHot.length * 2 + 16)
-      newHot.foreach(g => s.add(g): Unit)
-      s
-    }
-    // affected docs: live docs whose gram set holds a newly-hot gram —
-    // kernel filter against the broadcast set, no explode/shuffle
-    val affSets = liveSets.select(col(idCol).cast("long"), col("sh"))
-      .as[(Long, Array[Long])]
-      .filter { case (_, sh) =>
-        val hs = nhB.value
-        var i = 0
-        var found = false
-        while (!found && i < sh.length) { found = hs.contains(sh(i)); i += 1 }
-        found
+    // silently miss pairs, so the whole mutation sits in one window
+    Op.window(spark, dir,
+        s"hot-gram refresh of ${newHot.length} grams in flight") {
+      writeHotGrams(spark, dir, newHot.toSeq, overwrite = false)
+      val nhB = spark.sparkContext.broadcast {
+        val s = new java.util.HashSet[java.lang.Long](newHot.length * 2 + 16)
+        newHot.foreach(g => s.add(g): Unit)
+        s
       }
-      .toDF(idCol, "sh")
-      .localCheckpoint(eager = true)
-    val affIds = affSets.select(col(idCol))
-    val newPref = prefixGrams(affSets, idCol, t0, nBuckets,
-        readHotGramsArr(spark, dir)) // the EXTENDED set, read back
-      .localCheckpoint(eager = true)
-    // bounded collects: ≤ nBuckets values each — the buckets holding
-    // affected docs' OLD rows and those receiving their NEW rows
-    val prefix = prefixT(dir)
-    val affB = (StageSwap.leavesOf(prefix, readPrefixTable(spark, dir, idCol)
-        .join(affIds, Seq(idCol), "left_semi")) ++
-      StageSwap.leavesOf(prefix, newPref)).distinct
-    StageSwap.rewrite(spark, prefix,
-      readPrefixTable(spark, dir, idCol)
-        .filter(StageSwap.within(prefix, affB))
-        .join(affIds, Seq(idCol), "left_anti")
-        .unionByName(newPref.filter(StageSwap.within(prefix, affB))),
-      affB)
-    rewriteStats(spark, dir) // recut buckets + re-armed trigger
-    graft.util.IngestMarker.clear(spark, dir)
+      // affected docs: live docs whose gram set holds a newly-hot gram
+      // — kernel filter against the broadcast set, no explode/shuffle
+      val affSets = liveSets.select(col(idCol).cast("long"), col("sh"))
+        .as[(Long, Array[Long])]
+        .filter { case (_, sh) =>
+          val hs = nhB.value
+          var i = 0
+          var found = false
+          while (!found && i < sh.length) { found = hs.contains(sh(i)); i += 1 }
+          found
+        }
+        .toDF(idCol, "sh")
+        .localCheckpoint(eager = true)
+      val affIds = affSets.select(col(idCol))
+      val newPref = prefixGrams(affSets, idCol, t0, nBuckets,
+          readHotGramsArr(spark, dir)) // the EXTENDED set, read back
+        .localCheckpoint(eager = true)
+      // bounded collects: ≤ nBuckets values each — the buckets holding
+      // affected docs' OLD rows and those receiving their NEW rows
+      val prefix = prefixT(dir)
+      val affB = (StageSwap.leavesOf(prefix, readPrefixTable(spark, dir, idCol)
+          .join(affIds, Seq(idCol), "left_semi")) ++
+        StageSwap.leavesOf(prefix, newPref)).distinct
+      StageSwap.rewrite(spark, prefix,
+        readPrefixTable(spark, dir, idCol)
+          .filter(StageSwap.within(prefix, affB))
+          .join(affIds, Seq(idCol), "left_anti")
+          .unionByName(newPref.filter(StageSwap.within(prefix, affB))),
+        affB)
+      rewriteStats(spark, dir) // recut buckets + re-armed trigger
+    }
     // promotion COMPLETE — only now may evalmeta advance (a crash
     // before this line leaves the old evalmeta, so the next tick
     // re-evaluates and re-finds these grams instead of losing them)
@@ -1212,12 +1143,12 @@ object DedupIndex {
     val hotFiles = graft.util.Fs.dataFileCount(spark, s"$dir/hotgrams")
     if ((force && hotFiles > 1) || hotFiles > GramDfFoldFiles) {
       val hot = readHotGramsArr(spark, dir)
-      graft.util.IngestMarker.write(spark, dir, "hotgrams fold in flight")
-      StageSwap.replace(spark, Table(s"$dir/hotgrams")) { staging =>
-        graft.util.Sidecar.write(spark, staging, hotGramsSchema,
-          hot.toSeq.map(g => Seq[Any](g)))
+      Op.window(spark, dir, "hotgrams fold in flight") {
+        StageSwap.replace(spark, Table(s"$dir/hotgrams")) { staging =>
+          graft.util.Sidecar.write(spark, staging, hotGramsSchema,
+            hot.toSeq.map(g => Seq[Any](g)))
+        }
       }
-      graft.util.IngestMarker.clear(spark, dir)
       System.err.println(s"[DedupIndex] hotgrams at $dir folded to one " +
         s"file: ${hot.length} grams (broadcast-sized by the df lemma)")
     }
@@ -1305,7 +1236,7 @@ object DedupIndex {
           pairsAfter.exceptAll(pairsCompacted).count() == 0
       val noTombLeft = !graft.util.Fs.exists(s, s"$dir/tombstones")
       val setsCount = s.read.parquet(s"$dir/sets").count()
-      val metaDocs = readMeta(s, dir).getAs[Long]("n_docs")
+      val metaDocs = StoreMeta.read(s, dir).getAs[Long]("n_docs")
       val deletedGone = delSet.count() > 0 && setsCount == metaDocs
       kept
         .agg(count(lit(1)).as("n_kept"),

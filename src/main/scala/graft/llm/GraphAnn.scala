@@ -1,10 +1,11 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import graft.store.{StageSwap, Table, Tombstones}
+import graft.store.{Meta, Op, StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Graph-based ANN (NSW family): beam search over a PERSISTED k-NN
   * neighbor graph — the fourth production vector-index family next to
@@ -42,7 +43,8 @@ import org.apache.spark.sql.expressions.Window
   * of HNSW's ef-search frontier.
   *
   * The graph persists like v19's index ([[ensure]]): corpus
-  * fingerprint in meta, edges as parquet, build once / search many.
+  * fingerprint in meta ([[StoreMeta]]), edges as parquet, build once /
+  * search many.
   */
 object GraphAnn {
 
@@ -102,33 +104,16 @@ object GraphAnn {
       Some((r.getAs[Long]("sat_total"), r.getAs[Long]("sat_appended")))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def graphMetaSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_vectors",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("checksum",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("m",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("init_cell_size",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("descent_rounds",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("format_version",
-        org.apache.spark.sql.types.IntegerType)))
-
-  /** Driver-side meta commit/read (the Delta/Iceberg manifest shape):
-    * the one-row meta table is consulted at the top of every store op
-    * and committed at the end of every mutation — neither needs a
-    * Spark job. On-disk format unchanged (plain parquet). */
-  private def writeGraphMeta(spark: SparkSession, dir: String, n: Long,
-      sum: Long, m: Int, initCellSize: Int, descentRounds: Int): Unit =
-    graft.util.Sidecar.write(spark, s"$dir/meta", graphMetaSchema,
-      Seq(Seq[Any](n, sum, m, initCellSize, descentRounds, 3)))
-
-  private def readGraphMeta(spark: SparkSession,
-      dir: String): org.apache.spark.sql.Row =
-    graft.util.Sidecar.readHead(spark, s"$dir/meta")
+  /** `meta/`: the corpus fingerprint (count + xxhash64 XOR over
+    * (vec_id, embedding), maintained by delete and append) and the
+    * build parameters — `m` is the graph-wide degree cap every
+    * maintenance op re-ranks to, and `init_cell_size` is the RAW
+    * parameter (not the derived cell count, which would spuriously
+    * rebuild after a fingerprint-maintained delete changes n). Format 3
+    * (round 12) added the `nodes/` membership table. */
+  private val StoreMeta = Meta("graph store", 3,
+    "n_vectors" -> LongType, "checksum" -> LongType, "m" -> IntegerType,
+    "init_cell_size" -> IntegerType, "descent_rounds" -> IntegerType)
 
   /** Nodes of `edges` at (or beyond) the 2M degree cap. */
   private def saturatedCount(edges: DataFrame, m: Int): Long =
@@ -270,38 +255,36 @@ object GraphAnn {
   /** Merge-on-read load: stored edges minus every edge touching a
     * tombstoned node — a deleted node must vanish BOTH as a source
     * (its out-edges) and as a destination (its appearances in other
-    * nodes' top-M), so the anti-join runs on both endpoints. */
-  def load(spark: SparkSession, dir: String): DataFrame =
+    * nodes' top-M), so the anti-join runs on both endpoints. Refuses a
+    * store under a crashed-op marker (half an append's edges could be
+    * live) or of an unknown format. */
+  def load(spark: SparkSession, dir: String): DataFrame = {
+    Op.read(spark, dir, StoreMeta, "load"): Unit
+    liveEdges(spark, dir)
+  }
+
+  private def liveEdges(spark: SparkSession, dir: String): DataFrame =
     tombs(dir).live(spark, spark.read.parquet(s"$dir/edges"), "src", "dst")
 
   /** Load the stored graph if its fingerprint matches `corpus`, else
-    * (re)build and persist — v19's build-once contract. Since round 12
-    * (format_version 3) the store also persists a `nodes/` table (the
-    * membership set [[delete]] validates against) and the RAW
-    * `init_cell_size` parameter (not the derived cell count, which
-    * would spuriously rebuild after a fingerprint-maintained delete
-    * changes n). */
+    * (re)build and persist — v19's build-once contract. The store also
+    * persists a `nodes/` table (the membership set [[delete]] validates
+    * against). A crashed-op marker or an unreadable meta means rebuild
+    * ([[Op.valid]]). */
   def ensure(corpus: DataFrame, dir: String, m: Int = 16,
       descentRounds: Int = 3, initCellSize: Int = 256): DataFrame = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val (n, sum) = fingerprint(corpus) // corpus-side failure RETHROWS
-    // NonFatal only (r13 advice): a fatal error (OOM) during the meta
-    // read must propagate, not count as "store invalid" and trigger
-    // the rebuild's delete of a healthy store.
-    val valid = try {
-      val meta = readGraphMeta(spark, dir)
+    val valid = Op.valid(spark, dir, StoreMeta) { meta =>
       meta.getAs[Long]("n_vectors") == n &&
         meta.getAs[Long]("checksum") == sum &&
         meta.getAs[Int]("m") == m &&
         meta.getAs[Int]("init_cell_size") == initCellSize &&
         meta.getAs[Int]("descent_rounds") == descentRounds &&
-        meta.getAs[Int]("format_version") == 3 &&
         graft.util.Fs.exists(spark, s"$dir/nodes")
-    } catch { case scala.util.control.NonFatal(_) => false }
-    if (!valid) graft.util.StoreLease.withLease(spark, dir, "build") {
+    }.isDefined
+    if (!valid) Op.build(spark, dir, "build") {
       buildsThisProcess += 1
-      graft.util.Fs.rmTree(spark, dir)
       buildNeighborGraph(corpus, m, descentRounds, initCellSize)
         .write.mode("overwrite").parquet(s"$dir/edges")
       corpus.select(col("vec_id").cast("long").as("nid"))
@@ -311,7 +294,7 @@ object GraphAnn {
       // appended mass zero
       writeSatStats(spark, dir,
         saturatedCount(spark.read.parquet(s"$dir/edges"), m), 0L)
-      writeGraphMeta(spark, dir, n, sum, m, initCellSize, descentRounds)
+      StoreMeta.write(spark, dir, n, sum, m, initCellSize, descentRounds)
     }
     load(spark, dir)
   }
@@ -324,14 +307,11 @@ object GraphAnn {
     * the live corpus validates without rebuild. The membership
     * contract (every deleted row is a live indexed node, exactly once)
     * is enforced against the persisted `nodes/` table — same
-    * loud-failure rationale as [[VectorIndex.delete]]. */
+    * loud-failure rationale as [[VectorIndex.delete]]. Tombstones and
+    * the meta commit share one [[Op.window]]. */
   def delete(deleted: DataFrame, dir: String): Unit = {
     val spark = deleted.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "delete") {
-    val meta = readGraphMeta(spark, dir)
-    require(meta.schema.fieldNames.contains("format_version") &&
-        meta.getAs[Int]("format_version") == 3,
-      s"graph store at $dir predates format 3 — rebuild via ensure()")
+    Op.mutate(spark, dir, StoreMeta, "delete") { o =>
     val ids = deleted.select(col("vec_id").cast("long").as("nid"))
       .localCheckpoint(eager = true)
     // one aggregate answers both audit counts (total + distinct) —
@@ -346,11 +326,11 @@ object GraphAnn {
       s"${nDel - nMember} of $nDel vec_ids are not indexed nodes at $dir")
     tombs(dir).requireFresh(spark, ids, nDel, "vec_ids")
     val (dn, dsum) = fingerprint(deleted)
-    tombs(dir).append(ids)
-    writeGraphMeta(spark, dir, meta.getAs[Long]("n_vectors") - dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Int]("m"), meta.getAs[Int]("init_cell_size"),
-      meta.getAs[Int]("descent_rounds"))
+    o.window(s"delete of $nDel nodes in flight") {
+      tombs(dir).append(ids)
+      o.commit("n_vectors" -> (o.meta.getAs[Long]("n_vectors") - dn),
+        "checksum" -> (o.meta.getAs[Long]("checksum") ^ dsum))
+    }
     }
   }
 
@@ -371,12 +351,12 @@ object GraphAnn {
     */
   def compact(corpus: DataFrame, dir: String): Unit = {
     val spark = corpus.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "compact") {
+    Op.mutate(spark, dir, StoreMeta, "compact") { o =>
     // The degree cap is the STORED graph's m, read from meta — a caller
     // parameter here could silently re-rank only the affected nodes to
     // a different 2M cap than the rest of the graph, breaking the
     // graph-wide degree invariant v28's gate asserts.
-    val m = readGraphMeta(spark, dir).getAs[Int]("m")
+    val m = o.meta.getAs[Int]("m")
     StageSwap.recover(spark, edgesT(dir), nodesT(dir))
     if (!tombs(dir).exists(spark)) return
     val tomb = tombs(dir).ids(spark)
@@ -420,11 +400,10 @@ object GraphAnn {
     val appended = readSatStats(spark, dir).map(_._2).getOrElse(0L)
     writeSatStats(spark, dir,
       saturatedCount(spark.read.parquet(s"$dir/edges"), m), appended)
-    val nLive = readGraphMeta(spark, dir).getAs[Long]("n_vectors")
-    if (repairDue(spark, dir, nLive)) {
+    if (repairDue(spark, dir, o.meta.getAs[Long]("n_vectors"))) {
       System.err.println(s"[GraphAnn] density repair due at $dir " +
         "after compact")
-      repairDensityLocked(corpus, dir): Unit
+      repairDensityLocked(corpus, dir, m): Unit
     }
     }
   }
@@ -439,12 +418,12 @@ object GraphAnn {
     * ([[graft.store.StageSwap.mergeFiles]]). */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
       targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
+    Op.mutate(spark, dir, StoreMeta, "compactFiles") { _ =>
     StageSwap.recover(spark, edgesT(dir), nodesT(dir))
     Seq(edgesT(dir), nodesT(dir)).foreach(
       StageSwap.mergeFiles(spark, _, maxFiles, targetBytes = targetBytes))
-      }
+    }
   }
 
   /** Batched beam search: every query walks the graph simultaneously;
@@ -597,20 +576,20 @@ object GraphAnn {
     *     edge lists pass through byte-identical.
     *
     * Cost is BATCH-local: O(|B|·(beam·rounds + M²)) — never a full
-    * refinement pass over the graph. Meta updates LAST (the commit
-    * point): a crash mid-append leaves a fingerprint mismatch, so the
-    * next [[ensure]] rebuilds rather than trusting a half-applied
-    * insert. Membership is enforced (a batch id already indexed fails
+    * refinement pass over the graph. The edge swap, the `nodes/` append
+    * and the meta commit (the commit point) share one [[Op.window]]: a
+    * crash in between fails every later op loud and the next
+    * [[ensure]] rebuilds, over the pre-append corpus as well as the
+    * post-append one (a fingerprint mismatch alone would catch only the
+    * latter). Membership is enforced (a batch id already indexed fails
     * loud — the XOR fingerprint would drift otherwise).
     */
   def append(batch: DataFrame, corpus: DataFrame, dir: String,
       beam: Int = 32, rounds: Int = 4,
       entries: Int = 16): Unit = {
     val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "append") {
-    val meta = readGraphMeta(spark, dir)
-    require(meta.getAs[Int]("format_version") == 3,
-      s"graph store at $dir predates format 3 — rebuild via ensure()")
+    Op.mutate(spark, dir, StoreMeta, "append") { o =>
+    val meta = o.meta
     // Degree cap from the STORED graph's m (see [[compact]]) — a
     // caller-supplied m diverging from the stored value would break
     // the graph-wide 2M degree invariant.
@@ -628,7 +607,7 @@ object GraphAnn {
       Seq("nid"), "left_semi").count()
     require(nAlready == 0,
       s"$nAlready of $bn batch vec_ids are already indexed at $dir")
-    val graph = load(spark, dir)
+    val graph = liveEdges(spark, dir)
     val batchVec = batch.select(col("vec_id"), col("embedding"))
     val outE = beamSearch(batchVec, graph, corpus, k = m, beam, rounds,
         entries)
@@ -670,18 +649,17 @@ object GraphAnn {
       2 * m)
       .localCheckpoint(eager = true)
     val untouched = graph.join(affectedSrc, Seq("src"), "left_anti")
-    // stage-and-swap like compact; a crash before the meta write below
-    // is recovered by ensure()'s fingerprint-mismatch rebuild
-    StageSwap.replace(spark, edgesT(dir)) { staging =>
-      untouched.unionByName(rewritten)
-        .write.mode("overwrite").parquet(staging)
-    }
-    ids.write.mode("append").parquet(s"$dir/nodes")
     val (dn, dsum) = fingerprint(batch)
-    writeGraphMeta(spark, dir, meta.getAs[Long]("n_vectors") + dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Int]("m"), meta.getAs[Int]("init_cell_size"),
-      meta.getAs[Int]("descent_rounds"))
+    o.window(s"append of $bn nodes in flight") {
+      // stage-and-swap like compact
+      StageSwap.replace(spark, edgesT(dir)) { staging =>
+        untouched.unionByName(rewritten)
+          .write.mode("overwrite").parquet(staging)
+      }
+      ids.write.mode("append").parquet(s"$dir/nodes")
+      o.commit("n_vectors" -> (meta.getAs[Long]("n_vectors") + dn),
+        "checksum" -> (meta.getAs[Long]("checksum") ^ dsum))
+    }
     // saturation odometer advance (after the commit point — the stats
     // are derived maintenance state, like the edges themselves): the
     // affected set's post-rewrite saturated count vs satBefore is this
@@ -702,7 +680,7 @@ object GraphAnn {
       repairDensityLocked(
         corpus.select(col("vec_id"), col("embedding"))
           .unionByName(batch.select(col("vec_id"), col("embedding"))),
-        dir): Unit
+        dir, m): Unit
     }
     }
   }
@@ -1171,25 +1149,20 @@ object GraphAnn {
     * candidate lists are degree-capped, never corpus-sized. */
   def repairDensity(corpus: DataFrame, dir: String,
       alpha: Double = 1.0): Long = {
-    val spark = corpus.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "repairDensity") {
-      repairDensityLocked(corpus, dir, alpha)
+    require(alpha > 0, s"alpha must be positive: $alpha")
+    Op.mutate(corpus.sparkSession, dir, StoreMeta, "repairDensity") { o =>
+      repairDensityLocked(corpus, dir, o.meta.getAs[Int]("m"), alpha)
     }
   }
 
-  /** [[repairDensity]]'s body, assuming the caller already holds the
-    * store's writer lease — append/compact fold the repair in under
-    * their own lease (withLease is not re-entrant by design: a second
-    * acquire by the same holder is indistinguishable from a racing
-    * writer). */
-  private def repairDensityLocked(corpus: DataFrame, dir: String,
+  /** [[repairDensity]]'s body, inside the caller's [[Op.mutate]] frame
+    * (`m` is its stored degree parameter) — append/compact fold the
+    * repair in under their own frame (the lease is not re-entrant by
+    * design: a second acquire by the same holder is indistinguishable
+    * from a racing writer). */
+  private def repairDensityLocked(corpus: DataFrame, dir: String, m: Int,
       alpha: Double = 1.0): Long = {
     val spark = corpus.sparkSession
-    require(alpha > 0, s"alpha must be positive: $alpha")
-    val meta = readGraphMeta(spark, dir)
-    require(meta.getAs[Int]("format_version") == 3,
-      s"graph store at $dir predates format 3 — rebuild via ensure()")
-    val m = meta.getAs[Int]("m")
     require(!tombs(dir).exists(spark),
       s"graph store at $dir has pending tombstones — compact before " +
         "repairDensity")

@@ -1,9 +1,10 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import graft.store.{StageSwap, Table, Tombstones}
+import graft.store.{Meta, Op, StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Persisted INVERTED-INDEX STORE for sparse (BM25) retrieval — the
   * posting-list analog of the vector/graph/dedup index-maintenance
@@ -39,10 +40,7 @@ import org.apache.spark.sql.functions._
   *   - `tombstones/` — merge-on-read deletes; every search anti-joins
   *     it, [[compact]] folds it away rewriting ONLY affected
   *     partitions (crash-safe under [[graft.store.StageSwap]]).
-  *   - `meta/` — doc count, Σdl (both exact-integer maintained), XOR
-  *     fingerprint over the indexed (id, text) rows (append XORs in,
-  *     delete XORs out — [[ensure]] validates a maintained store
-  *     without rebuild), bucket counts, format version.
+  *   - `meta/` — one row, [[StoreMeta]].
   *
   * Search semantics are EXACTLY [[HybridRetrieval.bm25FromPostings]]
   * over the live postings (tx-gated row-identical; tx2 carries a full
@@ -70,11 +68,19 @@ object TextIndex {
     * [[ensure]] was a pure fingerprint-validated load. */
   @volatile var buildsThisProcess: Int = 0
 
-  private val Format = 1
+  /** `meta/`: doc count and Σdl (both exact-integer maintained), the
+    * XOR fingerprint over the indexed (id, text) rows (append XORs in,
+    * delete XORs out — [[ensure]] validates a maintained store without
+    * rebuild), and the bucket counts every later op reads back. */
+  private val StoreMeta = Meta("text index", 1,
+    "n_docs" -> LongType, "checksum" -> LongType, "sum_dl" -> LongType,
+    "n_buckets" -> IntegerType, "n_doc_buckets" -> IntegerType)
+
+  private def isIndexable(textCol: String): Column =
+    col(textCol).isNotNull && length(translate(col(textCol), " ", "")) > 0
 
   private def indexable(docs: DataFrame, textCol: String): DataFrame =
-    docs.filter(col(textCol).isNotNull &&
-      length(translate(col(textCol), " ", "")) > 0)
+    docs.filter(isIndexable(textCol))
 
   private def tokenCount(c: Column): Column =
     size(filter(split(lower(c), " "), x => x =!= ""))
@@ -204,33 +210,6 @@ object TextIndex {
         "postings yourself with a shuffle join " +
         "(-Dgraft.textindex.maxQueryRows raises the bound).")
 
-  private def readMeta(spark: SparkSession, dir: String) =
-    graft.util.Sidecar.readHead(spark, s"$dir/meta")
-
-  private def metaSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_docs",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("checksum",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("sum_dl",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_buckets",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("n_doc_buckets",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("format_version",
-        org.apache.spark.sql.types.IntegerType)))
-
-  // driver-side meta commit ([[graft.util.Sidecar]]) — read at the top
-  // of every op, written at the end of every mutation
-  private def writeMeta(spark: SparkSession, dir: String, nDocs: Long,
-      checksum: Long, sumDl: Long, nBuckets: Int,
-      nDocBuckets: Int): Unit =
-    graft.util.Sidecar.write(spark, s"$dir/meta", metaSchema,
-      Seq(Seq[Any](nDocs, checksum, sumDl, nBuckets, nDocBuckets,
-        Format)))
-
   /** Scale-adaptive partition counts (guide §2): 0 = derive from the
     * indexable doc count, capped at the legacy 16 — a fixture-sized
     * store paying 16 partition directories per write is committer
@@ -238,12 +217,6 @@ object TextIndex {
     * later op reads the counts back from meta. */
   private def autoBuckets(nDocs: Long): Int =
     math.max(4L, math.min(16L, nDocs / 1000L)).toInt
-
-  private def requireFormat(meta: org.apache.spark.sql.Row,
-      dir: String): Unit =
-    require(meta.getAs[Int]("format_version") == Format,
-      s"text index at $dir has format ${meta.getAs[Int]("format_version")}" +
-        s", expected $Format — rebuild via ensure()")
 
   /** Tokenize the corpus ONCE, write postings + docids + termstats +
     * meta. Holds the store's single-writer lease like every mutating
@@ -255,9 +228,8 @@ object TextIndex {
     require(nBuckets >= 0 && nDocBuckets >= 0,
       s"bucket counts must be >= 0 (0 = derive): $nBuckets/$nDocBuckets")
     val spark = docs.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "build") {
+    Op.build(spark, dir, "build") {
     buildsThisProcess += 1
-    graft.util.Fs.rmTree(spark, dir)
     val (n, sum, sumDl) = fingerprint(docs, idCol, textCol)
     val nb = if (nBuckets > 0) nBuckets else autoBuckets(n)
     val ndb = if (nDocBuckets > 0) nDocBuckets else autoBuckets(n)
@@ -274,7 +246,7 @@ object TextIndex {
       .withColumn("bucket", bucketOf(col("term"), nb))
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(termBase(dir))
-    writeMeta(spark, dir, n, sum, sumDl, nb, ndb)
+    StoreMeta.write(spark, dir, n, sum, sumDl, nb, ndb)
     }
   }
 
@@ -287,26 +259,16 @@ object TextIndex {
   def ensure(docs: DataFrame, dir: String, nBuckets: Int = 0,
       nDocBuckets: Int = 0, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    val metaOpt =
-      if (graft.util.IngestMarker.present(spark, dir)) None
-      else try Some(readMeta(spark, dir))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val valid = metaOpt.exists { meta =>
-      val shapeOk = try {
-        // derive-default (0) accepts the store's own layout — only an
-        // explicit count is a contract (see [[DedupIndex.ensure]])
-        meta.getAs[Int]("format_version") == Format &&
-          (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
-          (nDocBuckets == 0 ||
-            meta.getAs[Int]("n_doc_buckets") == nDocBuckets)
-      } catch { case scala.util.control.NonFatal(_) => false }
-      shapeOk && {
-        val (n, sum, sumDl) = fingerprint(docs, idCol, textCol) // NOT caught
-        meta.getAs[Long]("n_docs") == n &&
-          meta.getAs[Long]("checksum") == sum &&
-          meta.getAs[Long]("sum_dl") == sumDl
-      }
+    // derive-default (0) accepts the store's own layout — only an
+    // explicit count is a contract (see [[DedupIndex.ensure]])
+    val valid = Op.valid(docs.sparkSession, dir, StoreMeta) { meta =>
+      (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
+        (nDocBuckets == 0 || meta.getAs[Int]("n_doc_buckets") == nDocBuckets)
+    }.exists { meta =>
+      val (n, sum, sumDl) = fingerprint(docs, idCol, textCol) // NOT caught
+      meta.getAs[Long]("n_docs") == n &&
+        meta.getAs[Long]("checksum") == sum &&
+        meta.getAs[Long]("sum_dl") == sumDl
     }
     if (!valid) build(docs, dir, nBuckets, nDocBuckets, idCol, textCol)
   }
@@ -317,15 +279,12 @@ object TextIndex {
     * double-count df and corrupt the posting set, so it fails LOUD via
     * a partition-pruned docids semi-join (O(batch), never a corpus
     * scan). Data writes and the meta commit sit in one
-    * [[graft.util.IngestMarker]] window: a crash in between fails
-    * every later op loud and ensure() rebuilds. */
+    * [[graft.store.Op.window]]. */
   def append(batch: DataFrame, dir: String, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "append") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "append")
-    val meta = readMeta(spark, dir)
-    requireFormat(meta, dir)
+    Op.mutate(spark, dir, StoreMeta, "append") { o =>
+    val meta = o.meta
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nDocBuckets = meta.getAs[Int]("n_doc_buckets")
     val post = postingsOf(batch, idCol, textCol, nBuckets)
@@ -345,17 +304,17 @@ object TextIndex {
           "re-ingesting an indexed doc would double-count df; delete " +
           "first (tombstoned ids stay blocked until compact folds them)")
     }
-    graft.util.IngestMarker.write(spark, dir, "append in flight")
-    post.repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
-    batchDocs.repartition(col("dbucket"))
-      .write.mode("append").partitionBy("dbucket").parquet(s"$dir/docids")
-    writeTermDelta(spark, dir, post, sign = 1, nBuckets)
-    val (bn, bsum, bDl) = fingerprint(batch, idCol, textCol)
-    writeMeta(spark, dir, meta.getAs[Long]("n_docs") + bn,
-      meta.getAs[Long]("checksum") ^ bsum,
-      meta.getAs[Long]("sum_dl") + bDl, nBuckets, nDocBuckets)
-    graft.util.IngestMarker.clear(spark, dir)
+    o.window("append in flight") {
+      post.repartition(col("bucket"))
+        .write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
+      batchDocs.repartition(col("dbucket"))
+        .write.mode("append").partitionBy("dbucket").parquet(s"$dir/docids")
+      writeTermDelta(spark, dir, post, sign = 1, nBuckets)
+      val (bn, bsum, bDl) = fingerprint(batch, idCol, textCol)
+      o.commit("n_docs" -> (meta.getAs[Long]("n_docs") + bn),
+        "checksum" -> (meta.getAs[Long]("checksum") ^ bsum),
+        "sum_dl" -> (meta.getAs[Long]("sum_dl") + bDl))
+    }
     }
   }
 
@@ -367,19 +326,28 @@ object TextIndex {
   def delete(deleted: DataFrame, dir: String, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val spark = deleted.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "delete") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "delete")
-    val meta = readMeta(spark, dir)
-    requireFormat(meta, dir)
+    Op.mutate(spark, dir, StoreMeta, "delete") { o =>
+    val meta = o.meta
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nDocBuckets = meta.getAs[Int]("n_doc_buckets")
-    val idx = indexable(deleted, textCol)
-    val ids = deleted.select(col(idCol).cast("long").as("doc")).cache()
-    val nDel = ids.count()
-    require(idx.count() == nDel,
+    val ids = deleted.select(col(idCol).cast("long").as("doc"))
+      .localCheckpoint(eager = true)
+    // ONE aggregate answers every row-shaped audit (total, indexable,
+    // distinct) AND the fingerprint, over the indexable rows exactly
+    // like fingerprint() ([[DedupIndex.delete]]'s shape)
+    val idxOnly = (c: Column) => when(isIndexable(textCol), c)
+    val audit = deleted.agg(
+      count(lit(1)),
+      count(idxOnly(lit(1))),
+      countDistinct(col(idCol).cast("long")),
+      bit_xor(idxOnly(xxhash64(col(idCol), col(textCol)))),
+      coalesce(sum(idxOnly(tokenCount(col(textCol)))), lit(0L))
+        .cast("long")).head()
+    val nDel = audit.getLong(0)
+    require(audit.getLong(1) == nDel,
       s"some of $nDel delete rows have null/empty $textCol — docs " +
         "without postings are never indexed and cannot be deleted")
-    require(ids.distinct().count() == nDel,
+    require(audit.getLong(2) == nDel,
       s"delete set contains duplicate ${idCol}s")
     val dbs = ids.select(pmod(col("doc"), lit(nDocBuckets)).cast("int")
       .as("dbucket")).distinct().collect().map(_.getInt(0))
@@ -391,17 +359,15 @@ object TextIndex {
     require(nStored == nDel,
       s"${nDel - nStored} of $nDel ${idCol}s are not in the index at $dir")
     tombs(dir).requireFresh(spark, ids, nDel, s"${idCol}s")
-    val (dn, dsum, dDl) = fingerprint(deleted, idCol, textCol)
-    graft.util.IngestMarker.write(spark, dir,
-      s"delete of $nDel docs in flight")
-    tombs(dir).append(ids)
-    writeTermDelta(spark, dir,
-      HybridRetrieval.postings(idx, idCol, textCol), sign = -1, nBuckets)
-    ids.unpersist()
-    writeMeta(spark, dir, meta.getAs[Long]("n_docs") - dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Long]("sum_dl") - dDl, nBuckets, nDocBuckets)
-    graft.util.IngestMarker.clear(spark, dir)
+    val dsum = if (audit.isNullAt(3)) 0L else audit.getLong(3)
+    o.window(s"delete of $nDel docs in flight") {
+      tombs(dir).append(ids)
+      writeTermDelta(spark, dir, HybridRetrieval.postings(
+        indexable(deleted, textCol), idCol, textCol), sign = -1, nBuckets)
+      o.commit("n_docs" -> (meta.getAs[Long]("n_docs") - nDel),
+        "checksum" -> (meta.getAs[Long]("checksum") ^ dsum),
+        "sum_dl" -> (meta.getAs[Long]("sum_dl") - audit.getLong(4)))
+    }
     }
   }
 
@@ -432,9 +398,7 @@ object TextIndex {
       qidCol: String = "qid", textCol: String = "text",
       maxDfFraction: Double = 1.0): DataFrame = {
     val spark = queries.sparkSession
-    graft.util.IngestMarker.requireAbsent(spark, dir, "search")
-    val meta = readMeta(spark, dir)
-    requireFormat(meta, dir)
+    val meta = Op.read(spark, dir, StoreMeta, "search")
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nDocs = meta.getAs[Long]("n_docs")
     def empty = {
@@ -501,10 +465,8 @@ object TextIndex {
   def phraseCount(queries: DataFrame, dir: String,
       qidCol: String = "qid", textCol: String = "text"): DataFrame = {
     val spark = queries.sparkSession
-    graft.util.IngestMarker.requireAbsent(spark, dir, "phraseCount")
-    val meta = readMeta(spark, dir)
-    requireFormat(meta, dir)
-    val nBuckets = meta.getAs[Int]("n_buckets")
+    val nBuckets = Op.read(spark, dir, StoreMeta, "phraseCount")
+      .getAs[Int]("n_buckets")
     val qt = indexable(queries, textCol)
       .select(col(qidCol).cast("long").as("qid"),
         posexplode(split(lower(col(textCol)), " ")).as(Seq("i", "term")))
@@ -535,20 +497,19 @@ object TextIndex {
   }
 
   /** Fold termstats deltas into an exact rewritten base
-    * ([[graft.store.StageSwap.replace]]). Marker-guarded (a crash
+    * ([[graft.store.StageSwap.replace]]). In an [[Op.window]] (a crash
     * between the base rewrite and the delta drop would double-count):
     * fails later ops loud, ensure() rebuilds. */
-  private def foldTermStats(spark: SparkSession, dir: String): Unit = {
-    if (!graft.util.Fs.exists(spark, termDelta(dir))) return
-    graft.util.IngestMarker.write(spark, dir, "termstats fold in flight")
-    StageSwap.replace(spark, Table(termBase(dir))) { staging =>
-      mergedTermStats(spark, dir, None).filter(col("df") =!= 0L)
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    }
-    graft.util.Fs.rmTree(spark, termDelta(dir))
-    graft.util.IngestMarker.clear(spark, dir)
-  }
+  private def foldTermStats(spark: SparkSession, dir: String): Unit =
+    if (graft.util.Fs.exists(spark, termDelta(dir)))
+      Op.window(spark, dir, "termstats fold in flight") {
+        StageSwap.replace(spark, Table(termBase(dir))) { staging =>
+          mergedTermStats(spark, dir, None).filter(col("df") =!= 0L)
+            .repartition(col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        }
+        graft.util.Fs.rmTree(spark, termDelta(dir))
+      }
 
   /** Fold tombstones into the store: rewrite ONLY the posting buckets
     * and docid dbuckets that contain deleted rows (crash-safe under the
@@ -556,14 +517,12 @@ object TextIndex {
     * fold termstats. After compact a previously-deleted id may be
     * re-ingested. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compact") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
-    requireFormat(readMeta(spark, dir), dir)
+    Op.mutate(spark, dir, StoreMeta, "compact") { o =>
     StageSwap.recover(spark, postingsT(dir), docidsT(dir))
     foldTermStats(spark, dir)
     val tomb = tombs(dir)
     if (!tomb.exists(spark)) return
-    val nDocBuckets = readMeta(spark, dir).getAs[Int]("n_doc_buckets")
+    val nDocBuckets = o.meta.getAs[Int]("n_doc_buckets")
     tomb.foldInto(spark, postingsT(dir), readPostings(spark, dir))
     // affected docid dbuckets: computed FROM the tombstones directly
     val docids = docidsT(dir)
@@ -583,10 +542,8 @@ object TextIndex {
     * deliberately NOT folded here. */
   def compactFiles(spark: SparkSession, dir: String,
       maxFiles: Int = 16, maxRecordsPerFile: Long = 8000000L): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiles")
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    requireFormat(readMeta(spark, dir), dir)
+    Op.mutate(spark, dir, StoreMeta, "compactFiles") { _ =>
     StageSwap.recover(spark, postingsT(dir), docidsT(dir))
     Seq(postingsT(dir), docidsT(dir))
       .foreach(StageSwap.mergeFiles(spark, _, maxFiles, maxRecordsPerFile))
@@ -657,7 +614,7 @@ object TextIndex {
       val compactInvisible = searchRows() == viaStore
       val noTombLeft = !graft.util.Fs.exists(s, s"$dir/tombstones")
       val noDeltaLeft = !graft.util.Fs.exists(s, termDelta(dir))
-      val metaDocs = readMeta(s, dir).getAs[Long]("n_docs")
+      val metaDocs = StoreMeta.read(s, dir).getAs[Long]("n_docs")
       val docidsExact = readDocids(s, dir).count() == metaDocs
       val live = corpus.join(delSet.select("doc_id"), Seq("doc_id"),
         "left_anti").unionByName(batch)

@@ -1,9 +1,10 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import graft.store.{StageSwap, Table, Tombstones}
+import graft.store.{Meta, Op, StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 
 /** Persisted IVF-PQ vector index: build ONCE, query many times.
   *
@@ -17,10 +18,9 @@ import org.apache.spark.sql.functions._
   * vector index.
   *
   * On-disk layout under `dir` (all parquet — readable by any engine):
-  *   - `meta/`       one row: corpus fingerprint (count + order-
-  *                   independent xxhash64 XOR over (vec_id, embedding)),
-  *                   dims and quantizer shape. [[ensure]] validates it
-  *                   before trusting the index; any mismatch rebuilds.
+  *   - `meta/`       one row, [[PlainMeta]] or [[FilteredMeta]].
+  *                   [[ensure]] validates it before trusting the
+  *                   index; any mismatch rebuilds.
   *   - `codebooks/`  (level, sub, code, vals): level 0 = the nCells
   *                   coarse centroids, level 1 = the m×kCodes residual
   *                   PQ codebooks. A few KB total — the whole "model".
@@ -51,34 +51,19 @@ object VectorIndex {
       codes: DataFrame,
       nVectors: Long)
 
-  // driver-side meta I/O ([[graft.util.Sidecar]]) — the one-row meta
-  // table is read at the top of every op and committed at the end of
-  // every mutation; neither needs a Spark job. Two shapes: the plain
-  // store's six fields, the filtered store's with `filter_col`.
-  private def readVMeta(spark: SparkSession, dir: String) =
-    graft.util.Sidecar.readHead(spark, s"$dir/meta")
+  /** `meta/` of the plain store: corpus fingerprint (count +
+    * order-independent xxhash64 XOR over (vec_id, embedding)), dims and
+    * quantizer shape. */
+  private val plainFields: Seq[(String, DataType)] = Seq(
+    "n_vectors" -> LongType, "checksum" -> LongType, "dim" -> IntegerType,
+    "n_cells" -> IntegerType, "m" -> IntegerType, "k_codes" -> IntegerType)
+  private val PlainMeta = Meta("vector index", 1, plainFields: _*)
 
-  private def vMetaSchema(filtered: Boolean) = {
-    import org.apache.spark.sql.types._
-    val base = Seq(
-      StructField("n_vectors", LongType), StructField("checksum", LongType),
-      StructField("dim", IntegerType), StructField("n_cells", IntegerType),
-      StructField("m", IntegerType), StructField("k_codes", IntegerType))
-    val tail =
-      if (filtered) Seq(StructField("filter_col", StringType),
-        StructField("format_version", IntegerType))
-      else Seq(StructField("format_version", IntegerType))
-    StructType(base ++ tail)
-  }
-
-  private def writeVMeta(spark: SparkSession, dir: String, n: Long,
-      sum: Long, dim: Int, nCells: Int, m: Int, kCodes: Int,
-      filterCol: Option[String], fv: Int): Unit = {
-    val row = Seq[Any](n, sum, dim, nCells, m, kCodes) ++
-      filterCol.toSeq :+ fv
-    graft.util.Sidecar.write(spark, s"$dir/meta",
-      vMetaSchema(filterCol.isDefined), Seq(row))
-  }
+  /** `meta/` of the [[buildFiltered]] store: the plain fields plus the
+    * partitioning `filter_col`, which its fingerprint also hashes. Reads
+    * of either layout go through either codec (one format). */
+  private val FilteredMeta = Meta("vector index", 1,
+    plainFields :+ ("filter_col" -> StringType): _*)
 
   private def codesT(dir: String) = Table(s"$dir/codes", "cell")
   // the filtered twin stages under its own root, so neither variant's
@@ -103,10 +88,8 @@ object VectorIndex {
   def build(corpus: DataFrame, dir: String, nCells: Int = 16,
       m: Int = 16, kCodes: Int = 16): Unit = {
     val spark = corpus.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "build") {
-    import spark.implicits._
+    Op.build(spark, dir, "build") {
     buildsThisProcess += 1
-    graft.util.Fs.rmTree(spark, dir)
     val (coarse, books) = Similarity.ivfPqTrain(corpus, nCells, m, kCodes)
     val (n, sum) = fingerprint(corpus)
     // repartition by cell before the partitioned write: without it every
@@ -116,6 +99,15 @@ object VectorIndex {
     Similarity.ivfPqEncode(corpus, coarse, books)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
+    writeCodebooks(spark, dir, coarse, books)
+    PlainMeta.write(spark, dir, n, sum, coarse(0).length, nCells, m, kCodes)
+    }
+  }
+
+  /** Level 0 = the coarse centroids, level 1 = the PQ codebooks. */
+  private def writeCodebooks(spark: SparkSession, dir: String,
+      coarse: Array[Array[Double]], books: Array[Array[Array[Double]]]): Unit = {
+    import spark.implicits._
     val coarseRows = coarse.zipWithIndex.map { case (v, c) => (0, 0, c, v.toSeq) }
     val bookRows = for {
       (subArr, sub) <- books.zipWithIndex.toSeq
@@ -124,17 +116,17 @@ object VectorIndex {
     (coarseRows.toSeq ++ bookRows)
       .toDF("level", "sub", "code", "vals")
       .repartition(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    writeVMeta(spark, dir, n, sum, coarse(0).length, nCells, m, kCodes,
-      None, 1)
-    }
   }
 
-  def load(spark: SparkSession, dir: String): Loaded = {
-    // a crashed append ([[graft.util.IngestMarker]]) may have landed
-    // half a batch in the code partitions — searching it would
-    // silently return phantom rows; fail loud at the gateway instead
-    graft.util.IngestMarker.requireAbsent(spark, dir, "load/search")
-    val meta = readVMeta(spark, dir)
+  // a crashed append may have landed half a batch in the code
+  // partitions — searching it would silently return phantom rows; the
+  // frame fails loud at the gateway instead
+  def load(spark: SparkSession, dir: String): Loaded =
+    loadWith(spark, dir, Op.read(spark, dir, PlainMeta, "load/search"))
+
+  /** [[load]] from an already-checked meta row (either layout). */
+  private def loadWith(spark: SparkSession, dir: String,
+      meta: org.apache.spark.sql.Row): Loaded = {
     val nCells = meta.getAs[Int]("n_cells")
     val m = meta.getAs[Int]("m")
     val kCodes = meta.getAs[Int]("k_codes")
@@ -178,12 +170,9 @@ object VectorIndex {
     * without rebuild. Cost: O(|deleted|), zero store rewrite.
     */
   def delete(deleted: DataFrame, dir: String): Unit = {
-    val spark = deleted.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "delete") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "delete")
-    val meta = readVMeta(spark, dir)
-    requireUnfiltered(meta, dir, "delete")
-    tombstone(deleted, dir, meta, None)
+    Op.mutate(deleted.sparkSession, dir, PlainMeta, "delete") { o =>
+      requireUnfiltered(o.meta, dir, "delete")
+      tombstone(deleted, o, None)
     }
   }
 
@@ -197,10 +186,13 @@ object VectorIndex {
     * one pass over the delete set + a semi-join against the
     * (code-sized, not float-sized) store. Ids are audited AFTER the
     * long cast they are stored under, so "7" and "007" are one id.
-    * Caller holds the lease and has checked the layout. */
-  private def tombstone(deleted: DataFrame, dir: String,
-      meta: org.apache.spark.sql.Row, filterCol: Option[String]): Unit = {
-    val spark = deleted.sparkSession
+    * Runs in the caller's frame, after its layout check; tombstones
+    * and meta commit share one window (a crash between them would
+    * leave the pre-delete fingerprint validating a store that hides
+    * rows). */
+  private def tombstone(deleted: DataFrame, o: Op.Frame,
+      filterCol: Option[String]): Unit = {
+    val (spark, dir) = (o.spark, o.dir)
     val ids = deleted.select(col("vec_id").cast("long").as("nid"))
       .localCheckpoint(eager = true)
     // one aggregate answers the row-shaped audits (total + distinct)
@@ -218,12 +210,11 @@ object VectorIndex {
       s"${nDel - nStored} of $nDel vec_ids are not present in the index at $dir")
     tombs(dir).requireFresh(spark, ids, nDel, "vec_ids")
     val dsum = if (audit.isNullAt(2)) 0L else audit.getLong(2)
-    tombs(dir).append(ids)
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") - nDel,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      filterCol, meta.getAs[Int]("format_version"))
+    o.window(s"delete of $nDel vectors in flight") {
+      tombs(dir).append(ids)
+      o.commit("n_vectors" -> (o.meta.getAs[Long]("n_vectors") - nDel),
+        "checksum" -> (o.meta.getAs[Long]("checksum") ^ dsum))
+    }
   }
 
   /** Fold the tombstones into the store: rewrite ONLY the cell
@@ -233,14 +224,13 @@ object VectorIndex {
     * Crash-safe under the [[graft.store.StageSwap]] contract: its
     * recovery runs first, and tombstones drop only after the swap. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compact") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
+    Op.mutate(spark, dir, PlainMeta, "compact") { o =>
     // Layout check FIRST, before the recovery sweep touches anything:
     // the meta read is independent of staging, and running the sweep
     // first on a FILTERED store would delete a crashed
     // compactFiltered's staged survivors (the only copy of its
     // affected pairs) before the fail-loud guard ever fired.
-    requireUnfiltered(readVMeta(spark, dir), dir, "compact")
+    requireUnfiltered(o.meta, dir, "compact")
     StageSwap.recover(spark, codesT(dir))
     val tomb = tombs(dir)
     if (!tomb.exists(spark)) return
@@ -259,10 +249,9 @@ object VectorIndex {
     * `maxFiles` ([[graft.store.StageSwap.mergeFiles]]). */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
       maxRecordsPerFile: Long = 8000000L): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiles")
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    requireUnfiltered(readVMeta(spark, dir), dir, "compactFiles")
+    Op.mutate(spark, dir, PlainMeta, "compactFiles") { o =>
+    requireUnfiltered(o.meta, dir, "compactFiles")
     StageSwap.recover(spark, codesT(dir))
     StageSwap.mergeFiles(spark, codesT(dir), maxFiles, maxRecordsPerFile)
     }
@@ -275,30 +264,28 @@ object VectorIndex {
     * mapped to the same path) impossible to silently search. */
   def ensure(corpus: DataFrame, dir: String, nCells: Int = 16,
       m: Int = 16, kCodes: Int = 16): Loaded = {
-    val spark = corpus.sparkSession
     // Failure separation (r13 advice, same as DedupIndex.ensure): only
-    // a missing/corrupt META (NonFatal) or a crashed-append marker
-    // means "rebuild"; the corpus-side fingerprint aggregate RETHROWS
-    // on failure — a transient I/O error must never trigger the
-    // rebuild's delete of a healthy store.
-    val metaOpt =
-      if (graft.util.IngestMarker.present(spark, dir)) None
-      else try Some(readVMeta(spark, dir))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val valid = metaOpt.exists { meta =>
-      val shapeOk = try {
-        meta.getAs[Int]("n_cells") == nCells &&
-          meta.getAs[Int]("m") == m && meta.getAs[Int]("k_codes") == kCodes
-      } catch { case scala.util.control.NonFatal(_) => false }
-      shapeOk && {
-        val (n, sum) = fingerprint(corpus) // NOT caught
-        meta.getAs[Long]("n_vectors") == n &&
-          meta.getAs[Long]("checksum") == sum
-      }
-    }
-    if (!valid) build(corpus, dir, nCells, m, kCodes)
-    load(spark, dir)
+    // an unusable META ([[Op.valid]]) means "rebuild"; the corpus-side
+    // fingerprint aggregate RETHROWS on failure — a transient I/O error
+    // must never trigger the rebuild's delete of a healthy store.
+    if (!validFor(corpus, dir, PlainMeta, nCells, m, kCodes)(_ => true))
+      build(corpus, dir, nCells, m, kCodes)
+    load(corpus.sparkSession, dir)
   }
+
+  /** ensure()'s validity check for either layout: usable meta of the
+    * asked quantizer shape (and `layout`), then the corpus fingerprint
+    * over the columns that layout hashes. */
+  private def validFor(corpus: DataFrame, dir: String, codec: Meta,
+      nCells: Int, m: Int, kCodes: Int, extraCols: Seq[String] = Nil)(
+      layout: org.apache.spark.sql.Row => Boolean): Boolean =
+    Op.valid(corpus.sparkSession, dir, codec) { meta =>
+      layout(meta) && meta.getAs[Int]("n_cells") == nCells &&
+        meta.getAs[Int]("m") == m && meta.getAs[Int]("k_codes") == kCodes
+    }.exists { meta =>
+      val (n, sum) = fingerprint(corpus, extraCols) // NOT caught
+      meta.getAs[Long]("n_vectors") == n && meta.getAs[Long]("checksum") == sum
+    }
 
   /** Append a batch of new vectors to an existing index WITHOUT
     * retraining: the stored quantizers are FROZEN (st14's streaming
@@ -313,33 +300,35 @@ object VectorIndex {
     * partitions.
     */
   def append(batch: DataFrame, dir: String): Unit = {
-    val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "append") {
-    import spark.implicits._
-    val ix = load(spark, dir) // marker-checked at the gateway
-    val meta = readVMeta(spark, dir)
-    requireUnfiltered(meta, dir, "append")
-    val (bn, bsum) = fingerprint(batch)
+    Op.mutate(batch.sparkSession, dir, PlainMeta, "append") { o =>
+    requireUnfiltered(o.meta, dir, "append")
     // Crash contract: the codes append and the meta commit are two
-    // writes; without a marker a crash between them lets a REDELIVERED
+    // writes; without a window a crash between them lets a REDELIVERED
     // batch double-encode its rows while the corpus-side XOR
     // fingerprint lands on the correct-looking union value — phantom
-    // duplicates ensure() can never detect. Marker down first, cleared
-    // after the meta commit; ensure() rebuilds on sight of it.
-    graft.util.IngestMarker.write(spark, dir,
-      s"append of $bn vectors in flight")
-    // repartition by cell BEFORE the partitioned append, as build()
-    // does: without it every task writes a file into every cell it
-    // touches — the tasks x cells small-files explosion
-    Similarity.ivfPqEncode(batch, ix.coarse, ix.books)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") + bn,
-      meta.getAs[Long]("checksum") ^ bsum,
-      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      None, meta.getAs[Int]("format_version"))
-    graft.util.IngestMarker.clear(spark, dir)
+    // duplicates ensure() can never detect.
+    appendCodes(batch, o, Nil)
+    }
+  }
+
+  /** [[append]]'s body for either layout: encode against the frozen
+    * quantizers, append under the layout's partition columns, XOR the
+    * batch (and its `keepCols`) into the fingerprint. */
+  private def appendCodes(batch: DataFrame, o: Op.Frame,
+      keepCols: Seq[String]): Unit = {
+    val ix = loadWith(o.spark, o.dir, o.meta)
+    val (bn, bsum) = fingerprint(batch, keepCols)
+    o.window(s"append of $bn vectors in flight") {
+      // repartition by the partition columns BEFORE the partitioned
+      // append, as build() does: without it every task writes a file
+      // into every cell it touches — the tasks x cells small-files
+      // explosion
+      val parts = keepCols :+ "cell"
+      Similarity.ivfPqEncode(batch, ix.coarse, ix.books, keepCols = keepCols)
+        .repartition(parts.map(col): _*)
+        .write.mode("append").partitionBy(parts: _*).parquet(s"${o.dir}/codes")
+      o.commit("n_vectors" -> (o.meta.getAs[Long]("n_vectors") + bn),
+        "checksum" -> (o.meta.getAs[Long]("checksum") ^ bsum))
     }
   }
 
@@ -377,51 +366,27 @@ object VectorIndex {
   def buildFiltered(corpus: DataFrame, dir: String, filterCol: String,
       nCells: Int = 16, m: Int = 16, kCodes: Int = 16): Unit = {
     val spark = corpus.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "buildFiltered") {
-    import spark.implicits._
+    Op.build(spark, dir, "buildFiltered") {
     buildsThisProcess += 1
-    graft.util.Fs.rmTree(spark, dir)
     val (coarse, books) = Similarity.ivfPqTrain(corpus, nCells, m, kCodes)
     val (n, sum) = fingerprint(corpus, Seq(filterCol))
     Similarity.ivfPqEncode(corpus, coarse, books, keepCols = Seq(filterCol))
       .repartition(col(filterCol), col("cell"))
       .write.mode("overwrite").partitionBy(filterCol, "cell")
       .parquet(s"$dir/codes")
-    val coarseRows = coarse.zipWithIndex.map { case (v, c) => (0, 0, c, v.toSeq) }
-    val bookRows = for {
-      (subArr, sub) <- books.zipWithIndex.toSeq
-      (v, c) <- subArr.zipWithIndex.toSeq
-    } yield (1, sub, c, v.toSeq)
-    (coarseRows.toSeq ++ bookRows)
-      .toDF("level", "sub", "code", "vals")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    writeVMeta(spark, dir, n, sum, coarse(0).length, nCells, m, kCodes,
-      Some(filterCol), 1)
+    writeCodebooks(spark, dir, coarse, books)
+    FilteredMeta.write(spark, dir, n, sum, coarse(0).length, nCells, m,
+      kCodes, filterCol)
     }
   }
 
   def ensureFiltered(corpus: DataFrame, dir: String, filterCol: String,
       nCells: Int = 16, m: Int = 16, kCodes: Int = 16): Loaded = {
-    val spark = corpus.sparkSession
     // same failure separation as [[ensure]]
-    val metaOpt =
-      if (graft.util.IngestMarker.present(spark, dir)) None
-      else try Some(readVMeta(spark, dir))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val valid = metaOpt.exists { meta =>
-      val shapeOk = try {
-        meta.getAs[String]("filter_col") == filterCol &&
-          meta.getAs[Int]("n_cells") == nCells &&
-          meta.getAs[Int]("m") == m && meta.getAs[Int]("k_codes") == kCodes
-      } catch { case scala.util.control.NonFatal(_) => false }
-      shapeOk && {
-        val (n, sum) = fingerprint(corpus, Seq(filterCol)) // NOT caught
-        meta.getAs[Long]("n_vectors") == n &&
-          meta.getAs[Long]("checksum") == sum
-      }
-    }
-    if (!valid) buildFiltered(corpus, dir, filterCol, nCells, m, kCodes)
-    load(spark, dir)
+    if (!validFor(corpus, dir, FilteredMeta, nCells, m, kCodes,
+        Seq(filterCol))(_.getAs[String]("filter_col") == filterCol))
+      buildFiltered(corpus, dir, filterCol, nCells, m, kCodes)
+    load(corpus.sparkSession, dir)
   }
 
   /** Pre-filtered search over a [[buildFiltered]] store: nProbe
@@ -471,12 +436,9 @@ object VectorIndex {
     * merge-on-read works unchanged on the two-level store. */
   def deleteFiltered(deleted: DataFrame, dir: String,
       filterCol: String): Unit = {
-    val spark = deleted.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "deleteFiltered") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "deleteFiltered")
-    val meta = readVMeta(spark, dir)
-    requireFiltered(meta, dir, filterCol, "deleteFiltered")
-    tombstone(deleted, dir, meta, Some(filterCol))
+    Op.mutate(deleted.sparkSession, dir, FilteredMeta, "deleteFiltered") { o =>
+      requireFiltered(o.meta, dir, filterCol, "deleteFiltered")
+      tombstone(deleted, o, Some(filterCol))
     }
   }
 
@@ -489,13 +451,11 @@ object VectorIndex {
     * directory names). */
   def compactFiltered(spark: SparkSession, dir: String,
       filterCol: String): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiltered") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiltered")
+    Op.mutate(spark, dir, FilteredMeta, "compactFiltered") { o =>
     // Layout check BEFORE the recovery sweep (see [[compact]]): a
     // filtered compact pointed at a plain store must fail loud before
     // it can delete a crashed plain compact's staged survivors.
-    requireFiltered(readVMeta(spark, dir), dir,
-      filterCol, "compactFiltered")
+    requireFiltered(o.meta, dir, filterCol, "compactFiltered")
     recoverFiltered(spark, dir, filterCol)
     val tomb = tombs(dir)
     if (!tomb.exists(spark)) return
@@ -527,12 +487,9 @@ object VectorIndex {
   def compactFilesFiltered(spark: SparkSession, dir: String,
       filterCol: String, maxFiles: Int = 16,
       maxRecordsPerFile: Long = 8000000L): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFilesFiltered") {
-    graft.util.IngestMarker.requireAbsent(spark, dir,
-      "compactFilesFiltered")
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    requireFiltered(readVMeta(spark, dir), dir,
-      filterCol, "compactFilesFiltered")
+    Op.mutate(spark, dir, FilteredMeta, "compactFilesFiltered") { o =>
+    requireFiltered(o.meta, dir, filterCol, "compactFilesFiltered")
     recoverFiltered(spark, dir, filterCol)
     StageSwap.mergeFiles(spark, filteredCodesT(dir, filterCol), maxFiles,
       maxRecordsPerFile)
@@ -545,27 +502,9 @@ object VectorIndex {
     * updates incrementally. */
   def appendFiltered(batch: DataFrame, dir: String,
       filterCol: String): Unit = {
-    val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "appendFiltered") {
-    import spark.implicits._
-    val ix = load(spark, dir) // marker-checked at the gateway
-    val meta = readVMeta(spark, dir)
-    requireFiltered(meta, dir, filterCol, "appendFiltered")
-    val (bn, bsum) = fingerprint(batch, Seq(filterCol))
-    // same crash contract as [[append]]
-    graft.util.IngestMarker.write(spark, dir,
-      s"appendFiltered of $bn vectors in flight")
-    Similarity.ivfPqEncode(batch, ix.coarse, ix.books,
-        keepCols = Seq(filterCol))
-      .repartition(col(filterCol), col("cell"))
-      .write.mode("append").partitionBy(filterCol, "cell")
-      .parquet(s"$dir/codes")
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") + bn,
-      meta.getAs[Long]("checksum") ^ bsum,
-      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      Some(filterCol), meta.getAs[Int]("format_version"))
-    graft.util.IngestMarker.clear(spark, dir)
+    Op.mutate(batch.sparkSession, dir, FilteredMeta, "appendFiltered") { o =>
+      requireFiltered(o.meta, dir, filterCol, "appendFiltered")
+      appendCodes(batch, o, Seq(filterCol)) // same crash contract
     }
   }
 

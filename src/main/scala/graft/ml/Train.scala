@@ -149,8 +149,7 @@ object Train {
       params: Seq[HyperParams], metric: String, seed: Long,
       labelCol: String = "label"): DataFrame = {
     val spark = bundle.sparkSession
-    val withFv = withVector(bundle).cache()
-    val rows = try Concurrent.all(
+    val rows = withCachedVector(bundle) { withFv => Concurrent.all(
       Splits.chunkedKFold(withFv, k, nBlocks).zipWithIndex.map {
         case ((train, test), fold) => () => params.map { hp =>
           val (testScore, trainScore) =
@@ -167,7 +166,7 @@ object Train {
             metric, testScore, trainScore, fold, hp.nRounds)
         }
       }).flatten
-    finally withFv.unpersist()
+    }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), cvSchema)
   }
 
@@ -191,6 +190,18 @@ object Train {
       r.getAs[Int]("n_boost_round"))
   }
 
+  /** Run `body` over `withVector(bundle)`, cached for its length — unless
+    * the caller already cached that plan, whose cache is then used and
+    * left in place (an unpersist here would drop the caller's entry). */
+  private def withCachedVector[T](bundle: DataFrame)(body: DataFrame => T): T = {
+    import org.apache.spark.sql.classic.ClassicConversions._
+    val withFv = withVector(bundle)
+    val own = bundle.sparkSession.sharedState.cacheManager
+      .lookupCachedData(withFv).isEmpty
+    if (own) withFv.cache()
+    try body(withFv) finally if (own) withFv.unpersist()
+  }
+
   /** M7 — one-round CV: refit `hp` per fold, the k fits at the same
     * time over one cache of the vectorized input, and emit out-of-fold
     * predictions (iid, y_true, y_pred, fold) in fold order — the Platt
@@ -199,11 +210,12 @@ object Train {
     */
   def oneRoundCv(bundle: DataFrame, k: Int, nBlocks: Long, hp: HyperParams,
       seed: Long, labelCol: String = "label"): DataFrame = {
-    val withFv = withVector(bundle).cache()
-    val folds = Splits.chunkedKFold(withFv, k, nBlocks)
-    val models = try Concurrent.all(folds.map { case (train, _) =>
-      () => fitClassifier(train, hp, seed, labelCol)
-    }) finally withFv.unpersist()
+    val (folds, models) = withCachedVector(bundle) { withFv =>
+      val folds = Splits.chunkedKFold(withFv, k, nBlocks)
+      (folds, Concurrent.all(folds.map { case (train, _) =>
+        () => fitClassifier(train, hp, seed, labelCol)
+      }))
+    }
     folds.zip(models).zipWithIndex.map { case (((_, test), m), fold) =>
       predictClassifier(m, test)
         .select(col("iid"), col(labelCol).as("y_true"), col("y_pred"),

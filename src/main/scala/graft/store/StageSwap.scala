@@ -42,8 +42,8 @@ object Table {
   * has run. Callers keep the rest: tombstones drop only after the swap
   * (merge-on-read stays correct through any crash), and a rewrite that
   * must land together with another write (a delta fold's base rewrite
-  * and delta drop) sits in an [[graft.util.IngestMarker]] window,
-  * because recovery restores leaves, not cross-table consistency.
+  * and delta drop) sits in an [[Op.window]], because recovery
+  * restores leaves, not cross-table consistency.
   *
   * Leaves are named by their directory relative to the live root
   * (`""` for a whole table). Partition values must be path-safe —

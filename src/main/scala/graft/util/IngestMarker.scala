@@ -2,19 +2,21 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Two-phase-ingest guard for the persisted index stores
-  * ([[graft.llm.DedupIndex]], [[graft.llm.VectorIndex]]): an append
-  * writes data files into live partition directories FIRST and commits
-  * the meta fingerprint LAST, so a crash between the two leaves the
-  * store holding half a batch while meta still describes the old
-  * corpus. Without a flag, the failure is SILENT and self-amplifying:
-  * the incremental XOR fingerprint is computed over the CORPUS, so a
-  * redelivered batch re-appends on top of its own half-ingested rows,
-  * meta lands on the correct-looking union value, and ensure() can
-  * never see the duplicate rows — a dedup probe then self-matches the
-  * first delivery (J = 1) and silently drops genuine survivors.
+/** Two-phase-ingest guard for the persisted index stores, one of the
+  * primitives [[graft.store.Op]] composes (its `window` is the one
+  * place that writes and clears the marker, and the one statement of
+  * the protocol). An append writes data files into live partition
+  * directories FIRST and commits the meta fingerprint LAST, so a crash
+  * between the two leaves the store holding half a batch while meta
+  * still describes the old corpus. Without a flag, the failure is
+  * SILENT and self-amplifying: the incremental XOR fingerprint is
+  * computed over the CORPUS, so a redelivered batch re-appends on top
+  * of its own half-ingested rows, meta lands on the correct-looking
+  * union value, and ensure() can never see the duplicate rows — a
+  * dedup probe then self-matches the first delivery (J = 1) and
+  * silently drops genuine survivors.
   *
-  * The marker makes the window LOUD: append() writes it before the
+  * The marker makes the window LOUD: a mutation writes it before the
   * first data file and clears it after the meta commit; every other
   * store operation refuses to run while it is present; ensure()
   * treats it as "store invalid" and rebuilds from the corpus (the

@@ -3,15 +3,15 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
 
-/** Single-WRITER lease for the persisted index stores
-  * ([[graft.llm.DedupIndex]], [[graft.llm.VectorIndex]],
-  * [[graft.llm.GraphAnn]]) — the concurrency guard the r14 verdict
-  * flagged as missing. [[IngestMarker]] makes a *crashed* append loud,
-  * but two *live* concurrent appends both pass `requireAbsent` and
-  * interleave their data/meta writes: last meta wins, the XOR
-  * fingerprint drifts silently, and the fail-loud contract the st17
-  * streaming ingest is built on silently breaks. A real ingest loop
-  * hits this with scheduler overlap or retry storms.
+/** Single-WRITER lease for the persisted index stores, one of the
+  * primitives [[graft.store.Op]] composes (every store op takes it
+  * there; Op is the one statement of the protocol) — the concurrency
+  * guard the r14 verdict flagged as missing. [[IngestMarker]] makes a
+  * *crashed* append loud, but two *live* concurrent appends both pass
+  * `requireAbsent` and interleave their data/meta writes: last meta
+  * wins, the XOR fingerprint drifts silently, and the fail-loud
+  * contract the st17 streaming ingest is built on silently breaks. A
+  * real ingest loop hits this with scheduler overlap or retry storms.
   *
   * Shape: an exclusive lock FILE at `<dir>.__lock` — a SIBLING of the
   * store directory, deliberately outside it so a rebuild's

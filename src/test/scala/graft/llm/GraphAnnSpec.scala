@@ -510,4 +510,33 @@ class GraphAnnSpec extends SparkSpec {
     assert(GraphAnn.buildsThisProcess == builds)
     c.unpersist()
   }
+
+  test("a crashed-op marker blocks delete/append/compact/compactFiles/" +
+      "repairDensity/load, and ensure() rebuilds through it") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/marker"
+    val c = corpus(120).cache()
+    GraphAnn.ensure(c, dir)
+    // fabricate the crash state: an op died inside its commit window
+    graft.util.IngestMarker.write(spark, dir, "spec-fabricated crash")
+    val batch = corpus(130).filter(col("vec_id") >= 120)
+    intercept[IllegalArgumentException] {
+      GraphAnn.delete(c.filter(col("vec_id") < 5), dir)
+    }
+    intercept[IllegalArgumentException] { GraphAnn.append(batch, c, dir) }
+    intercept[IllegalArgumentException] { GraphAnn.compact(c, dir) }
+    intercept[IllegalArgumentException] { GraphAnn.compactFiles(spark, dir) }
+    intercept[IllegalArgumentException] { GraphAnn.repairDensity(c, dir) }
+    intercept[IllegalArgumentException] { GraphAnn.load(spark, dir) }
+    // ensure() is the documented recovery — even over the corpus the
+    // meta still describes: marker ⇒ rebuild, marker cleared
+    val b0 = GraphAnn.buildsThisProcess
+    val edges = GraphAnn.ensure(c, dir)
+    assert(GraphAnn.buildsThisProcess == b0 + 1,
+      "ensure did not rebuild through the crash marker")
+    assert(!graft.util.IngestMarker.present(spark, dir),
+      "rebuild left the marker in place")
+    assert(edges.select("src").distinct().count() == 120)
+    c.unpersist()
+  }
 }

@@ -343,4 +343,19 @@ class TextIndexSpec extends SparkSpec {
     TextIndex.ensure(live, dir)
     assert(TextIndex.buildsThisProcess == b0)
   }
+
+  test("a rejected delete leaves no cached plan behind") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/nocache"
+    TextIndex.build(df((0L until 10L).map(i => (i, doc(i.toInt)))), dir)
+    val s = spark
+    import s.implicits._
+    spark.catalog.clearCache()
+    intercept[IllegalArgumentException] {
+      TextIndex.delete(Seq(("7", doc(7)), ("007", doc(7)))
+        .toDF("doc_id", "text"), dir)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the rejected delete left its id set cached")
+  }
 }

@@ -589,4 +589,40 @@ class VectorIndexSpec extends SparkSpec {
     assert(VectorIndex.buildsThisProcess == builds)
     c.unpersist()
   }
+
+  test("delete puts its tombstones and meta commit in one marker window: " +
+      "a delete that dies inside it blocks later ops, and ensure() over " +
+      "the pre-delete corpus rebuilds") {
+    import spark.implicits._
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/window"
+    val c = corpus(200).cache()
+    VectorIndex.build(c, dir)
+    // fabricate a store whose tombstone write fails: `tombstones` is a
+    // single parquet FILE (readable, so the double-delete audit passes;
+    // not a directory, so the append inside the window fails)
+    val one = s"$base/window_tomb"
+    Seq(999999L).toDF("nid").repartition(1).write.mode("overwrite").parquet(one)
+    val part = new java.io.File(one).listFiles()
+      .find(_.getName.startsWith("part-")).get
+    java.nio.file.Files.copy(part.toPath,
+      new java.io.File(s"$dir/tombstones").toPath)
+    intercept[Exception] {
+      VectorIndex.delete(c.filter(col("vec_id") < 5), dir)
+    }
+    assert(graft.util.IngestMarker.present(spark, dir),
+      "a delete that died inside its window left no marker")
+    intercept[IllegalArgumentException] { VectorIndex.load(spark, dir) }
+    intercept[IllegalArgumentException] {
+      VectorIndex.delete(c.filter(col("vec_id") < 5), dir)
+    }
+    // the meta still describes the full corpus; only the marker tells
+    // ensure() the store cannot be trusted
+    val b0 = VectorIndex.buildsThisProcess
+    val ix = VectorIndex.ensure(c, dir)
+    assert(VectorIndex.buildsThisProcess == b0 + 1,
+      "ensure validated a store a delete died in")
+    assert(ix.codes.count() == 200)
+    c.unpersist()
+  }
 }

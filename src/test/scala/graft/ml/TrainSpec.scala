@@ -129,4 +129,16 @@ class TrainSpec extends SparkSpec {
     assert(inCall.size > k * 3)
     assert(inCall.forall(_ == "cv"), inCall.groupBy(identity).view.mapValues(_.size).toMap)
   }
+
+  test("the CV drivers keep a cache the caller made of the same plan") {
+    val vec = Train.withVector(bundle).cache()
+    val cm = spark.sharedState.cacheManager
+    import org.apache.spark.sql.classic.ClassicConversions._
+    try {
+      Train.crossValidate(bundle, k, nBlocks, params.take(1), "auc", 5L).collect()
+      assert(cm.lookupCachedData(vec).isDefined, "crossValidate dropped the caller's cache")
+      Train.oneRoundCv(bundle, k, nBlocks, params.head, 5L).collect()
+      assert(cm.lookupCachedData(vec).isDefined, "oneRoundCv dropped the caller's cache")
+    } finally vec.unpersist()
+  }
 }
