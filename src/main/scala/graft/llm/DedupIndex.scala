@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import graft.store.{Meta, Op, StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
 /** Persisted n-gram-Jaccard DEDUP SIGNATURE STORE — the dedup analog of
   * the vector/graph index-maintenance matrix: build / ensure / probe /
@@ -43,12 +43,22 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   *   - `tombstones/` — merge-on-read deletes ([[delete]]); every probe
   *     anti-joins it, [[compact]] folds it away rewriting ONLY affected
   *     partitions (crash-safe under [[graft.store.StageSwap]]).
+  *   - `prefstats/` — per-bucket prefix row counts (build exact,
+  *     appends add deltas, maintenance rewrites): the probe's join
+  *     router and the refresh trigger.
   *   - `gramdf/` — incrementally-maintained per-gram document
-  *     frequency (base + signed per-batch deltas, merge-on-read like
-  *     the tombstones, folded at maintenance), so the hot-gram refresh
-  *     tick costs O(appended) instead of re-exploding the corpus while
-  *     holding the writer lease.
+  *     frequency (`base/` partitioned by `gbucket = pmod(gram,
+  *     n_buckets)`, signed per-batch `delta/`, merge-on-read like the
+  *     tombstones, folded at maintenance; `evalmeta/` the threshold of
+  *     the last evaluation), so the hot-gram refresh tick costs
+  *     O(appended) instead of re-exploding the corpus while holding
+  *     the writer lease.
   *   - `meta/` — one row, [[StoreMeta]].
+  *
+  * Every table above is written by [[build]] and kept by every op, so
+  * an op reads exactly this layout and never probes for a missing
+  * table. A store of an older format fails its meta read and
+  * [[ensure]] rebuilds it — the one upgrade path.
   *
   * Keeper semantics match [[Dedup.incrementalDedup]] (and its DuckDB
   * oracle): batch ids are all greater than every stored id (enforced),
@@ -76,12 +86,22 @@ object DedupIndex {
     * append XORs survivors in, delete XORs them back out, so [[ensure]]
     * over the live corpus validates WITHOUT rebuild), max indexed id
     * (the monotonic-id ingest contract), store threshold t0, bucket
-    * counts. */
-  private val StoreMeta = Meta("dedup index", 2,
+    * counts (`n_buckets` partitions both `prefix/` and `gramdf/base`)
+    * and the id column the store tables carry. */
+  private val StoreMeta = Meta("dedup index", 3,
     "n_docs" -> LongType, "checksum" -> LongType, "max_id" -> LongType,
     "threshold" -> DoubleType, "n_buckets" -> IntegerType,
-    "n_id_buckets" -> IntegerType)
+    "n_id_buckets" -> IntegerType, "id_col" -> StringType)
   private val Eps = 1e-9
+
+  /** The id column is fixed at [[build]]: the tables carry it by name
+    * and reads pass an explicit schema, so another name reads nulls. */
+  private def requireIdCol(meta: org.apache.spark.sql.Row, dir: String,
+      idCol: String): Unit = {
+    val stored = meta.getAs[String]("id_col")
+    require(stored == idCol, s"dedup index at $dir was built with id " +
+      s"column $stored, got $idCol — pass $stored or rebuild")
+  }
 
   private def indexable(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
@@ -207,20 +227,6 @@ object DedupIndex {
   private def gramDfDelta(dir: String) = s"$dir/gramdf/delta"
   private def gramDfEval(dir: String) = s"$dir/gramdf/evalmeta"
 
-  private def hasGramDf(spark: SparkSession, dir: String): Boolean =
-    graft.util.Fs.exists(spark, gramDfBase(dir))
-
-  /** `gramdf/base` is BUCKET-PARTITIONED by gram hash (the termstats/
-    * layout from [[TextIndex]], r16 verdict Missing #3): at 100 TB the
-    * distinct-gram table is billions of rows, and the refresh tick's
-    * candidate semi-join — though shuffle-free — still had to SCAN
-    * every row of an unpartitioned base. With the partition column the
-    * tick prunes to the ≤ [[gramDfBucketsOf]] partitions its own delta
-    * grams hash into, so tick scan bytes track the APPEND, not the
-    * corpus. Legacy (unpartitioned, r16) bases read fine without
-    * pruning and upgrade to the partitioned layout at the next fold. */
-  private val GramDfBucketsLegacy = 64
-
   /** SCALE-ADAPTIVE partition counts (guide §2: derive partitioning
     * from input size, not a constant tuned for one scale): a
     * fixture-sized store paying 64 partition directories per write is
@@ -231,27 +237,6 @@ object DedupIndex {
   private def autoBuckets(nDocs: Long, cap: Int): Int =
     math.max(4L, math.min(cap.toLong, nDocs / 1000L)).toInt
 
-  /** The gramdf/ bucket count is a PER-STORE layout fact: recorded in
-    * a `gramdf/layout` sidecar at build/seed, preserved by folds;
-    * absent (every pre-r18 store) means the legacy constant 64. Write
-    * and prune must always agree, so nothing ever consults a global. */
-  private def gramDfLayout(dir: String) = s"$dir/gramdf/layout"
-
-  private def gramDfBucketsOf(spark: SparkSession, dir: String): Int =
-    if (!graft.util.Fs.exists(spark, gramDfLayout(dir)))
-      GramDfBucketsLegacy
-    else try graft.util.Sidecar.readHead(spark, gramDfLayout(dir))
-      .getAs[Int]("gbuckets")
-    catch { case scala.util.control.NonFatal(_) => GramDfBucketsLegacy }
-
-  private def writeGramDfLayout(spark: SparkSession, dir: String,
-      nb: Int): Unit =
-    graft.util.Sidecar.write(spark, gramDfLayout(dir),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("gbuckets",
-          org.apache.spark.sql.types.IntegerType))),
-      Seq(Seq[Any](nb)))
-
   private def gramBucketOf(gram: Column, nb: Int): Column =
     pmod(gram, lit(nb)).cast("int")
 
@@ -260,11 +245,15 @@ object DedupIndex {
       org.apache.spark.sql.types.StructField("gbucket",
         org.apache.spark.sql.types.IntegerType))
 
-  private def gramDfBasePartitioned(spark: SparkSession,
-      dir: String): Boolean =
-    graft.util.Fs.listDirNames(spark, gramDfBase(dir))
-      .exists(_.startsWith("gbucket="))
-
+  /** `gramdf/base` is BUCKET-PARTITIONED by gram hash (the termstats/
+    * layout from [[TextIndex]]): at 100 TB the distinct-gram table is
+    * billions of rows, and the refresh tick's candidate semi-join —
+    * though shuffle-free — would still SCAN every row of an
+    * unpartitioned base. With the partition column the tick prunes to
+    * the ≤ `n_buckets` partitions its own delta grams hash into, so
+    * tick scan bytes track the APPEND, not the corpus. [[build]]
+    * writes the base with the meta's `n_buckets` and every fold keeps
+    * it, so write and prune always agree. */
   private def writeGramDfBase(df: DataFrame, path: String,
       nb: Int): Unit =
     df.select(col("gram"), col("df"))
@@ -272,23 +261,20 @@ object DedupIndex {
       .repartition(col("gbucket"))
       .write.mode("overwrite").partitionBy("gbucket").parquet(path)
 
-  /** Base reader: partition-pruned to `buckets` on the new layout;
-    * a legacy unpartitioned base reads whole (no prune — correct,
-    * just unpruned until the next fold rewrites it). `private[llm]`
-    * so the spec can assert the prune lands as PartitionFilters. */
+  /** Base reader, partition-pruned to `buckets`. `private[llm]` so
+    * the spec can assert the prune lands as PartitionFilters. */
   private[llm] def readGramDfBase(spark: SparkSession, dir: String,
-      buckets: Option[Seq[Int]]): DataFrame =
-    if (gramDfBasePartitioned(spark, dir)) {
-      val raw = spark.read.schema(gramDfPartSchema).parquet(gramDfBase(dir))
-      val pruned = buckets match {
-        case Some(bs) => raw.filter(col("gbucket").isin(bs.map(Int.box): _*))
-        case None => raw
-      }
-      pruned.select(col("gram"), col("df"))
-    } else spark.read.schema(gramDfSchema).parquet(gramDfBase(dir))
+      buckets: Option[Seq[Int]]): DataFrame = {
+    val raw = spark.read.schema(gramDfPartSchema).parquet(gramDfBase(dir))
+    val pruned = buckets match {
+      case Some(bs) => raw.filter(col("gbucket").isin(bs.map(Int.box): _*))
+      case None => raw
+    }
+    pruned.select(col("gram"), col("df"))
+  }
 
   /** Exact per-gram document frequency by explosion — the build-time
-    * seed and the legacy-store fallback. O(total grams in `grams`). */
+    * seed and the append/delete deltas. O(total grams in `grams`). */
   private def gramDfOf(grams: DataFrame): DataFrame =
     grams.select(explode(col("sh")).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("df"))
@@ -336,26 +322,19 @@ object DedupIndex {
     * — a crash in between would double-count every folded delta — so
     * the fold sits in an [[Op.window]]: a crash fails every later op
     * LOUD and ensure() rebuilds, the documented recovery. Caller holds
-    * the writer lease. */
-  private def foldGramDf(spark: SparkSession, dir: String): Unit =
-    if (hasGramDf(spark, dir) && graft.util.Fs.exists(spark, gramDfDelta(dir)))
-      Op.window(spark, dir, "gramdf delta fold in flight") {
-        // the fold rewrites to the BUCKET-PARTITIONED layout (upgrading
-        // a legacy unpartitioned base in passing), PRESERVING the
-        // store's recorded gramdf bucket count
-        val nb = gramDfBucketsOf(spark, dir)
-        StageSwap.replace(spark, Table(gramDfBase(dir))) { staging =>
-          writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L),
-            staging, nb)
-        }
-        writeGramDfLayout(spark, dir, nb)
-        graft.util.Fs.rmTree(spark, gramDfDelta(dir))
+    * the writer lease and has checked that deltas exist. */
+  private def foldGramDf(spark: SparkSession, dir: String, nb: Int): Unit =
+    Op.window(spark, dir, "gramdf delta fold in flight") {
+      StageSwap.replace(spark, Table(gramDfBase(dir))) { staging =>
+        writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L),
+          staging, nb)
       }
+      graft.util.Fs.rmTree(spark, gramDfDelta(dir))
+    }
 
   /** The frozen hot set, driver-side (bounded by the df lemma — every
     * consumer collected it anyway, so the Spark-job read bought
-    * nothing). Files may be Spark-written (legacy) or sidecar-written;
-    * both read identically. */
+    * nothing). */
   private def readHotGramsArr(spark: SparkSession,
       dir: String): Array[Long] =
     graft.util.Sidecar.readRows(spark, s"$dir/hotgrams")
@@ -394,9 +373,7 @@ object DedupIndex {
     *     amortized O(1) per ingested row even when `compactFiles`
     *     fires every few micro-batches on a huge store.
     * Counts OVER-state live rows (merge-on-read deletes never
-    * decrement) — conservative for both consumers. A store without
-    * the table (pre-r15 layout) routes to the salted join and an
-    * always-due refresh: the safe legacy defaults. */
+    * decrement) — conservative for both consumers. */
   // ~256k prefix rows ≈ 6 MB columnar / tens of MB as a built
   // broadcast relation — safe for a default-memory driver (the
   // BroadcastExchange build amplifies; a 1M-row limit courted OOM on
@@ -424,20 +401,19 @@ object DedupIndex {
       .map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("n_rows"),
         r.getAs[String]("src")))
 
-  /** (total prefix rows, rows appended since last maintenance), or
-    * None when the table is absent/unreadable (legacy store). */
+  /** (total prefix rows, rows appended since last maintenance). */
   private[llm] def statsTotals(spark: SparkSession,
-      dir: String): Option[(Long, Long)] =
-    if (!graft.util.Fs.exists(spark, statsPath(dir))) None
-    else try {
-      val rows = readStatsRows(spark, dir)
-      Some((rows.map(_._2).sum,
-        rows.collect { case (_, n, "append") => n }.sum))
-    } catch { case scala.util.control.NonFatal(_) => None }
+      dir: String): (Long, Long) = {
+    val rows = readStatsRows(spark, dir)
+    (rows.map(_._2).sum, rows.collect { case (_, n, "append") => n }.sum)
+  }
 
   /** Exact rewrite from the live prefix table (maintenance commit):
     * one bounded aggregate job (≤ nBuckets result rows), committed
-    * driver-side. */
+    * driver-side. `Sidecar.write` deletes the table before it writes
+    * it and every probe reads it, so outside [[build]] each call sits
+    * in an [[Op.window]]: a crash in between leaves the marker, and
+    * [[ensure]] rebuilds. */
   private def rewriteStats(spark: SparkSession, dir: String): Unit = {
     val counts = try {
       spark.read.parquet(s"$dir/prefix")
@@ -511,7 +487,7 @@ object DedupIndex {
     *
     * `nBuckets`/`nIdBuckets` = 0 (the default) derives the partition
     * counts from the indexed-corpus size ([[autoBuckets]], capped at
-    * the legacy 64/32); an explicit count is honored verbatim. Every
+    * 64/32); an explicit count is honored verbatim. Every
     * later op reads the counts back from meta, so the derivation is a
     * build-time-only decision. */
   def build(docs: DataFrame, dir: String, threshold: Double,
@@ -541,7 +517,6 @@ object DedupIndex {
     // re-exploding the corpus.
     val tBuild = hotThresholdFor(nIdx)
     writeGramDfBase(gramDfOf(grams), gramDfBase(dir), nb)
-    writeGramDfLayout(spark, dir, nb)
     writeGramDfEval(spark, dir, tBuild)
     // bounded collect (the df lemma): the hot set is committed
     // driver-side and handed straight to the prefix cut — previously a
@@ -557,7 +532,7 @@ object DedupIndex {
     val (n, sum) = fingerprint(docs, idCol, textCol)
     val maxId = docs.agg(coalesce(max(col(idCol)).cast("long"),
       lit(Long.MinValue))).head().getLong(0)
-    StoreMeta.write(spark, dir, n, sum, maxId, threshold, nb, nib)
+    StoreMeta.write(spark, dir, n, sum, maxId, threshold, nb, nib, idCol)
     }
   }
 
@@ -565,14 +540,15 @@ object DedupIndex {
     * the incrementally-maintained meta — a maintained store (any number
     * of appends/deletes later) validates WITHOUT rebuild.
     *
-    * Failure separation (r13 advice): only the META read and its field
-    * shape are allowed to mean "store invalid → rebuild" (and only on
-    * NonFatal errors — an OOM propagates). The corpus-side fingerprint
-    * aggregate is NOT caught: a transient I/O failure reading the
-    * corpus RETHROWS instead of being treated as a mismatch, because
-    * the rebuild it would trigger starts by deleting the healthy store
-    * — a transient error must never destroy the only copy of the
-    * index. A crashed-op marker counts as invalid ([[Op.valid]]):
+    * Failure separation (r13 advice): only the store side — the META
+    * read, its field shape (threshold, bucket counts, id column) and a
+    * present `prefstats/` — is allowed to mean "store invalid →
+    * rebuild" (and only on NonFatal errors — an OOM propagates). The
+    * corpus-side fingerprint aggregate is NOT caught: a transient I/O
+    * failure reading the corpus RETHROWS instead of being treated as a
+    * mismatch, because the rebuild it would trigger starts by deleting
+    * the healthy store — a transient error must never destroy the only
+    * copy of the index. A crashed-op marker counts as invalid ([[Op.valid]]):
     * rebuild is exactly the documented recovery. */
   def ensure(docs: DataFrame, dir: String, threshold: Double,
       nBuckets: Int = 0, nIdBuckets: Int = 0, idCol: String = "doc_id",
@@ -585,7 +561,9 @@ object DedupIndex {
     val valid = Op.valid(docs.sparkSession, dir, StoreMeta) { meta =>
       math.abs(meta.getAs[Double]("threshold") - threshold) < Eps &&
         (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
-        (nIdBuckets == 0 || meta.getAs[Int]("n_id_buckets") == nIdBuckets)
+        (nIdBuckets == 0 || meta.getAs[Int]("n_id_buckets") == nIdBuckets) &&
+        meta.getAs[String]("id_col") == idCol &&
+        graft.util.Fs.dataFileCount(docs.sparkSession, statsPath(dir)) > 0
     }.exists { meta =>
       val (n, sum) = fingerprint(docs, idCol, textCol) // NOT caught
       meta.getAs[Long]("n_docs") == n && meta.getAs[Long]("checksum") == sum
@@ -606,6 +584,7 @@ object DedupIndex {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = batch.sparkSession
     val meta = Op.read(spark, dir, StoreMeta, "probe")
+    requireIdCol(meta, dir, idCol)
     val t0 = meta.getAs[Double]("threshold")
     require(threshold >= t0 - Eps,
       s"probe threshold $threshold is below the store threshold $t0 — " +
@@ -638,25 +617,20 @@ object DedupIndex {
     //    nothing extra because a broadcast join has no per-key tasks.
     //    This is every early-ingest-loop probe and the whole d17/st17
     //    fixture scale.
-    //  - large slice (or no/unreadable stats — legacy store): SALTED
-    //    shuffle join on pmod(store id, 32). The store's fixed-hash
-    //    gram order has no document-frequency defense, so a
-    //    corpus-wide stop-phrase gram that hashes low sits in the
-    //    prefix of EVERY doc containing it and its posting list
-    //    becomes one join key = ONE task (the single-task hot-key
+    //  - large slice: SALTED shuffle join on pmod(store id, 32). The
+    //    store's fixed-hash gram order has no document-frequency
+    //    defense, so a corpus-wide stop-phrase gram that hashes low
+    //    sits in the prefix of EVERY doc containing it and its posting
+    //    list becomes one join key = ONE task (the single-task hot-key
     //    bound, measured in the r14 store-skew campaign). The salt
     //    splits each gram's store posting across ≤ 32 key values; the
     //    batch side explodes all 32 salts — a 32× blowup of the
     //    O(micro-batch) SMALL side — and the output is identical.
     // Both forms are row-identical (asserted in DedupIndexSpec by
-    // deleting prefstats and re-probing).
-    val probedStoreRows =
-      if (!graft.util.Fs.exists(spark, statsPath(dir))) Long.MaxValue
-      else try {
-        val probed = probeBuckets.toSet
-        readStatsRows(spark, dir)
-          .collect { case (b, n, _) if probed(b) => n }.sum
-      } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
+    // inflating prefstats past the limit and re-probing).
+    val probed = probeBuckets.toSet
+    val probedStoreRows = readStatsRows(spark, dir)
+      .collect { case (b, n, _) if probed(b) => n }.sum
     val candSB =
       if (probedStoreRows <= BroadcastStoreRows)
         broadcast(storePref).alias("x")
@@ -733,6 +707,7 @@ object DedupIndex {
     val spark = batch.sparkSession
     Op.mutate(spark, dir, StoreMeta, "append") { o =>
     val meta = o.meta
+    requireIdCol(meta, dir, idCol)
     val t0 = meta.getAs[Double]("threshold")
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nIdBuckets = meta.getAs[Int]("n_id_buckets")
@@ -755,23 +730,15 @@ object DedupIndex {
         .repartition(col("bucket"))
         .write.mode("append").partitionBy("bucket").parquet(s"$dir/prefix")
       // stats DELTA: one tiny aggregate of the (checkpointed) batch
-      // prefix (≤ nBuckets result rows), committed driver-side. A
-      // legacy store WITHOUT the table gets a one-time full rewrite
-      // instead — a delta-only table would under-count the base rows
-      // and could mis-route a huge store to the broadcast join.
-      if (graft.util.Fs.exists(spark, statsPath(dir))) {
-        graft.util.Sidecar.append(spark, statsPath(dir), statsSchema,
-          prefS.groupBy("bucket").agg(count(lit(1)).as("n_rows"))
-            .collect().map(r => Seq[Any](r.getInt(0), r.getLong(1), "append"))
-            .toSeq)
-        maybeFoldStats(spark, dir)
-      } else rewriteStats(spark, dir)
+      // prefix (≤ nBuckets result rows), committed driver-side
+      graft.util.Sidecar.append(spark, statsPath(dir), statsSchema,
+        prefS.groupBy("bucket").agg(count(lit(1)).as("n_rows"))
+          .collect().map(r => Seq[Any](r.getInt(0), r.getLong(1), "append"))
+          .toSeq)
+      maybeFoldStats(spark, dir)
       // df DELTA: one tiny aggregate of the survivors' grams, inside
-      // the same window as the data writes. A legacy store without
-      // gramdf/ skips it — the refresh's legacy path recomputes and
-      // seeds the table there.
-      if (hasGramDf(spark, dir))
-        writeGramDfDelta(spark, dir, gramsS, sign = 1)
+      // the same window as the data writes
+      writeGramDfDelta(spark, dir, gramsS, sign = 1)
       val (sn, ssum) = fingerprint(survivors, idCol, textCol)
       val bMax = batch.agg(coalesce(max(col(idCol)).cast("long"),
         lit(Long.MinValue))).head().getLong(0)
@@ -797,6 +764,7 @@ object DedupIndex {
     // every later op
     Op.mutate(spark, dir, StoreMeta, "delete") { o =>
     val meta = o.meta
+    requireIdCol(meta, dir, idCol)
     val ids = deleted.select(col(idCol).cast("long").as("nid"))
       .localCheckpoint(eager = true)
     // ONE aggregate answers every row-shaped audit (total, indexable,
@@ -833,8 +801,7 @@ object DedupIndex {
     // stale), so they share one window
     o.window(s"delete of $nDel docs in flight") {
       tombs(dir).append(ids)
-      if (hasGramDf(spark, dir))
-        writeGramDfDelta(spark, dir, delGrams, sign = -1)
+      writeGramDfDelta(spark, dir, delGrams, sign = -1)
       o.commit("n_docs" -> (meta.getAs[Long]("n_docs") - nIdx),
         "checksum" -> (meta.getAs[Long]("checksum") ^ dsum))
     }
@@ -856,23 +823,18 @@ object DedupIndex {
     // No deltas → base is already exact; the ordinary due-trigger tick
     // still runs (free when not due). The hotgrams fold is
     // content-preserving and safe either way.
-    if (hasGramDf(spark, dir) &&
-      graft.util.Fs.exists(spark, gramDfDelta(dir))) {
-      refreshHotGramsLocked(spark, dir, o.meta, force = true): Unit
-      maybeFoldGramDf(spark, dir, force = true)
-    } else {
-      refreshHotGramsLocked(spark, dir, o.meta): Unit
-      maybeFoldGramDf(spark, dir, force = true)
-    }
+    refreshHotGramsLocked(spark, dir, o.meta,
+      force = graft.util.Fs.exists(spark, gramDfDelta(dir))): Unit
+    maybeFoldGramDf(spark, dir, o.meta.getAs[Int]("n_buckets"), force = true)
     val tomb = tombs(dir)
     if (!tomb.exists(spark)) return
-    val idCol = spark.read.parquet(s"$dir/sets").columns
-      .find(c => c != "sh" && c != "sbucket").get
+    val idCol = o.meta.getAs[String]("id_col")
     tomb.foldInto(spark, prefixT(dir), readPrefixTable(spark, dir, idCol),
       idCol)
     tomb.foldInto(spark, setsT(dir), readSets(spark, dir, idCol), idCol)
     tomb.drop(spark)
-    rewriteStats(spark, dir) // folded rows leave the stats too
+    // folded rows leave the stats too
+    o.window("prefstats rewrite in flight")(rewriteStats(spark, dir))
     }
   }
 
@@ -968,30 +930,25 @@ object DedupIndex {
     import spark.implicits._
     val nDocs = meta.getAs[Long]("n_docs")
     if (nDocs == 0) return 0L
-    val statsDue = statsTotals(spark, dir) match {
-      case None => true // legacy store without stats: always due
-      case Some((total, appended)) =>
-        total == 0 || appended.toDouble >= RefreshDueFraction * total
-    }
+    val (total, appended) = statsTotals(spark, dir)
+    val statsDue = total == 0 || appended.toDouble >= RefreshDueFraction * total
     // a trickle ingest on a huge store can sit under the 2% mass
     // trigger for a long history while delta files pile up one per
     // append — and folding is only safe right after an evaluation, so
     // file buildup itself makes a tick due (the tick is O(appended)
     // now, so the extra evaluations cost nothing corpus-sized)
-    val filesDue = hasGramDf(spark, dir) &&
-      graft.util.Fs.exists(spark, gramDfDelta(dir)) &&
+    val filesDue = graft.util.Fs.exists(spark, gramDfDelta(dir)) &&
       graft.util.Fs.dataFileCount(spark, gramDfDelta(dir)) > GramDfFoldFiles
     if (!force && !statsDue && !filesDue) return 0L
     val t0 = meta.getAs[Double]("threshold")
     val nBuckets = meta.getAs[Int]("n_buckets")
-    val idCol = spark.read.parquet(s"$dir/sets").columns
-      .find(c => c != "sh" && c != "sbucket").get
+    val idCol = meta.getAs[String]("id_col")
     val liveSets = tombs(dir).live(spark,
       readSets(spark, dir, idCol).select(col(idCol), col("sh")), idCol)
     val tNow = hotThresholdFor(nDocs)
     // bounded collect: ≤ (grams/doc)/HotGramFraction newly-hot grams.
-    // Three tiers, cheapest first (r15 verdict item 1 — the tick must
-    // not re-explode the corpus while holding the writer lease):
+    // Two tiers, cheapest first (the tick must not re-explode the
+    // corpus while holding the writer lease):
     //  - CANDIDATE path (the normal tick): thresholds are
     //    non-decreasing since the last evaluation, so a gram whose
     //    count did not change cannot newly cross — and the grams whose
@@ -1002,59 +959,36 @@ object DedupIndex {
     //  - FULL MERGED path (deletes lowered the threshold, or evalmeta
     //    unreadable): one pass over base ∪ delta — a scan+groupBy of
     //    the aggregated table, still never an explode of sets/.
-    //  - LEGACY path (pre-r16 store without gramdf/): the one
-    //    remaining O(corpus) recompute, which also SEEDS gramdf/ so
-    //    every later tick is delta-driven.
     // the frozen hot set, driver-side — consulted by both tiers below
     // and previously re-scanned as an anti-join build side each time
     val hotNow = readHotGramsArr(spark, dir).toSet
-    val newHot: Array[Long] =
-      if (!hasGramDf(spark, dir)) {
-        // the base seed is safe to land before anything else (it is
-        // exact df bookkeeping either way); evalmeta is NOT written
-        // here — it lands only after promotion completes, so a crash
-        // in between leaves the next tick on the full path, which
-        // re-finds these grams
-        val dfAll = gramDfOf(liveSets).localCheckpoint(eager = true)
-        writeGramDfBase(dfAll, gramDfBase(dir),
-          gramDfBucketsOf(spark, dir))
-        System.err.println(s"[DedupIndex] legacy store at $dir: seeded " +
-          "gramdf/ with a one-time full df recompute")
-        dfAll.filter(col("df") > tNow).select(col("gram"))
-          .collect().map(_.getLong(0)).filterNot(hotNow)
-      } else {
-        val tEval = readGramDfEval(spark, dir)
-        val deltaExists = graft.util.Fs.exists(spark, gramDfDelta(dir))
-        val merged: DataFrame =
-          if (tEval.exists(_ <= tNow)) {
-            if (!deltaExists)
-              spark.range(0).select(col("id").as("gram"), col("id").as("df"))
-            else {
-              val deltaAgg = spark.read.schema(gramDfSchema)
-                .parquet(gramDfDelta(dir))
-                .groupBy("gram").agg(sum(col("df")).as("df"))
-                .localCheckpoint(eager = true)
-              // bounded collect: ≤ the store's gramdf bucket count —
-              // the delta grams' partitions, the only base partitions
-              // any candidate can live in
-              val candBuckets = deltaAgg
-                .select(gramBucketOf(col("gram"),
-                  gramDfBucketsOf(spark, dir)).as("gbucket"))
-                .distinct().collect().map(_.getInt(0)).toSeq
-              // base side: partition prune to the candidate buckets,
-              // THEN the broadcast LEFT-SEMI row prune — scan bytes
-              // track the append, not the corpus (shuffle-free as
-              // before); a legacy unpartitioned base reads whole
-              readGramDfBase(spark, dir, Some(candBuckets))
-                .join(broadcast(deltaAgg.select("gram")),
-                  Seq("gram"), "left_semi")
-                .unionByName(deltaAgg)
-                .groupBy("gram").agg(sum(col("df")).as("df"))
-            }
-          } else mergedGramDf(spark, dir)
-        merged.filter(col("df") > tNow).select(col("gram"))
-          .collect().map(_.getLong(0)).filterNot(hotNow)
-      }
+    val merged: DataFrame =
+      if (readGramDfEval(spark, dir).exists(_ <= tNow)) {
+        if (!graft.util.Fs.exists(spark, gramDfDelta(dir)))
+          spark.range(0).select(col("id").as("gram"), col("id").as("df"))
+        else {
+          val deltaAgg = spark.read.schema(gramDfSchema)
+            .parquet(gramDfDelta(dir))
+            .groupBy("gram").agg(sum(col("df")).as("df"))
+            .localCheckpoint(eager = true)
+          // bounded collect: ≤ nBuckets values — the delta grams'
+          // partitions, the only base partitions any candidate can
+          // live in
+          val candBuckets = deltaAgg
+            .select(gramBucketOf(col("gram"), nBuckets).as("gbucket"))
+            .distinct().collect().map(_.getInt(0)).toSeq
+          // base side: partition prune to the candidate buckets, THEN
+          // the broadcast LEFT-SEMI row prune — scan bytes track the
+          // append, not the corpus (shuffle-free)
+          readGramDfBase(spark, dir, Some(candBuckets))
+            .join(broadcast(deltaAgg.select("gram")),
+              Seq("gram"), "left_semi")
+            .unionByName(deltaAgg)
+            .groupBy("gram").agg(sum(col("df")).as("df"))
+        }
+      } else mergedGramDf(spark, dir)
+    val newHot = merged.filter(col("df") > tNow).select(col("gram"))
+      .collect().map(_.getLong(0)).filterNot(hotNow)
     if (newHot.isEmpty) {
       // the evaluation RAN and promoted everything due (nothing):
       // committing evalmeta = tNow arms the next tick's candidate
@@ -1064,8 +998,9 @@ object DedupIndex {
       // before one would erase the change-tracking the candidate
       // shortcut relies on)
       writeGramDfEval(spark, dir, tNow)
-      rewriteStats(spark, dir)
-      maybeFoldGramDf(spark, dir)
+      Op.window(spark, dir, "prefstats rewrite in flight")(
+        rewriteStats(spark, dir))
+      maybeFoldGramDf(spark, dir, nBuckets)
       return 0L
     }
     // LOUD two-phase window: the extended order and the recut prefixes
@@ -1114,7 +1049,7 @@ object DedupIndex {
     // before this line leaves the old evalmeta, so the next tick
     // re-evaluates and re-finds these grams instead of losing them)
     writeGramDfEval(spark, dir, tNow)
-    maybeFoldGramDf(spark, dir)
+    maybeFoldGramDf(spark, dir, nBuckets)
     newHot.length.toLong
   }
 
@@ -1127,14 +1062,14 @@ object DedupIndex {
   /** Fold gramdf deltas (and the grow-only hotgrams appends) when
     * their file counts pass the budget. ONLY called right after an
     * evaluation — a fold before one would erase the change-tracking
-    * the candidate shortcut relies on. Caller holds the lease. */
-  private def maybeFoldGramDf(spark: SparkSession, dir: String,
+    * the candidate shortcut relies on. Caller holds the lease; `nb` is
+    * the meta's `n_buckets`. */
+  private def maybeFoldGramDf(spark: SparkSession, dir: String, nb: Int,
       force: Boolean = false): Unit = {
-    if (!hasGramDf(spark, dir)) return
     val deltaOver = graft.util.Fs.exists(spark, gramDfDelta(dir)) &&
       (force ||
         graft.util.Fs.dataFileCount(spark, gramDfDelta(dir)) > GramDfFoldFiles)
-    if (deltaOver) foldGramDf(spark, dir)
+    if (deltaOver) foldGramDf(spark, dir, nb)
     // hotgrams/: every refresh appends one single-file delta and every
     // build/probe/append collects the whole table (r15 advice) — fold
     // to one file past the budget and LOG the set size so drift of the

@@ -88,30 +88,31 @@ object GraphAnn {
   // sidecar I/O is driver-side ([[graft.util.Sidecar]]): a two-long
   // stats row never needs a Spark job — the write/read round-trips
   // here run on every append, and the cluster round-trip per op was
-  // measured as a material slice of the store-op bench queries
+  // measured as a material slice of the store-op bench queries.
+  // `Sidecar.write` deletes before it writes and every reader needs the
+  // table, so each rewrite outside build sits in an [[Op.window]].
   private def writeSatStats(spark: SparkSession, dir: String,
       total: Long, appended: Long): Unit =
     graft.util.Sidecar.write(spark, satStatsPath(dir), satStatsSchema,
       Seq(Seq[Any](total, appended)))
 
-  /** None for a legacy (pre-satstats) store — seeded on its next
-    * append with one full degree scan, the gramdf legacy pattern. */
-  private[llm] def readSatStats(spark: SparkSession,
-      dir: String): Option[(Long, Long)] =
-    if (!graft.util.Fs.exists(spark, satStatsPath(dir))) None
-    else try {
-      val r = graft.util.Sidecar.readHead(spark, satStatsPath(dir))
-      Some((r.getAs[Long]("sat_total"), r.getAs[Long]("sat_appended")))
-    } catch { case scala.util.control.NonFatal(_) => None }
+  /** (sat_total, sat_appended): build seeds the sidecar, so every
+    * store of this format has it. */
+  private[graft] def readSatStats(spark: SparkSession,
+      dir: String): (Long, Long) = {
+    val r = graft.util.Sidecar.readHead(spark, satStatsPath(dir))
+    (r.getAs[Long]("sat_total"), r.getAs[Long]("sat_appended"))
+  }
 
   /** `meta/`: the corpus fingerprint (count + xxhash64 XOR over
     * (vec_id, embedding), maintained by delete and append) and the
     * build parameters — `m` is the graph-wide degree cap every
     * maintenance op re-ranks to, and `init_cell_size` is the RAW
     * parameter (not the derived cell count, which would spuriously
-    * rebuild after a fingerprint-maintained delete changes n). Format 3
-    * (round 12) added the `nodes/` membership table. */
-  private val StoreMeta = Meta("graph store", 3,
+    * rebuild after a fingerprint-maintained delete changes n). A store
+    * of an older format fails its meta read and [[ensure]] rebuilds
+    * it. */
+  private val StoreMeta = Meta("graph store", 4,
     "n_vectors" -> LongType, "checksum" -> LongType, "m" -> IntegerType,
     "init_cell_size" -> IntegerType, "descent_rounds" -> IntegerType)
 
@@ -132,11 +133,8 @@ object GraphAnn {
       .map(_.toDouble).getOrElse(0.02)
     val minNodes = sys.props.get("graft.graph.repairMinNodes")
       .map(_.toLong).getOrElse(64L)
-    readSatStats(spark, dir) match {
-      case Some((total, appended)) => total > 0 &&
-        appended >= math.max(minNodes, (frac * nNodes).toLong)
-      case None => false // legacy store: seeded by the next append
-    }
+    val (total, appended) = readSatStats(spark, dir)
+    total > 0 && appended >= math.max(minNodes, (frac * nNodes).toLong)
   }
 
   /** Collapse exact (src, dst) duplicates and keep each src's top-`cap`
@@ -269,8 +267,8 @@ object GraphAnn {
   /** Load the stored graph if its fingerprint matches `corpus`, else
     * (re)build and persist — v19's build-once contract. The store also
     * persists a `nodes/` table (the membership set [[delete]] validates
-    * against). A crashed-op marker or an unreadable meta means rebuild
-    * ([[Op.valid]]). */
+    * against). A crashed-op marker, an unreadable meta or a missing
+    * `satstats/` means rebuild ([[Op.valid]]). */
   def ensure(corpus: DataFrame, dir: String, m: Int = 16,
       descentRounds: Int = 3, initCellSize: Int = 256): DataFrame = {
     val spark = corpus.sparkSession
@@ -281,7 +279,7 @@ object GraphAnn {
         meta.getAs[Int]("m") == m &&
         meta.getAs[Int]("init_cell_size") == initCellSize &&
         meta.getAs[Int]("descent_rounds") == descentRounds &&
-        graft.util.Fs.exists(spark, s"$dir/nodes")
+        graft.util.Fs.dataFileCount(spark, satStatsPath(dir)) > 0
     }.isDefined
     if (!valid) Op.build(spark, dir, "build") {
       buildsThisProcess += 1
@@ -397,9 +395,10 @@ object GraphAnn {
     // rewrite above was already O(E)); the append odometer carries
     // over, and if it is due the repair folds in here too — the other
     // maintenance entry point a real ingest loop calls
-    val appended = readSatStats(spark, dir).map(_._2).getOrElse(0L)
-    writeSatStats(spark, dir,
-      saturatedCount(spark.read.parquet(s"$dir/edges"), m), appended)
+    val (_, appended) = readSatStats(spark, dir)
+    val satTotal = saturatedCount(spark.read.parquet(s"$dir/edges"), m)
+    o.window("satstats rewrite in flight")(
+      writeSatStats(spark, dir, satTotal, appended))
     if (repairDue(spark, dir, o.meta.getAs[Long]("n_vectors"))) {
       System.err.println(s"[GraphAnn] density repair due at $dir " +
         "after compact")
@@ -576,12 +575,12 @@ object GraphAnn {
     *     edge lists pass through byte-identical.
     *
     * Cost is BATCH-local: O(|B|·(beam·rounds + M²)) — never a full
-    * refinement pass over the graph. The edge swap, the `nodes/` append
-    * and the meta commit (the commit point) share one [[Op.window]]: a
-    * crash in between fails every later op loud and the next
-    * [[ensure]] rebuilds, over the pre-append corpus as well as the
-    * post-append one (a fingerprint mismatch alone would catch only the
-    * latter). Membership is enforced (a batch id already indexed fails
+    * refinement pass over the graph. The edge swap, the `nodes/` append,
+    * the `satstats/` rewrite and the meta commit (the commit point)
+    * share one [[Op.window]]: a crash in between fails every later op
+    * loud and the next [[ensure]] rebuilds, over the pre-append corpus
+    * as well as the post-append one (a fingerprint mismatch alone would
+    * catch only the latter). Membership is enforced (a batch id already indexed fails
     * loud — the XOR fingerprint would drift otherwise).
     */
   def append(batch: DataFrame, corpus: DataFrame, dir: String,
@@ -650,6 +649,13 @@ object GraphAnn {
       .localCheckpoint(eager = true)
     val untouched = graph.join(affectedSrc, Seq("src"), "left_anti")
     val (dn, dsum) = fingerprint(batch)
+    // saturation odometer advance: the affected set's post-rewrite
+    // saturated count vs satBefore is this append's contribution
+    val satAfter = saturatedCount(rewritten, m)
+    val newlySat = math.max(0L, satAfter - satBefore)
+    val (total0, appended0) = readSatStats(spark, dir)
+    val satTotal = total0 - satBefore + satAfter
+    val satAppended = appended0 + newlySat
     o.window(s"append of $bn nodes in flight") {
       // stage-and-swap like compact
       StageSwap.replace(spark, edgesT(dir)) { staging =>
@@ -657,21 +663,10 @@ object GraphAnn {
           .write.mode("overwrite").parquet(staging)
       }
       ids.write.mode("append").parquet(s"$dir/nodes")
+      writeSatStats(spark, dir, satTotal, satAppended)
       o.commit("n_vectors" -> (meta.getAs[Long]("n_vectors") + dn),
         "checksum" -> (meta.getAs[Long]("checksum") ^ dsum))
     }
-    // saturation odometer advance (after the commit point — the stats
-    // are derived maintenance state, like the edges themselves): the
-    // affected set's post-rewrite saturated count vs satBefore is this
-    // append's contribution
-    val satAfter = saturatedCount(rewritten, m)
-    val newlySat = math.max(0L, satAfter - satBefore)
-    val (satTotal, satAppended) = readSatStats(spark, dir) match {
-      case Some((t, a)) => (t - satBefore + satAfter, a + newlySat)
-      case None => // legacy store: one-time full-degree seed
-        (saturatedCount(spark.read.parquet(s"$dir/edges"), m), newlySat)
-    }
-    writeSatStats(spark, dir, satTotal, satAppended)
     val nLive = meta.getAs[Long]("n_vectors") + dn
     if (repairDue(spark, dir, nLive)) {
       System.err.println(s"[GraphAnn] density repair due at $dir: " +
@@ -1179,7 +1174,8 @@ object GraphAnn {
       // nothing saturated (e.g. a delete+compact de-saturated the set
       // after the odometer armed): record the exact state so the
       // trigger disarms instead of re-firing every append
-      writeSatStats(spark, dir, 0L, 0L)
+      Op.window(spark, dir, "satstats rewrite in flight")(
+        writeSatStats(spark, dir, 0L, 0L))
       return 0L
     }
     // per-saturated-node candidate lists with both endpoint vectors;
@@ -1242,14 +1238,17 @@ object GraphAnn {
         col("kept._2").as("sim"))
       .localCheckpoint(eager = true)
     val untouched = edges.join(saturated, Seq("src"), "left_anti")
-    StageSwap.replace(spark, edgesT(dir)) { staging =>
-      untouched.unionByName(diversified)
-        .write.mode("overwrite").parquet(staging)
-    }
     // odometer reset: post-repair sat_total = repaired nodes that
     // legitimately kept 2M diverse edges; appended mass back to zero
     // so those nodes never re-arm the trigger by themselves
-    writeSatStats(spark, dir, saturatedCount(diversified, m), 0L)
+    val satTotal = saturatedCount(diversified, m)
+    Op.window(spark, dir, s"density repair of $nSat nodes in flight") {
+      StageSwap.replace(spark, edgesT(dir)) { staging =>
+        untouched.unionByName(diversified)
+          .write.mode("overwrite").parquet(staging)
+      }
+      writeSatStats(spark, dir, satTotal, 0L)
+    }
     repairsThisProcess += 1
     nSat
   }

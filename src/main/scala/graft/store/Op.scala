@@ -31,7 +31,9 @@ import org.apache.spark.sql.{Row, SparkSession}
   * the corpus, cannot see it. [[window]] puts the marker down before the
   * first write and clears it after the body, which ends with the meta
   * commit. The clear is NOT in a `finally`: a body that throws leaves
-  * the marker, every later op fails loud, and ensure() rebuilds. The
+  * the marker, every later op fails loud, and ensure() rebuilds. A
+  * derived sidecar overwrite (delete, then write) that runs outside
+  * build also sits in a window, since its readers need the table. The
   * lease is always released (it only serializes writers).
   *
   * Frames do not nest: the lease is not re-entrant, so helpers that run

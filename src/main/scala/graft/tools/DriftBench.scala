@@ -88,13 +88,10 @@ object DriftBench {
     graft.util.Fs.rmTree(spark, root)
     val results = scala.collection.mutable.ArrayBuffer[String]()
 
-    // TICK-COST campaign (SPARK_GRAFT_DRIFT_MODE=ticks — r16): isolate
-    // the refresh tick's wall time as a function of CORPUS size under a
+    // TICK-COST campaign (SPARK_GRAFT_DRIFT_MODE=ticks): isolate the
+    // refresh tick's wall time as a function of CORPUS size under a
     // FIXED-size append. The gramdf delta path must stay ~flat across
-    // factors (O(appended)); the legacy path (gramdf/ removed, the
-    // pre-r16 full df recompute) grows with the corpus — the measured
-    // gap is the ingest-stall the delta table removes from under the
-    // writer lease.
+    // factors (O(appended)).
     if (sys.env.get("SPARK_GRAFT_DRIFT_MODE").contains("ticks")) {
       // fixed-size batch of genuinely NEW docs (16 hash-keyed tokens
       // each — pairwise Jaccard ≈ 0, so every doc survives and its
@@ -139,8 +136,11 @@ object DriftBench {
           .localCheckpoint(true)
         graft.llm.DedupIndex.append(trickle, dir, threshold = 0.9)
           .count(): Unit
+        // the base is partitioned by the store's own bucket count
+        val nBuckets = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+          .getAs[Int]("n_buckets")
         val candB = spark.read.parquet(s"$dir/gramdf/delta")
-          .select(pmod(col("gram"), lit(64)).cast("int").as("b"))
+          .select(pmod(col("gram"), lit(nBuckets)).cast("int").as("b"))
           .distinct().collect().map(_.getInt(0)).toSeq
         val baseBuckets = graft.util.Fs
           .listDirNames(spark, s"$dir/gramdf/base")
@@ -153,15 +153,9 @@ object DriftBench {
           .parquet(s"$dir/gramdf/base").count()
         val (pTrickle, sTrickle) = secs(
           graft.llm.DedupIndex.refreshHotGrams(spark, dir, force = true))
-        // strip gramdf/ to measure the legacy full-recompute tick on
-        // the IDENTICAL store state (the refresh re-seeds the table)
-        graft.util.Fs.rmTree(spark, s"$dir/gramdf")
-        val (pLegacy, sLegacy) = secs(
-          graft.llm.DedupIndex.refreshHotGrams(spark, dir, force = true))
         val row = s"""{"factor":$f,"corpus_docs":$nCorpus,""" +
           s""""append_kept":$nKept,"tick_delta_secs":${jnum(sDelta)},""" +
-          s""""tick_legacy_secs":${jnum(sLegacy)},""" +
-          s""""promoted_delta":$pDelta,"promoted_legacy":$pLegacy,""" +
+          s""""promoted_delta":$pDelta,""" +
           s""""base_rows":$baseRows,"base_buckets":${baseBuckets.length},""" +
           s""""trickle_cand_buckets":${candB.length},""" +
           s""""base_bytes_total":$bytesTotal,""" +

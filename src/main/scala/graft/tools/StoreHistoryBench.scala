@@ -256,12 +256,6 @@ object StoreHistoryBench {
     // dataset in a long session conflated scan/JIT/session noise with
     // store structure — the cold sample stays as the ingest-loop-
     // realistic number, the warm sample isolates the plan's data cost
-    def satStatsOf(dir: String): (Long, Long) =
-      if (!graft.util.Fs.exists(spark, s"$dir/satstats")) (-1L, -1L)
-      else {
-        val r = spark.read.parquet(s"$dir/satstats").head()
-        (r.getLong(0), r.getLong(1))
-      }
     def graphPoint(after: Int): String = {
       def sample(): Double = {
         val (_, s) = secs {
@@ -275,7 +269,7 @@ object StoreHistoryBench {
       val fN = graft.util.Fs.dataFileCount(spark, s"$gDir/nodes")
       val fE = graft.util.Fs.dataFileCount(spark, s"$gDir/edges")
       val nE = graft.llm.GraphAnn.load(spark, gDir).count()
-      val (satT, satA) = satStatsOf(gDir)
+      val (satT, satA) = graft.llm.GraphAnn.readSatStats(spark, gDir)
       val row = s"""{"after":$after,"search_secs":${jnum(s1)},""" +
         s""""warm_secs":${jnum(s2)},"node_files":$fN,"edge_files":$fE,""" +
         s""""edges":$nE,"sat_total":$satT,"sat_appended":$satA}"""

@@ -44,12 +44,19 @@ object IngestMarker {
   def present(spark: SparkSession, dir: String): Boolean =
     Fs.exists(spark, path(dir))
 
-  /** Fail-loud gate every non-rebuilding store operation runs first. */
+  /** Fail-loud gate every non-rebuilding store operation runs first.
+    * The refusal names the op that was in flight (the marker's `info`),
+    * since that op's input is what to redeliver after the rebuild. */
   def requireAbsent(spark: SparkSession, dir: String, op: String): Unit =
-    require(!present(spark, dir),
-      s"store at $dir has an in-progress/crashed ingest marker: a " +
-        s"previous append died between its data and meta writes, so the " +
-        s"store may hold half a batch — $op refuses to run on it. " +
-        "Recover by calling ensure() over the intended corpus (it " +
-        "detects the marker and rebuilds) or restoring the directory.")
+    if (present(spark, dir)) {
+      val info = try Sidecar.readHead(spark, path(dir)).getAs[String]("info")
+        catch { case scala.util.control.NonFatal(_) => "unreadable marker" }
+      throw new IllegalArgumentException(
+        s"store at $dir has an in-progress/crashed op marker ($info): " +
+          "that op died inside its write window, so the store may " +
+          s"hold a partial write — $op refuses " +
+          "to run on it. Recover by calling ensure() over the intended " +
+          "corpus (it detects the marker and rebuilds) or restoring the " +
+          "directory.")
+    }
 }

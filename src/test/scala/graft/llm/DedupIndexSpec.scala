@@ -3,6 +3,7 @@ package graft.llm
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 class DedupIndexSpec extends SparkSpec {
 
@@ -516,7 +517,7 @@ class DedupIndexSpec extends SparkSpec {
 
   test("gramdf delta maintenance: merged df is EXACT through " +
       "append/delete/refresh/compact, the candidate tick promotes the " +
-      "same set as the legacy full recompute, and a forced full-eval " +
+      "same set as the full merged-df pass, and a forced full-eval " +
       "pass agrees") {
     graft.util.Fs.rmRecursive(new java.io.File(base))
     def uniq(i: Int): String =
@@ -541,10 +542,10 @@ class DedupIndexSpec extends SparkSpec {
         "merged gramdf went NEGATIVE — delta bookkeeping over-deleted")
       rows.filter(_._2 > 0).toSet
     }
-    // two stores, identical feed: dir1 refreshes on the maintained
-    // delta path, dir2 has gramdf/ removed first so its refresh takes
-    // the legacy O(corpus) recompute (and seeds gramdf) — the promoted
-    // sets must be identical
+    // two stores, identical feed: dir1 refreshes on the candidate
+    // path, dir2's evalmeta claims a higher past threshold so its
+    // refresh takes the full merged-df pass — the promoted sets must
+    // be identical
     val dir1 = s"$base/gramdf1"
     val dir2 = s"$base/gramdf2"
     Seq(dir1, dir2).foreach { dir =>
@@ -555,17 +556,20 @@ class DedupIndexSpec extends SparkSpec {
     val live0 = corpus.unionByName(batch1).unionByName(batch2)
     assert(mergedDf(dir1) == bruteDf(live0),
       "merged df drifted from ground truth after two appends")
-    graft.util.Fs.rmTree(spark, s"$dir2/gramdf")
+    import spark.implicits._
+    def claimEvaluatedAbove(dir: String): Unit =
+      Seq(Long.MaxValue).toDF("t_eval").repartition(1)
+        .write.mode("overwrite").parquet(s"$dir/gramdf/evalmeta")
+    claimEvaluatedAbove(dir2)
     val p1 = DedupIndex.refreshHotGrams(spark, dir1)
     val p2 = DedupIndex.refreshHotGrams(spark, dir2)
     assert(p1 > 0, "candidate-path refresh promoted nothing")
-    assert(p1 == p2, s"delta path promoted $p1, legacy recompute $p2")
+    assert(p1 == p2, s"candidate path promoted $p1, full merged pass $p2")
     def hotSet(dir: String) = spark.read.parquet(s"$dir/hotgrams")
       .collect().map(_.getLong(0)).toSet
     assert(hotSet(dir1) == hotSet(dir2),
-      "candidate tick and legacy recompute disagree on the hot set")
-    // the legacy refresh SEEDED gramdf: both stores now delta-exact
-    assert(mergedDf(dir2) == bruteDf(live0), "legacy seed df inexact")
+      "candidate tick and full merged pass disagree on the hot set")
+    assert(mergedDf(dir2) == bruteDf(live0), "full merged pass drifted df")
     // delete writes a NEGATIVE delta: merged df tracks the live corpus
     val delSet = batch1.filter(col("doc_id") % 4 === 0)
     DedupIndex.delete(delSet, dir1)
@@ -582,9 +586,7 @@ class DedupIndexSpec extends SparkSpec {
     // forced FULL-eval path (evalmeta claiming a higher past threshold
     // — the deletes-shrank-the-corpus shape): must terminate, promote
     // nothing new, and leave the store exact
-    import spark.implicits._
-    Seq(Long.MaxValue).toDF("t_eval").repartition(1)
-      .write.mode("overwrite").parquet(s"$dir1/gramdf/evalmeta")
+    claimEvaluatedAbove(dir1)
     assert(DedupIndex.refreshHotGrams(spark, dir1, force = true) == 0L)
     assert(mergedDf(dir1) == bruteDf(live1), "full-eval pass drifted df")
     // probe equivalence across the two maintenance histories
@@ -597,9 +599,8 @@ class DedupIndexSpec extends SparkSpec {
     assert(pairsOf(dir2).nonEmpty, "fixture vacuous — re-crawl matched nothing")
   }
 
-  test("gramdf/base is bucket-partitioned so the tick prunes partitions; " +
-      "a legacy unpartitioned base reads exactly and upgrades at the " +
-      "next fold") {
+  test("gramdf/base is bucket-partitioned by the meta's n_buckets, " +
+      "folds keep that layout, and the tick's read prunes partitions") {
     graft.util.Fs.rmRecursive(new java.io.File(base))
     val dir = s"$base/gramdf_layout"
     def uniq(i: Int): String =
@@ -621,28 +622,26 @@ class DedupIndexSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .filter(_._2 > 0).toSet
     assert(mergedDf() == bruteDf(corpus))
-    // simulate the r16 (pre-partitioned) layout: flatten the base
-    val flat = DedupIndex.mergedGramDf(spark, dir)
-      .localCheckpoint(true)
-    graft.util.Fs.rmTree(spark, s"$dir/gramdf/base")
-    flat.select(col("gram"), col("df"))
-      .repartition(1).write.mode("overwrite")
-      .parquet(s"$dir/gramdf/base")
-    assert(!partitioned)
-    assert(mergedDf() == bruteDf(corpus),
-      "legacy unpartitioned base no longer reads exactly")
-    // the candidate tick still runs over the legacy base (unpruned)
+    // every gbucket the base holds is below the meta's bucket count
+    // (80 docs: the scale-adaptive count is 4, not the 64 cap)
+    val nb = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+      .getAs[Int]("n_buckets")
+    def gbuckets: Set[Int] =
+      graft.util.Fs.listDirNames(spark, s"$dir/gramdf/base")
+        .filter(_.startsWith("gbucket=")).map(_.stripPrefix("gbucket=").toInt)
+        .toSet
+    assert(nb == 4 && gbuckets.nonEmpty && gbuckets.forall(_ < nb),
+      s"gramdf/base buckets $gbuckets vs meta n_buckets $nb")
+    // an append's delta, the tick and the fold keep counts and layout
     val batch = df((1000L until 1020L).map(i => (i, uniq(i.toInt * 20))))
     assert(DedupIndex.append(batch, dir, threshold = t).count() == 20)
     val live = corpus.unionByName(batch)
-    assert(mergedDf() == bruteDf(live))
     DedupIndex.refreshHotGrams(spark, dir, force = true): Unit
-    assert(mergedDf() == bruteDf(live),
-      "tick over a legacy base drifted the merged df")
-    // the fold (compact) rewrites to the partitioned layout
     DedupIndex.compact(spark, dir)
-    assert(partitioned, "fold did not upgrade the base layout")
-    assert(mergedDf() == bruteDf(live), "layout upgrade changed counts")
+    assert(!graft.util.Fs.exists(spark, s"$dir/gramdf/delta"))
+    assert(partitioned && gbuckets.forall(_ < nb),
+      s"the fold changed the base layout: $gbuckets")
+    assert(mergedDf() == bruteDf(live), "the fold changed counts")
     // the pruned read the tick builds lands as DIRECTORY-level pruning
     // (PartitionFilters on gbucket), not a post-scan row filter
     val pruned = DedupIndex.readGramDfBase(spark, dir, Some(Seq(3, 7)))
@@ -656,7 +655,8 @@ class DedupIndexSpec extends SparkSpec {
   }
 
   test("stats-routed candidate join: broadcast and salted forms are " +
-      "row-identical; a store without prefstats takes the salted path") {
+      "row-identical; prefstats counts over the broadcast limit take the " +
+      "salted path") {
     graft.util.Fs.rmRecursive(new java.io.File(base))
     val dir = s"$base/route"
     def near(i: Int): String =
@@ -672,16 +672,52 @@ class DedupIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaBroadcast = pairs() // fixture scale → stats route broadcast
     assert(viaBroadcast.nonEmpty, "fixture vacuous")
-    // deleting the stats table forces the legacy/salted route
-    graft.util.Fs.rmTree(spark, s"$dir/prefstats")
+    // counts above the broadcast limit (262,144 rows) in every
+    // bucket force the salted route
+    val nb = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+      .getAs[Int]("n_buckets")
+    val stats = spark.read.parquet(s"$dir/prefstats").schema
+    graft.util.Sidecar.write(spark, s"$dir/prefstats", stats,
+      (0 until nb).map(b => Seq[Any](b, 1L << 20, "maint")))
     assert(pairs() == viaBroadcast,
       "salted and broadcast candidate joins disagree")
-    // append works without stats (legacy store) and re-creates deltas;
-    // probe results stay exact afterwards
-    assert(DedupIndex.append(df(Seq((500L, near(4)))), dir,
-      threshold = 0.5).count() == 0) // near(4) dups corpus doc 2
-    assert(graft.util.Fs.exists(spark, s"$dir/prefstats"),
-      "append wrote no stats delta")
+  }
+
+  test("a store of an older format fails every op naming ensure(), and " +
+      "ensure() rebuilds it") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/format2"
+    val corpus = df((0L until 20L).map(i => (i, doc(i.toInt))))
+    DedupIndex.build(corpus, dir, threshold = 0.9)
+    // the format-2 meta: the same fields without id_col
+    val row = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val old = graft.store.Meta("dedup index", 2,
+      "n_docs" -> LongType, "checksum" -> LongType, "max_id" -> LongType,
+      "threshold" -> DoubleType, "n_buckets" -> IntegerType,
+      "n_id_buckets" -> IntegerType)
+    old.write(spark, dir, old.fields.map { case (f, _) => row.getAs[Any](f) }: _*)
+    def refused(op: => Any): Unit = {
+      val e = intercept[IllegalArgumentException] { op }
+      assert(e.getMessage.contains("has format 2, expected 3") &&
+        e.getMessage.contains("ensure()"), e.getMessage)
+    }
+    val batch = df(Seq((100L, doc(100)), (101L, doc(3))))
+    refused(DedupIndex.probe(batch, dir, threshold = 0.9).count())
+    refused(DedupIndex.append(batch, dir, threshold = 0.9).count())
+    refused(DedupIndex.delete(df(Seq((3L, doc(3)))), dir))
+    refused(DedupIndex.compact(spark, dir))
+    refused(DedupIndex.compactFiles(spark, dir))
+    refused(DedupIndex.refreshHotGrams(spark, dir))
+    val b0 = DedupIndex.buildsThisProcess
+    DedupIndex.ensure(corpus, dir, threshold = 0.9)
+    assert(DedupIndex.buildsThisProcess == b0 + 1,
+      "ensure did not rebuild the older-format store")
+    // the rebuilt store probes like a freshly built one
+    val fresh = s"$base/format3"
+    DedupIndex.build(corpus, fresh, threshold = 0.9)
+    def kept(d: String) = DedupIndex.probe(batch, d, threshold = 0.9)
+      .collect().map(_.getLong(0)).toSet
+    assert(kept(dir) == Set(100L) && kept(fresh) == Set(100L))
   }
 
   test("single-writer lease: every mutating op fails LOUD while a " +
@@ -765,8 +801,8 @@ class DedupIndexSpec extends SparkSpec {
       // no deletes, so the stats are exact: totals equal the prefix
       // table, and so does every bucket's sum (the probe router's input)
       val total = spark.read.parquet(prefix).count()
-      assert(DedupIndex.statsTotals(spark, dir).contains((total,
-        total - built)), s"statsTotals drifted after append $k")
+      assert(DedupIndex.statsTotals(spark, dir) == ((total, total - built)),
+        s"statsTotals drifted after append $k")
       assert(perBucket(graft.util.Sidecar.readRows(spark, stats)
           .map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("n_rows")))) ==
         perBucket(spark.read.parquet(prefix).groupBy("bucket").count()
@@ -775,5 +811,69 @@ class DedupIndexSpec extends SparkSpec {
     }
     assert(graft.util.Fs.dataFileCount(spark, stats) < 17,
       "fixture vacuous: the fold never fired")
+  }
+
+  test("a store without prefstats/ is rebuilt by ensure(), and the " +
+      "rebuilt store probes like a fresh one") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/nostats"
+    val corpus = df((0L until 20L).map(i => (i, doc(i.toInt))))
+    DedupIndex.build(corpus, dir, threshold = 0.9)
+    // compact rewrites prefstats/ after its tombstone fold; a crash
+    // inside that overwrite leaves the table missing
+    DedupIndex.delete(df(Seq((3L, doc(3)))), dir)
+    DedupIndex.compact(spark, dir)
+    graft.util.Fs.rmTree(spark, s"$dir/prefstats")
+    val batch = df(Seq((100L, doc(100)), (101L, doc(4)), (102L, doc(3))))
+    intercept[java.io.FileNotFoundException] {
+      DedupIndex.probe(batch, dir, threshold = 0.9).count()
+    }
+    val live = corpus.filter(col("doc_id") =!= 3L)
+    val b0 = DedupIndex.buildsThisProcess
+    DedupIndex.ensure(live, dir, threshold = 0.9)
+    assert(DedupIndex.buildsThisProcess == b0 + 1,
+      "ensure accepted a store without prefstats/")
+    DedupIndex.ensure(live, dir, threshold = 0.9)
+    assert(DedupIndex.buildsThisProcess == b0 + 1, "rebuilt store not valid")
+    val fresh = s"$base/nostats_fresh"
+    DedupIndex.build(live, fresh, threshold = 0.9)
+    def kept(d: String) = DedupIndex.probe(batch, d, threshold = 0.9)
+      .collect().map(_.getLong(0)).toSet
+    assert(kept(dir) == Set(100L, 102L) && kept(fresh) == kept(dir))
+  }
+
+  test("the id column is fixed at build: ops handed another one refuse, " +
+      "and ensure() under it rebuilds") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/idcol"
+    val corpus = df((0L until 20L).map(i => (i, doc(i.toInt))))
+    DedupIndex.build(corpus, dir, threshold = 0.9)
+    def asId(d: DataFrame) = d.withColumnRenamed("doc_id", "id")
+    val batch = df(Seq((100L, doc(100)), (101L, doc(4))))
+    def refused(op: => Any): Unit = {
+      val e = intercept[IllegalArgumentException] { op }
+      assert(e.getMessage.contains("built with id column doc_id, got id"),
+        e.getMessage)
+    }
+    refused(DedupIndex.probe(asId(batch), dir, threshold = 0.9,
+      idCol = "id").count())
+    refused(DedupIndex.append(asId(batch), dir, threshold = 0.9,
+      idCol = "id").count())
+    refused(DedupIndex.delete(asId(df(Seq((3L, doc(3))))), dir, idCol = "id"))
+    val b0 = DedupIndex.buildsThisProcess
+    DedupIndex.ensure(corpus, dir, threshold = 0.9)
+    assert(DedupIndex.buildsThisProcess == b0, "refused ops drifted the store")
+    DedupIndex.ensure(asId(corpus), dir, threshold = 0.9, idCol = "id")
+    assert(DedupIndex.buildsThisProcess == b0 + 1,
+      "ensure accepted a store built under another id column")
+    assert(DedupIndex.append(asId(batch), dir, threshold = 0.9, idCol = "id")
+      .collect().map(_.getLong(0)).toSet == Set(100L))
+    DedupIndex.delete(asId(df(Seq((100L, doc(100))))), dir, idCol = "id")
+    DedupIndex.compact(spark, dir)
+    // the fold found the deleted row under the stored column name
+    assert(DedupIndex.probe(asId(df(Seq((200L, doc(100))))), dir,
+      threshold = 0.9, idCol = "id").count() == 1)
+    DedupIndex.ensure(asId(corpus), dir, threshold = 0.9, idCol = "id")
+    assert(DedupIndex.buildsThisProcess == b0 + 1)
   }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 class GraphAnnSpec extends SparkSpec {
 
@@ -388,7 +389,7 @@ class GraphAnnSpec extends SparkSpec {
     assert(GraphAnn.repairsThisProcess == repairs0,
       "auto-repair fired with the trigger disabled")
     // the odometer exists and armed on the unmaintained store
-    val (offTotal, offAppended) = GraphAnn.readSatStats(spark, offDir).get
+    val (offTotal, offAppended) = GraphAnn.readSatStats(spark, offDir)
     assert(offTotal > 0 && offAppended > 0,
       s"odometer never armed: total=$offTotal appended=$offAppended")
     val live = history(onDir)
@@ -403,7 +404,7 @@ class GraphAnnSpec extends SparkSpec {
         s"on=$onEdges off=$offEdges")
     // the odometer reset after the repair (saturated-but-diverse nodes
     // do not re-arm it)
-    val (_, onAppended) = GraphAnn.readSatStats(spark, onDir).get
+    val (_, onAppended) = GraphAnn.readSatStats(spark, onDir)
     assert(onAppended < offAppended,
       s"odometer never reset: on=$onAppended off=$offAppended")
     // the maintained store still navigates: recall against the live
@@ -443,7 +444,7 @@ class GraphAnnSpec extends SparkSpec {
       }
       l
     }
-    val (_, armed) = GraphAnn.readSatStats(spark, dir).get
+    val (_, armed) = GraphAnn.readSatStats(spark, dir)
     assert(armed > 0, "fixture vacuous — odometer never armed")
     val edgesBefore = GraphAnn.load(spark, dir).count()
     // delete a few nodes so compact has tombstones to fold, then let
@@ -456,7 +457,7 @@ class GraphAnnSpec extends SparkSpec {
     GraphAnn.compact(live, dir)
     assert(GraphAnn.repairsThisProcess > repairs0,
       "compact never fired the due density repair")
-    val (_, afterApp) = GraphAnn.readSatStats(spark, dir).get
+    val (_, afterApp) = GraphAnn.readSatStats(spark, dir)
     assert(afterApp == 0, s"odometer not reset by the repair: $afterApp")
     assert(GraphAnn.load(spark, dir).count() < edgesBefore,
       "repairing compact left the saturated edge mass in place")
@@ -488,6 +489,45 @@ class GraphAnnSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("rebuild via ensure()"),
       s"expected the actionable format message, got: ${e.getMessage}")
+    c.unpersist()
+  }
+
+  test("a store of an older format fails every op naming ensure(), and " +
+      "ensure() rebuilds it") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/format3"
+    val c = corpus(120).cache()
+    GraphAnn.ensure(c, dir)
+    // the format-3 meta: the same fields under the older version
+    val row = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val old = graft.store.Meta("graph store", 3,
+      "n_vectors" -> LongType, "checksum" -> LongType, "m" -> IntegerType,
+      "init_cell_size" -> IntegerType, "descent_rounds" -> IntegerType)
+    old.write(spark, dir, old.fields.map { case (f, _) => row.getAs[Any](f) }: _*)
+    def refused(op: => Any): Unit = {
+      val e = intercept[IllegalArgumentException] { op }
+      assert(e.getMessage.contains("has format 3, expected 4") &&
+        e.getMessage.contains("ensure()"), e.getMessage)
+    }
+    val batch = corpus(130).filter(col("vec_id") >= 120)
+    refused(GraphAnn.append(batch, c, dir))
+    refused(GraphAnn.delete(c.filter(col("vec_id") < 5), dir))
+    refused(GraphAnn.compact(c, dir))
+    refused(GraphAnn.compactFiles(spark, dir))
+    refused(GraphAnn.repairDensity(c, dir))
+    refused(GraphAnn.load(spark, dir))
+    val b0 = GraphAnn.buildsThisProcess
+    val rebuilt = GraphAnn.ensure(c, dir)
+    assert(GraphAnn.buildsThisProcess == b0 + 1,
+      "ensure did not rebuild the older-format store")
+    // the rebuilt store searches like a freshly built one
+    val fresh = GraphAnn.ensure(c, s"$base/format4")
+    def top1(g: DataFrame): Set[(Long, Long)] =
+      GraphAnn.beamSearch(c.filter(col("vec_id") < 10), g, c, k = 1)
+        .select("qid", "nid").collect().map(r => (r.getLong(0), r.getLong(1)))
+        .toSet
+    val hits = top1(rebuilt)
+    assert(hits.size == 10 && hits == top1(fresh))
     c.unpersist()
   }
 
@@ -537,6 +577,30 @@ class GraphAnnSpec extends SparkSpec {
     assert(!graft.util.IngestMarker.present(spark, dir),
       "rebuild left the marker in place")
     assert(edges.select("src").distinct().count() == 120)
+    c.unpersist()
+  }
+
+  test("a store without satstats/ is rebuilt by ensure()") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/nosat"
+    val c = corpus(120).cache()
+    GraphAnn.ensure(c, dir)
+    // compact rewrites satstats/ after its edge swap; a crash inside
+    // that overwrite leaves the table missing
+    GraphAnn.delete(c.filter(col("vec_id") < 5), dir)
+    val live = c.filter(col("vec_id") >= 5)
+    GraphAnn.compact(live, dir)
+    graft.util.Fs.rmTree(spark, s"$dir/satstats")
+    val b0 = GraphAnn.buildsThisProcess
+    val rebuilt = GraphAnn.ensure(live, dir)
+    assert(GraphAnn.buildsThisProcess == b0 + 1,
+      "ensure accepted a store without satstats/")
+    assert(rebuilt.select("src").distinct().count() == 115)
+    // the rebuilt store appends (append reads satstats/) and validates
+    val batch = corpus(130).filter(col("vec_id") >= 120)
+    GraphAnn.append(batch, live, dir)
+    GraphAnn.ensure(live.unionByName(batch), dir)
+    assert(GraphAnn.buildsThisProcess == b0 + 1)
     c.unpersist()
   }
 }

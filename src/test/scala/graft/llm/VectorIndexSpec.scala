@@ -613,9 +613,11 @@ class VectorIndexSpec extends SparkSpec {
     assert(graft.util.IngestMarker.present(spark, dir),
       "a delete that died inside its window left no marker")
     intercept[IllegalArgumentException] { VectorIndex.load(spark, dir) }
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       VectorIndex.delete(c.filter(col("vec_id") < 5), dir)
     }
+    assert(e.getMessage.contains("delete of 5 vectors in flight"),
+      s"the refusal does not name the op in flight: ${e.getMessage}")
     // the meta still describes the full corpus; only the marker tells
     // ensure() the store cannot be trusted
     val b0 = VectorIndex.buildsThisProcess

@@ -61,9 +61,11 @@ class OpSpec extends SparkSpec {
     assert(IngestMarker.present(spark, dir), "a crash inside the window lost the marker")
     assert(StoreLease.heldBy(spark, dir).isEmpty, "the lease leaked")
     assert(codec.read(spark, dir).getAs[Long]("n") == 7L)
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       Op.mutate(spark, dir, codec, "delete") { _ => () }
     }
+    assert(e.getMessage.contains("append in flight") &&
+      e.getMessage.contains("delete refuses to run"), e.getMessage)
     assert(Op.valid(spark, dir, codec)().isEmpty)
   }
 
@@ -149,7 +151,7 @@ class OpSpec extends SparkSpec {
     val want = Seq(
       "dedup" -> Seq("n_docs" -> L, "checksum" -> L, "max_id" -> L,
         "threshold" -> DoubleType, "n_buckets" -> I, "n_id_buckets" -> I,
-        "format_version" -> I),
+        "id_col" -> StringType, "format_version" -> I),
       "text" -> Seq("n_docs" -> L, "checksum" -> L, "sum_dl" -> L,
         "n_buckets" -> I, "n_doc_buckets" -> I, "format_version" -> I),
       "vec" -> (vec :+ ("format_version" -> I)),
@@ -163,7 +165,7 @@ class OpSpec extends SparkSpec {
       store -> spark.read.parquet(s"$root/$store/meta").head()
         .getAs[Int]("format_version")
     }.toMap
-    assert(formats == Map("dedup" -> 2, "text" -> 1, "vec" -> 1, "vecf" -> 1,
-      "graph" -> 3))
+    assert(formats == Map("dedup" -> 3, "text" -> 1, "vec" -> 1, "vecf" -> 1,
+      "graph" -> 4))
   }
 }
