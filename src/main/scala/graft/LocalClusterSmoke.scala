@@ -193,7 +193,7 @@ object LocalClusterSmoke {
         .select(col("vec_id"), col("embedding"), col("label"))
       graft.util.Fs.rmTree(sA, dir)
       graft.util.StoreLease.break(sA, dir) // fixture dir
-      graft.llm.VectorIndex.buildFiltered(emb, dir, "label")
+      graft.llm.VectorIndex.build(emb, dir, filterCol = Some("label"))
     } finally {
       sA.stop()
       SparkSession.clearActiveSession()
@@ -204,7 +204,7 @@ object LocalClusterSmoke {
       val emb = Tables.embeddings(sB, sfDir)
         .select(col("vec_id"), col("embedding"), col("label")).cache()
       val before = graft.llm.VectorIndex.buildsThisProcess
-      val ix = graft.llm.VectorIndex.ensureFiltered(emb, dir, "label")
+      val ix = graft.llm.VectorIndex.ensure(emb, dir, filterCol = Some("label"))
       require(graft.llm.VectorIndex.buildsThisProcess == before,
         "fresh session failed to fingerprint-validate the filtered store")
       val queries = graft.llm.Similarity.probePanel(emb)
@@ -212,8 +212,7 @@ object LocalClusterSmoke {
         .bruteForceTop1Filtered(queries, emb, "label")
         .select(col("qid"), col("nid")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val approx = graft.llm.VectorIndex
-        .searchFiltered(ix, queries, emb, "label", k = 1)
+      val approx = graft.llm.VectorIndex.search(ix, queries, emb, k = 1)
         .select(col("qid"), col("nid")).collect()
         .map(r => (r.getLong(0), r.getLong(1)))
       val recall =

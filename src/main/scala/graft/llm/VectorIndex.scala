@@ -2,9 +2,9 @@ package graft.llm
 
 import graft.{QueryDef, Tables}
 import graft.store.{Meta, Op, StageSwap, Table, Tombstones}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 /** Persisted IVF-PQ vector index: build ONCE, query many times.
   *
@@ -17,16 +17,27 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
   * daxos/read.py:11-31 — the same save/load/reuse shape applied to a
   * vector index.
   *
+  * A store has one of two layouts, chosen at [[build]] by `filterCol`
+  * and recorded in meta; every later op reads it from there, so the
+  * stored layout, not the caller, decides how an op partitions and how
+  * a query is routed (REPOSE's partition-local index, ICDE 2021):
+  *   - cell-only (`filterCol = None`): codes under `cell=K/`;
+  *   - pre-filtered (`filterCol = Some(c)`): codes under
+  *     `c=V/cell=K/`, so a filtered search prunes both levels.
+  *
   * On-disk layout under `dir` (all parquet — readable by any engine):
-  *   - `meta/`       one row, [[PlainMeta]] or [[FilteredMeta]].
-  *                   [[ensure]] validates it before trusting the
-  *                   index; any mismatch rebuilds.
+  *   - `meta/`       one row of [[StoreMeta]]; `filter_col` is `""` for
+  *                   the cell-only layout. [[ensure]] validates it
+  *                   before trusting the index; any mismatch rebuilds.
   *   - `codebooks/`  (level, sub, code, vals): level 0 = the nCells
   *                   coarse centroids, level 1 = the m×kCodes residual
   *                   PQ codebooks. A few KB total — the whole "model".
-  *   - `codes/`      cell-partitioned (cell=K/ directories): (nid,
-  *                   codes, recon_norm_sq) — m bytes + one double per
-  *                   vector, 16-32× smaller than the float corpus.
+  *   - `codes/`      partitioned by the layout's columns: (nid, codes,
+  *                   recon_norm_sq) — m bytes + one double per vector,
+  *                   16-32× smaller than the float corpus. Every rewrite
+  *                   of it stages under `codes_staging/`
+  *                   ([[graft.store.StageSwap]]).
+  *   - `tombstones/` deleted ids not yet folded in by [[compact]].
   *
   * Search ([[search]]) loads the codebooks (driver-side, KB), computes
   * the distinct probed cells of the query set with ONE aggregate over
@@ -49,60 +60,79 @@ object VectorIndex {
       coarse: Array[Array[Double]],
       books: Array[Array[Array[Double]]],
       codes: DataFrame,
-      nVectors: Long)
+      nVectors: Long,
+      filterCol: Option[String])
 
-  /** `meta/` of the plain store: corpus fingerprint (count +
-    * order-independent xxhash64 XOR over (vec_id, embedding)), dims and
-    * quantizer shape. */
-  private val plainFields: Seq[(String, DataType)] = Seq(
+  /** `meta/`: corpus fingerprint (count + order-independent xxhash64 XOR
+    * over (vec_id, embedding[, filter column])), dims, quantizer shape
+    * and the layout's filter column (`""` = cell-only: sidecars hold no
+    * nulls). */
+  private val StoreMeta = Meta("vector index", 2,
     "n_vectors" -> LongType, "checksum" -> LongType, "dim" -> IntegerType,
-    "n_cells" -> IntegerType, "m" -> IntegerType, "k_codes" -> IntegerType)
-  private val PlainMeta = Meta("vector index", 1, plainFields: _*)
+    "n_cells" -> IntegerType, "m" -> IntegerType, "k_codes" -> IntegerType,
+    "filter_col" -> StringType)
 
-  /** `meta/` of the [[buildFiltered]] store: the plain fields plus the
-    * partitioning `filter_col`, which its fingerprint also hashes. Reads
-    * of either layout go through either codec (one format). */
-  private val FilteredMeta = Meta("vector index", 1,
-    plainFields :+ ("filter_col" -> StringType): _*)
+  private def filterColOf(meta: Row): Option[String] =
+    Some(meta.getAs[String]("filter_col")).filter(_.nonEmpty)
 
-  private def codesT(dir: String) = Table(s"$dir/codes", "cell")
-  // the filtered twin stages under its own root, so neither variant's
-  // recovery can ever sweep the other's in-flight staging
-  private def filteredCodesT(dir: String, filterCol: String) =
-    Table(s"$dir/codes", Seq(filterCol, "cell"),
-      s"$dir/codes_staging_filtered")
+  private def parts(filterCol: Option[String]): Seq[String] =
+    filterCol.toSeq :+ "cell"
+
+  private def codesT(dir: String, filterCol: Option[String]) =
+    Table(s"$dir/codes", parts(filterCol): _*)
   private def tombs(dir: String) = Tombstones(dir, "nid")
 
   private def fingerprint(corpus: DataFrame,
-      extraCols: Seq[String] = Nil): (Long, Long) = {
-    val hashed = ("vec_id" +: "embedding" +: extraCols).mkString(", ")
+      filterCol: Option[String]): (Long, Long) = {
+    val hashed = ("vec_id" +: "embedding" +: filterCol.toSeq).mkString(", ")
     val r = corpus
       .agg(count(lit(1)), expr(s"bit_xor(xxhash64($hashed))"))
       .head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
+  /** A filtered store's rows must carry its filter column: the codes
+    * are partitioned by it and the fingerprint hashes it. Checked before
+    * the op writes anything. */
+  private def requireFilterCol(rows: DataFrame, filterCol: Option[String],
+      dir: String, op: String): Unit =
+    filterCol.foreach { c =>
+      require(rows.columns.contains(c),
+        s"$op on the vector index at $dir needs its filter column '$c'; " +
+          s"got columns ${rows.columns.mkString(", ")}")
+    }
+
   /** Train both quantizer levels, encode the corpus, write the store.
     * Three corpus scans total (coarse Lloyd, residual Lloyd, encode) —
-    * the once-per-corpus cost that [[search]] amortizes away. */
+    * the once-per-corpus cost that [[search]] amortizes away.
+    * `filterCol` picks the pre-filtered layout; the filter column joins
+    * the fingerprint (a relabeled corpus must invalidate the store). */
   def build(corpus: DataFrame, dir: String, nCells: Int = 16,
-      m: Int = 16, kCodes: Int = 16): Unit = {
+      m: Int = 16, kCodes: Int = 16,
+      filterCol: Option[String] = None): Unit = {
     val spark = corpus.sparkSession
     Op.build(spark, dir, "build") {
     buildsThisProcess += 1
     val (coarse, books) = Similarity.ivfPqTrain(corpus, nCells, m, kCodes)
-    val (n, sum) = fingerprint(corpus)
-    // repartition by cell before the partitioned write: without it every
-    // task writes a file into every cell directory (tasks x cells small
-    // files — the classic partitionBy mistake at scale); with it each
-    // cell directory gets one contiguous file per shuffle partition
-    Similarity.ivfPqEncode(corpus, coarse, books)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
+    val (n, sum) = fingerprint(corpus, filterCol)
+    writeCodes(corpus, dir, filterCol, coarse, books, "overwrite")
     writeCodebooks(spark, dir, coarse, books)
-    PlainMeta.write(spark, dir, n, sum, coarse(0).length, nCells, m, kCodes)
+    StoreMeta.write(spark, dir, n, sum, coarse(0).length, nCells, m, kCodes,
+      filterCol.getOrElse(""))
     }
   }
+
+  /** Encode `rows` and write them under the layout's partition columns,
+    * repartitioned by those columns first: without that every task
+    * writes a file into every partition it touches (tasks x partitions
+    * small files — the classic partitionBy mistake at scale). */
+  private def writeCodes(rows: DataFrame, dir: String,
+      filterCol: Option[String], coarse: Array[Array[Double]],
+      books: Array[Array[Array[Double]]], mode: String): Unit =
+    Similarity.ivfPqEncode(rows, coarse, books, keepCols = filterCol.toSeq)
+      .repartition(parts(filterCol).map(col): _*)
+      .write.mode(mode).partitionBy(parts(filterCol): _*)
+      .parquet(s"$dir/codes")
 
   /** Level 0 = the coarse centroids, level 1 = the PQ codebooks. */
   private def writeCodebooks(spark: SparkSession, dir: String,
@@ -122,11 +152,10 @@ object VectorIndex {
   // partitions — searching it would silently return phantom rows; the
   // frame fails loud at the gateway instead
   def load(spark: SparkSession, dir: String): Loaded =
-    loadWith(spark, dir, Op.read(spark, dir, PlainMeta, "load/search"))
+    loadWith(spark, dir, Op.read(spark, dir, StoreMeta, "load/search"))
 
-  /** [[load]] from an already-checked meta row (either layout). */
-  private def loadWith(spark: SparkSession, dir: String,
-      meta: org.apache.spark.sql.Row): Loaded = {
+  /** [[load]] from an already-checked meta row. */
+  private def loadWith(spark: SparkSession, dir: String, meta: Row): Loaded = {
     val nCells = meta.getAs[Int]("n_cells")
     val m = meta.getAs[Int]("m")
     val kCodes = meta.getAs[Int]("k_codes")
@@ -143,56 +172,39 @@ object VectorIndex {
       s"vector index at $dir has an incomplete codebook table")
     // merge-on-read: live codes = stored codes minus tombstones. The
     // anti-join's nid predicate sits ABOVE the scan, so search()'s
-    // cell IN-list still pushes to the partition directories.
+    // partition IN-lists still push to the partition directories.
     val codes = tombs(dir).live(spark, spark.read.parquet(s"$dir/codes"))
-    Loaded(coarse, books, codes, meta.getAs[Long]("n_vectors"))
+    Loaded(coarse, books, codes, meta.getAs[Long]("n_vectors"),
+      filterColOf(meta))
   }
-
-  /** The plain maintenance entry points support the cell-partitioned
-    * store only: a [[buildFiltered]] store's codes live under
-    * (filterCol, cell) directories, so cell-keyed compaction paths and
-    * cell-only partitioned appends would silently mix layouts. Fail
-    * loud and name the filtered twin ([[deleteFiltered]] /
-    * [[compactFiltered]] / [[appendFiltered]]). */
-  private def requireUnfiltered(meta: org.apache.spark.sql.Row,
-      dir: String, op: String): Unit =
-    require(!meta.schema.fieldNames.contains("filter_col"),
-      s"$op does not support the FILTERED (label, cell)-partitioned " +
-        s"store at $dir — use ${op}Filtered instead")
 
   /** Delete vectors WITHOUT touching the code partitions — the
     * merge-on-read shape (Iceberg/Delta delete files): deleted ids land
     * in a tombstone table; [[load]] anti-joins it so every search sees
-    * only live rows. `deleted` must be the actual (vec_id, embedding)
-    * rows being removed: the meta fingerprint updates INCREMENTALLY
-    * (XOR is its own inverse — old ⊕ xor(deleted) IS the live-corpus
-    * fingerprint), so a later [[ensure]] over the live corpus validates
-    * without rebuild. Cost: O(|deleted|), zero store rewrite.
+    * only live rows (the anti-join is layout-independent). `deleted`
+    * must be the actual (vec_id, embedding[, filter column]) rows being
+    * removed: the meta fingerprint updates INCREMENTALLY (XOR is its
+    * own inverse — old ⊕ xor(deleted) IS the live-corpus fingerprint),
+    * so a later [[ensure]] over the live corpus validates without
+    * rebuild. Cost: O(|deleted|), zero store rewrite.
+    *
+    * The contract (every deleted row is a live stored row, exactly
+    * once) is ENFORCED, not just documented: XOR fingerprint
+    * maintenance is only exact under it — a double delete or a
+    * never-indexed row would silently drift n_vectors/checksum so a
+    * later ensure() validates against the wrong live corpus or rebuilds
+    * spuriously. Fail loud instead. Cost: one pass over the delete set
+    * + a semi-join against the (code-sized, not float-sized) store. Ids
+    * are audited AFTER the long cast they are stored under, so "7" and
+    * "007" are one id. Tombstones and meta commit share one window (a
+    * crash between them would leave the pre-delete fingerprint
+    * validating a store that hides rows).
     */
   def delete(deleted: DataFrame, dir: String): Unit = {
-    Op.mutate(deleted.sparkSession, dir, PlainMeta, "delete") { o =>
-      requireUnfiltered(o.meta, dir, "delete")
-      tombstone(deleted, o, None)
-    }
-  }
-
-  /** [[delete]]'s body for either layout (a filtered store's
-    * fingerprint also hashes `filterCol`). The contract (every deleted
-    * row is a live stored row, exactly once) is ENFORCED, not just
-    * documented: XOR fingerprint maintenance is only exact under it —
-    * a double delete or a never-indexed row would silently drift
-    * n_vectors/checksum so a later ensure() validates against the
-    * wrong live corpus or rebuilds spuriously. Fail loud instead. Cost:
-    * one pass over the delete set + a semi-join against the
-    * (code-sized, not float-sized) store. Ids are audited AFTER the
-    * long cast they are stored under, so "7" and "007" are one id.
-    * Runs in the caller's frame, after its layout check; tombstones
-    * and meta commit share one window (a crash between them would
-    * leave the pre-delete fingerprint validating a store that hides
-    * rows). */
-  private def tombstone(deleted: DataFrame, o: Op.Frame,
-      filterCol: Option[String]): Unit = {
-    val (spark, dir) = (o.spark, o.dir)
+    Op.mutate(deleted.sparkSession, dir, StoreMeta, "delete") { o =>
+    val spark = o.spark
+    val filterCol = filterColOf(o.meta)
+    requireFilterCol(deleted, filterCol, dir, "delete")
     val ids = deleted.select(col("vec_id").cast("long").as("nid"))
       .localCheckpoint(eager = true)
     // one aggregate answers the row-shaped audits (total + distinct)
@@ -215,190 +227,123 @@ object VectorIndex {
       o.commit("n_vectors" -> (o.meta.getAs[Long]("n_vectors") - nDel),
         "checksum" -> (o.meta.getAs[Long]("checksum") ^ dsum))
     }
-  }
-
-  /** Fold the tombstones into the store: rewrite ONLY the cell
-    * partitions that contain deleted rows, then drop the tombstone
-    * table — the maintenance pass that bounds merge-on-read's growing
-    * anti-join cost, exactly like s13 bounds small-file growth.
-    * Crash-safe under the [[graft.store.StageSwap]] contract: its
-    * recovery runs first, and tombstones drop only after the swap. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    Op.mutate(spark, dir, PlainMeta, "compact") { o =>
-    // Layout check FIRST, before the recovery sweep touches anything:
-    // the meta read is independent of staging, and running the sweep
-    // first on a FILTERED store would delete a crashed
-    // compactFiltered's staged survivors (the only copy of its
-    // affected pairs) before the fail-loud guard ever fired.
-    requireUnfiltered(o.meta, dir, "compact")
-    StageSwap.recover(spark, codesT(dir))
-    val tomb = tombs(dir)
-    if (!tomb.exists(spark)) return
-    tomb.foldInto(spark, codesT(dir), spark.read.parquet(s"$dir/codes"))
-    tomb.drop(spark)
     }
   }
 
-  /** FILE-MERGE maintenance for the plain store (the append-history
-    * bound, [[graft.llm.DedupIndex.compactFiles]]'s contract applied
-    * to the cell layout): every [[append]] lands one file per touched
-    * `cell=` directory and [[compact]] only folds tombstones, so a
-    * K-ingest history accumulates O(K) files per cell and search scan
-    * tasks grow with history rather than data. Rewrites, verbatim,
-    * ONLY the cell directories whose data-file count exceeds
-    * `maxFiles` ([[graft.store.StageSwap.mergeFiles]]). */
+  /** Fold the tombstones into the store: rewrite ONLY the leaves (cell
+    * directories, or (value, cell) pairs on a filtered store) that
+    * contain deleted rows, then drop the tombstone table — the
+    * maintenance pass that bounds merge-on-read's growing anti-join
+    * cost, exactly like s13 bounds small-file growth. Crash-safe under
+    * the [[graft.store.StageSwap]] contract: its recovery runs first,
+    * and tombstones drop only after the swap. Leaf names are rebuilt
+    * from the partition values, so a filter column must be path-safe
+    * (integral or plain strings, which Spark writes verbatim). */
+  def compact(spark: SparkSession, dir: String): Unit = {
+    Op.mutate(spark, dir, StoreMeta, "compact") { o =>
+    val codes = codesT(dir, filterColOf(o.meta))
+    StageSwap.recover(spark, codes)
+    val tomb = tombs(dir)
+    if (tomb.exists(spark)) {
+      tomb.foldInto(spark, codes, spark.read.parquet(s"$dir/codes"))
+      tomb.drop(spark)
+    }
+    }
+  }
+
+  /** FILE-MERGE maintenance (the append-history bound,
+    * [[graft.llm.DedupIndex.compactFiles]]'s contract applied to the
+    * code leaves): every [[append]] lands one file per touched leaf and
+    * [[compact]] only folds tombstones, so a K-ingest history
+    * accumulates O(K) files per leaf and search scan tasks grow with
+    * history rather than data. Rewrites, verbatim, ONLY the leaves
+    * whose data-file count exceeds `maxFiles`
+    * ([[graft.store.StageSwap.mergeFiles]]). */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
       maxRecordsPerFile: Long = 8000000L): Unit = {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    Op.mutate(spark, dir, PlainMeta, "compactFiles") { o =>
-    requireUnfiltered(o.meta, dir, "compactFiles")
-    StageSwap.recover(spark, codesT(dir))
-    StageSwap.mergeFiles(spark, codesT(dir), maxFiles, maxRecordsPerFile)
+    Op.mutate(spark, dir, StoreMeta, "compactFiles") { o =>
+    val codes = codesT(dir, filterColOf(o.meta))
+    StageSwap.recover(spark, codes)
+    StageSwap.mergeFiles(spark, codes, maxFiles, maxRecordsPerFile)
     }
   }
 
-  /** Load if the stored fingerprint matches `corpus`, else (re)build.
-    * The check costs one aggregate over the corpus — vastly cheaper
-    * than the two Lloyd trainings plus encode a rebuild costs, and it
-    * makes a stale index (regenerated testdata, different sf dir
-    * mapped to the same path) impossible to silently search. */
+  /** Load if the stored layout, quantizer shape and fingerprint match,
+    * else (re)build. The check costs one aggregate over the corpus —
+    * vastly cheaper than the two Lloyd trainings plus encode a rebuild
+    * costs, and it makes a stale index (regenerated testdata, different
+    * sf dir mapped to the same path, another filter column) impossible
+    * to silently search. */
   def ensure(corpus: DataFrame, dir: String, nCells: Int = 16,
-      m: Int = 16, kCodes: Int = 16): Loaded = {
+      m: Int = 16, kCodes: Int = 16,
+      filterCol: Option[String] = None): Loaded = {
     // Failure separation (r13 advice, same as DedupIndex.ensure): only
     // an unusable META ([[Op.valid]]) means "rebuild"; the corpus-side
     // fingerprint aggregate RETHROWS on failure — a transient I/O error
     // must never trigger the rebuild's delete of a healthy store.
-    if (!validFor(corpus, dir, PlainMeta, nCells, m, kCodes)(_ => true))
-      build(corpus, dir, nCells, m, kCodes)
-    load(corpus.sparkSession, dir)
-  }
-
-  /** ensure()'s validity check for either layout: usable meta of the
-    * asked quantizer shape (and `layout`), then the corpus fingerprint
-    * over the columns that layout hashes. */
-  private def validFor(corpus: DataFrame, dir: String, codec: Meta,
-      nCells: Int, m: Int, kCodes: Int, extraCols: Seq[String] = Nil)(
-      layout: org.apache.spark.sql.Row => Boolean): Boolean =
-    Op.valid(corpus.sparkSession, dir, codec) { meta =>
-      layout(meta) && meta.getAs[Int]("n_cells") == nCells &&
+    val valid = Op.valid(corpus.sparkSession, dir, StoreMeta) { meta =>
+      filterColOf(meta) == filterCol && meta.getAs[Int]("n_cells") == nCells &&
         meta.getAs[Int]("m") == m && meta.getAs[Int]("k_codes") == kCodes
     }.exists { meta =>
-      val (n, sum) = fingerprint(corpus, extraCols) // NOT caught
+      val (n, sum) = fingerprint(corpus, filterCol) // NOT caught
       meta.getAs[Long]("n_vectors") == n && meta.getAs[Long]("checksum") == sum
     }
+    if (!valid) build(corpus, dir, nCells, m, kCodes, filterCol)
+    load(corpus.sparkSession, dir)
+  }
 
   /** Append a batch of new vectors to an existing index WITHOUT
     * retraining: the stored quantizers are FROZEN (st14's streaming
     * contract, Streams.scala — retraining would re-shuffle the whole
     * accumulated store; production systems version the quantizer and
     * rebuild offline), new rows are encoded against them and appended
-    * to the cell partitions, and the meta fingerprint updates
-    * INCREMENTALLY — the checksum is an XOR over per-row hashes, so
-    * old ⊕ xor(batch) is exactly the fingerprint of the union corpus:
-    * a later [[ensure]] over the full corpus validates without a
-    * rebuild. Cost: one scan of the BATCH, zero touch of existing
-    * partitions.
+    * under the stored layout's partitions, and the meta fingerprint
+    * updates INCREMENTALLY — the checksum is an XOR over per-row
+    * hashes, so old ⊕ xor(batch) is exactly the fingerprint of the
+    * union corpus: a later [[ensure]] over the full corpus validates
+    * without a rebuild. Cost: one scan of the BATCH, zero touch of
+    * existing partitions.
     */
   def append(batch: DataFrame, dir: String): Unit = {
-    Op.mutate(batch.sparkSession, dir, PlainMeta, "append") { o =>
-    requireUnfiltered(o.meta, dir, "append")
+    Op.mutate(batch.sparkSession, dir, StoreMeta, "append") { o =>
+    val ix = loadWith(o.spark, dir, o.meta)
+    requireFilterCol(batch, ix.filterCol, dir, "append")
+    val (bn, bsum) = fingerprint(batch, ix.filterCol)
     // Crash contract: the codes append and the meta commit are two
     // writes; without a window a crash between them lets a REDELIVERED
     // batch double-encode its rows while the corpus-side XOR
     // fingerprint lands on the correct-looking union value — phantom
     // duplicates ensure() can never detect.
-    appendCodes(batch, o, Nil)
-    }
-  }
-
-  /** [[append]]'s body for either layout: encode against the frozen
-    * quantizers, append under the layout's partition columns, XOR the
-    * batch (and its `keepCols`) into the fingerprint. */
-  private def appendCodes(batch: DataFrame, o: Op.Frame,
-      keepCols: Seq[String]): Unit = {
-    val ix = loadWith(o.spark, o.dir, o.meta)
-    val (bn, bsum) = fingerprint(batch, keepCols)
     o.window(s"append of $bn vectors in flight") {
-      // repartition by the partition columns BEFORE the partitioned
-      // append, as build() does: without it every task writes a file
-      // into every cell it touches — the tasks x cells small-files
-      // explosion
-      val parts = keepCols :+ "cell"
-      Similarity.ivfPqEncode(batch, ix.coarse, ix.books, keepCols = keepCols)
-        .repartition(parts.map(col): _*)
-        .write.mode("append").partitionBy(parts: _*).parquet(s"${o.dir}/codes")
+      writeCodes(batch, dir, ix.filterCol, ix.coarse, ix.books, "append")
       o.commit("n_vectors" -> (o.meta.getAs[Long]("n_vectors") + bn),
         "checksum" -> (o.meta.getAs[Long]("checksum") ^ bsum))
     }
+    }
   }
+
+  /** [[search]] with the stored layout's probe count: 6 cell-only, 8 on
+    * a filtered store (the filtered-search compensation measured on
+    * v18 — a selective predicate shrinks each query's eligible set
+    * ~10×). */
+  def search(ix: Loaded, queries: DataFrame, corpus: DataFrame,
+      k: Int): DataFrame =
+    search(ix, queries, corpus, k, if (ix.filterCol.isEmpty) 6 else 8)
 
   /** Search the stored index: distinct probed cells of the query set
     * (ONE aggregate on the small query side, result ≤ nCells values)
-    * become an `IN`-list filter on the cell-partitioned scan —
+    * become an `IN`-list filter on the partitioned scan —
     * partition-directory pruning, so un-probed cells are never read —
     * then the shared IVFADC kernel ([[Similarity.ivfPqSearch]]) scores
-    * codes and exact-reranks the shortlist against `corpus`. */
+    * codes and exact-reranks the shortlist against `corpus`. On a
+    * filtered store the search is pre-filtered: each query sees only
+    * rows sharing its filter value, and the filter level is pruned too
+    * when the query set's distinct values are few (≤ 64 — a bounded
+    * panel/batch; a broad query set needs most value directories
+    * anyway). */
   def search(ix: Loaded, queries: DataFrame, corpus: DataFrame, k: Int,
-      nProbe: Int = 6, shortlist: Int = 64): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    val bcCoarse = sc.broadcast(ix.coarse)
-    val nP = nProbe
-    val probeCells = udf { (v: Seq[Float]) =>
-      Similarity.probeCellsKernel(bcCoarse.value, v, nP)
-    }
-    val cellsNeeded = queries
-      .select(explode(probeCells(col("embedding"))).as("cell"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val pruned = ix.codes.filter(col("cell").isin(cellsNeeded.map(Int.box): _*))
-    Similarity.ivfPqSearch(queries, pruned, ix.coarse, ix.books, corpus,
-      k, nProbe, shortlist)
-  }
-
-  // ------------------------------------------- filtered (predicate) store
-
-  /** Build a PRE-FILTERED store: codes partitioned by (filterCol, cell)
-    * — the layout v18's scaladoc promises at 100 TB ("st14's store with
-    * one more partition column"). A filtered search then prunes BOTH
-    * partition levels: only the query set's predicate values and probed
-    * cells are ever listed into tasks. The filter column participates
-    * in the fingerprint (a relabeled corpus must invalidate the store).
-    */
-  def buildFiltered(corpus: DataFrame, dir: String, filterCol: String,
-      nCells: Int = 16, m: Int = 16, kCodes: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    Op.build(spark, dir, "buildFiltered") {
-    buildsThisProcess += 1
-    val (coarse, books) = Similarity.ivfPqTrain(corpus, nCells, m, kCodes)
-    val (n, sum) = fingerprint(corpus, Seq(filterCol))
-    Similarity.ivfPqEncode(corpus, coarse, books, keepCols = Seq(filterCol))
-      .repartition(col(filterCol), col("cell"))
-      .write.mode("overwrite").partitionBy(filterCol, "cell")
-      .parquet(s"$dir/codes")
-    writeCodebooks(spark, dir, coarse, books)
-    FilteredMeta.write(spark, dir, n, sum, coarse(0).length, nCells, m,
-      kCodes, filterCol)
-    }
-  }
-
-  def ensureFiltered(corpus: DataFrame, dir: String, filterCol: String,
-      nCells: Int = 16, m: Int = 16, kCodes: Int = 16): Loaded = {
-    // same failure separation as [[ensure]]
-    if (!validFor(corpus, dir, FilteredMeta, nCells, m, kCodes,
-        Seq(filterCol))(_.getAs[String]("filter_col") == filterCol))
-      buildFiltered(corpus, dir, filterCol, nCells, m, kCodes)
-    load(corpus.sparkSession, dir)
-  }
-
-  /** Pre-filtered search over a [[buildFiltered]] store: nProbe
-    * defaults to 8 (the filtered-search compensation measured on v18 —
-    * a selective predicate shrinks each query's eligible set ~10×).
-    * Prunes the predicate partition level when the query set's
-    * distinct predicate values are few (≤ 64 — a bounded panel/batch;
-    * a broad query set needs most value directories anyway), and
-    * always prunes the cell level. */
-  def searchFiltered(ix: Loaded, queries: DataFrame, corpus: DataFrame,
-      filterCol: String, k: Int, nProbe: Int = 8,
-      shortlist: Int = 64): DataFrame = {
+      nProbe: Int, shortlist: Int = 64): DataFrame = {
     val sc = queries.sparkSession.sparkContext
     val bcCoarse = sc.broadcast(ix.coarse)
     val nP = nProbe
@@ -409,103 +354,13 @@ object VectorIndex {
       .select(explode(probeCells(col("embedding"))).as("cell"))
       .distinct().collect().map(_.getInt(0)).sorted
     var pruned = ix.codes.filter(col("cell").isin(cellsNeeded.map(Int.box): _*))
-    val fVals = queries.select(col(filterCol)).distinct().limit(65).collect()
-    if (fVals.length <= 64)
-      pruned = pruned.filter(col(filterCol).isin(fVals.map(_.get(0)): _*))
+    ix.filterCol.foreach { c =>
+      val fVals = queries.select(col(c)).distinct().limit(65).collect()
+      if (fVals.length <= 64)
+        pruned = pruned.filter(col(c).isin(fVals.map(_.get(0)): _*))
+    }
     Similarity.ivfPqSearch(queries, pruned, ix.coarse, ix.books, corpus,
-      k, nProbe, shortlist, filterCol = Some(filterCol))
-  }
-
-  // ------------------------------------ filtered-store maintenance (v27)
-
-  private def requireFiltered(meta: org.apache.spark.sql.Row,
-      dir: String, filterCol: String, op: String): Unit = {
-    require(meta.schema.fieldNames.contains("filter_col") &&
-        meta.getAs[String]("filter_col") == filterCol,
-      s"$op expects a FILTERED store keyed by '$filterCol' at $dir — " +
-        "found " + (if (meta.schema.fieldNames.contains("filter_col"))
-          s"filter_col='${meta.getAs[String]("filter_col")}'"
-        else "an unfiltered store"))
-  }
-
-  /** [[delete]] for the (filterCol, cell)-partitioned store: identical
-    * tombstone + membership + XOR-fingerprint mechanics, but the
-    * fingerprint includes the filter column (a relabeled corpus must
-    * invalidate) — so `deleted` must carry (vec_id, embedding,
-    * filterCol). [[load]]'s nid anti-join is layout-independent, so
-    * merge-on-read works unchanged on the two-level store. */
-  def deleteFiltered(deleted: DataFrame, dir: String,
-      filterCol: String): Unit = {
-    Op.mutate(deleted.sparkSession, dir, FilteredMeta, "deleteFiltered") { o =>
-      requireFiltered(o.meta, dir, filterCol, "deleteFiltered")
-      tombstone(deleted, o, Some(filterCol))
-    }
-  }
-
-  /** [[compact]] for the two-level (filterCol, cell) layout: rewrites
-    * ONLY the (value, cell) partition pairs that contain tombstoned
-    * rows, under the same [[graft.store.StageSwap]] contract. Partition
-    * directory names are reconstructed from the pair values, so the
-    * filter column must be PATH-SAFE (integral or simple strings — the
-    * same values Spark writes verbatim into `filterCol=value/`
-    * directory names). */
-  def compactFiltered(spark: SparkSession, dir: String,
-      filterCol: String): Unit = {
-    Op.mutate(spark, dir, FilteredMeta, "compactFiltered") { o =>
-    // Layout check BEFORE the recovery sweep (see [[compact]]): a
-    // filtered compact pointed at a plain store must fail loud before
-    // it can delete a crashed plain compact's staged survivors.
-    requireFiltered(o.meta, dir, filterCol, "compactFiltered")
-    recoverFiltered(spark, dir, filterCol)
-    val tomb = tombs(dir)
-    if (!tomb.exists(spark)) return
-    tomb.foldInto(spark, filteredCodesT(dir, filterCol),
-      spark.read.parquet(s"$dir/codes"))
-    tomb.drop(spark)
-    }
-  }
-
-  /** Staging recovery for the filtered store. LEGACY sweep first (r13
-    * advice): before the staging dir was renamed to
-    * codes_staging_filtered, a filtered compact staged into
-    * codes_staging — a pre-upgrade crash mid-swap left its only copy
-    * of survivors there, which the renamed path's sweep would never
-    * restore (and the plain compact REJECTS filtered stores before its
-    * own sweep runs). On a store whose meta says filtered, anything
-    * under codes_staging with the two-level shape is that crash state:
-    * recover it by the same staged-leaf rule. */
-  private def recoverFiltered(spark: SparkSession, dir: String,
-      filterCol: String): Unit = {
-    val t = filteredCodesT(dir, filterCol)
-    StageSwap.recover(spark, t.copy(staging = s"$dir/codes_staging"), t)
-  }
-
-  /** [[compactFiles]] for the two-level (filterCol, cell) layout:
-    * merges the (value, cell) partition pairs whose data-file count
-    * exceeds `maxFiles`, verbatim rows, through [[compactFiltered]]'s
-    * staging path (after its legacy sweep). */
-  def compactFilesFiltered(spark: SparkSession, dir: String,
-      filterCol: String, maxFiles: Int = 16,
-      maxRecordsPerFile: Long = 8000000L): Unit = {
-    require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    Op.mutate(spark, dir, FilteredMeta, "compactFilesFiltered") { o =>
-    requireFiltered(o.meta, dir, filterCol, "compactFilesFiltered")
-    recoverFiltered(spark, dir, filterCol)
-    StageSwap.mergeFiles(spark, filteredCodesT(dir, filterCol), maxFiles,
-      maxRecordsPerFile)
-    }
-  }
-
-  /** [[append]] for the filtered store: frozen quantizers, the batch
-    * encoded WITH its filter column and appended into the two-level
-    * partitions; fingerprint (which includes the filter column)
-    * updates incrementally. */
-  def appendFiltered(batch: DataFrame, dir: String,
-      filterCol: String): Unit = {
-    Op.mutate(batch.sparkSession, dir, FilteredMeta, "appendFiltered") { o =>
-      requireFiltered(o.meta, dir, filterCol, "appendFiltered")
-      appendCodes(batch, o, Seq(filterCol)) // same crash contract
-    }
+      k, nProbe, shortlist, filterCol = ix.filterCol)
   }
 
   private def indexDirFor(sfDir: String): String =
@@ -575,11 +430,11 @@ object VectorIndex {
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label")).cache()
       graft.util.StoreLease.break(s, filteredDirFor(d)) // fixture dir
-      val ix = ensureFiltered(emb, filteredDirFor(d), "label")
+      val ix = ensure(emb, filteredDirFor(d), filterCol = Some("label"))
       val queries = Similarity.probePanel(emb)
       val exact = Similarity.bruteForceTop1Filtered(queries, emb, "label")
         .localCheckpoint(eager = true)
-      val approx = searchFiltered(ix, queries, emb, "label", k = 1)
+      val approx = search(ix, queries, emb, k = 1)
         .select(col("qid"), col("nid").as("nid_ix"))
       val joined = exact.join(approx, Seq("qid"), "left").cache()
       val nQ = joined.count().toDouble
@@ -725,7 +580,7 @@ object VectorIndex {
     *   3. compaction rewrites only affected (label, cell) pairs and
     *      the same search returns the IDENTICAL result set (pure fold,
     *      no repair — merge-on-read == merge-on-write),
-    *   4. ensureFiltered over the live corpus validates WITHOUT
+    *   4. ensure() over the live corpus validates WITHOUT
     *      rebuild (label participates in the XOR fingerprint) and
     *      counts reconcile.
     * Emitted rows are the exact live within-label truth — v23's oracle
@@ -738,10 +593,10 @@ object VectorIndex {
       val dir = filteredDeleteDirFor(d)
       graft.util.StoreLease.break(s, dir) // fixture dir
       graft.util.Fs.rmTree(s, dir)
-      buildFiltered(emb, dir, "label")
+      build(emb, dir, filterCol = Some("label"))
       val deleted = emb.filter(col("vec_id") % 10 === 3)
       val live = emb.filter(col("vec_id") % 10 =!= 3).cache()
-      deleteFiltered(deleted, dir, "label")
+      delete(deleted, dir)
       val ixT = load(s, dir)
       val mergeOnReadApplied = ixT.codes
         .join(deleted.select(col("vec_id").as("nid")), Seq("nid"),
@@ -752,13 +607,13 @@ object VectorIndex {
       val exactMap = exact.collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       def resultSet(ix: Loaded): Set[(Long, Long)] =
-        searchFiltered(ix, queries, live, "label", k = 1)
+        search(ix, queries, live, k = 1)
           .select(col("qid"), col("nid")).collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       val resT = resultSet(ixT)
-      compactFiltered(s, dir, "label")
+      compact(s, dir)
       val builds0 = buildsThisProcess
-      val ixC = ensureFiltered(live, dir, "label")
+      val ixC = ensure(live, dir, filterCol = Some("label"))
       val noRebuild = buildsThisProcess == builds0
       val resC = resultSet(ixC)
       val nLive = live.count()
@@ -795,16 +650,15 @@ object VectorIndex {
       val dir = filteredDeleteDirFor(d)
       graft.util.StoreLease.break(s, dir)
       graft.util.Fs.rmTree(s, dir)
-      buildFiltered(emb, dir, "label")
+      build(emb, dir, filterCol = Some("label"))
       val deleted = emb.filter(col("vec_id") % 10 === 3)
       val live = emb.filter(col("vec_id") % 10 =!= 3).cache()
-      deleteFiltered(deleted, dir, "label")
+      delete(deleted, dir)
       val queries = Similarity.probePanel(live)
-      searchFiltered(load(s, dir), queries, live, "label", k = 1)
-        .count(): Unit
-      compactFiltered(s, dir, "label")
-      val ixC = ensureFiltered(live, dir, "label")
-      val out = searchFiltered(ixC, queries, live, "label", k = 1)
+      search(load(s, dir), queries, live, k = 1).count(): Unit
+      compact(s, dir)
+      val ixC = ensure(live, dir, filterCol = Some("label"))
+      val out = search(ixC, queries, live, k = 1)
         .localCheckpoint(eager = true)
       emb.unpersist(); live.unpersist()
       out

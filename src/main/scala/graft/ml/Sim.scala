@@ -26,14 +26,19 @@ object Sim {
       seed: Long = 123L,
       chunkRows: Long = 100L)
 
-  /** SNP names `rsID_ALLELE`; the planted pair sits at positions p-2, p-1. */
+  /** SNP names `rsID_ALLELE`; the planted pair sits at positions p-2, p-1.
+    * Names are drawn with replacement, and a draw that repeats a name
+    * already taken (a duplicate column downstream) is drawn again, so a
+    * seed whose draws never repeat keeps the names of the plain draw. */
   def snpNames(p: Int, seed: Long): IndexedSeq[String] = {
     require(p >= 2, s"need p >= 2 for the two planted SNPs, got $p")
     val rng = new scala.util.Random(seed)
     val alleles = "ACGT"
-    IndexedSeq.tabulate(p - 2)(_ =>
-      s"rs${100000 + rng.nextInt(900000)}_${alleles(rng.nextInt(4))}") ++
-      IndexedSeq("rs7412_T", "rs429358_C")
+    val planted = IndexedSeq("rs7412_T", "rs429358_C")
+    val taken = scala.collection.mutable.HashSet(planted: _*)
+    Iterator.continually(
+        s"rs${100000 + rng.nextInt(900000)}_${alleles(rng.nextInt(4))}")
+      .filter(taken.add).take(p - 2).toIndexedSeq ++ planted
   }
 
   def oddsRatios(p: Int): Array[Double] = {

@@ -346,15 +346,15 @@ object StoreHistoryBench {
     System.err.println(s"[history] graph-ref-repair $graphRefRepair")
 
     // ------------------------------------------------------- filtered
-    // the r14 gap: compactFiles(+Filtered) shipped but the history
-    // curve covered plain/dedup/graph only — same protocol over the
-    // two-level (label, cell) store
+    // the r14 gap: compactFiles on the filtered layout shipped but the
+    // history curve covered plain/dedup/graph only — same protocol over
+    // the two-level (label, cell) store
     val fEmb = embAll.select(col("vec_id"), col("embedding"), col("label"))
       .localCheckpoint(true)
     val fCorpus0 = fEmb.filter(col("vec_id") % 10 < 3)
     val fRest = fEmb.filter(col("vec_id") % 10 >= 3)
     val fDir = s"$root/filtered"
-    graft.llm.VectorIndex.buildFiltered(fCorpus0, fDir, "label")
+    graft.llm.VectorIndex.build(fCorpus0, fDir, filterCol = Some("label"))
     val fPanel = fCorpus0.limit(32).localCheckpoint(true)
     var fLive: DataFrame = fCorpus0
     def maxPairFiles(): Int = {
@@ -369,8 +369,7 @@ object StoreHistoryBench {
     def filteredPoint(after: Int): String = {
       val (_, s) = secs {
         val ix = graft.llm.VectorIndex.load(spark, fDir)
-        graft.llm.VectorIndex.searchFiltered(ix, fPanel, fLive, "label",
-          k = 3).count()
+        graft.llm.VectorIndex.search(ix, fPanel, fLive, k = 3).count()
       }
       val row = s"""{"after":$after,"search_secs":${jnum(s)},"max_pair_files":${maxPairFiles()}}"""
       System.err.println(s"[history] filtered $row")
@@ -382,7 +381,7 @@ object StoreHistoryBench {
     while (k < nAppends) {
       val batch = fRest.filter(pmod(xxhash64(col("vec_id")), lit(nAppends)) === k)
         .localCheckpoint(true)
-      graft.llm.VectorIndex.appendFiltered(batch, fDir, "label")
+      graft.llm.VectorIndex.append(batch, fDir)
       fLive = grow(fLive, batch)
       k += 1
       if (k % every == 0) filteredCurve += filteredPoint(k)
@@ -390,15 +389,14 @@ object StoreHistoryBench {
     fLive = fLive.localCheckpoint(true)
     val fSearchPre = {
       val ix = graft.llm.VectorIndex.load(spark, fDir)
-      graft.llm.VectorIndex.searchFiltered(ix, fPanel, fLive, "label", k = 3)
+      graft.llm.VectorIndex.search(ix, fPanel, fLive, k = 3)
         .agg(sum(col("nid"))).head().getLong(0)
     }
     val (_, filteredCompactSecs) = secs(
-      graft.llm.VectorIndex.compactFilesFiltered(spark, fDir, "label",
-        maxFiles = 16))
+      graft.llm.VectorIndex.compactFiles(spark, fDir, maxFiles = 16))
     val fSearchPost = {
       val ix = graft.llm.VectorIndex.load(spark, fDir)
-      graft.llm.VectorIndex.searchFiltered(ix, fPanel, fLive, "label", k = 3)
+      graft.llm.VectorIndex.search(ix, fPanel, fLive, k = 3)
         .agg(sum(col("nid"))).head().getLong(0)
     }
     filteredCurve += filteredPoint(-1)

@@ -3,6 +3,7 @@ package graft.llm
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 class VectorIndexSpec extends SparkSpec {
 
@@ -94,7 +95,7 @@ class VectorIndexSpec extends SparkSpec {
     graft.util.Fs.rmRecursive(new java.io.File(base))
     val c = corpus(300)
       .withColumn("label", (col("vec_id") % 3).cast("long")).cache()
-    val ix = VectorIndex.ensureFiltered(c, s"$base/f", "label")
+    val ix = VectorIndex.ensure(c, s"$base/f", filterCol = Some("label"))
     // two-level physical layout: label=L/cell=C directories
     val labelDirs = Option(new java.io.File(s"$base/f/codes").listFiles())
       .map(_.filter(f => f.isDirectory && f.getName.startsWith("label=")))
@@ -106,7 +107,7 @@ class VectorIndexSpec extends SparkSpec {
     // semantics) and matches the exact within-label truth on this
     // clustered fixture
     val q = c.filter(col("vec_id") < 10)
-    val got = VectorIndex.searchFiltered(ix, q, c, "label", k = 1)
+    val got = VectorIndex.search(ix, q, c, k = 1)
       .select(col("qid"), col("nid"))
     val labels = c.select(col("vec_id"), col("label")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -123,7 +124,7 @@ class VectorIndexSpec extends SparkSpec {
     // relabeling the corpus must invalidate the store
     val builds = VectorIndex.buildsThisProcess
     val relabeled = c.withColumn("label", (col("vec_id") % 5).cast("long"))
-    VectorIndex.ensureFiltered(relabeled, s"$base/f", "label")
+    VectorIndex.ensure(relabeled, s"$base/f", filterCol = Some("label"))
     assert(VectorIndex.buildsThisProcess == builds + 1)
     c.unpersist()
   }
@@ -250,37 +251,6 @@ class VectorIndexSpec extends SparkSpec {
     c.unpersist()
   }
 
-  test("PLAIN maintenance ops reject the FILTERED store loud, naming the twin") {
-    graft.util.Fs.rmRecursive(new java.io.File(base))
-    val dir = s"$base/i"
-    val c = corpus(200)
-      .withColumn("label", (col("vec_id") % 3).cast("long")).cache()
-    VectorIndex.buildFiltered(c, dir, "label")
-    val batch = corpus(210).filter(col("vec_id") >= 200)
-      .withColumn("label", (col("vec_id") % 3).cast("long"))
-    val e1 = intercept[IllegalArgumentException] {
-      VectorIndex.append(batch, dir)
-    }
-    assert(e1.getMessage.contains("appendFiltered"))
-    val e2 = intercept[IllegalArgumentException] {
-      VectorIndex.delete(c.filter(col("vec_id") < 5), dir)
-    }
-    assert(e2.getMessage.contains("deleteFiltered"))
-    // the store is untouched by the rejected calls: a filtered search
-    // still works and no tombstones were written
-    assert(!new java.io.File(s"$dir/tombstones").exists())
-    val ix = VectorIndex.load(spark, dir)
-    assert(ix.codes.count() == 200)
-    // ...and the filtered twins reject a PLAIN store symmetrically
-    VectorIndex.build(c.select("vec_id", "embedding"), s"$dir-plain")
-    val e3 = intercept[IllegalArgumentException] {
-      VectorIndex.deleteFiltered(c.filter(col("vec_id") < 5),
-        s"$dir-plain", "label")
-    }
-    assert(e3.getMessage.contains("unfiltered"))
-    c.unpersist()
-  }
-
   test("crashed append is LOUD: the in-progress marker blocks " +
       "load/search, delete, and compaction; ensure() rebuilds through it") {
     graft.util.Fs.rmRecursive(new java.io.File(base))
@@ -360,91 +330,16 @@ class VectorIndexSpec extends SparkSpec {
     all.unpersist()
   }
 
-  test("compactFiltered recovers a LEGACY codes_staging crash (the " +
-      "pre-rename staging path) on a filtered store") {
-    graft.util.Fs.rmRecursive(new java.io.File(base))
-    val dir = s"$base/p"
-    val c = corpus(120)
-      .withColumn("label", (col("vec_id") % 2).cast("long")).cache()
-    VectorIndex.buildFiltered(c, dir, "label")
-    VectorIndex.deleteFiltered(c.filter(col("vec_id") % 4 === 0), dir,
-      "label")
-    val tombIds = c.filter(col("vec_id") % 4 === 0)
-      .select(col("vec_id").as("nid"))
-    val raw = spark.read.parquet(s"$dir/codes")
-    val pair = raw.join(tombIds, Seq("nid"), "left_semi")
-      .select(col("label").cast("long"), col("cell")).distinct()
-      .orderBy("label", "cell").head()
-    val (pl, pc) = (pair.getLong(0), pair.getInt(1))
-    // fabricate the PRE-UPGRADE crash: survivors staged under the OLD
-    // codes_staging path, live pair dir already removed — its only copy
-    raw.filter(col("label") === pl && col("cell") === pc)
-      .join(tombIds, Seq("nid"), "left_anti")
-      .withColumn("label", lit(pl)).withColumn("cell", lit(pc))
-      .repartition(col("label"), col("cell"))
-      .write.mode("overwrite").partitionBy("label", "cell")
-      .parquet(s"$dir/codes_staging")
-    graft.util.Fs.rmTree(spark, s"$dir/codes/label=$pl/cell=$pc")
-    VectorIndex.compactFiltered(spark, dir, "label")
-    assert(!new java.io.File(s"$dir/codes_staging").exists(),
-      "legacy staging not swept")
-    assert(VectorIndex.load(spark, dir).codes.count() ==
-      c.filter(col("vec_id") % 4 =!= 0).count(),
-      "legacy staged survivors were lost")
-    c.unpersist()
-  }
-
-  test("cross-variant compact rejects BEFORE touching the other " +
-      "variant's in-flight staging (no cross-destruction)") {
-    graft.util.Fs.rmRecursive(new java.io.File(base))
-    val dir = s"$base/x"
-    val c = corpus(120)
-      .withColumn("label", (col("vec_id") % 2).cast("long")).cache()
-    VectorIndex.buildFiltered(c, dir, "label")
-    // Fabricate a compactFiltered crash mid-swap: staged survivors are
-    // the ONLY copy of one (label, cell) pair
-    VectorIndex.deleteFiltered(c.filter(col("vec_id") % 4 === 0), dir,
-      "label")
-    val tombIds = c.filter(col("vec_id") % 4 === 0)
-      .select(col("vec_id").as("nid"))
-    val raw = spark.read.parquet(s"$dir/codes")
-    val pair = raw.join(tombIds, Seq("nid"), "left_semi")
-      .select(col("label").cast("long"), col("cell")).distinct()
-      .orderBy("label", "cell").head()
-    val (pl, pc) = (pair.getLong(0), pair.getInt(1))
-    raw.filter(col("label") === pl && col("cell") === pc)
-      .join(tombIds, Seq("nid"), "left_anti")
-      .withColumn("label", lit(pl)).withColumn("cell", lit(pc))
-      .repartition(col("label"), col("cell"))
-      .write.mode("overwrite").partitionBy("label", "cell")
-      .parquet(s"$dir/codes_staging_filtered")
-    graft.util.Fs.rmTree(spark, s"$dir/codes/label=$pl/cell=$pc")
-    // A PLAIN compact aimed (wrongly) at this filtered store must fail
-    // loud BEFORE any staging sweep — the staged pair survives intact
-    val e = intercept[IllegalArgumentException] {
-      VectorIndex.compact(spark, dir)
-    }
-    assert(e.getMessage.contains("compactFiltered"))
-    assert(new java.io.File(s"$dir/codes_staging_filtered").exists(),
-      "rejected cross-variant compact must not delete in-flight staging")
-    // ...and the CORRECT variant still recovers from the crash state
-    VectorIndex.compactFiltered(spark, dir, "label")
-    assert(!new java.io.File(s"$dir/codes_staging_filtered").exists())
-    assert(VectorIndex.load(spark, dir).codes.count() ==
-      c.filter(col("vec_id") % 4 =!= 0).count())
-    c.unpersist()
-  }
-
   test("filtered delete/compact: two-level partition-pair rewrite, " +
       "fingerprint incremental, crash recovery") {
     graft.util.Fs.rmRecursive(new java.io.File(base))
     val dir = s"$base/j"
     val c = corpus(300)
       .withColumn("label", (col("vec_id") % 3).cast("long")).cache()
-    VectorIndex.buildFiltered(c, dir, "label")
+    VectorIndex.build(c, dir, filterCol = Some("label"))
     val deleted = c.filter(col("vec_id") % 5 === 0)
     val live = c.filter(col("vec_id") % 5 =!= 0).cache()
-    VectorIndex.deleteFiltered(deleted, dir, "label")
+    VectorIndex.delete(deleted, dir)
     // merge-on-read on the two-level store
     val ixT = VectorIndex.load(spark, dir)
     assert(ixT.codes.count() == live.count())
@@ -466,7 +361,7 @@ class VectorIndexSpec extends SparkSpec {
         new java.io.File(s"$dir/codes/label=$l/cell=$cc"))
         .map(f => f.getAbsolutePath -> f.lastModified()).toMap
     }
-    VectorIndex.compactFiltered(spark, dir, "label")
+    VectorIndex.compact(spark, dir)
     assert(!new java.io.File(s"$dir/tombstones").exists())
     untouchedPair.foreach { case (l, cc) =>
       val after = graft.util.Fs.walkFiles(
@@ -481,12 +376,12 @@ class VectorIndexSpec extends SparkSpec {
       .intersect(delIds).isEmpty)
     // fingerprint (label included) validates the live corpus — no rebuild
     val builds = VectorIndex.buildsThisProcess
-    VectorIndex.ensureFiltered(live, dir, "label")
+    VectorIndex.ensure(live, dir, filterCol = Some("label"))
     assert(VectorIndex.buildsThisProcess == builds)
     // crash recovery: fabricate rm-before-rename on one affected pair
     val deleted2 = live.filter(col("vec_id") % 7 === 0)
     val live2 = live.filter(col("vec_id") % 7 =!= 0)
-    VectorIndex.deleteFiltered(deleted2, dir, "label")
+    VectorIndex.delete(deleted2, dir)
     val tombIds2 = deleted2.select(col("vec_id").as("nid"))
     val raw2 = spark.read.parquet(s"$dir/codes")
     val pair = raw2.join(tombIds2, Seq("nid"), "left_semi")
@@ -498,15 +393,15 @@ class VectorIndexSpec extends SparkSpec {
       .withColumn("label", lit(pl)).withColumn("cell", lit(pc))
       .repartition(col("label"), col("cell"))
       .write.mode("overwrite").partitionBy("label", "cell")
-      .parquet(s"$dir/codes_staging_filtered")
+      .parquet(s"$dir/codes_staging")
     graft.util.Fs.rmTree(spark, s"$dir/codes/label=$pl/cell=$pc")
-    VectorIndex.compactFiltered(spark, dir, "label")
-    assert(!new java.io.File(s"$dir/codes_staging_filtered").exists())
+    VectorIndex.compact(spark, dir)
+    assert(!new java.io.File(s"$dir/codes_staging").exists())
     assert(!new java.io.File(s"$dir/tombstones").exists())
     assert(VectorIndex.load(spark, dir).codes.count() == live2.count(),
       "recovery must restore the staged pair and finish the compaction")
     val builds2 = VectorIndex.buildsThisProcess
-    VectorIndex.ensureFiltered(live2, dir, "label")
+    VectorIndex.ensure(live2, dir, filterCol = Some("label"))
     assert(VectorIndex.buildsThisProcess == builds2)
     c.unpersist(); live.unpersist()
   }
@@ -519,10 +414,10 @@ class VectorIndexSpec extends SparkSpec {
       .withColumn("label", (col("vec_id") % 3).cast("long")).cache()
     val first = all.filter(col("vec_id") < 300)
     val batch = all.filter(col("vec_id") >= 300)
-    VectorIndex.buildFiltered(first, dir, "label")
+    VectorIndex.build(first, dir, filterCol = Some("label"))
     val builds = VectorIndex.buildsThisProcess
-    VectorIndex.appendFiltered(batch, dir, "label")
-    val ix = VectorIndex.ensureFiltered(all, dir, "label")
+    VectorIndex.append(batch, dir)
+    val ix = VectorIndex.ensure(all, dir, filterCol = Some("label"))
     assert(VectorIndex.buildsThisProcess == builds,
       "filtered append forced a rebuild")
     assert(ix.nVectors == 360 && ix.codes.count() == 360)
@@ -574,10 +469,9 @@ class VectorIndexSpec extends SparkSpec {
     }
     assert(e1.getMessage.contains("duplicate"))
     val filtered = s"$base/cast_filtered"
-    VectorIndex.buildFiltered(c, filtered, "label")
+    VectorIndex.build(c, filtered, filterCol = Some("label"))
     val e2 = intercept[IllegalArgumentException] {
-      VectorIndex.deleteFiltered(sevenTwice("embedding", "label"), filtered,
-        "label")
+      VectorIndex.delete(sevenTwice("embedding", "label"), filtered)
     }
     assert(e2.getMessage.contains("duplicate"))
     // neither rejected delete moved n_vectors: both stores still load
@@ -585,7 +479,8 @@ class VectorIndexSpec extends SparkSpec {
     val builds = VectorIndex.buildsThisProcess
     assert(VectorIndex.ensure(c.select("vec_id", "embedding"), plain)
       .nVectors == 120)
-    assert(VectorIndex.ensureFiltered(c, filtered, "label").nVectors == 120)
+    assert(VectorIndex.ensure(c, filtered, filterCol = Some("label"))
+      .nVectors == 120)
     assert(VectorIndex.buildsThisProcess == builds)
     c.unpersist()
   }
@@ -625,6 +520,153 @@ class VectorIndexSpec extends SparkSpec {
     assert(VectorIndex.buildsThisProcess == b0 + 1,
       "ensure validated a store a delete died in")
     assert(ix.codes.count() == 200)
+    c.unpersist()
+  }
+
+  test("the plain-named ops on a filterCol = Some(\"label\") store keep " +
+      "the two-level layout") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/i"
+    val all = corpus(240)
+      .withColumn("label", (col("vec_id") % 3).cast("long")).cache()
+    VectorIndex.build(all.filter(col("vec_id") < 200), dir,
+      filterCol = Some("label"))
+    def topDirs: Set[String] = new java.io.File(s"$dir/codes").listFiles()
+      .filter(_.isDirectory).map(_.getName.takeWhile(_ != '=')).toSet
+    // append lands every new row under its own label=/cell= pair
+    VectorIndex.append(all.filter(col("vec_id") >= 200), dir)
+    assert(topDirs == Set("label"))
+    val placed = spark.read.parquet(s"$dir/codes").filter(col("nid") >= 200)
+      .select(col("nid"), col("label").cast("long"), col("cell"),
+        input_file_name()).collect()
+    assert(placed.length == 40)
+    placed.foreach { r =>
+      assert(r.getLong(1) == r.getLong(0) % 3, s"wrong label: $r")
+      assert(r.getString(3).contains(s"/label=${r.getLong(1)}/cell=${r.getInt(2)}/"),
+        s"row outside its pair directory: $r")
+    }
+    // delete + compact rewrite only the (label, cell) pairs that hold a
+    // deleted row
+    val deleted = all.filter(col("vec_id") % 17 === 0)
+    val live = all.filter(col("vec_id") % 17 =!= 0)
+    VectorIndex.delete(deleted, dir)
+    val raw = spark.read.parquet(s"$dir/codes")
+    def pairs(df: DataFrame): Set[String] =
+      df.select(col("label").cast("long"), col("cell")).distinct().collect()
+        .map(r => s"label=${r.getLong(0)}/cell=${r.getInt(1)}").toSet
+    def files(pair: String): Map[String, Long] =
+      graft.util.Fs.walkFiles(new java.io.File(s"$dir/codes/$pair"))
+        .map(f => f.getAbsolutePath -> f.lastModified()).toMap
+    val affected = pairs(raw.join(deleted.select(col("vec_id").as("nid")),
+      Seq("nid"), "left_semi"))
+    val allPairs = pairs(raw)
+    assert(affected.nonEmpty && (allPairs -- affected).nonEmpty)
+    val before = allPairs.map(p => p -> files(p)).toMap
+    VectorIndex.compact(spark, dir)
+    assert(!new java.io.File(s"$dir/tombstones").exists())
+    assert(!new java.io.File(s"$dir/codes_staging").exists())
+    assert(topDirs == Set("label"))
+    (allPairs -- affected).foreach { p =>
+      assert(files(p) == before(p), s"unaffected $p was rewritten")
+    }
+    affected.foreach { p =>
+      assert(files(p) != before(p), s"affected $p was not rewritten")
+    }
+    // the compacted store validates without a rebuild
+    val builds = VectorIndex.buildsThisProcess
+    val ix = VectorIndex.ensure(live, dir, filterCol = Some("label"))
+    assert(VectorIndex.buildsThisProcess == builds)
+    assert(ix.filterCol.contains("label") && ix.codes.count() == live.count())
+    // another filter column rebuilds, even one whose values (and so
+    // whose fingerprint) equal the stored column's
+    val relabeled = VectorIndex.ensure(
+      live.withColumn("label2", col("label")), dir, filterCol = Some("label2"))
+    assert(VectorIndex.buildsThisProcess == builds + 1)
+    assert(relabeled.filterCol.contains("label2") && topDirs == Set("label2"))
+    // and so does the cell-only layout
+    val plain = VectorIndex.ensure(live.drop("label"), dir)
+    assert(VectorIndex.buildsThisProcess == builds + 2)
+    assert(plain.filterCol.isEmpty && topDirs == Set("cell"))
+    all.unpersist()
+  }
+
+  test("a store of an older format fails every op naming ensure(), and " +
+      "ensure() rebuilds it (both layouts)") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val c = corpus(200)
+      .withColumn("label", (col("vec_id") % 3).cast("long")).cache()
+    val batch = corpus(210).filter(col("vec_id") >= 200)
+      .withColumn("label", (col("vec_id") % 3).cast("long"))
+    for (filterCol <- Seq(None, Some("label"))) {
+      val rows = if (filterCol.isEmpty) c.drop("label") else c
+      val dir = s"$base/format1_${filterCol.getOrElse("cell")}"
+      VectorIndex.build(rows, dir, filterCol = filterCol)
+      // the format-1 meta: the same fields, and no filter_col on the
+      // cell-only store
+      val row = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+      val fields = Seq("n_vectors" -> LongType, "checksum" -> LongType,
+        "dim" -> IntegerType, "n_cells" -> IntegerType, "m" -> IntegerType,
+        "k_codes" -> IntegerType) ++ filterCol.map(_ => "filter_col" -> StringType)
+      val old = graft.store.Meta("vector index", 1, fields: _*)
+      old.write(spark, dir, fields.map { case (f, _) => row.getAs[Any](f) }: _*)
+      def refused(op: => Any): Unit = {
+        val e = intercept[IllegalArgumentException] { op }
+        assert(e.getMessage.contains("has format 1, expected 2") &&
+          e.getMessage.contains("ensure()"), e.getMessage)
+      }
+      refused(VectorIndex.load(spark, dir))
+      refused(VectorIndex.append(batch, dir))
+      refused(VectorIndex.delete(rows.filter(col("vec_id") < 5), dir))
+      refused(VectorIndex.compact(spark, dir))
+      refused(VectorIndex.compactFiles(spark, dir))
+      // a format-1 filtered store may hold a crashed compact's survivors
+      // under its own staging root; the rebuild wipes them
+      filterCol.foreach { fc =>
+        spark.read.parquet(s"$dir/codes").limit(5)
+          .write.partitionBy(fc, "cell")
+          .parquet(s"$dir/codes_staging_filtered")
+      }
+      val b0 = VectorIndex.buildsThisProcess
+      val rebuilt = VectorIndex.ensure(rows, dir, filterCol = filterCol)
+      assert(VectorIndex.buildsThisProcess == b0 + 1,
+        "ensure did not rebuild the older-format store")
+      assert(!new java.io.File(s"$dir/codes_staging_filtered").exists())
+      VectorIndex.ensure(rows, dir, filterCol = filterCol)
+      assert(VectorIndex.buildsThisProcess == b0 + 1, "rebuilt twice")
+      // the rebuilt store searches like a freshly built one
+      val fresh = VectorIndex.ensure(rows, s"$dir-fresh", filterCol = filterCol)
+      val q = rows.filter(col("vec_id") < 10)
+      def top3(ix: VectorIndex.Loaded): Set[(Long, Int, Long)] =
+        VectorIndex.search(ix, q, rows, k = 3).collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      val hits = top3(rebuilt)
+      assert(hits.size == 30 && hits == top3(fresh), s"layout $filterCol")
+    }
+    c.unpersist()
+  }
+
+  test("delete on a filtered store fails before any write when its rows " +
+      "lack the filter column") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/nolabel"
+    val c = corpus(120)
+      .withColumn("label", (col("vec_id") % 3).cast("long")).cache()
+    VectorIndex.build(c, dir, filterCol = Some("label"))
+    val metaBefore = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val e = intercept[IllegalArgumentException] {
+      VectorIndex.delete(c.filter(col("vec_id") < 5).drop("label"), dir)
+    }
+    assert(e.getMessage.contains("'label'"), e.getMessage)
+    assert(!graft.util.IngestMarker.present(spark, dir), "marker written")
+    assert(!new java.io.File(s"$dir/tombstones").exists(),
+      "tombstones written")
+    assert(graft.util.Sidecar.readHead(spark, s"$dir/meta") == metaBefore)
+    // the same rows with the column delete as usual
+    VectorIndex.delete(c.filter(col("vec_id") < 5), dir)
+    val builds = VectorIndex.buildsThisProcess
+    VectorIndex.ensure(c.filter(col("vec_id") >= 5), dir,
+      filterCol = Some("label"))
+    assert(VectorIndex.buildsThisProcess == builds)
     c.unpersist()
   }
 }

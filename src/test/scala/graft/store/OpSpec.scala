@@ -140,32 +140,38 @@ class OpSpec extends SparkSpec {
     graft.llm.TextIndex.build(docs, s"$root/text")
     graft.llm.VectorIndex.build(vectors(40).drop("label"), s"$root/vec",
       nCells = 2, m = 2, kCodes = 4)
-    graft.llm.VectorIndex.buildFiltered(vectors(40), s"$root/vecf", "label",
-      nCells = 2, m = 2, kCodes = 4)
+    graft.llm.VectorIndex.build(vectors(40), s"$root/vecf",
+      nCells = 2, m = 2, kCodes = 4, filterCol = Some("label"))
     graft.llm.GraphAnn.ensure(vectors(40).drop("label"), s"$root/graph",
       m = 4, descentRounds = 1, initCellSize = 16): Unit
     val L = LongType
     val I = IntegerType
+    // one vector-index shape for both layouts: filter_col "" = cell-only
     val vec = Seq("n_vectors" -> L, "checksum" -> L, "dim" -> I,
-      "n_cells" -> I, "m" -> I, "k_codes" -> I)
+      "n_cells" -> I, "m" -> I, "k_codes" -> I, "filter_col" -> StringType,
+      "format_version" -> I)
     val want = Seq(
       "dedup" -> Seq("n_docs" -> L, "checksum" -> L, "max_id" -> L,
         "threshold" -> DoubleType, "n_buckets" -> I, "n_id_buckets" -> I,
         "id_col" -> StringType, "format_version" -> I),
       "text" -> Seq("n_docs" -> L, "checksum" -> L, "sum_dl" -> L,
         "n_buckets" -> I, "n_doc_buckets" -> I, "format_version" -> I),
-      "vec" -> (vec :+ ("format_version" -> I)),
-      "vecf" -> (vec ++ Seq("filter_col" -> StringType, "format_version" -> I)),
+      "vec" -> vec,
+      "vecf" -> vec,
       "graph" -> Seq("n_vectors" -> L, "checksum" -> L, "m" -> I,
         "init_cell_size" -> I, "descent_rounds" -> I, "format_version" -> I))
     want.foreach { case (store, cols) =>
       assert(columns(s"$root/$store/meta") == cols, store)
     }
+    assert(spark.read.parquet(s"$root/vec/meta").head()
+      .getAs[String]("filter_col") == "")
+    assert(spark.read.parquet(s"$root/vecf/meta").head()
+      .getAs[String]("filter_col") == "label")
     val formats = want.map { case (store, _) =>
       store -> spark.read.parquet(s"$root/$store/meta").head()
         .getAs[Int]("format_version")
     }.toMap
-    assert(formats == Map("dedup" -> 3, "text" -> 1, "vec" -> 1, "vecf" -> 1,
+    assert(formats == Map("dedup" -> 3, "text" -> 1, "vec" -> 2, "vecf" -> 2,
       "graph" -> 4))
   }
 }
