@@ -1,8 +1,8 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import graft.store.{Meta, Op, StageSwap, Table, Tombstones}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.store.{CountTable, Meta, Op, StageSwap, Table, Tombstones}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
@@ -47,12 +47,12 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   *     appends add deltas, maintenance rewrites): the probe's join
   *     router and the refresh trigger.
   *   - `gramdf/` — incrementally-maintained per-gram document
-  *     frequency (`base/` partitioned by `gbucket = pmod(gram,
-  *     n_buckets)`, signed per-batch `delta/`, merge-on-read like the
-  *     tombstones, folded at maintenance; `evalmeta/` the threshold of
-  *     the last evaluation), so the hot-gram refresh tick costs
-  *     O(appended) instead of re-exploding the corpus while holding
-  *     the writer lease.
+  *     frequency, a [[graft.store.CountTable]] (`base/` partitioned by
+  *     `gbucket = pmod(gram, n_buckets)`, signed per-batch `delta/`,
+  *     folded at maintenance) plus `evalmeta/`, the threshold of the
+  *     last evaluation, so the hot-gram refresh tick costs O(appended)
+  *     instead of re-exploding the corpus while holding the writer
+  *     lease.
   *   - `meta/` — one row, [[StoreMeta]].
   *
   * Every table above is written by [[build]] and kept by every op, so
@@ -198,34 +198,23 @@ object DedupIndex {
   // item 1). The hot-gram refresh needs exact per-gram df over the LIVE
   // corpus; recomputing it by exploding every stored gram set is an
   // O(corpus) shuffle executed while holding the single-writer lease —
-  // an ingest stall recurring every ~2% growth. Instead df is
-  // maintained like the tombstones: `gramdf/base/` holds exact (gram,
-  // df) as of build (or the last fold), every append writes a tiny
-  // POSITIVE delta for the survivors' grams, every delete a NEGATIVE
-  // delta for the deleted docs' grams, and merged-on-read sums are
-  // exact at any moment. The refresh tick then needs only the grams
-  // whose count CHANGED since the last evaluation — exactly the grams
-  // present in unfolded deltas — because under a non-decreasing
-  // threshold an unchanged count can never newly cross (every gram was
-  // below its evaluation threshold when last evaluated, and thresholds
-  // only grow with appends). Deletes can shrink the threshold; that
-  // rare case takes a full merged pass — still a scan of the
-  // aggregated df table, never a re-explode of `sets/`. Deltas fold
-  // into base only at maintenance ([[compact]] always, [[compactFiles]]
-  // when the delta file count passes its budget), so a refresh tick
+  // an ingest stall recurring every ~2% growth. Instead df lives in a
+  // [[graft.store.CountTable]]: an exact base as of build (or the last
+  // fold), a POSITIVE delta per append for the survivors' grams, a
+  // NEGATIVE delta per delete for the deleted docs' grams. The refresh
+  // tick then needs only the grams whose count CHANGED since the last
+  // evaluation — exactly the delta's grams ([[CountTable.changed]]) —
+  // because under a non-decreasing threshold an unchanged count can
+  // never newly cross (every gram was below its evaluation threshold
+  // when last evaluated, and thresholds only grow with appends).
+  // Deletes can shrink the threshold; that rare case takes a full
+  // merged pass — still a scan of the aggregated df table, never a
+  // re-explode of `sets/`. Deltas fold into base only at maintenance,
+  // right after an evaluation ([[maybeFoldDeltas]]), so a refresh tick
   // writes nothing corpus-sized.
   // ------------------------------------------------------------------
 
-  private def gramDfSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("gram",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("df",
-        org.apache.spark.sql.types.LongType)))
-
-  private def gramDfBase(dir: String) = s"$dir/gramdf/base"
-  private def gramDfDelta(dir: String) = s"$dir/gramdf/delta"
-  private def gramDfEval(dir: String) = s"$dir/gramdf/evalmeta"
+  private def evalPath(dir: String) = s"$dir/gramdf/evalmeta"
 
   /** SCALE-ADAPTIVE partition counts (guide §2: derive partitioning
     * from input size, not a constant tuned for one scale): a
@@ -237,45 +226,19 @@ object DedupIndex {
   private def autoBuckets(nDocs: Long, cap: Int): Int =
     math.max(4L, math.min(cap.toLong, nDocs / 1000L)).toInt
 
-  private def gramBucketOf(gram: Column, nb: Int): Column =
-    pmod(gram, lit(nb)).cast("int")
-
-  private def gramDfPartSchema =
-    org.apache.spark.sql.types.StructType(gramDfSchema.fields :+
-      org.apache.spark.sql.types.StructField("gbucket",
-        org.apache.spark.sql.types.IntegerType))
-
-  /** `gramdf/base` is BUCKET-PARTITIONED by gram hash (the termstats/
-    * layout from [[TextIndex]]): at 100 TB the distinct-gram table is
-    * billions of rows, and the refresh tick's candidate semi-join —
-    * though shuffle-free — would still SCAN every row of an
-    * unpartitioned base. With the partition column the tick prunes to
-    * the ≤ `n_buckets` partitions its own delta grams hash into, so
-    * tick scan bytes track the APPEND, not the corpus. [[build]]
-    * writes the base with the meta's `n_buckets` and every fold keeps
-    * it, so write and prune always agree. */
-  private def writeGramDfBase(df: DataFrame, path: String,
-      nb: Int): Unit =
-    df.select(col("gram"), col("df"))
-      .withColumn("gbucket", gramBucketOf(col("gram"), nb))
-      .repartition(col("gbucket"))
-      .write.mode("overwrite").partitionBy("gbucket").parquet(path)
-
-  /** Base reader, partition-pruned to `buckets`. `private[llm]` so
-    * the spec can assert the prune lands as PartitionFilters. */
-  private[llm] def readGramDfBase(spark: SparkSession, dir: String,
-      buckets: Option[Seq[Int]]): DataFrame = {
-    val raw = spark.read.schema(gramDfPartSchema).parquet(gramDfBase(dir))
-    val pruned = buckets match {
-      case Some(bs) => raw.filter(col("gbucket").isin(bs.map(Int.box): _*))
-      case None => raw
-    }
-    pruned.select(col("gram"), col("df"))
-  }
+  /** `gramdf/`, with `base/` partitioned by `gbucket = pmod(gram, nb)`
+    * for the meta's `nb` = `n_buckets`: at 100 TB the distinct-gram
+    * table is billions of rows, and the tick's read prunes to the
+    * buckets its own delta grams hash into, so tick scan bytes track
+    * the APPEND, not the corpus. */
+  private[llm] def gramdf(dir: String, nb: Int): CountTable =
+    CountTable(s"$dir/gramdf", "gram", LongType, "gbucket",
+      pmod(col("gram"), lit(nb)).cast("int"))
 
   /** Exact per-gram document frequency by explosion — the build-time
-    * seed and the append/delete deltas. O(total grams in `grams`). */
-  private def gramDfOf(grams: DataFrame): DataFrame =
+    * seed and the append/delete deltas (each doc's grams are distinct,
+    * so a per-gram row count IS a doc count). O(total grams). */
+  private def gramCounts(grams: DataFrame): DataFrame =
     grams.select(explode(col("sh")).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("df"))
 
@@ -285,52 +248,19 @@ object DedupIndex {
 
   // evalmeta is a one-long sidecar — driver-side I/O ([[graft.util
   // .Sidecar]]), no Spark job per tick
-  private def writeGramDfEval(spark: SparkSession, dir: String,
+  private def writeEval(spark: SparkSession, dir: String,
       tEval: Long): Unit =
-    graft.util.Sidecar.write(spark, gramDfEval(dir),
+    graft.util.Sidecar.write(spark, evalPath(dir),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("t_eval",
           org.apache.spark.sql.types.LongType))),
       Seq(Seq[Any](tEval)))
 
-  private def readGramDfEval(spark: SparkSession, dir: String): Option[Long] =
-    if (!graft.util.Fs.exists(spark, gramDfEval(dir))) None
-    else try Some(graft.util.Sidecar.readHead(spark, gramDfEval(dir))
+  private def readEval(spark: SparkSession, dir: String): Option[Long] =
+    if (!graft.util.Fs.exists(spark, evalPath(dir))) None
+    else try Some(graft.util.Sidecar.readHead(spark, evalPath(dir))
       .getAs[Long]("t_eval"))
     catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Signed per-batch df delta for `grams` (each doc's grams are
-    * distinct, so a per-gram row count IS a doc count). O(batch). */
-  private def writeGramDfDelta(spark: SparkSession, dir: String,
-      grams: DataFrame, sign: Int): Unit =
-    gramDfOf(grams)
-      .select(col("gram"), (col("df") * sign).cast("long").as("df"))
-      .repartition(1).write.mode("append").parquet(gramDfDelta(dir))
-
-  /** Merged-on-read exact df: base plus the signed unfolded deltas.
-    * Grams whose live count reached zero carry df = 0 rows. */
-  private[llm] def mergedGramDf(spark: SparkSession, dir: String): DataFrame = {
-    val base = readGramDfBase(spark, dir, None)
-    if (!graft.util.Fs.exists(spark, gramDfDelta(dir))) base
-    else base.unionByName(
-        spark.read.schema(gramDfSchema).parquet(gramDfDelta(dir)))
-      .groupBy("gram").agg(sum(col("df")).as("df"))
-  }
-
-  /** Fold unfolded deltas into an exact rewritten base (maintenance
-    * commit). The base rewrite and delta drop are one atomicity domain
-    * — a crash in between would double-count every folded delta — so
-    * the fold sits in an [[Op.window]]: a crash fails every later op
-    * LOUD and ensure() rebuilds, the documented recovery. Caller holds
-    * the writer lease and has checked that deltas exist. */
-  private def foldGramDf(spark: SparkSession, dir: String, nb: Int): Unit =
-    Op.window(spark, dir, "gramdf delta fold in flight") {
-      StageSwap.replace(spark, Table(gramDfBase(dir))) { staging =>
-        writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L),
-          staging, nb)
-      }
-      graft.util.Fs.rmTree(spark, gramDfDelta(dir))
-    }
 
   /** The frozen hot set, driver-side (bounded by the df lemma — every
     * consumer collected it anyway, so the Spark-job read bought
@@ -410,29 +340,28 @@ object DedupIndex {
 
   /** Exact rewrite from the live prefix table (maintenance commit):
     * one bounded aggregate job (≤ nBuckets result rows), committed
-    * driver-side. `Sidecar.write` deletes the table before it writes
-    * it and every probe reads it, so outside [[build]] each call sits
-    * in an [[Op.window]]: a crash in between leaves the marker, and
-    * [[ensure]] rebuilds. */
-  private def rewriteStats(spark: SparkSession, dir: String): Unit = {
-    val counts = try {
-      spark.read.parquet(s"$dir/prefix")
-        .groupBy("bucket").agg(count(lit(1)).as("n_rows"))
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    } catch { // zero-file store: a valid empty stats table
-      case scala.util.control.NonFatal(_) => Seq.empty[(Int, Long)]
-    }
+    * driver-side. The typed read makes a zero-file store an empty
+    * table, and any other read error propagates instead of
+    * under-counting every bucket. `Sidecar.write` deletes the table
+    * before it writes it and every probe reads it, so outside [[build]]
+    * each call sits in an [[Op.window]]: a crash in between leaves the
+    * marker, and [[ensure]] rebuilds. */
+  private def rewriteStats(spark: SparkSession, dir: String,
+      idCol: String): Unit = {
+    val counts = readPrefixTable(spark, dir, idCol)
+      .groupBy("bucket").agg(count(lit(1)).as("n_rows"))
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
     graft.util.Sidecar.write(spark, statsPath(dir), statsSchema,
       counts.map { case (b, n) => Seq[Any](b, n, "maint") })
   }
 
   /** Every [[append]] adds one prefstats file, and every probe reads
-    * them all; past [[GramDfFoldFiles]] files they fold to one file of
+    * them all; past [[FoldFiles]] files they fold to one file of
     * one row per (bucket, src) holding the summed count, so
     * [[statsTotals]] and the probe router's per-bucket sums read the
     * same. Runs inside the append's marker window. */
   private def maybeFoldStats(spark: SparkSession, dir: String): Unit =
-    if (graft.util.Fs.dataFileCount(spark, statsPath(dir)) > GramDfFoldFiles) {
+    if (graft.util.Fs.dataFileCount(spark, statsPath(dir)) > FoldFiles) {
       val rows = readStatsRows(spark, dir)
         .groupBy { case (b, _, src) => (b, src) }.toSeq.sortBy(_._1)
         .map { case ((b, src), rs) => Seq[Any](b, rs.map(_._2).sum, src) }
@@ -516,19 +445,19 @@ object DedupIndex {
     // incrementally-maintained df the refresh tick reads instead of
     // re-exploding the corpus.
     val tBuild = hotThresholdFor(nIdx)
-    writeGramDfBase(gramDfOf(grams), gramDfBase(dir), nb)
-    writeGramDfEval(spark, dir, tBuild)
+    gramdf(dir, nb).writeBase(gramCounts(grams))
+    writeEval(spark, dir, tBuild)
     // bounded collect (the df lemma): the hot set is committed
     // driver-side and handed straight to the prefix cut — previously a
     // Spark write plus a read-back collect
-    val hotArr = readGramDfBase(spark, dir, None)
+    val hotArr = gramdf(dir, nb).base(spark)
       .filter(col("df") > tBuild).select("gram")
       .collect().map(_.getLong(0))
     writeHotGrams(spark, dir, hotArr.toSeq, overwrite = true)
     prefixGrams(grams, idCol, threshold, nb, hotArr)
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/prefix")
-    rewriteStats(spark, dir) // exact per-bucket counts at build
+    rewriteStats(spark, dir, idCol) // exact per-bucket counts at build
     val (n, sum) = fingerprint(docs, idCol, textCol)
     val maxId = docs.agg(coalesce(max(col(idCol)).cast("long"),
       lit(Long.MinValue))).head().getLong(0)
@@ -738,7 +667,7 @@ object DedupIndex {
       maybeFoldStats(spark, dir)
       // df DELTA: one tiny aggregate of the survivors' grams, inside
       // the same window as the data writes
-      writeGramDfDelta(spark, dir, gramsS, sign = 1)
+      gramdf(dir, nBuckets).addDelta(gramCounts(gramsS), sign = 1)
       val (sn, ssum) = fingerprint(survivors, idCol, textCol)
       val bMax = batch.agg(coalesce(max(col(idCol)).cast("long"),
         lit(Long.MinValue))).head().getLong(0)
@@ -801,7 +730,8 @@ object DedupIndex {
     // stale), so they share one window
     o.window(s"delete of $nDel docs in flight") {
       tombs(dir).append(ids)
-      writeGramDfDelta(spark, dir, delGrams, sign = -1)
+      gramdf(dir, meta.getAs[Int]("n_buckets"))
+        .addDelta(gramCounts(delGrams), sign = -1)
       o.commit("n_docs" -> (meta.getAs[Long]("n_docs") - nIdx),
         "checksum" -> (meta.getAs[Long]("checksum") ^ dsum))
     }
@@ -823,9 +753,10 @@ object DedupIndex {
     // No deltas → base is already exact; the ordinary due-trigger tick
     // still runs (free when not due). The hotgrams fold is
     // content-preserving and safe either way.
+    val nb = o.meta.getAs[Int]("n_buckets")
     refreshHotGramsLocked(spark, dir, o.meta,
-      force = graft.util.Fs.exists(spark, gramDfDelta(dir))): Unit
-    maybeFoldGramDf(spark, dir, o.meta.getAs[Int]("n_buckets"), force = true)
+      force = gramdf(dir, nb).hasDelta(spark)): Unit
+    maybeFoldDeltas(spark, dir, nb, force = true)
     val tomb = tombs(dir)
     if (!tomb.exists(spark)) return
     val idCol = o.meta.getAs[String]("id_col")
@@ -834,7 +765,7 @@ object DedupIndex {
     tomb.foldInto(spark, setsT(dir), readSets(spark, dir, idCol), idCol)
     tomb.drop(spark)
     // folded rows leave the stats too
-    o.window("prefstats rewrite in flight")(rewriteStats(spark, dir))
+    o.window("prefstats rewrite in flight")(rewriteStats(spark, dir, idCol))
     }
   }
 
@@ -847,18 +778,18 @@ object DedupIndex {
     * This pass rewrites ONLY the prefix/sets partition directories
     * whose data-file count exceeds `maxFiles`
     * ([[graft.store.StageSwap.mergeFiles]]: one task's output per
-    * directory, `maxRecordsPerFile` re-splitting a genuinely huge
-    * bucket); rows pass through verbatim — tombstones are deliberately
-    * NOT folded here, the two maintenance costs stay independently
-    * schedulable. `refreshHot` runs the [[refreshHotGrams]] tick first.
+    * directory); rows pass through verbatim — tombstones are
+    * deliberately NOT folded here, the two maintenance costs stay
+    * independently schedulable. The [[refreshHotGrams]] tick runs
+    * first.
     *
     * Trigger rule: run when the per-partition file count approaches
     * the store's append cadence budget — at one append per
     * micro-batch, `maxFiles = 16` keeps every probe's per-bucket task
     * count constant at ≤ 16 for the cost of one bounded rewrite every
     * 16 batches (amortized O(1) files touched per ingested row). */
-  def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
-      maxRecordsPerFile: Long = 8000000L, refreshHot: Boolean = true): Unit = {
+  def compactFiles(spark: SparkSession, dir: String,
+      maxFiles: Int = 16): Unit = {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
     Op.mutate(spark, dir, StoreMeta, "compactFiles") { o =>
     StageSwap.recover(spark, prefixT(dir), setsT(dir))
@@ -866,9 +797,9 @@ object DedupIndex {
     // verdict item 1): recutting affected docs' prefixes rewrites
     // whole buckets to one task's output anyway, so refresh-then-fold
     // never merges a bucket twice
-    if (refreshHot) refreshHotGramsLocked(spark, dir, o.meta): Unit
+    refreshHotGramsLocked(spark, dir, o.meta): Unit
     Seq(prefixT(dir), setsT(dir))
-      .foreach(StageSwap.mergeFiles(spark, _, maxFiles, maxRecordsPerFile))
+      .foreach(StageSwap.mergeFiles(spark, _, maxFiles))
     }
   }
 
@@ -908,14 +839,13 @@ object DedupIndex {
     * ensure() rebuilds (the documented recovery).
     *
     * Runs automatically inside [[compactFiles]] (the maintenance
-    * cadence a streaming ingest already pays — `refreshHot = false`
-    * opts out); callable standalone. The df recompute is the pass's
-    * only O(corpus) term, so its TRIGGER is stats-driven: it runs
-    * only when the `prefstats/` append-delta mass since the last
-    * maintenance reaches [[RefreshDueFraction]] of the table
-    * (`force = true` overrides) — a huge store whose ingest trickle
-    * is below the threshold pays nothing. Returns the number of grams
-    * promoted. */
+    * cadence a streaming ingest already pays); callable standalone.
+    * The df recompute is the pass's only O(corpus) term, so its
+    * TRIGGER is stats-driven: it runs only when the `prefstats/`
+    * append-delta mass since the last maintenance reaches
+    * [[RefreshDueFraction]] of the table (`force = true` overrides) —
+    * a huge store whose ingest trickle is below the threshold pays
+    * nothing. Returns the number of grams promoted. */
   def refreshHotGrams(spark: SparkSession, dir: String,
       force: Boolean = false): Long =
     Op.mutate(spark, dir, StoreMeta, "refreshHotGrams") { o =>
@@ -937,11 +867,11 @@ object DedupIndex {
     // append — and folding is only safe right after an evaluation, so
     // file buildup itself makes a tick due (the tick is O(appended)
     // now, so the extra evaluations cost nothing corpus-sized)
-    val filesDue = graft.util.Fs.exists(spark, gramDfDelta(dir)) &&
-      graft.util.Fs.dataFileCount(spark, gramDfDelta(dir)) > GramDfFoldFiles
+    val nBuckets = meta.getAs[Int]("n_buckets")
+    val gdf = gramdf(dir, nBuckets)
+    val filesDue = gdf.deltaFiles(spark) > FoldFiles
     if (!force && !statsDue && !filesDue) return 0L
     val t0 = meta.getAs[Double]("threshold")
-    val nBuckets = meta.getAs[Int]("n_buckets")
     val idCol = meta.getAs[String]("id_col")
     val liveSets = tombs(dir).live(spark,
       readSets(spark, dir, idCol).select(col(idCol), col("sh")), idCol)
@@ -952,41 +882,18 @@ object DedupIndex {
     //  - CANDIDATE path (the normal tick): thresholds are
     //    non-decreasing since the last evaluation, so a gram whose
     //    count did not change cannot newly cross — and the grams whose
-    //    count changed are EXACTLY the unfolded gramdf/delta grams.
-    //    Cost: one aggregated-df-table scan pruned to candidates by a
-    //    broadcast semi-join (zero shuffle) plus an O(candidates)
-    //    merge — O(appended-since-fold), independent of corpus size.
+    //    count changed are EXACTLY the unfolded gramdf/delta grams
+    //    ([[CountTable.changed]]): O(appended-since-fold), independent
+    //    of corpus size.
     //  - FULL MERGED path (deletes lowered the threshold, or evalmeta
     //    unreadable): one pass over base ∪ delta — a scan+groupBy of
     //    the aggregated table, still never an explode of sets/.
     // the frozen hot set, driver-side — consulted by both tiers below
     // and previously re-scanned as an anti-join build side each time
     val hotNow = readHotGramsArr(spark, dir).toSet
-    val merged: DataFrame =
-      if (readGramDfEval(spark, dir).exists(_ <= tNow)) {
-        if (!graft.util.Fs.exists(spark, gramDfDelta(dir)))
-          spark.range(0).select(col("id").as("gram"), col("id").as("df"))
-        else {
-          val deltaAgg = spark.read.schema(gramDfSchema)
-            .parquet(gramDfDelta(dir))
-            .groupBy("gram").agg(sum(col("df")).as("df"))
-            .localCheckpoint(eager = true)
-          // bounded collect: ≤ nBuckets values — the delta grams'
-          // partitions, the only base partitions any candidate can
-          // live in
-          val candBuckets = deltaAgg
-            .select(gramBucketOf(col("gram"), nBuckets).as("gbucket"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          // base side: partition prune to the candidate buckets, THEN
-          // the broadcast LEFT-SEMI row prune — scan bytes track the
-          // append, not the corpus (shuffle-free)
-          readGramDfBase(spark, dir, Some(candBuckets))
-            .join(broadcast(deltaAgg.select("gram")),
-              Seq("gram"), "left_semi")
-            .unionByName(deltaAgg)
-            .groupBy("gram").agg(sum(col("df")).as("df"))
-        }
-      } else mergedGramDf(spark, dir)
+    val merged =
+      if (readEval(spark, dir).exists(_ <= tNow)) gdf.changed(spark)
+      else gdf.merged(spark)
     val newHot = merged.filter(col("df") > tNow).select(col("gram"))
       .collect().map(_.getLong(0)).filterNot(hotNow)
     if (newHot.isEmpty) {
@@ -997,10 +904,10 @@ object DedupIndex {
       // (folding is only safe right after an evaluation — a fold
       // before one would erase the change-tracking the candidate
       // shortcut relies on)
-      writeGramDfEval(spark, dir, tNow)
+      writeEval(spark, dir, tNow)
       Op.window(spark, dir, "prefstats rewrite in flight")(
-        rewriteStats(spark, dir))
-      maybeFoldGramDf(spark, dir, nBuckets)
+        rewriteStats(spark, dir, idCol))
+      maybeFoldDeltas(spark, dir, nBuckets)
       return 0L
     }
     // LOUD two-phase window: the extended order and the recut prefixes
@@ -1043,13 +950,13 @@ object DedupIndex {
           .join(affIds, Seq(idCol), "left_anti")
           .unionByName(newPref.filter(StageSwap.within(prefix, affB))),
         affB)
-      rewriteStats(spark, dir) // recut buckets + re-armed trigger
+      rewriteStats(spark, dir, idCol) // recut buckets + re-armed trigger
     }
     // promotion COMPLETE — only now may evalmeta advance (a crash
     // before this line leaves the old evalmeta, so the next tick
     // re-evaluates and re-finds these grams instead of losing them)
-    writeGramDfEval(spark, dir, tNow)
-    maybeFoldGramDf(spark, dir, nBuckets)
+    writeEval(spark, dir, tNow)
+    maybeFoldDeltas(spark, dir, nBuckets)
     newHot.length.toLong
   }
 
@@ -1057,26 +964,25 @@ object DedupIndex {
     * files whose every read re-lists and re-merges them; past this
     * budget the maintenance tick folds them (same rule as
     * [[compactFiles]]' `maxFiles`). */
-  private val GramDfFoldFiles = 16
+  private val FoldFiles = 16
 
   /** Fold gramdf deltas (and the grow-only hotgrams appends) when
     * their file counts pass the budget. ONLY called right after an
     * evaluation — a fold before one would erase the change-tracking
     * the candidate shortcut relies on. Caller holds the lease; `nb` is
     * the meta's `n_buckets`. */
-  private def maybeFoldGramDf(spark: SparkSession, dir: String, nb: Int,
+  private def maybeFoldDeltas(spark: SparkSession, dir: String, nb: Int,
       force: Boolean = false): Unit = {
-    val deltaOver = graft.util.Fs.exists(spark, gramDfDelta(dir)) &&
-      (force ||
-        graft.util.Fs.dataFileCount(spark, gramDfDelta(dir)) > GramDfFoldFiles)
-    if (deltaOver) foldGramDf(spark, dir, nb)
+    val gdf = gramdf(dir, nb)
+    if (force || gdf.deltaFiles(spark) > FoldFiles)
+      gdf.fold(spark, dir, "gramdf delta fold in flight")
     // hotgrams/: every refresh appends one single-file delta and every
     // build/probe/append collects the whole table (r15 advice) — fold
     // to one file past the budget and LOG the set size so drift of the
     // broadcast-sized assumption is visible. Already-single-file sets
     // skip even under force: the rewrite would change nothing.
     val hotFiles = graft.util.Fs.dataFileCount(spark, s"$dir/hotgrams")
-    if ((force && hotFiles > 1) || hotFiles > GramDfFoldFiles) {
+    if ((force && hotFiles > 1) || hotFiles > FoldFiles) {
       val hot = readHotGramsArr(spark, dir)
       Op.window(spark, dir, "hotgrams fold in flight") {
         StageSwap.replace(spark, Table(s"$dir/hotgrams")) { staging =>

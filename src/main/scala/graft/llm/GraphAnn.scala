@@ -412,16 +412,15 @@ object GraphAnn {
     * whole each insert, so only a crash can fragment them), so a
     * K-ingest history accumulates O(K) node files and the membership
     * scans of delete/append grow with history rather than data.
-    * Rewrites any table whose data-file count exceeds `maxFiles` to
-    * ~`targetBytes`-sized output files
+    * Rewrites any table whose data-file count exceeds `maxFiles`
     * ([[graft.store.StageSwap.mergeFiles]]). */
-  def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
-      targetBytes: Long = 128L * 1024 * 1024): Unit = {
+  def compactFiles(spark: SparkSession, dir: String,
+      maxFiles: Int = 16): Unit = {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
     Op.mutate(spark, dir, StoreMeta, "compactFiles") { _ =>
     StageSwap.recover(spark, edgesT(dir), nodesT(dir))
-    Seq(edgesT(dir), nodesT(dir)).foreach(
-      StageSwap.mergeFiles(spark, _, maxFiles, targetBytes = targetBytes))
+    Seq(edgesT(dir), nodesT(dir))
+      .foreach(StageSwap.mergeFiles(spark, _, maxFiles))
     }
   }
 

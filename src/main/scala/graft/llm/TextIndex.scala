@@ -1,10 +1,10 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import graft.store.{Meta, Op, StageSwap, Table, Tombstones}
+import graft.store.{CountTable, Meta, Op, StageSwap, Table, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 /** Persisted INVERTED-INDEX STORE for sparse (BM25) retrieval — the
   * posting-list analog of the vector/graph/dedup index-maintenance
@@ -31,12 +31,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *   - `docids/dbucket=D/` — (doc) for every indexed doc, partitioned
   *     by `pmod(doc, nDocBuckets)`: O(batch) duplicate-ingest and
   *     delete-liveness guards via partition-pruned semi-joins.
-  *   - `termstats/base/bucket=B/` + `termstats/delta/` — (term, df)
-  *     merge-on-read document frequency (append writes positive
-  *     deltas, delete negative ones — the [[DedupIndex]] gramdf
-  *     pattern), bucketed like the postings so a search's idf lookup
-  *     prunes to its query terms' buckets. Deltas fold into an exact
-  *     base at maintenance.
+  *   - `termstats/` — (term, df) merge-on-read document frequency, a
+  *     [[graft.store.CountTable]] (append writes positive deltas,
+  *     delete negative ones), its `base/bucket=B/` bucketed like the
+  *     postings so a search's idf lookup prunes to its query terms'
+  *     buckets. Deltas fold into an exact base at maintenance.
   *   - `tombstones/` — merge-on-read deletes; every search anti-joins
   *     it, [[compact]] folds it away rewriting ONLY affected
   *     partitions (crash-safe under [[graft.store.StageSwap]]).
@@ -145,50 +144,22 @@ object TextIndex {
       org.apache.spark.sql.types.StructField("dbucket",
         org.apache.spark.sql.types.IntegerType)))
 
-  private def termStatsSchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("term",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("df",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.IntegerType)))
-
   private def readPostings(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(postingsSchema).parquet(s"$dir/postings")
 
   private def readDocids(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(docidsSchema).parquet(s"$dir/docids")
 
-  private def termBase(dir: String) = s"$dir/termstats/base"
-  private def termDelta(dir: String) = s"$dir/termstats/delta"
-
   private def postingsT(dir: String) = Table(s"$dir/postings", "bucket")
   private def docidsT(dir: String) = Table(s"$dir/docids", "dbucket")
   private def tombs(dir: String) = Tombstones(dir, "doc")
+  private def termstats(dir: String, nBuckets: Int) =
+    CountTable(s"$dir/termstats", "term", StringType, "bucket",
+      bucketOf(col("term"), nBuckets))
 
-  /** Merged-on-read exact df per term: base plus signed deltas,
-    * optionally pruned to the buckets in `buckets`. */
-  private def mergedTermStats(spark: SparkSession, dir: String,
-      buckets: Option[Seq[Int]]): DataFrame = {
-    def prune(df: DataFrame): DataFrame = buckets match {
-      case Some(bs) => df.filter(col("bucket").isin(bs.map(Int.box): _*))
-      case None => df
-    }
-    val base = prune(spark.read.schema(termStatsSchema)
-      .parquet(termBase(dir)))
-    val all =
-      if (!graft.util.Fs.exists(spark, termDelta(dir))) base
-      else base.unionByName(prune(spark.read.schema(termStatsSchema)
-        .parquet(termDelta(dir))))
-    all.groupBy("term", "bucket").agg(sum(col("df")).as("df"))
-  }
-
-  private def writeTermDelta(spark: SparkSession, dir: String,
-      post: DataFrame, sign: Int, nBuckets: Int): Unit =
-    post.groupBy("term").agg((count(lit(1)) * sign).cast("long").as("df"))
-      .withColumn("bucket", bucketOf(col("term"), nBuckets))
-      .repartition(1).write.mode("append").parquet(termDelta(dir))
+  /** Per-term document counts of (doc, term) postings. */
+  private def termCounts(post: DataFrame): DataFrame =
+    post.groupBy("term").agg(count(lit(1)).as("df"))
 
   /** Search broadcasts the tokenized QUERY side so a stop-word posting
     * list is never one shuffle key — correct for the intended small
@@ -242,10 +213,7 @@ object TextIndex {
       .withColumn("dbucket", pmod(col("doc"), lit(ndb)).cast("int"))
       .repartition(col("dbucket"))
       .write.mode("overwrite").partitionBy("dbucket").parquet(s"$dir/docids")
-    post.groupBy("term").agg(count(lit(1)).as("df"))
-      .withColumn("bucket", bucketOf(col("term"), nb))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(termBase(dir))
+    termstats(dir, nb).writeBase(termCounts(post))
     StoreMeta.write(spark, dir, n, sum, sumDl, nb, ndb)
     }
   }
@@ -309,7 +277,7 @@ object TextIndex {
         .write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
       batchDocs.repartition(col("dbucket"))
         .write.mode("append").partitionBy("dbucket").parquet(s"$dir/docids")
-      writeTermDelta(spark, dir, post, sign = 1, nBuckets)
+      termstats(dir, nBuckets).addDelta(termCounts(post), sign = 1)
       val (bn, bsum, bDl) = fingerprint(batch, idCol, textCol)
       o.commit("n_docs" -> (meta.getAs[Long]("n_docs") + bn),
         "checksum" -> (meta.getAs[Long]("checksum") ^ bsum),
@@ -362,8 +330,8 @@ object TextIndex {
     val dsum = if (audit.isNullAt(3)) 0L else audit.getLong(3)
     o.window(s"delete of $nDel docs in flight") {
       tombs(dir).append(ids)
-      writeTermDelta(spark, dir, HybridRetrieval.postings(
-        indexable(deleted, textCol), idCol, textCol), sign = -1, nBuckets)
+      termstats(dir, nBuckets).addDelta(termCounts(HybridRetrieval.postings(
+        indexable(deleted, textCol), idCol, textCol)), sign = -1)
       o.commit("n_docs" -> (meta.getAs[Long]("n_docs") - nDel),
         "checksum" -> (meta.getAs[Long]("checksum") ^ dsum),
         "sum_dl" -> (meta.getAs[Long]("sum_dl") - audit.getLong(4)))
@@ -421,7 +389,7 @@ object TextIndex {
     val qBuckets = qterms.select("bucket").distinct()
       .collect().map(_.getInt(0)).toSeq
     if (qBuckets.isEmpty) return empty
-    val df0 = mergedTermStats(spark, dir, Some(qBuckets))
+    val df0 = termstats(dir, nBuckets).merged(spark, Some(qBuckets))
       .join(broadcast(qterms.select("term").distinct()), Seq("term"),
         "left_semi")
       .select(col("term"), col("df").cast("double").as("df"))
@@ -496,21 +464,6 @@ object TextIndex {
       .agg(count(lit(1)).as("n_matches"))
   }
 
-  /** Fold termstats deltas into an exact rewritten base
-    * ([[graft.store.StageSwap.replace]]). In an [[Op.window]] (a crash
-    * between the base rewrite and the delta drop would double-count):
-    * fails later ops loud, ensure() rebuilds. */
-  private def foldTermStats(spark: SparkSession, dir: String): Unit =
-    if (graft.util.Fs.exists(spark, termDelta(dir)))
-      Op.window(spark, dir, "termstats fold in flight") {
-        StageSwap.replace(spark, Table(termBase(dir))) { staging =>
-          mergedTermStats(spark, dir, None).filter(col("df") =!= 0L)
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        }
-        graft.util.Fs.rmTree(spark, termDelta(dir))
-      }
-
   /** Fold tombstones into the store: rewrite ONLY the posting buckets
     * and docid dbuckets that contain deleted rows (crash-safe under the
     * [[graft.store.StageSwap]] contract), drop the tombstone table,
@@ -519,7 +472,8 @@ object TextIndex {
   def compact(spark: SparkSession, dir: String): Unit = {
     Op.mutate(spark, dir, StoreMeta, "compact") { o =>
     StageSwap.recover(spark, postingsT(dir), docidsT(dir))
-    foldTermStats(spark, dir)
+    termstats(dir, o.meta.getAs[Int]("n_buckets"))
+      .fold(spark, dir, "termstats fold in flight")
     val tomb = tombs(dir)
     if (!tomb.exists(spark)) return
     val nDocBuckets = o.meta.getAs[Int]("n_doc_buckets")
@@ -541,15 +495,15 @@ object TextIndex {
     * the same trigger. Rows pass through verbatim — tombstones are
     * deliberately NOT folded here. */
   def compactFiles(spark: SparkSession, dir: String,
-      maxFiles: Int = 16, maxRecordsPerFile: Long = 8000000L): Unit = {
+      maxFiles: Int = 16): Unit = {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    Op.mutate(spark, dir, StoreMeta, "compactFiles") { _ =>
+    Op.mutate(spark, dir, StoreMeta, "compactFiles") { o =>
     StageSwap.recover(spark, postingsT(dir), docidsT(dir))
     Seq(postingsT(dir), docidsT(dir))
-      .foreach(StageSwap.mergeFiles(spark, _, maxFiles, maxRecordsPerFile))
-    if (graft.util.Fs.exists(spark, termDelta(dir)) &&
-      graft.util.Fs.dataFileCount(spark, termDelta(dir)) > maxFiles)
-      foldTermStats(spark, dir)
+      .foreach(StageSwap.mergeFiles(spark, _, maxFiles))
+    val terms = termstats(dir, o.meta.getAs[Int]("n_buckets"))
+    if (terms.deltaFiles(spark) > maxFiles)
+      terms.fold(spark, dir, "termstats fold in flight")
     }
   }
 
@@ -613,7 +567,7 @@ object TextIndex {
       compact(s, dir)
       val compactInvisible = searchRows() == viaStore
       val noTombLeft = !graft.util.Fs.exists(s, s"$dir/tombstones")
-      val noDeltaLeft = !graft.util.Fs.exists(s, termDelta(dir))
+      val noDeltaLeft = !graft.util.Fs.exists(s, s"$dir/termstats/delta")
       val metaDocs = StoreMeta.read(s, dir).getAs[Long]("n_docs")
       val docidsExact = readDocids(s, dir).count() == metaDocs
       val live = corpus.join(delSet.select("doc_id"), Seq("doc_id"),

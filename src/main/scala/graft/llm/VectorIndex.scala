@@ -259,13 +259,13 @@ object VectorIndex {
     * history rather than data. Rewrites, verbatim, ONLY the leaves
     * whose data-file count exceeds `maxFiles`
     * ([[graft.store.StageSwap.mergeFiles]]). */
-  def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
-      maxRecordsPerFile: Long = 8000000L): Unit = {
+  def compactFiles(spark: SparkSession, dir: String,
+      maxFiles: Int = 16): Unit = {
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
     Op.mutate(spark, dir, StoreMeta, "compactFiles") { o =>
     val codes = codesT(dir, filterColOf(o.meta))
     StageSwap.recover(spark, codes)
-    StageSwap.mergeFiles(spark, codes, maxFiles, maxRecordsPerFile)
+    StageSwap.mergeFiles(spark, codes, maxFiles)
     }
   }
 

@@ -21,8 +21,8 @@ object Table {
 /** STAGE-AND-SWAP — the one crash-safe rewrite under every persisted
   * store ([[graft.llm.TextIndex]], [[graft.llm.DedupIndex]],
   * [[graft.llm.VectorIndex]], [[graft.llm.GraphAnn]]): tombstone folds,
-  * file merges, hot-gram recuts and delta folds all replace a set of
-  * LEAVES (a whole table, or its `p=v` / `p1=v1/p2=v2` partition
+  * file merges, hot-gram recuts and [[CountTable.fold]]s all replace a
+  * set of LEAVES (a whole table, or its `p=v` / `p1=v1/p2=v2` partition
   * directories) the same way.
   *
   * Crash-recovery contract:
@@ -41,8 +41,8 @@ object Table {
   * So every leaf reads as either its old or its new rows once recovery
   * has run. Callers keep the rest: tombstones drop only after the swap
   * (merge-on-read stays correct through any crash), and a rewrite that
-  * must land together with another write (a delta fold's base rewrite
-  * and delta drop) sits in an [[Op.window]], because recovery
+  * must land together with another write ([[CountTable.fold]]'s base
+  * rewrite and delta drop) sits in an [[Op.window]], because recovery
   * restores leaves, not cross-table consistency.
   *
   * Leaves are named by their directory relative to the live root
@@ -51,6 +51,10 @@ object Table {
   * `p=value/` names; a null value maps to Spark's default partition
   * name. */
 object StageSwap {
+
+  /** [[mergeFiles]]' output file bounds. */
+  private val MaxRecordsPerFile = 8000000L
+  private val TargetBytes = 128L * 1024 * 1024
 
   /** Hive/Spark directory name of a null partition value. */
   private val NullPartition = "__HIVE_DEFAULT_PARTITION__"
@@ -159,21 +163,19 @@ object StageSwap {
 
   /** FILE-MERGE: rewrite, verbatim, only the leaves holding more than
     * `maxFiles` data files. A partition leaf merges back to one task's
-    * output (`maxRecordsPerFile` re-splits a genuinely huge one); a
-    * whole table re-splits into ~`targetBytes` files. */
-  def mergeFiles(spark: SparkSession, t: Table, maxFiles: Int,
-      maxRecordsPerFile: Long = 8000000L,
-      targetBytes: Long = 128L * 1024 * 1024): Unit = {
+    * output ([[MaxRecordsPerFile]] re-splits a genuinely huge one); a
+    * whole table re-splits into ~[[TargetBytes]] files. */
+  def mergeFiles(spark: SparkSession, t: Table, maxFiles: Int): Unit = {
     val fs = fsOf(spark, t.live)
     val over = leafDirs(fs, t.live, t.parts)
       .filter(rel => partFiles(fs, at(t.live, rel)).length > maxFiles)
     if (over.isEmpty) return
     val rows = spark.read.parquet(t.live)
     if (t.parts.nonEmpty)
-      rewrite(spark, t, rows.filter(within(t, over)), over, maxRecordsPerFile)
+      rewrite(spark, t, rows.filter(within(t, over)), over, MaxRecordsPerFile)
     else {
       val bytes = partFiles(fs, new Path(t.live)).map(_.getLen).sum
-      val nOut = math.max(1L, bytes / targetBytes + 1).toInt
+      val nOut = math.max(1L, bytes / TargetBytes + 1).toInt
       replace(spark, t) { st =>
         rows.repartition(nOut).write.mode("overwrite").parquet(st)
       }

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** A store's merge-on-read delete table, `<dir>/tombstones/`: one
   * long column `key` (`doc` for [[graft.llm.TextIndex]], `nid` for the
@@ -16,9 +17,15 @@ final case class Tombstones(dir: String, key: String) {
 
   def exists(spark: SparkSession): Boolean = graft.util.Fs.exists(spark, path)
 
+  /** Every store appends `cast("long")` ids, so reads declare the one
+    * long column and pay no footer-read job for schema inference. */
+  private def read(spark: SparkSession): DataFrame =
+    spark.read.schema(StructType(Seq(StructField(key, LongType))))
+      .parquet(path)
+
   /** The tombstoned ids, as column `as`. */
   def ids(spark: SparkSession, as: String = key): DataFrame =
-    spark.read.parquet(path).select(col(key).as(as))
+    read(spark).select(col(key).as(as))
 
   /** `rows` minus every row whose id in ANY of `on` (default: the key
     * column) is tombstoned — the anti-join sits above the scan, so a
@@ -26,7 +33,7 @@ final case class Tombstones(dir: String, key: String) {
   def live(spark: SparkSession, rows: DataFrame, on: String*): DataFrame =
     if (!exists(spark)) rows
     else {
-      val dead = spark.read.parquet(path)
+      val dead = read(spark)
       (if (on.isEmpty) Seq(key) else on).foldLeft(rows) { (r, c) =>
         r.join(dead.select(col(key).as(c)), Seq(c), "left_anti")
       }

@@ -21,6 +21,10 @@ class DedupIndexSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
   }
 
+  /** The store's `gramdf/` count table at its meta's bucket count. */
+  private def gramdf(dir: String) = DedupIndex.gramdf(dir,
+    graft.util.Sidecar.readHead(spark, s"$dir/meta").getAs[Int]("n_buckets"))
+
   test("lifecycle: build, probe drops exact copies, append ingests " +
       "survivors, fingerprint stays ensure-valid") {
     graft.util.Fs.rmRecursive(new java.io.File(base))
@@ -536,7 +540,7 @@ class DedupIndexSpec extends SparkSpec {
         .groupBy("gram").agg(count(lit(1)).as("df"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def mergedDf(dir: String): Set[(Long, Long)] = {
-      val rows = DedupIndex.mergedGramDf(spark, dir)
+      val rows = gramdf(dir).merged(spark)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(!rows.exists(_._2 < 0),
         "merged gramdf went NEGATIVE — delta bookkeeping over-deleted")
@@ -618,7 +622,7 @@ class DedupIndexSpec extends SparkSpec {
         .groupBy("gram").agg(count(lit(1)).as("df"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def mergedDf(): Set[(Long, Long)] =
-      DedupIndex.mergedGramDf(spark, dir)
+      gramdf(dir).merged(spark)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
         .filter(_._2 > 0).toSet
     assert(mergedDf() == bruteDf(corpus))
@@ -644,7 +648,7 @@ class DedupIndexSpec extends SparkSpec {
     assert(mergedDf() == bruteDf(live), "the fold changed counts")
     // the pruned read the tick builds lands as DIRECTORY-level pruning
     // (PartitionFilters on gbucket), not a post-scan row filter
-    val pruned = DedupIndex.readGramDfBase(spark, dir, Some(Seq(3, 7)))
+    val pruned = gramdf(dir).base(spark, Some(Seq(3, 7)))
     val plan = pruned.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val pf = plan.linesIterator.find(l =>
