@@ -45,6 +45,31 @@ object Cli {
     s
   }
 
+  /** The explanation block Refit and Predict share: tree importances
+    * (M5) to `out/importances`, and with `runShap` the per-row SHAP
+    * parquet (M3) to `out/shap` plus each predictor's mean |SHAP| (A2)
+    * as an importances column. `rows` holds the model's predictors. */
+  def explain(rows: DataFrame, b: Booster, runShap: Boolean,
+      out: String): Unit = {
+    val spark = rows.sparkSession; import spark.implicits._
+    val (flat, names) = (b.trees.toArray, b.featureNames)
+    var imp = Explain.importances(flat, names, spark)
+    if (runShap) {
+      val shap = Explain.shapContributions(
+        rows, flat, b.weights.toArray, names.length)
+      shap.select(col("iid"), col("shap"), col("margin"))
+        .write.mode("overwrite").parquet(s"$out/shap")
+      imp = imp.join(
+        Explain.meanAbsShap(shap, names.length)
+          .join(names.zipWithIndex.map { case (n, i) => (i, n) }
+            .toDF("pos", "predictors"), "pos")
+          .select(col("predictors"), col("shap_mean_abs")),
+        Seq("predictors"), "left")
+    }
+    Sinks.writeCsv(imp.orderBy(desc("total_gain")), s"$out/importances",
+      coalesce1 = true)
+  }
+
   /** CLI mains own their session's lifecycle EXCEPT when embedded in a
     * host that shares one (tests set `graft.cli.keepSession`). */
   def stop(spark: SparkSession): Unit =
@@ -174,11 +199,12 @@ object Cv {
 /** `scripts/refit.py` — full-data two-stage refit + explanation
   * (SURVEY §3.2). Two independent chains read the one cached bundle and
   * run at the same time ([[Concurrent.both]]):
-  *   - the two-stage refit (M9) → `model/`, `used_cols/`, `shap/` and
+  *   - the two-stage refit (M9) → `used_cols/`, `shap/` and
   *     `importances/`;
-  *   - the one-round CV out-of-fold fits (M7) → Platt fit (M10) →
-  *     `platt/`.
-  * Neither reads the other's output; both use the best CV params.
+  *   - the one-round CV out-of-fold fits (M7) → Platt fit (M10).
+  * Neither reads the other's output; both use the best CV params. When
+  * both finish, `model.json` ([[Booster]]) holds the refit model, its
+  * used predictors as `feature_names` and the Platt pair as attributes.
   */
 object Refit {
   def main(args: Array[String]): Unit = {
@@ -200,43 +226,24 @@ object Refit {
     // also fills the bundle cache before both chains read it
     val nBlocks = bundle.agg(max("block_id")).head().getLong(0) + 1
     val spark2 = spark; import spark2.implicits._
-    val (nUsed, _) = Concurrent.both(
+    val (booster, (pa, pb)) = Concurrent.both(
       {
         // fit #1 on all p, prune to used predictors, fit #2 (M9)
         val (used, model) = Pipeline.shapRefit(bundle, hp, seed)
-        Sinks.saveModel(model, s"$out/model")
-        Sinks.writeCsv(used.map(snpNames).toDF("predictors"),
-          s"$out/used_cols", coalesce1 = true)
-        val flat = Explain.flattenModel(model.trees)
         val usedNames = used.map(snpNames)
-        var imp = Explain.importances(flat, usedNames, spark)
-        val pruned = Pipeline.sliceFeatures(bundle, used)
-        if (runShap) {
-          val shap = Explain.shapContributions(
-            pruned, flat, model.treeWeights, used.length)
-          shap.select(col("iid"), col("shap"), col("margin"))
-            .write.mode("overwrite").parquet(s"$out/shap")
-          imp = imp.join(
-            Explain.meanAbsShap(shap, used.length)
-              .join(usedNames.zipWithIndex.map { case (n, i) => (i, n) }
-                .toDF("pos", "predictors"), "pos")
-              .select(col("predictors"), col("shap_mean_abs")),
-            Seq("predictors"), "left")
-        }
-        Sinks.writeCsv(imp.orderBy(desc("total_gain")), s"$out/importances",
-          coalesce1 = true)
-        used.length
+        val booster = Booster.fromMllib(model, usedNames)
+        Sinks.writeCsv(usedNames.toDF("predictors"),
+          s"$out/used_cols", coalesce1 = true)
+        Cli.explain(Pipeline.sliceFeatures(bundle, used), booster, runShap, out)
+        booster
       },
-      {
-        // Platt from one-round CV out-of-fold predictions (M7 + M10)
-        val oof = Train.oneRoundCv(bundle, k = 3, nBlocks = nBlocks, hp = hp,
-          seed = seed, labelCol = labelCol)
-        val (pa, pb) = Pipeline.fitPlatt(oof)
-        Sinks.writeCsv(Seq((pa, pb)).toDF("platt_a", "platt_b"),
-          s"$out/platt", coalesce1 = true)
-      })
+      // Platt from one-round CV out-of-fold predictions (M7 + M10)
+      Pipeline.fitPlatt(Train.oneRoundCv(bundle, k = 3, nBlocks = nBlocks,
+        hp = hp, seed = seed, labelCol = labelCol)))
+    Booster.write(spark, s"$out/model.json", booster.copy(attributes =
+      Map("platt_a" -> pa.toString, "platt_b" -> pb.toString)))
     bundle.unpersist()
-    println(s"refit done: $nUsed used predictors -> $out")
+    println(s"refit done: ${booster.featureNames.size} used predictors -> $out")
     Cli.stop(spark)
   }
 }
@@ -343,7 +350,10 @@ object Subset {
   }
 }
 
-/** `scripts/predict.py` — score a held-out bundle (SURVEY §3.3).
+/** `scripts/predict.py` — score a held-out bundle (SURVEY §3.3) with
+  * the `model.json` Refit wrote: its predictors name the bundle columns
+  * to align, its trees rebuild the MLlib model that scores them, and its
+  * Platt attributes calibrate the scores.
   * Always writes test-set importances (predict.py:165-172 runs
   * `collect_importances` unconditionally); `--run-shap true` adds the
   * per-row SHAP parquet, `--run-shap-inter true` the interaction
@@ -356,49 +366,36 @@ object Predict {
     val out = a("out")
     val runShap = a.get("run-shap").exists(Config.parseBool)
     val runShapInter = a.get("run-shap-inter").exists(Config.parseBool)
+    val modelPath = s"${a("model-dir")}/model.json"
+    require(graft.util.Fs.exists(spark, modelPath),
+      s"$modelPath not found: Predict reads the model.json that Refit " +
+        "writes (a model dir from an older Refit holds model/ and platt/ " +
+        "instead); re-run Refit")
+    val booster = Booster.read(spark, modelPath)
+    val usedNames = booster.featureNames
     val test = Bundle.read(spark, a("bundle"))
     val cols = Bundle.readCols(spark, a("bundle"))
     val snpNames = cols.orderBy("pos").collect().map(_.getString(1)).toSeq
-    val model = Sinks.loadModel(spark, s"${a("model-dir")}/model")
     // column-align to the model's used feature set (predict.py:124-134);
     // name → position map, NOT per-name indexOf (O(used) vs O(used·p))
-    val usedNames = spark.read.option("header", "true")
-      .csv(s"${a("model-dir")}/used_cols")
-      .collect().map(_.getString(0)).toSeq
     val posByName = snpNames.zipWithIndex.toMap
-    val pos = usedNames.map(n => posByName.getOrElse(n, -1))
-    require(!pos.contains(-1), "test bundle lacks model predictors")
-    val aligned = Train.withVector(Pipeline.sliceFeatures(test, pos)).cache()
-    var preds = Train.predictClassifier(model, aligned)
+    val missing = usedNames.filterNot(posByName.contains)
+    require(missing.isEmpty, s"test bundle lacks ${missing.size} of the " +
+      s"model's ${usedNames.size} predictors, first: " +
+      missing.take(5).mkString(", "))
+    val aligned = Train.withVector(
+      Pipeline.sliceFeatures(test, usedNames.map(posByName))).cache()
+    var preds = Train.predictClassifier(booster.toMllib, aligned)
       .select(col("iid"), col("label").as("y_true"), col("y_pred"))
-    val plattRow = spark.read.option("header", "true")
-      .csv(s"${a("model-dir")}/platt").head()
-    preds = Pipeline.applyPlatt(preds,
-      (plattRow.getString(0).toDouble, plattRow.getString(1).toDouble))
+    preds = Pipeline.applyPlatt(preds, (booster.attributes("platt_a").toDouble,
+      booster.attributes("platt_b").toDouble))
     Sinks.writeCsv(preds, s"$out/predictions", coalesce1 = true)
     val auc = Scoring.auc(preds, "y_true", "y_pred")
-    // test-set explanation (same block shape as Refit, reference
-    // predict.py:165-172)
-    val spark2 = spark; import spark2.implicits._
-    val flat = Explain.flattenModel(model.trees)
-    var imp = Explain.importances(flat, usedNames, spark)
-    if (runShap) {
-      val shap = Explain.shapContributions(
-        aligned, flat, model.treeWeights, usedNames.length)
-      shap.select(col("iid"), col("shap"), col("margin"))
-        .write.mode("overwrite").parquet(s"$out/shap")
-      imp = imp.join(
-        Explain.meanAbsShap(shap, usedNames.length)
-          .join(usedNames.zipWithIndex.map { case (n, i) => (i, n) }
-            .toDF("pos", "predictors"), "pos")
-          .select(col("predictors"), col("shap_mean_abs")),
-        Seq("predictors"), "left")
-    }
-    Sinks.writeCsv(imp.orderBy(desc("total_gain")), s"$out/importances",
-      coalesce1 = true)
+    // test-set explanation (reference predict.py:165-172)
+    Cli.explain(aligned, booster, runShap, out)
     if (runShapInter)
-      Explain.shapInteractionsAll(
-          aligned, flat, model.treeWeights, usedNames.length)
+      Explain.shapInteractionsAll(aligned, booster.trees.toArray,
+          booster.weights.toArray, usedNames.length)
         .write.mode("overwrite").parquet(s"$out/shap_interactions")
     aligned.unpersist()
     println(f"predict done: AUC=$auc%.4f -> $out")

@@ -1,11 +1,11 @@
 package graft.io
 
-import org.apache.spark.ml.classification.GBTClassificationModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Satellite IO — S8 (covariate TSV scan + validation), S9 (CSV sinks),
-  * S11 (model load/save), S12 (HP-results scan incl. directory glob).
+  * S12 (HP-results scan incl. directory glob). S11, the model artifact,
+  * is [[graft.ml.Booster]]'s codec.
   */
 object Sinks {
 
@@ -45,20 +45,6 @@ object Sinks {
   def writeCsv(df: DataFrame, path: String, coalesce1: Boolean = false): Unit = {
     val out = if (coalesce1) df.coalesce(1) else df
     out.write.mode("overwrite").option("header", "true").csv(path)
-  }
-
-  /** S11 — model save/load round-trip + tree-count report
-    * (`daxos/read.py:11-31`). MLlib pipeline persistence replaces the
-    * XGBoost JSON booster format.
-    */
-  def saveModel(model: GBTClassificationModel, path: String): Unit =
-    model.write.overwrite().save(path)
-
-  def loadModel(spark: SparkSession, path: String): GBTClassificationModel = {
-    val m = GBTClassificationModel.load(path)
-    // the reference logs the tree count on load (read.py:25-29)
-    spark.sparkContext.setJobDescription(s"loaded GBT model: ${m.trees.length} trees")
-    m
   }
 
   /** S12 — HP-results scan: one CSV file OR a directory/glob of them,

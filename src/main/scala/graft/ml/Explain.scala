@@ -22,8 +22,10 @@ object Explain {
 
   /** Array-flattened decision tree. `feature(i) == -1` marks a leaf.
     * `cover` is the weighted training-sample count per node (the
-    * conditioning weights of path-dependent TreeSHAP). `expected` is
-    * the cover-weighted mean leaf value (the tree's bias term).
+    * conditioning weights of path-dependent TreeSHAP). `defaultLeft` is
+    * the per-node direction of a missing value (MLlib sends NaN right,
+    * so its trees are all false). `expected` is the cover-weighted mean
+    * leaf value (the tree's bias term).
     */
   final case class FlatTree(
       feature: Array[Int],
@@ -33,7 +35,28 @@ object Explain {
       value: Array[Double],
       cover: Array[Double],
       gain: Array[Double],
-      expected: Double) extends Serializable
+      defaultLeft: Array[Boolean]) extends Serializable {
+
+    lazy val expected: Double = {
+      var s = 0.0
+      var i = 0
+      while (i < feature.length) {
+        if (feature(i) == -1) s += value(i) * cover(i)
+        i += 1
+      }
+      s / cover(0)
+    }
+
+    /** The child of internal node `n` that `x` routes to: MLlib's
+      * `x <= threshold` goes left, and a missing value (NaN, or an index
+      * past the end of `x`) follows `defaultLeft`. */
+    def child(n: Int, x: Array[Double]): Int = {
+      val f = feature(n)
+      val v = if (f < x.length) x(f) else Double.NaN
+      val goLeft = if (java.lang.Double.isNaN(v)) defaultLeft(n) else v <= threshold(n)
+      if (goLeft) left(n) else right(n)
+    }
+  }
 
   def flatten(root: Node): FlatTree = {
     val feats = scala.collection.mutable.ArrayBuffer[Int]()
@@ -59,15 +82,9 @@ object Explain {
       id
     }
     visit(root)
-    val f = feats.toArray
-    var expected = 0.0
-    var i = 0
-    while (i < f.length) {
-      if (f(i) == -1) expected += value(i) * cover(i)
-      i += 1
-    }
-    FlatTree(f, thr.toArray, lef.toArray, rig.toArray, value.toArray,
-      cover.toArray, gain.toArray, expected / cover(0))
+    FlatTree(feats.toArray, thr.toArray, lef.toArray, rig.toArray,
+      value.toArray, cover.toArray, gain.toArray,
+      new Array[Boolean](feats.length))
   }
 
   def flattenModel(trees: Array[DecisionTreeRegressionModel]): Array[FlatTree] =
@@ -83,9 +100,7 @@ object Explain {
     while (m < trees.length) {
       val t = trees(m)
       var n = 0
-      while (t.feature(n) != -1) {
-        n = if (x(t.feature(n)) <= t.threshold(n)) t.left(n) else t.right(n)
-      }
+      while (t.feature(n) != -1) n = t.child(n, x)
       s += weights(m) * t.value(n)
       m += 1
     }
@@ -94,121 +109,81 @@ object Explain {
 
   // ----------------------------------------------------------- TreeSHAP
 
+  // EXTEND / UNWIND of Lundberg et al. (Algorithm 2) over the path
+  // arrays (feature, zero fraction, one fraction, weight).
+
+  private def extend(mF: Array[Int], mZ: Array[Double], mO: Array[Double],
+      mW: Array[Double], len: Int, pz: Double, po: Double, pi: Int): Unit = {
+    mF(len) = pi; mZ(len) = pz; mO(len) = po
+    mW(len) = if (len == 0) 1.0 else 0.0
+    var i = len - 1
+    while (i >= 0) {
+      mW(i + 1) += po * mW(i) * (i + 1).toDouble / (len + 1)
+      mW(i) = pz * mW(i) * (len - i).toDouble / (len + 1)
+      i -= 1
+    }
+  }
+
+  /** Σ of unwound path weights for 1-based element i of an l-element
+    * path — the optimized UNWIND that never materializes the copy. */
+  private def unwoundSum(mZ: Array[Double], mO: Array[Double], mW: Array[Double],
+      l: Int, i: Int): Double = {
+    val one = mO(i - 1); val zero = mZ(i - 1)
+    var total = 0.0
+    if (one != 0) {
+      var n = mW(l - 1)
+      var j = l - 1
+      while (j >= 1) {
+        val tmp = n * l / (j * one)
+        total += tmp
+        n = mW(j - 1) - tmp * zero * (l - j).toDouble / l
+        j -= 1
+      }
+    } else {
+      var j = l - 1
+      while (j >= 1) {
+        total += mW(j - 1) * l / (zero * (l - j))
+        j -= 1
+      }
+    }
+    total
+  }
+
+  /** UNWIND element i (1-based) in place; returns new length. */
+  private def unwind(mF: Array[Int], mZ: Array[Double], mO: Array[Double],
+      mW: Array[Double], l: Int, i: Int): Int = {
+    val one = mO(i - 1); val zero = mZ(i - 1)
+    var n = mW(l - 1)
+    if (one != 0) {
+      var j = l - 1
+      while (j >= 1) {
+        val t2 = mW(j - 1)
+        mW(j - 1) = n * l / (j * one)
+        n = t2 - mW(j - 1) * zero * (l - j).toDouble / l
+        j -= 1
+      }
+    } else {
+      var j = l - 1
+      while (j >= 1) {
+        mW(j - 1) = mW(j - 1) * l / (zero * (l - j))
+        j -= 1
+      }
+    }
+    var j = i - 1
+    while (j < l - 1) {
+      mF(j) = mF(j + 1); mZ(j) = mZ(j + 1); mO(j) = mO(j + 1)
+      j += 1
+    }
+    l - 1
+  }
+
   /** Path-dependent TreeSHAP for one tree, accumulated into `phi`
     * (length p+1, bias at p) scaled by `w`. Implements the EXTEND /
     * UNWIND recursion of Lundberg et al. (Algorithm 2), 0-based.
     */
   def shapTree(t: FlatTree, x: Array[Double], phi: Array[Double], w: Double): Unit = {
-    val pBias = phi.length - 1
-    phi(pBias) += w * t.expected
-
-    def extend(mF: Array[Int], mZ: Array[Double], mO: Array[Double],
-        mW: Array[Double], len: Int, pz: Double, po: Double, pi: Int): Unit = {
-      mF(len) = pi; mZ(len) = pz; mO(len) = po
-      mW(len) = if (len == 0) 1.0 else 0.0
-      var i = len - 1
-      while (i >= 0) {
-        mW(i + 1) += po * mW(i) * (i + 1).toDouble / (len + 1)
-        mW(i) = pz * mW(i) * (len - i).toDouble / (len + 1)
-        i -= 1
-      }
-    }
-
-    /** Σ of unwound path weights for 1-based element i of an l-element
-      * path — the optimized UNWIND that never materializes the copy. */
-    def unwoundSum(mZ: Array[Double], mO: Array[Double], mW: Array[Double],
-        l: Int, i: Int): Double = {
-      val one = mO(i - 1); val zero = mZ(i - 1)
-      var total = 0.0
-      if (one != 0) {
-        var n = mW(l - 1)
-        var j = l - 1
-        while (j >= 1) {
-          val tmp = n * l / (j * one)
-          total += tmp
-          n = mW(j - 1) - tmp * zero * (l - j).toDouble / l
-          j -= 1
-        }
-      } else {
-        var j = l - 1
-        while (j >= 1) {
-          total += mW(j - 1) * l / (zero * (l - j))
-          j -= 1
-        }
-      }
-      total
-    }
-
-    /** UNWIND element i (1-based) in place; returns new length. */
-    def unwind(mF: Array[Int], mZ: Array[Double], mO: Array[Double],
-        mW: Array[Double], l: Int, i: Int): Int = {
-      val one = mO(i - 1); val zero = mZ(i - 1)
-      var n = mW(l - 1)
-      if (one != 0) {
-        var j = l - 1
-        while (j >= 1) {
-          val t2 = mW(j - 1)
-          mW(j - 1) = n * l / (j * one)
-          n = t2 - mW(j - 1) * zero * (l - j).toDouble / l
-          j -= 1
-        }
-      } else {
-        var j = l - 1
-        while (j >= 1) {
-          mW(j - 1) = mW(j - 1) * l / (zero * (l - j))
-          j -= 1
-        }
-      }
-      var j = i - 1
-      while (j < l - 1) {
-        mF(j) = mF(j + 1); mZ(j) = mZ(j + 1); mO(j) = mO(j + 1)
-        j += 1
-      }
-      l - 1
-    }
-
-    def recurse(node: Int, mF0: Array[Int], mZ0: Array[Double],
-        mO0: Array[Double], mW0: Array[Double], len: Int,
-        pz: Double, po: Double, pi: Int): Unit = {
-      val cap = len + 1
-      val mF = java.util.Arrays.copyOf(mF0, cap)
-      val mZ = java.util.Arrays.copyOf(mZ0, cap)
-      val mO = java.util.Arrays.copyOf(mO0, cap)
-      val mW = java.util.Arrays.copyOf(mW0, cap)
-      extend(mF, mZ, mO, mW, len, pz, po, pi)
-      val l = len + 1
-      if (t.feature(node) == -1) {
-        var i = 2
-        while (i <= l) {
-          phi(mF(i - 1)) += w * unwoundSum(mZ, mO, mW, l, i) *
-            (mO(i - 1) - mZ(i - 1)) * t.value(node)
-          i += 1
-        }
-      } else {
-        val d = t.feature(node)
-        val (hot, cold) =
-          if (x(d) <= t.threshold(node)) (t.left(node), t.right(node))
-          else (t.right(node), t.left(node))
-        var iz = 1.0; var io = 1.0
-        var k = -1
-        var i = 0
-        while (i < l && k == -1) {
-          if (mF(i) == d) k = i
-          i += 1
-        }
-        var curLen = l
-        if (k >= 0) {
-          iz = mZ(k); io = mO(k)
-          curLen = unwind(mF, mZ, mO, mW, l, k + 1)
-        }
-        val rj = t.cover(node)
-        recurse(hot, mF, mZ, mO, mW, curLen, iz * t.cover(hot) / rj, io, d)
-        recurse(cold, mF, mZ, mO, mW, curLen, iz * t.cover(cold) / rj, 0.0, d)
-      }
-    }
-
-    recurse(0, new Array[Int](0), new Array[Double](0), new Array[Double](0),
-      new Array[Double](0), 0, 1.0, 1.0, -1)
+    phi(phi.length - 1) += w * t.expected
+    shapTreeConditioned(t, x, phi, w, condFeat = -1, condPresent = false)
   }
 
   /** M3 — appends `shap` (array<double>, length p+1 with the bias last —
@@ -251,72 +226,11 @@ object Explain {
     * are resolved without entering the path — hot-branch-only when
     * `condPresent`, cover-weighted average of both children otherwise
     * (the conditioning device of the SHAP-interaction construction).
-    * `q` carries the conditioning weight product.
+    * `q` carries the conditioning weight product. `condFeat = -1`
+    * conditions on nothing: the feature part of plain TreeSHAP.
     */
   private def shapTreeConditioned(t: FlatTree, x: Array[Double],
       phi: Array[Double], w: Double, condFeat: Int, condPresent: Boolean): Unit = {
-
-    def extend(mF: Array[Int], mZ: Array[Double], mO: Array[Double],
-        mW: Array[Double], len: Int, pz: Double, po: Double, pi: Int): Unit = {
-      mF(len) = pi; mZ(len) = pz; mO(len) = po
-      mW(len) = if (len == 0) 1.0 else 0.0
-      var i = len - 1
-      while (i >= 0) {
-        mW(i + 1) += po * mW(i) * (i + 1).toDouble / (len + 1)
-        mW(i) = pz * mW(i) * (len - i).toDouble / (len + 1)
-        i -= 1
-      }
-    }
-
-    def unwoundSum(mZ: Array[Double], mO: Array[Double], mW: Array[Double],
-        l: Int, i: Int): Double = {
-      val one = mO(i - 1); val zero = mZ(i - 1)
-      var total = 0.0
-      if (one != 0) {
-        var n = mW(l - 1)
-        var j = l - 1
-        while (j >= 1) {
-          val tmp = n * l / (j * one)
-          total += tmp
-          n = mW(j - 1) - tmp * zero * (l - j).toDouble / l
-          j -= 1
-        }
-      } else {
-        var j = l - 1
-        while (j >= 1) {
-          total += mW(j - 1) * l / (zero * (l - j))
-          j -= 1
-        }
-      }
-      total
-    }
-
-    def unwind(mF: Array[Int], mZ: Array[Double], mO: Array[Double],
-        mW: Array[Double], l: Int, i: Int): Int = {
-      val one = mO(i - 1); val zero = mZ(i - 1)
-      var n = mW(l - 1)
-      if (one != 0) {
-        var j = l - 1
-        while (j >= 1) {
-          val t2 = mW(j - 1)
-          mW(j - 1) = n * l / (j * one)
-          n = t2 - mW(j - 1) * zero * (l - j).toDouble / l
-          j -= 1
-        }
-      } else {
-        var j = l - 1
-        while (j >= 1) {
-          mW(j - 1) = mW(j - 1) * l / (zero * (l - j))
-          j -= 1
-        }
-      }
-      var j = i - 1
-      while (j < l - 1) {
-        mF(j) = mF(j + 1); mZ(j) = mZ(j + 1); mO(j) = mO(j + 1)
-        j += 1
-      }
-      l - 1
-    }
 
     def recurse(node: Int, mF0: Array[Int], mZ0: Array[Double],
         mO0: Array[Double], mW0: Array[Double], len: Int,
@@ -324,8 +238,7 @@ object Explain {
       if (t.feature(node) == condFeat && t.feature(node) != -1) {
         // conditioning feature: resolve, do NOT extend the path
         if (condPresent) {
-          val hot = if (x(condFeat) <= t.threshold(node)) t.left(node) else t.right(node)
-          recurse(hot, mF0, mZ0, mO0, mW0, len, pz, po, pi, q)
+          recurse(t.child(node, x), mF0, mZ0, mO0, mW0, len, pz, po, pi, q)
         } else {
           val rj = t.cover(node)
           recurse(t.left(node), mF0, mZ0, mO0, mW0, len, pz, po, pi,
@@ -353,9 +266,8 @@ object Explain {
         }
       } else {
         val d = t.feature(node)
-        val (hot, cold) =
-          if (x(d) <= t.threshold(node)) (t.left(node), t.right(node))
-          else (t.right(node), t.left(node))
+        val hot = t.child(node, x)
+        val cold = if (hot == t.left(node)) t.right(node) else t.left(node)
         var iz = 1.0; var io = 1.0
         var k = -1
         var i = 0
@@ -385,8 +297,7 @@ object Explain {
     def g(n: Int, q: Double): Double =
       if (t.feature(n) == -1) q * t.value(n)
       else if (t.feature(n) == condFeat && condPresent) {
-        val hot = if (x(condFeat) <= t.threshold(n)) t.left(n) else t.right(n)
-        g(hot, q)
+        g(t.child(n, x), q)
       } else {
         val rj = t.cover(n)
         g(t.left(n), q * t.cover(t.left(n)) / rj) +

@@ -3,7 +3,7 @@ package graft.ml
 import graft.{QueryDef, Tables}
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pipeline layer — M8 (incremental refit), M9 (two-stage "shap refit" +
@@ -175,75 +175,22 @@ object Pipeline {
     * (crossvalidate.py:203-240). MLlib's GBT cannot warm-start, so the
     * boosting loop is explicit: per round, fit a regression tree to the
     * logistic pseudo-residuals (y − σ(margin)) and append it with
-    * weight `eta`. Checkpointing = the growing FlatTree list, which is
-    * exactly what [[Explain]] consumes.
+    * weight `eta`. The model is a [[Booster]] of margin scale 1 (the
+    * growing FlatTree list, exactly what [[Explain]] consumes); the
+    * reference saves the booster every round so a long refit can
+    * resume after a failure (crossvalidate.py:218-236), and
+    * `checkpoint` is the file [[Booster.write]] replaces after each
+    * round.
     */
-  final case class IncrementalModel(
-      baseMargin: Double,
-      trees: Vector[Explain.FlatTree],
-      weights: Vector[Double]) {
-    def predictCol(df: DataFrame, featuresCol: String = "features"): DataFrame = {
-      val spark = df.sparkSession
-      val bcT = spark.sparkContext.broadcast(trees.toArray)
-      val bcW = spark.sparkContext.broadcast(weights.toArray)
-      val bm = baseMargin
-      val marginUdf = udf { (feats: Seq[Float]) =>
-        val x = new Array[Double](feats.length)
-        var i = 0
-        while (i < x.length) { x(i) = feats(i).toDouble; i += 1 }
-        bm + Explain.margin(bcT.value, bcW.value, x)
-      }
-      df.withColumn("margin", marginUdf(col(featuresCol)))
-        .withColumn("y_pred", lit(1.0) / (lit(1.0) + exp(-col("margin"))))
-    }
-  }
-
-  /** S11/M8 persistence — the growing FlatTree list as ONE parquet
-    * (crossvalidate.py:218-236 saves/loads the booster every round so a
-    * long refit can resume after a failure). One row per tree carrying
-    * its flattened arrays + weight; a sentinel row (idx = −1) always
-    * carries `base_margin` so the empty model round-trips too. Trees
-    * are broadcast-sized, so the driver-side collect on load is the
-    * same data the predict path ships anyway.
-    */
-  def saveIncremental(model: IncrementalModel, path: String,
-      spark: SparkSession): Unit = {
-    import spark.implicits._
-    val sentinel = (-1, 0.0, model.baseMargin, Array.empty[Int],
-      Array.empty[Double], Array.empty[Int], Array.empty[Int],
-      Array.empty[Double], Array.empty[Double], Array.empty[Double], 0.0)
-    val rows = sentinel +: model.trees.toList.zipWithIndex.map { case (t, i) =>
-      (i, model.weights(i), model.baseMargin, t.feature, t.threshold,
-        t.left, t.right, t.value, t.cover, t.gain, t.expected)
-    }
-    rows.toDF("idx", "weight", "base_margin", "feature", "threshold",
-        "left", "right", "value", "cover", "gain", "expected")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def loadIncremental(spark: SparkSession, path: String): IncrementalModel = {
-    val rows = spark.read.parquet(path).orderBy("idx").collect()
-    require(rows.nonEmpty && rows.head.getInt(0) == -1,
-      s"not an incremental-model checkpoint (no sentinel row): $path")
-    val trees = rows.tail.map { r =>
-      Explain.FlatTree(
-        r.getSeq[Int](3).toArray, r.getSeq[Double](4).toArray,
-        r.getSeq[Int](5).toArray, r.getSeq[Int](6).toArray,
-        r.getSeq[Double](7).toArray, r.getSeq[Double](8).toArray,
-        r.getSeq[Double](9).toArray, r.getDouble(10))
-    }.toVector
-    IncrementalModel(rows.head.getDouble(2), trees,
-      rows.tail.map(_.getDouble(1)).toVector)
-  }
-
   def fitIncremental(bundle: DataFrame, rounds: Int, treesPerRound: Int,
       subsampleFrac: Double, eta: Double, maxDepth: Int, seed: Long,
-      start: Option[IncrementalModel] = None,
+      start: Option[Booster] = None,
       labelCol: String = "label",
-      checkpointDir: Option[String] = None): IncrementalModel = {
+      checkpoint: Option[String] = None): Booster = {
     val pBar = bundle.agg(avg(col(labelCol))).head().getDouble(0)
     val base = math.log(pBar / (1.0 - pBar))
-    var model = start.getOrElse(IncrementalModel(base, Vector.empty, Vector.empty))
+    var model = start.getOrElse(
+      Booster(Vector.empty, Vector.empty, base, 1.0, Booster.Logistic))
     for (r <- 0 until rounds) {
       // R6: fresh seeded subsample per round
       val sample = Train.readSubsample(bundle, subsampleFrac, seed, r)
@@ -259,15 +206,13 @@ object Pipeline {
           .setLabelCol("_resid").setFeaturesCol("fv")
           .setMaxDepth(maxDepth).setSeed(seed + r * 131 + stage)
           .fit(withResid)
-        m = IncrementalModel(m.baseMargin,
-          m.trees :+ Explain.flatten(tree.rootNode), m.weights :+ eta)
+        m = m.copy(trees = m.trees :+ Explain.flatten(tree.rootNode),
+          weights = m.weights :+ eta)
         stage += 1
       }
       withResid.unpersist()
       model = m
-      // reference checkpoints the booster every round (resume point)
-      checkpointDir.foreach(dir =>
-        saveIncremental(model, dir, bundle.sparkSession))
+      checkpoint.foreach(Booster.write(bundle.sparkSession, _, model))
     }
     model
   }
@@ -480,10 +425,10 @@ object Pipeline {
     { (s, d) =>
     val cfg = Sim.Config(n = 1000L, p = 10, seed = 31L, chunkRows = 100L)
     val bundle = Sim.bundle(s, cfg).cache()
-    val ckpt = graft.util.Fixtures.dir + "/incremental_ckpt"
+    val ckpt = graft.util.Fixtures.dir + "/incremental_ckpt.json"
     val m3rounds = fitIncremental(bundle, rounds = 3, treesPerRound = 2,
       subsampleFrac = 0.7, eta = 0.3, maxDepth = 3, seed = 13L,
-      checkpointDir = Some(ckpt))
+      checkpoint = Some(ckpt))
     val auc3 = Scoring.auc(m3rounds.predictCol(bundle), "label", "y_pred")
     // warm start: one more round continuing from the in-memory state
     val m4rounds = fitIncremental(bundle, rounds = 1, treesPerRound = 2,
@@ -495,7 +440,7 @@ object Pipeline {
     // exactly (bit-equal sum over the corpus)
     val resumed = fitIncremental(bundle, rounds = 1, treesPerRound = 2,
       subsampleFrac = 0.7, eta = 0.3, maxDepth = 3, seed = 41L,
-      start = Some(loadIncremental(s, ckpt)))
+      start = Some(Booster.read(s, ckpt)))
     val sumMem = m4rounds.predictCol(bundle)
       .agg(sum(col("y_pred"))).head().getDouble(0)
     val sumRes = resumed.predictCol(bundle)
@@ -516,8 +461,8 @@ object Pipeline {
     benchEligible = false)
 
   /** M9+S11 rows-only entry: two-stage refit prunes to the used feature
-    * set; the pruned model round-trips through save/load with identical
-    * predictions.
+    * set; the pruned model round-trips through the [[Booster]] codec and
+    * the rebuilt MLlib model predicts identically.
     */
   val m9 = QueryDef(
     "m9_shap_refit_model_io",
@@ -529,9 +474,10 @@ object Pipeline {
     val pruned = Train.withVector(sliceFeatures(bundle, used)).cache()
     val aucPruned = Scoring.auc(Train.predictClassifier(m2, pruned), "label", "y_pred")
     // S11 round-trip
-    val path = graft.util.Fixtures.dir + "/gbt_model"
-    graft.io.Sinks.saveModel(m2, path)
-    val loaded = graft.io.Sinks.loadModel(s, path)
+    val path = graft.util.Fixtures.dir + "/gbt_model.json"
+    Booster.write(s, path, Booster.fromMllib(m2,
+      used.map(Sim.snpNames(cfg.p, cfg.seed))))
+    val loaded = Booster.read(s, path).toMllib
     val predA = Train.predictClassifier(m2, pruned)
       .agg(sum(col("y_pred"))).head().getDouble(0)
     val predB = Train.predictClassifier(loaded, pruned)

@@ -1,206 +1,18 @@
 package graft.ml
 
 import graft.QueryDef
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** XGBoost JSON booster import — the reference's model-load path
   * (daxos/read.py:11-31 loads a trained XGBoost booster for
-  * prediction) re-expressed with NO xgboost dependency: the public
-  * JSON model schema (XGBoost docs, "Introduction to Model IO" —
-  * stable since 1.0) is parsed with json4s (ships with Spark) into
-  * primitive arrays, and prediction is a broadcast-model kernel
-  * traversing each tree per row — one narrow pass over the feature
-  * matrix, no shuffle, trees and thresholds folded into the closure.
-  * A user with an existing XGBoost model can now run it through this
-  * engine without the xgboost runtime.
-  *
-  * Schema facts the parser relies on (all public):
-  *  - `learner.gradient_booster.model.trees[*]` hold parallel arrays
-  *    `split_indices`, `split_conditions`, `left_children`,
-  *    `right_children`, `default_left`; a node is a leaf iff
-  *    `left_children[i] == -1`, and a LEAF's output value is stored in
-  *    `split_conditions[i]`.
-  *  - routing: missing feature (NaN) follows `default_left`; otherwise
-  *    `x(split_indices(i)) < split_conditions(i)` goes left.
-  *  - `learner.learner_model_param.base_score` is the global bias —
-  *    in probability space for `binary:logistic` (margin bias is its
-  *    logit), in output space for `reg:squarederror`.
+  * prediction) with NO xgboost dependency: [[Booster.read]], the codec
+  * Refit writes its model with, reads a foreign XGBoost JSON model into
+  * the same flat trees, and [[Booster.predictCol]] scores it as one
+  * narrow pass over the feature matrix. This object holds the gate: a
+  * fixture model file in the real schema and the m24 query that loads
+  * it through the codec.
   */
 object XgbImport {
-
-  final case class XgbTree(
-      splitIndices: Array[Int], splitConditions: Array[Double],
-      leftChildren: Array[Int], rightChildren: Array[Int],
-      defaultLeft: Array[Boolean]) {
-    def leafValue(x: Array[Double]): Double = {
-      var i = 0
-      while (leftChildren(i) != -1) {
-        val f = splitIndices(i)
-        val v = if (f < x.length) x(f) else Double.NaN
-        i = if (java.lang.Double.isNaN(v)) {
-          if (defaultLeft(i)) leftChildren(i) else rightChildren(i)
-        } else if (v < splitConditions(i)) leftChildren(i)
-        else rightChildren(i)
-      }
-      splitConditions(i)
-    }
-  }
-
-  final case class XgbModel(trees: Array[XgbTree], baseScore: Double,
-      objective: String) {
-    def margin(x: Array[Double]): Double = {
-      var s = marginBias
-      var t = 0
-      while (t < trees.length) { s += trees(t).leafValue(x); t += 1 }
-      s
-    }
-    private def marginBias: Double = objective match {
-      case "binary:logistic" =>
-        math.log(baseScore / (1.0 - baseScore)) // logit of the stored prob
-      case _ => baseScore
-    }
-    def predictRow(x: Array[Double]): Double = objective match {
-      case "binary:logistic" => 1.0 / (1.0 + math.exp(-margin(x)))
-      case _ => margin(x)
-    }
-  }
-
-  import org.json4s._
-
-  private def darr(v: JValue): Array[Double] = v match {
-    case JArray(xs) => xs.map {
-      case JDouble(d) => d
-      case JInt(i) => i.toDouble
-      case JDecimal(d) => d.toDouble
-      case JLong(l) => l.toDouble
-      case other => sys.error(s"xgb json: non-numeric array element $other")
-    }.toArray
-    case other => sys.error(s"xgb json: expected array, got $other")
-  }
-  private def iarr(v: JValue): Array[Int] = darr(v).map(_.toInt)
-  private def barr(v: JValue): Array[Boolean] = v match {
-    case JArray(xs) => xs.map {
-      case JBool(b) => b
-      case JInt(i) => i != 0
-      case JDouble(d) => d != 0.0
-      case JLong(l) => l != 0L
-      case other => sys.error(s"xgb json: non-bool array element $other")
-    }.toArray
-    case other => sys.error(s"xgb json: expected array, got $other")
-  }
-
-  /** Supported envelope (enforced, not just documented): single-target
-    * `gbtree` boosters with `num_parallel_tree == 1` and `num_class` ∈
-    * {0, 1} — i.e. plain boosted regression/binary-classification
-    * ensembles, the shape daxos trains. Everything outside it fails
-    * LOUD at parse time with a message naming the unsupported feature:
-    *  - dart / gblinear boosters (dart needs per-tree drop weights at
-    *    prediction time; gblinear is not a tree model at all);
-    *  - `num_parallel_tree > 1` boosted random forests (plain leaf
-    *    summation happens to match XGBoost for them, but we refuse to
-    *    guess silently until a truth fixture pins it);
-    *  - multi-class models (prediction needs `tree_info` class routing).
-    */
-  def parse(json: String): XgbModel = {
-    val root = org.json4s.jackson.JsonMethods.parse(json)
-    val learner = root \ "learner"
-    (learner \ "gradient_booster" \ "name") match {
-      case JString("gbtree") => ()
-      case JString(other) => sys.error(
-        s"xgb json: unsupported booster '$other' — only 'gbtree' is " +
-          "supported (dart needs drop-weight handling, gblinear is not " +
-          "a tree ensemble)")
-      case JNothing => () // older dumps omit the name; trees[] shape decides
-      case other => sys.error(s"xgb json: booster name $other")
-    }
-    (learner \ "gradient_booster" \ "model" \ "gbtree_model_param" \
-        "num_parallel_tree") match {
-      case JString(s) if s.trim.toIntOption.exists(_ > 1) => sys.error(
-        s"xgb json: num_parallel_tree=$s — boosted random forests are " +
-          "not supported; retrain with num_parallel_tree=1")
-      case _ => ()
-    }
-    (learner \ "learner_model_param" \ "num_class") match {
-      case JString(s) if s.trim.toIntOption.exists(_ > 1) => sys.error(
-        s"xgb json: num_class=$s — multi-class boosters are not " +
-          "supported (prediction would need tree_info class routing)")
-      case _ => ()
-    }
-    val treesJ = (learner \ "gradient_booster" \ "model" \ "trees") match {
-      case JArray(ts) => ts
-      case other => sys.error(s"xgb json: trees not an array: $other")
-    }
-    val trees = treesJ.map { t =>
-      val tree = XgbTree(
-        iarr(t \ "split_indices"), darr(t \ "split_conditions"),
-        iarr(t \ "left_children"), iarr(t \ "right_children"),
-        barr(t \ "default_left"))
-      val n = tree.splitConditions.length
-      require(Seq(tree.splitIndices.length, tree.leftChildren.length,
-          tree.rightChildren.length, tree.defaultLeft.length).forall(_ == n),
-        s"xgb json: ragged tree arrays (n=$n)")
-      // child pointers: -1/-1 marks a leaf; internal nodes must point
-      // STRICTLY FORWARD (XGBoost emits trees in BFS order, so parent
-      // index < child index always holds for well-formed files). The
-      // forward check is what makes traversal provably terminate —
-      // `l < n` alone admits self-loops (l == i) and stray negatives,
-      // which would spin or crash the executor UDF instead of failing
-      // loud at parse time.
-      require(tree.leftChildren.zip(tree.rightChildren).zipWithIndex
-          .forall { case ((l, r), i) =>
-            (l == -1 && r == -1) || (l > i && r > i && l < n && r < n) },
-        "xgb json: malformed child pointers (cycle, backward edge, or " +
-          "out-of-range index)")
-      tree
-    }.toArray
-    require(trees.nonEmpty, "xgb json: zero trees")
-    val baseScore = (learner \ "learner_model_param" \ "base_score") match {
-      case JString(s) => s.toDouble // stored as a string in the schema
-      case JDouble(d) => d
-      case other => sys.error(s"xgb json: base_score $other")
-    }
-    val objective = (learner \ "objective" \ "name") match {
-      case JString(s) => s
-      case other => sys.error(s"xgb json: objective $other")
-    }
-    XgbModel(trees, baseScore, objective)
-  }
-
-  /** Load a model FILE. Only the JSON format is supported; the two
-    * binary on-disk formats XGBoost's `Booster.save_model` can emit are
-    * detected by magic/shape and rejected with a message that names the
-    * fix, instead of surfacing as a cryptic JSON parse error:
-    *  - legacy binary `.model` files start with the `binf` magic;
-    *  - UBJSON `.ubj` files are binary-tagged (NUL/length-marker bytes
-    *    in the head, never valid JSON).
-    */
-  def loadFile(path: String): XgbModel = {
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path))
-    val head = bytes.take(256)
-    val isBinfMagic = head.length >= 4 &&
-      head(0) == 'b' && head(1) == 'i' && head(2) == 'n' && head(3) == 'f'
-    require(!isBinfMagic,
-      s"$path is a legacy XGBoost BINARY .model file (magic 'binf'); " +
-        "this importer reads the JSON format only — re-save it with " +
-        "Booster.save_model('model.json') and load that")
-    require(!head.exists(b => b == 0 || (b >= 0 && b < 9)),
-      s"$path is not JSON text (binary bytes in the head — a UBJSON " +
-        ".ubj or other binary dump?); re-save the booster with " +
-        "Booster.save_model('model.json') and load that")
-    parse(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  /** Distributed prediction: broadcast the parsed model, traverse per
-    * row. `featuresCol` is array<double> (NaN = missing, the XGBoost
-    * convention). Adds `y_pred`. */
-  def predict(model: XgbModel, df: DataFrame,
-      featuresCol: String = "features"): DataFrame = {
-    val bc = df.sparkSession.sparkContext.broadcast(model)
-    val p = udf { (xs: Seq[Double]) => bc.value.predictRow(xs.toArray) }
-    df.withColumn("y_pred", p(col(featuresCol)))
-  }
 
   // ---------------------------------------------------------------- fixture
 
@@ -252,7 +64,7 @@ object XgbImport {
       | "version": [1, 7, 6]}""".stripMargin
 
   /** M24 — XGBoost import gate, FULL DuckDB oracle: the fixture model
-    * file is written to disk, loaded through the file path, and run
+    * file is written to disk, loaded through the codec, and run
     * over a deterministic 500-row feature table (x1 punched to NaN
     * every 13th row, exercising `default_left` routing on tree 1 and
     * the non-default branch on tree 0). The oracle replays BOTH trees
@@ -270,15 +82,15 @@ object XgbImport {
       val path = new java.io.File(dir, "m24_model.json").getAbsolutePath
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
         fixtureJson)
-      val model = loadFile(path)
-      val ok = model.trees.length == 2 && model.objective == "binary:logistic"
+      val model = Booster.read(s, path)
+      val ok = model.trees.length == 2 && model.objective == Booster.Logistic
       val feats = s.range(0, 500).select(col("id"),
         array(
           (col("id") % 7).cast("double") / 7.0,
           when(col("id") % 13 === 0, lit(Double.NaN))
             .otherwise((col("id") % 11).cast("double") / 11.0))
           .as("features"))
-      predict(model, feats)
+      model.predictCol(feats)
         .select(col("id"), round(col("y_pred"), 6).as("prob"))
         .filter(lit(ok))
     },

@@ -60,9 +60,9 @@ class EmptyInputSpec extends SparkSpec {
 
   test("xgb predict: empty feature frame in, empty out") {
     val s = spark; import s.implicits._
-    val model = graft.ml.XgbImport.parse(graft.ml.XgbImport.fixtureJson)
+    val model = graft.ml.Booster.parse(graft.ml.XgbImport.fixtureJson)
     val empty = Seq.empty[(Long, Seq[Double])].toDF("id", "features")
-    assert(graft.ml.XgbImport.predict(model, empty).count() == 0)
+    assert(model.predictCol(empty).count() == 0)
   }
 
   test("retrieval family: empty corpus in, empty out") {

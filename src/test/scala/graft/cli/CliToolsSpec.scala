@@ -113,4 +113,36 @@ class CliToolsSpec extends SparkSpec {
       .select("features_adj").head().getSeq[Float](0)
     assert(got2 == want)
   }
+
+  test("Predict without model.json fails before any job, naming the file") {
+    // a model dir as an older Refit left it: MLlib's model/ plus platt/
+    Files.createDirectories(Paths.get(s"$dir/oldrefit/model/metadata"))
+    Files.createDirectories(Paths.get(s"$dir/oldrefit/platt"))
+    var e: Throwable = null
+    val jobs = jobsRun {
+      e = intercept[IllegalArgumentException] {
+        Predict.main(Array("--bundle", s"$dir/no_store",
+          "--model-dir", s"$dir/oldrefit", "--out", s"$dir/oldpred"))
+      }
+    }
+    assert(jobs == 0)
+    assert(e.getMessage.contains(s"$dir/oldrefit/model.json"))
+    assert(e.getMessage.contains("re-run Refit"))
+  }
+
+  test("Predict names the first model predictors the test bundle lacks") {
+    val (cfg, store) = mkStore()
+    val names = Sim.snpNames(cfg.p, cfg.seed)
+    val leaf = graft.ml.Explain.FlatTree(Array(-1), Array(0.0), Array(-1),
+      Array(-1), Array(0.1), Array(1.0), Array(0.0), Array(false))
+    graft.ml.Booster.write(spark, s"$dir/foreignrefit/model.json",
+      graft.ml.Booster(Vector(leaf), Vector(1.0), 0.0, 2.0,
+        graft.ml.Booster.Logistic, Seq(names(0), "rs_absent_A", "rs_gone_T")))
+    val e = intercept[IllegalArgumentException] {
+      Predict.main(Array("--bundle", store,
+        "--model-dir", s"$dir/foreignrefit", "--out", s"$dir/foreignpred"))
+    }
+    assert(e.getMessage.contains("lacks 2 of the model's 3 predictors"))
+    assert(e.getMessage.contains("rs_absent_A, rs_gone_T"))
+  }
 }

@@ -61,9 +61,11 @@ class E2ESpec extends SparkSpec {
     val cvr = graft.io.Sinks.readHpResults(s2, s"$dir/cv/cv_results/*.csv")
     assert(cvr.count() == 4) // 2 params x 2 folds
     // refit artifacts
-    assert(Files.exists(Paths.get(s"$dir/refit/model")))
     val used = s2.read.option("header", "true").csv(s"$dir/refit/used_cols")
     assert(used.count() > 0 && used.count() <= cfg.p)
+    // the model artifact parses and names the used predictors
+    assert(graft.ml.Booster.read(s2, s"$dir/refit/model.json").featureNames ==
+      used.collect().map(_.getString(0)).toSeq)
     val imp = s2.read.option("header", "true").csv(s"$dir/refit/importances")
     assert(imp.columns.contains("shap_mean_abs"))
     assert(s2.read.parquet(s"$dir/refit/shap").count() == cfg.n)
