@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main. Forces FULL evaluation of every declared query via a
@@ -12,28 +12,7 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // v2 file-output commit: task outputs move to the destination at
-      // task commit, so job commit skips the second sequential rename
-      // pass over every partition directory — the store lifecycles
-      // write dozens of small partitioned file-sets per query, and the
-      // rename pass serializes on the driver at any scale (guide §6's
-      // commit-cost point; object-store deployments would use a
-      // manifest committer for the same reason). Crash-safety contract
-      // is unchanged for these queries: every store write already sits
-      // behind an ingest marker / stage-and-swap (a half-committed
-      // task set fails loud and rebuilds), and bench/verify outputs
-      // are whole-directory overwrites.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft.Bench", GraftSession.hostCores)
     // Warm up the session before timing anything: scheduler, codegen,
     // shuffle, and the noop committer all initialize here instead of
     // inside whichever query happens to run first. Also first-touch the
@@ -129,15 +108,9 @@ object Bench {
     val peakMb = scala.collection.mutable.LinkedHashMap[String, Double]()
     // Shared-host noise is the recurring confounder in round-over-round
     // bench comparisons (r10/r11 both had 1.5-5x scatter on sub-second
-    // queries traced to ambient load). Record /proc/loadavg at start and
-    // end plus the core count so every artifact is self-describing: a
-    // load1 near 0 means the numbers are clean; load1 >> nCores/4 means
-    // treat regressions as suspect before A/B-ing code.
-    def loadAvg(): String = try {
-      scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(3).mkString(" ")
-    } catch { case _: Throwable => "unavailable" }
-    val loadStart = loadAvg()
+    // queries traced to ambient load): the artifact records the load at
+    // start and end plus the core count.
+    val loadStart = GraftSession.loadAvg()
     // dev-loop filter: SPARK_GRAFT_BENCH_ONLY=d2_minhash_lsh,d4_… times
     // just those queries; unset (the driver's mode) runs everything
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -150,15 +123,6 @@ object Bench {
     // cost unchanged.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
-    // harness-test hook: SPARK_GRAFT_BENCH_FAULT=<query>:<rep> makes that
-    // query throw on that 0-based rep, to exercise (and demonstrate) the
-    // partial-median-plus-error reporting path without a real flaky query
-    val fault = sys.env.get("SPARK_GRAFT_BENCH_FAULT").flatMap { v =>
-      v.split(":") match {
-        case Array(n, r) => r.toIntOption.map(n -> _)
-        case _ => None
-      }
-    }
     val nSamples = scala.collection.mutable.LinkedHashMap[String, Int]()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -185,8 +149,6 @@ object Bench {
         resetHeapPeaks()
         val t0 = System.nanoTime()
         try {
-          if (fault.contains(name -> rep))
-            throw new RuntimeException(s"injected fault at rep $rep")
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           samples += (System.nanoTime() - t0) / 1e9
           // max over reps: the worst observed footprint is the number a
@@ -224,10 +186,9 @@ object Bench {
     val pks = peakMb.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val timing = if (reps > 1) "warm-median" else "cold-single-shot"
     val total = times.values.sum
-    val loadEnd = loadAvg()
-    // the cores the session honours (the master is local[$cpus]), not
-    // the host's processor count
-    val cores = cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors())
+    val loadEnd = GraftSession.loadAvg()
+    // the cores the session honours, not the host's processor count
+    val cores = spark.sparkContext.defaultParallelism
     // names whose timing is the store-ops-only bench variant (full
     // gate choreography runs in Verify only) — self-describing artifact
     val variants = SparkEntry.benchVariantNames

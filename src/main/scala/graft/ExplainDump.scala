@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main behind PLANS.md: prints the formatted physical plan
   * of each named query.
   *
@@ -23,16 +21,7 @@ object ExplainDump {
         SparkEntry.registry.map(_.name).sorted.mkString("\n  "))
     val unknown = names.filterNot(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession("graft.ExplainDump", 4)
     // SPARK_GRAFT_EXPLAIN_BENCH=1 explains the BENCH form (the timed
     // store-op variant) — for the lifecycle queries the Verify form's
     // final frame is a gate aggregate over a checkpoint, while the

@@ -55,16 +55,10 @@ object LocalClusterSmoke {
     SparkSession.clearDefaultSession()
     val classes =
       new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,2,2048]")
-      .config("spark.executor.extraClassPath", classes)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.GraftSession.build("graft.LocalClusterSmoke",
+      "local-cluster[2,2,2048]", 8,
+      Map("spark.executor.extraClassPath" -> classes,
+        "spark.executor.extraJavaOptions" -> addOpens))
     // driver shows up in the memory-status map too, hence >= 3
     var waited = 0
     while (spark.sparkContext.getExecutorMemoryStatus.size < 3 &&

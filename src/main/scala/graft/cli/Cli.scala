@@ -3,7 +3,7 @@ package graft.cli
 import graft.io.{Bundle, Plink, Sinks}
 import graft.ml._
 import graft.ops.Splits
-import graft.util.Config
+import graft.util.{Config, GraftSession}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,20 +30,9 @@ object Cli {
     }.toMap
   }
 
-  def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .appName(name)
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The CLIs' session, on 4 cores unless `SPARK_GRAFT_CPUS` says
+    * otherwise: the CV folds and fits depend on the partition count. */
+  def session(name: String): SparkSession = GraftSession(name, 4)
 
   /** The explanation block Refit and Predict share: tree importances
     * (M5) to `out/importances`, and with `runShap` the per-row SHAP

@@ -206,49 +206,58 @@ object Dedup {
     */
   def shingleHashes(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     graft.util.Ids.requireLongCompatible(docs, idCol, "shingleHashes")
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.Platform
     val spark = docs.sparkSession
     import spark.implicits._
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).cast("long"), encode(col(textCol), "UTF-8"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
-        var starts = new Array[Int](256)
-        var buf = new Array[Long](256)
-        it.map { case (id, bytes) =>
-          val len = bytes.length
-          val (st, nToks) = ByteSliceText.tokenStarts(bytes, starts)
-          starts = st
-          var n = 0
-          if (nToks < 3) {
-            buf(0) = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, len, 42L)
-            n = 1
-          } else {
-            val m = nToks - 2
-            if (buf.length < m)
-              buf = new Array[Long](Integer.highestOneBit(m) * 2)
-            var w = 0
-            while (w <= nToks - 3) {
-              val s0 = starts(w)
-              val end = if (w + 3 < nToks) starts(w + 3) - 2 else len - 1
-              buf(w) = XXH64.hashUnsafeBytes(
-                bytes, Platform.BYTE_ARRAY_OFFSET + s0, end - s0 + 1, 42L)
-              w += 1
-            }
-            n = m
-          }
-          val arr = java.util.Arrays.copyOf(buf, n)
-          java.util.Arrays.sort(arr)
-          var out = 0
-          var i = 0
-          while (i < n) { // in-place dedup of the sorted hashes
-            if (out == 0 || arr(out - 1) != arr(i)) { arr(out) = arr(i); out += 1 }
-            i += 1
-          }
-          (id, java.util.Arrays.copyOf(arr, out))
-        }
+        val shingle = new Shingler
+        it.map { case (id, bytes) => (id, shingle(bytes)) }
       }.toDF(idCol, "sh")
+  }
+
+  /** The [[shingleHashes]] kernel: a doc's UTF-8 bytes to its distinct
+    * hashed token 3-grams, sorted. Reuses its buffers across calls, so
+    * one instance serves a whole partition. */
+  private[llm] final class Shingler {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.unsafe.Platform
+    private var starts = new Array[Int](256)
+    private var buf = new Array[Long](256)
+
+    def apply(bytes: Array[Byte]): Array[Long] = {
+      val len = bytes.length
+      val (st, nToks) = ByteSliceText.tokenStarts(bytes, starts)
+      starts = st
+      var n = 0
+      if (nToks < 3) {
+        buf(0) = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+        n = 1
+      } else {
+        val m = nToks - 2
+        if (buf.length < m)
+          buf = new Array[Long](Integer.highestOneBit(m) * 2)
+        var w = 0
+        while (w <= nToks - 3) {
+          val s0 = starts(w)
+          val end = if (w + 3 < nToks) starts(w + 3) - 2 else len - 1
+          buf(w) = XXH64.hashUnsafeBytes(
+            bytes, Platform.BYTE_ARRAY_OFFSET + s0, end - s0 + 1, 42L)
+          w += 1
+        }
+        n = m
+      }
+      val arr = java.util.Arrays.copyOf(buf, n)
+      java.util.Arrays.sort(arr)
+      var out = 0
+      var i = 0
+      while (i < n) { // in-place dedup of the sorted hashes
+        if (out == 0 || arr(out - 1) != arr(i)) { arr(out) = arr(i); out += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(arr, out)
+    }
   }
 
   /** Full MinHash-LSH near-dup pipeline: pairs with exact Jaccard ≥

@@ -2,7 +2,7 @@ package graft.llm
 
 import graft.{QueryDef, Tables}
 import graft.store.{CountTable, Meta, Op, StageSwap, Table, Tombstones}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
@@ -36,10 +36,11 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   *     provably ≤ (grams/doc)/0.002 rows — broadcast-sized at ANY
   *     corpus size). Read back by every probe/append so all prefix
   *     cuts forever share one order.
-  *   - `sets/sbucket=S/` — (id, sh) full sorted gram arrays, the
-  *     verify side; partitioned by `sbucket = pmod(id, nIdBuckets)` so
-  *     candidate verification fetches only the directories that hold
-  *     candidate ids.
+  *   - `sets/sbucket=S/` — (id, sh, h) full sorted gram arrays, the
+  *     verify side, with each doc's row hash h ([[rowHash]]: a delete
+  *     must name a stored doc WITH its stored text); partitioned by
+  *     `sbucket = pmod(id, nIdBuckets)` so candidate verification
+  *     fetches only the directories that hold candidate ids.
   *   - `tombstones/` — merge-on-read deletes ([[delete]]); every probe
   *     anti-joins it, [[compact]] folds it away rewriting ONLY affected
   *     partitions (crash-safe under [[graft.store.StageSwap]]).
@@ -88,7 +89,7 @@ object DedupIndex {
     * (the monotonic-id ingest contract), store threshold t0, bucket
     * counts (`n_buckets` partitions both `prefix/` and `gramdf/base`)
     * and the id column the store tables carry. */
-  private val StoreMeta = Meta("dedup index", 3,
+  private val StoreMeta = Meta("dedup index", 4,
     "n_docs" -> LongType, "checksum" -> LongType, "max_id" -> LongType,
     "threshold" -> DoubleType, "n_buckets" -> IntegerType,
     "n_id_buckets" -> IntegerType, "id_col" -> StringType)
@@ -107,15 +108,36 @@ object DedupIndex {
       textCol: String): DataFrame =
     docs.filter(col(textCol).isNotNull)
 
+  /** The per-row hash the fingerprint XORs, stored per doc in `sets/`. */
+  private def rowHash(idCol: String, textCol: String): Column =
+    xxhash64(col(idCol), col(textCol))
+
   /** (count, XOR of per-row hashes) over the INDEXABLE rows — the same
     * incremental-XOR contract as the vector stores: build sets it,
     * append XORs survivors in, delete XORs them out, ensure compares. */
   private def fingerprint(docs: DataFrame, idCol: String,
       textCol: String): (Long, Long) = {
     val r = indexable(docs, idCol, textCol)
-      .agg(count(lit(1)), expr(s"bit_xor(xxhash64($idCol, $textCol))"))
+      .agg(count(lit(1)), bit_xor(rowHash(idCol, textCol)))
       .head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** (id, sh, h) of the indexable docs: [[Dedup.shingleHashes]]' gram
+    * sets plus each row's [[rowHash]] — the rows `sets/` stores. */
+  private def setRows(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame = {
+    graft.util.Ids.requireLongCompatible(docs, idCol, "DedupIndex")
+    val spark = docs.sparkSession
+    import spark.implicits._
+    indexable(docs, idCol, textCol)
+      .select(col(idCol).cast("long"), rowHash(idCol, textCol),
+        encode(col(textCol), "UTF-8"))
+      .as[(Long, Long, Array[Byte])]
+      .mapPartitions { it =>
+        val shingle = new Dedup.Shingler
+        it.map { case (id, h, bytes) => (id, shingle(bytes), h) }
+      }.toDF(idCol, "sh", "h")
   }
 
   /** Prefix grams of already-shingled docs at threshold `t`:
@@ -256,11 +278,11 @@ object DedupIndex {
           org.apache.spark.sql.types.LongType))),
       Seq(Seq[Any](tEval)))
 
-  private def readEval(spark: SparkSession, dir: String): Option[Long] =
-    if (!graft.util.Fs.exists(spark, evalPath(dir))) None
-    else try Some(graft.util.Sidecar.readHead(spark, evalPath(dir))
-      .getAs[Long]("t_eval"))
-    catch { case scala.util.control.NonFatal(_) => None }
+  /** Strict: [[build]] always writes evalmeta, so a missing or
+    * unreadable file is a damaged store — the op fails and [[ensure]]
+    * rebuilds, instead of the tick quietly taking the full pass. */
+  private def readEval(spark: SparkSession, dir: String): Long =
+    graft.util.Sidecar.readHead(spark, evalPath(dir)).getAs[Long]("t_eval")
 
   /** The frozen hot set, driver-side (bounded by the df lemma — every
     * consumer collected it anyway, so the Spark-job read bought
@@ -387,6 +409,8 @@ object DedupIndex {
       org.apache.spark.sql.types.StructField("sh",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.LongType)),
+      org.apache.spark.sql.types.StructField("h",
+        org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("sbucket",
         org.apache.spark.sql.types.IntegerType)))
 
@@ -427,9 +451,7 @@ object DedupIndex {
     val spark = docs.sparkSession
     Op.build(spark, dir, "build") {
     buildsThisProcess += 1
-    val idx = indexable(docs, idCol, textCol)
-    val grams = Dedup.shingleHashes(idx, idCol, textCol)
-      .localCheckpoint(eager = true)
+    val grams = setRows(docs, idCol, textCol).localCheckpoint(eager = true)
     val nIdx = grams.count()
     val nb = if (nBuckets > 0) nBuckets else autoBuckets(nIdx, 64)
     val nib = if (nIdBuckets > 0) nIdBuckets else autoBuckets(nIdx, 32)
@@ -471,8 +493,9 @@ object DedupIndex {
     *
     * Failure separation (r13 advice): only the store side — the META
     * read, its field shape (threshold, bucket counts, id column) and a
-    * present `prefstats/` — is allowed to mean "store invalid →
-    * rebuild" (and only on NonFatal errors — an OOM propagates). The
+    * present `prefstats/` and `gramdf/evalmeta` — is allowed to mean
+    * "store invalid → rebuild" (and only on NonFatal errors — an OOM
+    * propagates). The
     * corpus-side fingerprint aggregate is NOT caught: a transient I/O
     * failure reading the corpus RETHROWS instead of being treated as a
     * mismatch, because the rebuild it would trigger starts by deleting
@@ -492,7 +515,8 @@ object DedupIndex {
         (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
         (nIdBuckets == 0 || meta.getAs[Int]("n_id_buckets") == nIdBuckets) &&
         meta.getAs[String]("id_col") == idCol &&
-        graft.util.Fs.dataFileCount(docs.sparkSession, statsPath(dir)) > 0
+        graft.util.Fs.dataFileCount(docs.sparkSession, statsPath(dir)) > 0 &&
+        graft.util.Fs.dataFileCount(docs.sparkSession, evalPath(dir)) > 0
     }.exists { meta =>
       val (n, sum) = fingerprint(docs, idCol, textCol) // NOT caught
       meta.getAs[Long]("n_docs") == n && meta.getAs[Long]("checksum") == sum
@@ -643,8 +667,8 @@ object DedupIndex {
     val kept = probe(batch, dir, threshold, idCol, textCol)
       .localCheckpoint(eager = true)
     val survivors = batch.join(kept, Seq(idCol), "left_semi")
-    val gramsS = Dedup.shingleHashes(indexable(survivors, idCol, textCol),
-      idCol, textCol).localCheckpoint(eager = true)
+    val gramsS = setRows(survivors, idCol, textCol)
+      .localCheckpoint(eager = true)
     // marker content is diagnostic only — naming the op costs nothing,
     // counting the survivors cost one extra job
     o.window("append in flight") {
@@ -694,7 +718,8 @@ object DedupIndex {
     Op.mutate(spark, dir, StoreMeta, "delete") { o =>
     val meta = o.meta
     requireIdCol(meta, dir, idCol)
-    val ids = deleted.select(col(idCol).cast("long").as("nid"))
+    val ids = deleted.select(col(idCol).cast("long").as("nid"),
+        rowHash(idCol, textCol).as("h"))
       .localCheckpoint(eager = true)
     // ONE aggregate answers every row-shaped audit (total, indexable,
     // distinct) AND the fingerprint — previously four separate jobs.
@@ -704,8 +729,7 @@ object DedupIndex {
       count(lit(1)),
       count(col(textCol)),
       countDistinct(col(idCol).cast("long")),
-      expr(s"bit_xor(CASE WHEN $textCol IS NOT NULL " +
-        s"THEN xxhash64($idCol, $textCol) END)")).head()
+      bit_xor(when(col(textCol).isNotNull, rowHash(idCol, textCol)))).head()
     val nDel = audit.getLong(0)
     val nIdx = audit.getLong(1)
     require(nIdx == nDel,
@@ -713,11 +737,14 @@ object DedupIndex {
         "null-text docs are never indexed and cannot be deleted")
     require(audit.getLong(2) == nDel,
       s"delete set contains duplicate ${idCol}s")
+    // (id, h): a stored id sent with other text is not a stored row —
+    // its negative df delta would be another doc's grams
     val nStored = ids.join(
-      readSets(spark, dir, idCol).select(col(idCol).as("nid")),
-      Seq("nid"), "left_semi").count()
+      readSets(spark, dir, idCol).select(col(idCol).as("nid"), col("h")),
+      Seq("nid", "h"), "left_semi").count()
     require(nStored == nDel,
-      s"${nDel - nStored} of $nDel ${idCol}s are not in the index at $dir")
+      s"${nDel - nStored} of $nDel (${idCol}, $textCol) rows are not in " +
+        s"the index at $dir")
     tombs(dir).requireFresh(spark, ids, nDel, s"${idCol}s")
     val dsum = if (audit.isNullAt(3)) 0L else audit.getLong(3)
     // planned (not run) before the marker: a non-integral id column
@@ -729,7 +756,7 @@ object DedupIndex {
     // between them would leave df overstated and the fingerprint
     // stale), so they share one window
     o.window(s"delete of $nDel docs in flight") {
-      tombs(dir).append(ids)
+      tombs(dir).append(ids.select("nid"))
       gramdf(dir, meta.getAs[Int]("n_buckets"))
         .addDelta(gramCounts(delGrams), sign = -1)
       o.commit("n_docs" -> (meta.getAs[Long]("n_docs") - nIdx),
@@ -885,14 +912,14 @@ object DedupIndex {
     //    count changed are EXACTLY the unfolded gramdf/delta grams
     //    ([[CountTable.changed]]): O(appended-since-fold), independent
     //    of corpus size.
-    //  - FULL MERGED path (deletes lowered the threshold, or evalmeta
-    //    unreadable): one pass over base ∪ delta — a scan+groupBy of
-    //    the aggregated table, still never an explode of sets/.
+    //  - FULL MERGED path (deletes lowered the threshold): one pass
+    //    over base ∪ delta — a scan+groupBy of the aggregated table,
+    //    still never an explode of sets/.
     // the frozen hot set, driver-side — consulted by both tiers below
     // and previously re-scanned as an anti-join build side each time
     val hotNow = readHotGramsArr(spark, dir).toSet
     val merged =
-      if (readEval(spark, dir).exists(_ <= tNow)) gdf.changed(spark)
+      if (readEval(spark, dir) <= tNow) gdf.changed(spark)
       else gdf.merged(spark)
     val newHot = merged.filter(col("df") > tNow).select(col("gram"))
       .collect().map(_.getLong(0)).filterNot(hotNow)

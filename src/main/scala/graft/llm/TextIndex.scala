@@ -28,9 +28,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *     ingest, immutable per doc), so scoring needs no corpus-wide
   *     doc-stats join — the one per-search O(corpus) aggregate the
   *     storeless form pays.
-  *   - `docids/dbucket=D/` — (doc) for every indexed doc, partitioned
-  *     by `pmod(doc, nDocBuckets)`: O(batch) duplicate-ingest and
-  *     delete-liveness guards via partition-pruned semi-joins.
+  *   - `docids/dbucket=D/` — (doc, h) for every indexed doc, h its
+  *     row hash ([[rowHash]]), partitioned by `pmod(doc, nDocBuckets)`:
+  *     O(batch) duplicate-ingest and delete guards via partition-pruned
+  *     semi-joins (a delete must name a stored doc WITH its stored
+  *     text).
   *   - `termstats/` — (term, df) merge-on-read document frequency, a
   *     [[graft.store.CountTable]] (append writes positive deltas,
   *     delete negative ones), its `base/bucket=B/` bucketed like the
@@ -71,7 +73,7 @@ object TextIndex {
     * XOR fingerprint over the indexed (id, text) rows (append XORs in,
     * delete XORs out — [[ensure]] validates a maintained store without
     * rebuild), and the bucket counts every later op reads back. */
-  private val StoreMeta = Meta("text index", 1,
+  private val StoreMeta = Meta("text index", 2,
     "n_docs" -> LongType, "checksum" -> LongType, "sum_dl" -> LongType,
     "n_buckets" -> IntegerType, "n_doc_buckets" -> IntegerType)
 
@@ -84,12 +86,24 @@ object TextIndex {
   private def tokenCount(c: Column): Column =
     size(filter(split(lower(c), " "), x => x =!= ""))
 
+  /** The per-row hash the fingerprint XORs, stored per doc in
+    * `docids/`. */
+  private def rowHash(idCol: String, textCol: String): Column =
+    xxhash64(col(idCol), col(textCol))
+
+  /** (doc, h, dbucket) of the indexable rows of `docs`. */
+  private def docRows(docs: DataFrame, idCol: String, textCol: String,
+      nDocBuckets: Int): DataFrame =
+    indexable(docs, textCol)
+      .select(col(idCol).cast("long").as("doc"), rowHash(idCol, textCol).as("h"))
+      .withColumn("dbucket", pmod(col("doc"), lit(nDocBuckets)).cast("int"))
+
   /** (n indexed docs, XOR of per-row hashes, Σ token count) over the
     * docs that produce ≥ 1 posting — the incremental-XOR contract. */
   private def fingerprint(docs: DataFrame, idCol: String,
       textCol: String): (Long, Long, Long) = {
     val r = indexable(docs, textCol)
-      .agg(count(lit(1)), expr(s"bit_xor(xxhash64($idCol, $textCol))"),
+      .agg(count(lit(1)), bit_xor(rowHash(idCol, textCol)),
         coalesce(sum(tokenCount(col(textCol))), lit(0L)).cast("long"))
       .head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(2))
@@ -140,6 +154,8 @@ object TextIndex {
   private def docidsSchema =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("h",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("dbucket",
         org.apache.spark.sql.types.IntegerType)))
@@ -209,8 +225,7 @@ object TextIndex {
     post.repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/postings")
-    post.select(col("doc")).distinct()
-      .withColumn("dbucket", pmod(col("doc"), lit(ndb)).cast("int"))
+    docRows(docs, idCol, textCol, ndb).distinct()
       .repartition(col("dbucket"))
       .write.mode("overwrite").partitionBy("dbucket").parquet(s"$dir/docids")
     termstats(dir, nb).writeBase(termCounts(post))
@@ -257,8 +272,7 @@ object TextIndex {
     val nDocBuckets = meta.getAs[Int]("n_doc_buckets")
     val post = postingsOf(batch, idCol, textCol, nBuckets)
       .localCheckpoint(eager = true)
-    val batchDocs = post.select(col("doc")).distinct()
-      .withColumn("dbucket", pmod(col("doc"), lit(nDocBuckets)).cast("int"))
+    val batchDocs = docRows(batch, idCol, textCol, nDocBuckets).distinct()
       .localCheckpoint(eager = true)
     // duplicate-ingest guard: pruned to the batch's own dbuckets
     val dbs = batchDocs.select("dbucket").distinct()
@@ -298,7 +312,7 @@ object TextIndex {
     val meta = o.meta
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nDocBuckets = meta.getAs[Int]("n_doc_buckets")
-    val ids = deleted.select(col(idCol).cast("long").as("doc"))
+    val ids = docRows(deleted, idCol, textCol, nDocBuckets)
       .localCheckpoint(eager = true)
     // ONE aggregate answers every row-shaped audit (total, indexable,
     // distinct) AND the fingerprint, over the indexable rows exactly
@@ -308,7 +322,7 @@ object TextIndex {
       count(lit(1)),
       count(idxOnly(lit(1))),
       countDistinct(col(idCol).cast("long")),
-      bit_xor(idxOnly(xxhash64(col(idCol), col(textCol)))),
+      bit_xor(idxOnly(rowHash(idCol, textCol))),
       coalesce(sum(idxOnly(tokenCount(col(textCol)))), lit(0L))
         .cast("long")).head()
     val nDel = audit.getLong(0)
@@ -317,19 +331,21 @@ object TextIndex {
         "without postings are never indexed and cannot be deleted")
     require(audit.getLong(2) == nDel,
       s"delete set contains duplicate ${idCol}s")
-    val dbs = ids.select(pmod(col("doc"), lit(nDocBuckets)).cast("int")
-      .as("dbucket")).distinct().collect().map(_.getInt(0))
+    val dbs = ids.select("dbucket").distinct().collect().map(_.getInt(0))
+    // (doc, h): a stored id sent with other text is not a stored row —
+    // its negative df delta and Σdl would be another doc's
     val nStored =
       if (dbs.isEmpty) 0L
       else readDocids(spark, dir)
         .filter(col("dbucket").isin(dbs.map(Int.box).toSeq: _*))
-        .join(ids, Seq("doc"), "left_semi").count()
+        .join(ids, Seq("doc", "h"), "left_semi").count()
     require(nStored == nDel,
-      s"${nDel - nStored} of $nDel ${idCol}s are not in the index at $dir")
+      s"${nDel - nStored} of $nDel (${idCol}, $textCol) rows are not in " +
+        s"the index at $dir")
     tombs(dir).requireFresh(spark, ids, nDel, s"${idCol}s")
     val dsum = if (audit.isNullAt(3)) 0L else audit.getLong(3)
     o.window(s"delete of $nDel docs in flight") {
-      tombs(dir).append(ids)
+      tombs(dir).append(ids.select("doc"))
       termstats(dir, nBuckets).addDelta(termCounts(HybridRetrieval.postings(
         indexable(deleted, textCol), idCol, textCol)), sign = -1)
       o.commit("n_docs" -> (meta.getAs[Long]("n_docs") - nDel),

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +38,7 @@ import org.apache.spark.sql.functions._
   *
   * Run:  sbt "runMain graft.tools.DriftBench"
   * Env:  SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *       SPARK_GRAFT_CPUS (32),
+  *       SPARK_GRAFT_CPUS (default: the host's processors),
   *       SPARK_GRAFT_DRIFT_FACTORS (default "1,10"),
   *       SPARK_GRAFT_DRIFT_APPENDS (24),
   *       SPARK_GRAFT_DRIFT_EVERY (4, probe cadence),
@@ -63,27 +64,14 @@ object DriftBench {
   def main(args: Array[String]): Unit = {
     val baseSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val factors = sys.env.getOrElse("SPARK_GRAFT_DRIFT_FACTORS", "1,10")
       .split(",").map(_.trim.toInt).toSeq
     val nAppends = sys.env.getOrElse("SPARK_GRAFT_DRIFT_APPENDS", "24").toInt
     val every = sys.env.getOrElse("SPARK_GRAFT_DRIFT_EVERY", "4").toInt
     val refreshEvery =
       sys.env.getOrElse("SPARK_GRAFT_DRIFT_REFRESH", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def loadAvg(): String = try {
-      scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(3).mkString(" ")
-    } catch { case _: Throwable => "unavailable" }
-    val loadStart = loadAvg()
+    val spark = GraftSession("graft.tools.DriftBench", GraftSession.hostCores)
+    val loadStart = GraftSession.loadAvg()
     val root = "target/drift"
     graft.util.Fs.rmTree(spark, root)
     val results = scala.collection.mutable.ArrayBuffer[String]()
@@ -166,7 +154,7 @@ object DriftBench {
         System.err.println(s"[drift-ticks] $row")
       }
       val json = s"""{"metric":"dedup_refresh_tick","base":"$baseSf",""" +
-        s""""loadavg_start":"$loadStart","loadavg_end":"${loadAvg()}",""" +
+        s""""loadavg_start":"$loadStart","loadavg_end":"${GraftSession.loadAvg()}",""" +
         s""""results":[${results.mkString(",")}]}"""
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("drift_ticks_out.json"), json + "\n")
@@ -315,7 +303,7 @@ object DriftBench {
       System.err.println(s"[drift] ${results.last}")
     }
 
-    val loadEnd = loadAvg()
+    val loadEnd = GraftSession.loadAvg()
     val json = s"""{"metric":"dedup_drift","base":"$baseSf","appends":$nAppends,""" +
       s""""refresh_every":$refreshEvery,"loadavg_start":"$loadStart",""" +
       s""""loadavg_end":"$loadEnd","results":[${results.mkString(",")}]}"""

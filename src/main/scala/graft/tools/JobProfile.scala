@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.util.GraftSession
 
 /** Per-job profiler for the bench queries (guide §1: measure first).
   *
@@ -20,19 +20,10 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = sys.env.getOrElse("SPARK_GRAFT_PROFILE", "")
       .split(",").map(_.trim).filter(_.nonEmpty)
     require(names.nonEmpty, "set SPARK_GRAFT_PROFILE=<query>[,<query>...]")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft.tools.JobProfile", GraftSession.hostCores)
 
     val started = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val finished = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()

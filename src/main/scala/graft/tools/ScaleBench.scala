@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +31,7 @@ import org.apache.spark.sql.functions._
   * Env:  SPARK_GRAFT_SF_DIR (base, default /root/testdata/sf0.1),
   *       SPARK_GRAFT_SCALE_FACTORS (default "1,10,100"),
   *       SPARK_GRAFT_SCALE_QUERIES (default: the 14 heaviest),
-  *       SPARK_GRAFT_CPUS (default 32).
+  *       SPARK_GRAFT_CPUS (default: the host's processors).
   * Output: one JSON line per (factor, query) plus a final summary
   * line; the full artifact also lands in scale_out.json. Queries in
   * the build-once index families run TWICE per factor — the second
@@ -374,7 +375,6 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val baseSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,10,100")
       .split(",").map(_.trim.toInt).toSeq
     val skewMode = sys.env.get("SPARK_GRAFT_SCALE_SKEW").contains("1")
@@ -387,19 +387,7 @@ object ScaleBench {
       .getOrElse(if (skewMode) skewDefaultQueries
       else if (storeSkewMode) storeSkewDefaultQueries
       else defaultQueries)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def loadAvg(): String = try {
-      scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(3).mkString(" ")
-    } catch { case _: Throwable => "unavailable" }
+    val spark = GraftSession("graft.tools.ScaleBench", GraftSession.hostCores)
     // generic JIT/session warmup (Bench's first block): the factor-1
     // tier additionally serves as the operator-specific warmup for the
     // 10x/100x tiers, which are the measurement that matters
@@ -412,7 +400,7 @@ object ScaleBench {
     } catch { case _: Throwable => () }
     val outRoot = "target/scale"
     val results = scala.collection.mutable.ArrayBuffer[String]()
-    val loadStart = loadAvg()
+    val loadStart = GraftSession.loadAvg()
     factors.foreach { f =>
       val dir =
         if (skewMode) {
@@ -470,11 +458,11 @@ object ScaleBench {
         }
       }
     }
-    val loadEnd = loadAvg()
+    val loadEnd = GraftSession.loadAvg()
     val body = results.mkString("[", ",", "]")
     val json = s"""{"metric":"scale","base":${jstr(baseSf)},"skew":$skewMode,"storeskew":$storeSkewMode,"loadavg_start":${jstr(
-      loadStart)},"loadavg_end":${jstr(loadEnd)},"n_cores":${Runtime
-      .getRuntime.availableProcessors()},"results":$body}"""
+      loadStart)},"loadavg_end":${jstr(loadEnd)},"n_cores":${spark
+      .sparkContext.defaultParallelism},"results":$body}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(
       if (skewMode) "scale_out_skew.json"
       else if (storeSkewMode) "scale_out_storeskew.json"

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.util.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -24,7 +25,7 @@ import org.apache.spark.sql.streaming.OutputMode
   *
   * Run:  sbt "runMain graft.tools.StoreHistoryBench"
   * Env:  SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *       SPARK_GRAFT_CPUS (32),
+  *       SPARK_GRAFT_CPUS (default: the host's processors),
   *       SPARK_GRAFT_HISTORY_APPENDS (100),
   *       SPARK_GRAFT_HISTORY_EVERY (10, probe cadence),
   *       SPARK_GRAFT_HISTORY_STREAM_BATCHES (50),
@@ -91,7 +92,6 @@ object StoreHistoryBench {
   def main(args: Array[String]): Unit = {
     val baseSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nAppends = sys.env.getOrElse("SPARK_GRAFT_HISTORY_APPENDS", "100").toInt
     val every = sys.env.getOrElse("SPARK_GRAFT_HISTORY_EVERY", "10").toInt
     val nStream = sys.env
@@ -100,20 +100,8 @@ object StoreHistoryBench {
       sys.env.get("SPARK_GRAFT_HISTORY_STORESKEW").contains("1")
     val skewFactor =
       sys.env.getOrElse("SPARK_GRAFT_HISTORY_FACTOR", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def loadAvg(): String = try {
-      scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split("\\s+").take(3).mkString(" ")
-    } catch { case _: Throwable => "unavailable" }
-    val loadStart = loadAvg()
+    val spark = GraftSession("graft.tools.StoreHistoryBench", GraftSession.hostCores)
+    val loadStart = GraftSession.loadAvg()
     val root =
       if (storeSkew) "target/store_history_skew" else "target/store_history"
     graft.util.Fs.rmTree(spark, root)
@@ -559,7 +547,7 @@ object StoreHistoryBench {
       else (streamRun("plain", trigger = false),
         streamRun("maint", trigger = true))
 
-    val loadEnd = loadAvg()
+    val loadEnd = GraftSession.loadAvg()
     val json =
       s"""{"metric":"store_history","base":"$baseSf","appends":$nAppends,""" +
       s""""storeskew":$storeSkew,"factor":${if (storeSkew) skewFactor else 1},""" +

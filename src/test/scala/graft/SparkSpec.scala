@@ -10,17 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object TestSpark {
   sys.props("graft.cli.keepSession") = "true"
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession =
+    graft.util.GraftSession.build("graft-test", "local[4]", 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

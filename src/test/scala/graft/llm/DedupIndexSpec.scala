@@ -702,7 +702,7 @@ class DedupIndexSpec extends SparkSpec {
     old.write(spark, dir, old.fields.map { case (f, _) => row.getAs[Any](f) }: _*)
     def refused(op: => Any): Unit = {
       val e = intercept[IllegalArgumentException] { op }
-      assert(e.getMessage.contains("has format 2, expected 3") &&
+      assert(e.getMessage.contains("has format 2, expected 4") &&
         e.getMessage.contains("ensure()"), e.getMessage)
     }
     val batch = df(Seq((100L, doc(100)), (101L, doc(3))))
@@ -844,6 +844,60 @@ class DedupIndexSpec extends SparkSpec {
     def kept(d: String) = DedupIndex.probe(batch, d, threshold = 0.9)
       .collect().map(_.getLong(0)).toSet
     assert(kept(dir) == Set(100L, 102L) && kept(fresh) == kept(dir))
+  }
+
+  test("delete audits the text with the id: a stored id sent with " +
+      "another doc's text is refused before any write") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/deltext"
+    val corpus = df((0L until 20L).map(i => (i, doc(i.toInt))))
+    DedupIndex.build(corpus, dir, threshold = 0.9)
+    def merged = gramdf(dir).merged(spark).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def meta = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val (df0, meta0) = (merged, meta)
+    val e = intercept[IllegalArgumentException] {
+      DedupIndex.delete(df(Seq((3L, doc(4)))), dir)
+    }
+    assert(e.getMessage.contains("not in the index"), e.getMessage)
+    assert(merged == df0, "the refused delete moved the merged df")
+    assert(meta == meta0, "the refused delete moved the meta")
+    assert(!graft.util.Fs.exists(spark, s"$dir/tombstones"),
+      "the refused delete wrote a tombstone")
+    // the stored row itself still deletes, and the fingerprint holds
+    DedupIndex.delete(df(Seq((3L, doc(3)))), dir)
+    val b0 = DedupIndex.buildsThisProcess
+    DedupIndex.ensure(corpus.filter(col("doc_id") =!= 3L), dir,
+      threshold = 0.9)
+    assert(DedupIndex.buildsThisProcess == b0, "delete drifted the fingerprint")
+  }
+
+  test("a store without gramdf/evalmeta fails compact LOUD, ensure() " +
+      "rebuilds it once, and the rebuilt store probes like a fresh one") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/noeval"
+    val corpus = df((0L until 20L).map(i => (i, doc(i.toInt))))
+    DedupIndex.build(corpus, dir, threshold = 0.9)
+    // the append leaves a gramdf delta, so compact must evaluate it
+    val added = df(Seq((100L, doc(100))))
+    assert(DedupIndex.append(added, dir, threshold = 0.9).count() == 1)
+    graft.util.Fs.rmTree(spark, s"$dir/gramdf/evalmeta")
+    intercept[java.io.FileNotFoundException] {
+      DedupIndex.compact(spark, dir)
+    }
+    val live = corpus.unionByName(added)
+    val b0 = DedupIndex.buildsThisProcess
+    DedupIndex.ensure(live, dir, threshold = 0.9)
+    assert(DedupIndex.buildsThisProcess == b0 + 1,
+      "ensure accepted a store without gramdf/evalmeta")
+    DedupIndex.ensure(live, dir, threshold = 0.9)
+    assert(DedupIndex.buildsThisProcess == b0 + 1, "rebuilt store not valid")
+    val fresh = s"$base/noeval_fresh"
+    DedupIndex.build(live, fresh, threshold = 0.9)
+    val batch = df(Seq((200L, doc(200)), (201L, doc(4)), (202L, doc(100))))
+    def kept(d: String) = DedupIndex.probe(batch, d, threshold = 0.9)
+      .collect().map(_.getLong(0)).toSet
+    assert(kept(dir) == Set(200L) && kept(fresh) == kept(dir))
   }
 
   test("the id column is fixed at build: ops handed another one refuse, " +

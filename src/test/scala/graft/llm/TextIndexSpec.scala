@@ -304,6 +304,29 @@ class TextIndexSpec extends SparkSpec {
     assert(TextIndex.buildsThisProcess == b0, "rejected delete drifted meta")
   }
 
+  test("delete audits the text with the id: a stored id sent with " +
+      "another doc's text is refused before any write") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/deltext"
+    val corpus = df((0L until 20L).map(i => (i, doc(i.toInt))))
+    TextIndex.build(corpus, dir)
+    def meta = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val (df0, meta0) = (mergedDf(dir), meta)
+    val e = intercept[IllegalArgumentException] {
+      TextIndex.delete(df(Seq((3L, doc(4)))), dir)
+    }
+    assert(e.getMessage.contains("not in the index"), e.getMessage)
+    assert(mergedDf(dir) == df0, "the refused delete moved termstats")
+    assert(meta == meta0, "the refused delete moved the meta")
+    assert(!graft.util.Fs.exists(spark, s"$dir/tombstones"),
+      "the refused delete wrote a tombstone")
+    // the stored row itself still deletes, and the fingerprint holds
+    TextIndex.delete(df(Seq((3L, doc(3)))), dir)
+    val b0 = TextIndex.buildsThisProcess
+    TextIndex.ensure(corpus.filter(col("doc_id") =!= 3L), dir)
+    assert(TextIndex.buildsThisProcess == b0, "delete drifted the fingerprint")
+  }
+
   test("compact recovers a crash between bucket removal and rename: " +
       "search matches the uncrashed store") {
     graft.util.Fs.rmRecursive(new java.io.File(base))

@@ -171,7 +171,7 @@ class OpSpec extends SparkSpec {
       store -> spark.read.parquet(s"$root/$store/meta").head()
         .getAs[Int]("format_version")
     }.toMap
-    assert(formats == Map("dedup" -> 3, "text" -> 1, "vec" -> 2, "vecf" -> 2,
+    assert(formats == Map("dedup" -> 4, "text" -> 2, "vec" -> 2, "vecf" -> 2,
       "graph" -> 4))
   }
 }
