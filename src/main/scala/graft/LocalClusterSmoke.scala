@@ -87,14 +87,14 @@ object LocalClusterSmoke {
     * fingerprint-validate WITHOUT rebuilding — the store alone carries
     * everything. */
   def storedIndexRoundTrip(sfDir: String): (Long, Double) = {
-    val dir = graft.util.Fixtures.dir + "/cluster_index"
     val sA = newClusterSession()
-    try {
+    val dir = try {
       val emb = Tables.embeddings(sA, sfDir)
         .select(col("vec_id"), col("embedding"))
+      val dir = graft.util.Fixtures.store(sA, "cluster_index", sfDir)
       graft.util.Fs.rmTree(sA, dir)
-      graft.util.StoreLease.break(sA, dir) // fixture dir
       graft.llm.VectorIndex.build(emb, dir)
+      dir
     } finally {
       sA.stop()
       SparkSession.clearActiveSession()
@@ -109,17 +109,9 @@ object LocalClusterSmoke {
       require(graft.llm.VectorIndex.buildsThisProcess == before,
         "fresh session failed to fingerprint-validate the stored index")
       val queries = graft.llm.Similarity.probePanel(emb)
-      val exact = graft.llm.Similarity.bruteForceTop1(queries, emb)
-        .select(col("qid"), col("nid")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val approx = graft.llm.VectorIndex.search(ix, queries, emb, k = 1)
-        .select(col("qid"), col("nid")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val recall =
-        if (exact.isEmpty) 0.0
-        else approx.count { case (q, nid) =>
-          exact.get(q).contains(nid)
-        }.toDouble / exact.size
+      val recall = graft.llm.Similarity.recall(
+        graft.llm.Similarity.bruteForceTop1(queries, emb),
+        graft.llm.VectorIndex.search(ix, queries, emb, k = 1))
       (ix.codes.count(), recall)
     } finally {
       sB.stop()
@@ -134,14 +126,14 @@ object LocalClusterSmoke {
     * Returns (stored node count, recall@1 vs the fresh session's own
     * brute-force truth). */
   def storedGraphRoundTrip(sfDir: String): (Long, Double) = {
-    val dir = graft.util.Fixtures.dir + "/cluster_graph"
     val sA = newClusterSession()
-    try {
+    val dir = try {
       val emb = Tables.embeddings(sA, sfDir)
         .select(col("vec_id"), col("embedding"))
+      val dir = graft.util.Fixtures.store(sA, "cluster_graph", sfDir)
       graft.util.Fs.rmTree(sA, dir)
-      graft.util.StoreLease.break(sA, dir) // fixture dir
       graft.llm.GraphAnn.ensure(emb, dir): Unit
+      dir
     } finally {
       sA.stop()
       SparkSession.clearActiveSession()
@@ -156,17 +148,9 @@ object LocalClusterSmoke {
       require(graft.llm.GraphAnn.buildsThisProcess == before,
         "fresh session failed to fingerprint-validate the stored graph")
       val queries = graft.llm.Similarity.probePanel(emb)
-      val exact = graft.llm.Similarity.bruteForceTop1(queries, emb)
-        .select(col("qid"), col("nid")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val approx = graft.llm.GraphAnn.beamSearch(queries, graph, emb, k = 1)
-        .select(col("qid"), col("nid")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val recall =
-        if (exact.isEmpty) 0.0
-        else approx.count { case (q, nid) =>
-          exact.get(q).contains(nid)
-        }.toDouble / exact.size
+      val recall = graft.llm.Similarity.recall(
+        graft.llm.Similarity.bruteForceTop1(queries, emb),
+        graft.llm.GraphAnn.beamSearch(queries, graph, emb, k = 1))
       (sB.read.parquet(s"$dir/nodes").count(), recall)
     } finally {
       sB.stop()
@@ -180,14 +164,14 @@ object LocalClusterSmoke {
     * one against the within-label brute-force truth. Returns (stored
     * code count, within-label recall@1). */
   def storedFilteredRoundTrip(sfDir: String): (Long, Double) = {
-    val dir = graft.util.Fixtures.dir + "/cluster_filtered"
     val sA = newClusterSession()
-    try {
+    val dir = try {
       val emb = Tables.embeddings(sA, sfDir)
         .select(col("vec_id"), col("embedding"), col("label"))
+      val dir = graft.util.Fixtures.store(sA, "cluster_filtered", sfDir)
       graft.util.Fs.rmTree(sA, dir)
-      graft.util.StoreLease.break(sA, dir) // fixture dir
       graft.llm.VectorIndex.build(emb, dir, filterCol = Some("label"))
+      dir
     } finally {
       sA.stop()
       SparkSession.clearActiveSession()
@@ -202,18 +186,9 @@ object LocalClusterSmoke {
       require(graft.llm.VectorIndex.buildsThisProcess == before,
         "fresh session failed to fingerprint-validate the filtered store")
       val queries = graft.llm.Similarity.probePanel(emb)
-      val exact = graft.llm.Similarity
-        .bruteForceTop1Filtered(queries, emb, "label")
-        .select(col("qid"), col("nid")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val approx = graft.llm.VectorIndex.search(ix, queries, emb, k = 1)
-        .select(col("qid"), col("nid")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val recall =
-        if (exact.isEmpty) 0.0
-        else approx.count { case (q, nid) =>
-          exact.get(q).contains(nid)
-        }.toDouble / exact.size
+      val recall = graft.llm.Similarity.recall(
+        graft.llm.Similarity.bruteForceTop1(queries, emb, Some("label")),
+        graft.llm.VectorIndex.search(ix, queries, emb, k = 1))
       (ix.codes.count(), recall)
     } finally {
       sB.stop()
@@ -231,14 +206,14 @@ object LocalClusterSmoke {
     * fraction of batch docs classified as expected; must be 1.0). */
   def storedDedupRoundTrip(sfDir: String): (Long, Double) = {
     import org.apache.spark.sql.functions._
-    val dir = graft.util.Fixtures.dir + "/cluster_dedup"
     val sA = newClusterSession()
-    try {
+    val dir = try {
       val corpus = Tables.documents(sA, sfDir)
         .select(col("doc_id"), col("text"))
+      val dir = graft.util.Fixtures.store(sA, "cluster_dedup", sfDir)
       graft.util.Fs.rmTree(sA, dir)
-      graft.util.StoreLease.break(sA, dir) // fixture dir
       graft.llm.DedupIndex.build(corpus, dir, threshold = 0.9)
+      dir
     } finally {
       sA.stop()
       SparkSession.clearActiveSession()
@@ -284,14 +259,14 @@ object LocalClusterSmoke {
     * own live postings. Returns (posting rows, 1.0 iff identical). */
   def storedTextRoundTrip(sfDir: String): (Long, Double) = {
     import org.apache.spark.sql.functions._
-    val dir = graft.util.Fixtures.dir + "/cluster_text"
     val sA = newClusterSession()
-    try {
+    val dir = try {
       val docs = Tables.documents(sA, sfDir)
         .select(col("doc_id"), col("text"))
+      val dir = graft.util.Fixtures.store(sA, "cluster_text", sfDir)
       graft.util.Fs.rmTree(sA, dir)
-      graft.util.StoreLease.break(sA, dir) // fixture dir
       graft.llm.TextIndex.build(docs, dir)
+      dir
     } finally {
       sA.stop()
       SparkSession.clearActiveSession()
@@ -334,20 +309,20 @@ object LocalClusterSmoke {
     * appendedAfterBreak). */
   def leaseContentionRoundTrip(sfDir: String): (Boolean, Boolean) = {
     import org.apache.spark.sql.functions._
-    val dir = graft.util.Fixtures.dir + "/cluster_lease_text"
     val old = graft.util.StoreLease.setPrimitive(
       graft.util.HardLinkConditionalPut)
     try {
       val sA = newClusterSession()
-      try {
+      val dir = try {
         val docs = Tables.documents(sA, sfDir)
           .select(col("doc_id"), col("text"))
-        graft.util.StoreLease.break(sA, dir) // fixture dir
+        val dir = graft.util.Fixtures.store(sA, "cluster_lease_text", sfDir)
         graft.util.Fs.rmTree(sA, dir)
         graft.llm.TextIndex.build(docs.filter(col("doc_id") % 2 === 0), dir)
         // the rival: session A acquires through the conditional-put
         // primitive and "dies" holding it
         graft.util.StoreLease.acquire(sA, dir, "clusterA-rival-writer")
+        dir
       } finally {
         sA.stop()
         SparkSession.clearActiveSession()

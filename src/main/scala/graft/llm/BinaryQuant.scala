@@ -84,11 +84,8 @@ object BinaryQuant {
       val queries = Similarity.probePanel(emb)
       val exact = Similarity.bruteForceTop1(queries, emb)
         .localCheckpoint(eager = true)
-      val approx = binaryTopK(queries, emb, k = 1)
-        .select(col("qid"), col("nid").as("nid_b"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_b")).count().toDouble
+      val recallOk =
+        Similarity.recall(exact, binaryTopK(queries, emb, k = 1)) >= 0.6
       // !isnan guard: Catalyst orders NaN GREATER than any value, so a
       // bare `x > 0f` would set the bit for a NaN component while the
       // signPack UDF's JVM `> 0f` is false for NaN — the cross-check
@@ -101,21 +98,10 @@ object BinaryQuant {
         lit(0L), (acc, v) => acc.bitwiseXOR(v))
       val nPackMismatch =
         emb.filter(signPack(col("embedding")) =!= bitsExpr).count()
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(hits / nQ >= 0.6 && nQ > 0 && nPackMismatch == 0L))
-        .select(col("qid"), col("nid"), col("sim"))
+      emb.unpersist()
+      exact.filter(lit(recallOk && nPackMismatch == 0L))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin))
+    oracle = Some(Similarity.top1OracleSql()))
 
   def all: Seq[QueryDef] = Seq(binary)
 }

@@ -1026,10 +1026,6 @@ object DedupIndex {
   // d17 — full lifecycle gate on the d9 fixture (same oracle semantics)
   // ------------------------------------------------------------------
 
-  private def indexDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/dedup_index_" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** d17 — dedup-index ingest lifecycle. Same fixture and keeper
     * semantics as d9 (so the DuckDB oracle is d9's, verbatim): corpus =
     * docs with id % 3 ≠ 0; batch = the id % 3 = 0 docs re-keyed +2 M
@@ -1060,8 +1056,7 @@ object DedupIndex {
         .unionByName(
           docs.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 0)
             .select((col("doc_id") + 3000000).as("doc_id"), col("text")))
-      val dir = indexDirFor(d)
-      graft.util.StoreLease.break(s, dir) // fixture dir
+      val dir = graft.util.Fixtures.store(s, "dedup_index", d)
       graft.util.Fs.rmTree(s, dir)
       build(corpus, dir, threshold = 0.9)
       val b0 = buildsThisProcess
@@ -1152,8 +1147,7 @@ object DedupIndex {
         .unionByName(
           docs.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 0)
             .select((col("doc_id") + 3000000).as("doc_id"), col("text")))
-      val dir = indexDirFor(d)
-      graft.util.StoreLease.break(s, dir)
+      val dir = graft.util.Fixtures.store(s, "dedup_index", d)
       graft.util.Fs.rmTree(s, dir)
       build(corpus, dir, threshold = 0.9)
       val kept = append(batch, dir, threshold = 0.9)
@@ -1176,10 +1170,6 @@ object DedupIndex {
   // ------------------------------------------------------------------
   // d18 — hot-gram DRIFT lifecycle under the d9 pair-graph oracle
   // ------------------------------------------------------------------
-
-  private def driftDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/dedup_drift_" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_")
 
   /** The planted drift banner: 12 tokens outside the fixture
     * vocabulary, literal-identical in the oracle SQL. */
@@ -1223,8 +1213,7 @@ object DedupIndex {
               .otherwise(col("text")).as("text"))
       val b1 = plant(1, 1, 2000000L)
       val b2 = plant(3, 3, 3000000L)
-      val dir = driftDirFor(d)
-      graft.util.StoreLease.break(s, dir) // fixture dir
+      val dir = graft.util.Fixtures.store(s, "dedup_drift", d)
       graft.util.Fs.rmTree(s, dir)
       build(corpus, dir, threshold = 0.9)
       val kept1 = append(b1, dir, threshold = 0.9)
@@ -1334,8 +1323,7 @@ object DedupIndex {
             when(col("doc_id") % 8 === mod8 && col("text").isNotNull,
               concat(lit(DriftBanner + " "), col("text")))
               .otherwise(col("text")).as("text"))
-      val dir = driftDirFor(d)
-      graft.util.StoreLease.break(s, dir)
+      val dir = graft.util.Fixtures.store(s, "dedup_drift", d)
       graft.util.Fs.rmTree(s, dir)
       build(corpus, dir, threshold = 0.9)
       append(plant(1, 1, 2000000L), dir, threshold = 0.9).count(): Unit

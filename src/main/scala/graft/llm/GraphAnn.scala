@@ -679,92 +679,42 @@ object GraphAnn {
     }
   }
 
-  private def graphDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/v20_graph/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** V20 — graph-ANN recall gate, v19-hardened: emitted rows are the
-    * exact brute-force truth (same oracle as v1/v19); they emit only
-    * when beam search over the STORED neighbor graph reaches
-    * recall@1 ≥ 0.6 (the IVF bar) and the persisted meta matches the
-    * corpus. Completes the production index-family survey:
-    * LSH / IVF / PQ / IVF-PQ / stored-IVF-PQ / neighbor-graph.
+  /** V20/V24 — graph-ANN recall gates over the SAME persisted
+    * neighbor graph, one body differing only in the search: emitted
+    * rows are the exact brute-force truth (same oracle as v1/v19);
+    * they emit only when the search over the STORED graph reaches
+    * recall@1 ≥ 0.6 (the IVF bar). v20 is the plain beam search —
+    * completing the production index-family survey: LSH / IVF / PQ /
+    * IVF-PQ / stored-IVF-PQ / neighbor-graph. v24 is the
+    * DiskANN composition: every traversal round scores by PQ-ADC (v11's
+    * 16-byte codes) instead of exact floats, and full vectors join in
+    * only for the final-beam re-rank — the quantized walk must still
+    * navigate to the true neighbor. Closes the index-family matrix:
+    * LSH / IVF / PQ / IVF-PQ / stored / filtered / graph / binary /
+    * graph×PQ.
     */
-  val graphAnn = QueryDef(
-    "v20_graph_ann_recall",
-    { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .cache()
-      graft.util.StoreLease.break(s, graphDirFor(d)) // fixture dir
-      val graph = ensure(emb, graphDirFor(d))
-      val queries = Similarity.probePanel(emb)
-      val exact = Similarity.bruteForceTop1(queries, emb)
-        .localCheckpoint(eager = true)
-      val approx = beamSearch(queries, graph, emb, k = 1)
-        .select(col("qid"), col("nid").as("nid_g"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_g")).count().toDouble
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(hits / nQ >= 0.6 && nQ > 0))
-        .select(col("qid"), col("nid"), col("sim"))
-    },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin))
+  private def recallGate(name: String,
+      search: (DataFrame, DataFrame, DataFrame) => DataFrame): QueryDef =
+    QueryDef(
+      name,
+      { (s, d) =>
+        val emb = Tables.embeddings(s, d)
+          .select(col("vec_id"), col("embedding")).cache()
+        val graph = ensure(emb, graft.util.Fixtures.store(s, "v20_graph", d))
+        val queries = Similarity.probePanel(emb)
+        val exact = Similarity.bruteForceTop1(queries, emb)
+          .localCheckpoint(eager = true)
+        val ok = Similarity.recall(exact, search(queries, graph, emb)) >= 0.6
+        emb.unpersist()
+        exact.filter(lit(ok))
+      },
+      oracle = Some(Similarity.top1OracleSql()))
 
-  /** V24 — DiskANN-composition recall gate: beam search over the SAME
-    * persisted v20 graph, but every traversal round scores by PQ-ADC
-    * (v11's 16-byte codes) instead of exact floats; full vectors join
-    * in only for the final-beam re-rank. Emitted rows are the exact
-    * brute-force truth (v1's oracle), gated on recall@1 ≥ 0.6 — the
-    * quantized walk must still navigate to the true neighbor. Closes
-    * the index-family matrix: LSH / IVF / PQ / IVF-PQ / stored /
-    * filtered / graph / binary / graph×PQ.
-    */
-  val graphPq = QueryDef(
-    "v24_graph_pq_recall",
-    { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .cache()
-      graft.util.StoreLease.break(s, graphDirFor(d)) // fixture dir
-      val graph = ensure(emb, graphDirFor(d))
-      val codebooks = Similarity.pqTrain(emb, m = 16, k = 16)
-      val queries = Similarity.probePanel(emb)
-      val exact = Similarity.bruteForceTop1(queries, emb)
-        .localCheckpoint(eager = true)
-      val approx = beamSearchPq(queries, graph, emb, codebooks, k = 1)
-        .select(col("qid"), col("nid").as("nid_g"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_g")).count().toDouble
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(hits / nQ >= 0.6 && nQ > 0))
-        .select(col("qid"), col("nid"), col("sim"))
-    },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin))
-
-  private def deleteDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/v26_graph/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+  val graphAnn = recallGate("v20_graph_ann_recall",
+    (queries, graph, emb) => beamSearch(queries, graph, emb, k = 1))
+  val graphPq = recallGate("v24_graph_pq_recall",
+    (queries, graph, emb) => beamSearchPq(queries, graph, emb,
+      Similarity.pqTrain(emb, m = 16, k = 16), k = 1))
 
   /** V26 — graph-index DELETION + REPAIRING COMPACTION (closes the
     * maintenance gap v25 closed for the IVF-PQ store): builds the v20
@@ -792,8 +742,7 @@ object GraphAnn {
     { (s, d) =>
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
         .cache()
-      val dir = deleteDirFor(d)
-      graft.util.StoreLease.break(s, dir) // fixture dir
+      val dir = graft.util.Fixtures.store(s, "v26_graph", d)
       graft.util.Fs.rmTree(s, dir)
       ensure(emb, dir)
       val deleted = emb.filter(col("vec_id") % 10 === 3)
@@ -809,17 +758,8 @@ object GraphAnn {
       val queries = Similarity.probePanel(live)
       val exact = Similarity.bruteForceTop1(queries, live)
         .localCheckpoint(eager = true)
-      val exactMap = exact.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      def recallOf(graph: DataFrame): Double = {
-        val res = beamSearch(queries, graph, live, k = 1)
-          .select(col("qid"), col("nid")).collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        if (exactMap.isEmpty) 0.0
-        else res.count { case (q, nid) =>
-          exactMap.get(q).contains(nid)
-        }.toDouble / exactMap.size
-      }
+      def recallOf(graph: DataFrame): Double =
+        Similarity.recall(exact, beamSearch(queries, graph, live, k = 1))
       val recallT = recallOf(edgesT)
       // degree accounting: the affected set (live nodes that lost ≥1
       // edge to a deleted neighbor) is snapshotted from the RAW edge
@@ -846,20 +786,8 @@ object GraphAnn {
       exact.filter(lit(mergeOnReadApplied && recallT >= 0.6 &&
           recallC >= 0.6 && repairedDeg > survivingDeg &&
           noRebuild && noTombLeft && nNodes == nLive))
-        .select(col("qid"), col("nid"), col("sim"))
     },
-    oracle = Some(
-      """WITH live AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |              FROM embeddings WHERE vec_id % 10 <> 3),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM live WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, e.v), 6) AS sim
-        |      FROM q, live e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin),
+    oracle = Some(Similarity.top1OracleSql(live = true)),
     // store-ops-only bench variant: build, delete, tombstoned beam
     // search, repairing compact, ensure, compacted beam search —
     // without the brute-force truth side and the degree accounting
@@ -867,8 +795,7 @@ object GraphAnn {
     benchFn = Some { (s, d) =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding")).cache()
-      val dir = deleteDirFor(d)
-      graft.util.StoreLease.break(s, dir)
+      val dir = graft.util.Fixtures.store(s, "v26_graph", d)
       graft.util.Fs.rmTree(s, dir)
       ensure(emb, dir): Unit
       val deleted = emb.filter(col("vec_id") % 10 === 3)
@@ -883,10 +810,6 @@ object GraphAnn {
       emb.unpersist(); live.unpersist()
       out
     })
-
-  private def appendDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/v28_graph/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** V28 — graph-index batch INSERT (closes the maintenance matrix:
     * the graph store now has build / ensure / append / delete /
@@ -909,8 +832,7 @@ object GraphAnn {
     { (s, d) =>
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
         .cache()
-      val dir = appendDirFor(d)
-      graft.util.StoreLease.break(s, dir) // fixture dir
+      val dir = graft.util.Fixtures.store(s, "v28_graph", d)
       graft.util.Fs.rmTree(s, dir)
       val old = emb.filter(col("vec_id") % 10 =!= 7).cache()
       val batch = emb.filter(col("vec_id") % 10 === 7)
@@ -930,40 +852,20 @@ object GraphAnn {
       val queries = Similarity.probePanel(emb)
       val exact = Similarity.bruteForceTop1(queries, emb)
         .localCheckpoint(eager = true)
-      val exactMap = exact.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val res = beamSearch(queries, edges, emb, k = 1)
-        .select(col("qid"), col("nid")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
       val recall =
-        if (exactMap.isEmpty) 0.0
-        else res.count { case (q, nid) =>
-          exactMap.get(q).contains(nid)
-        }.toDouble / exactMap.size
+        Similarity.recall(exact, beamSearch(queries, edges, emb, k = 1))
       emb.unpersist(); old.unpersist()
       exact.filter(lit(noRebuild && nBatch > 0 && outDeg == nBatch &&
           inDeg == nBatch && maxDeg <= 32 && recall >= 0.6))
-        .select(col("qid"), col("nid"), col("sim"))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin),
+    oracle = Some(Similarity.top1OracleSql()),
     // store-ops-only bench variant: build on 90%, append the rest,
     // ensure, beam search — without the brute-force truth side and
     // the degree audits (Verify runs the full-gate form above)
     benchFn = Some { (s, d) =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding")).cache()
-      val dir = appendDirFor(d)
-      graft.util.StoreLease.break(s, dir)
+      val dir = graft.util.Fixtures.store(s, "v28_graph", d)
       graft.util.Fs.rmTree(s, dir)
       val old = emb.filter(col("vec_id") % 10 =!= 7).cache()
       val batch = emb.filter(col("vec_id") % 10 === 7)
@@ -976,10 +878,6 @@ object GraphAnn {
       emb.unpersist(); old.unpersist()
       out
     })
-
-  private def densityDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/v29_graph/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** The v29 fixture's hub-clone append history: ~1/16 of the corpus
     * (outside the probe panel) each gets `clonesPer` near-duplicate
@@ -1035,8 +933,7 @@ object GraphAnn {
     { (s, d) =>
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
         .cache()
-      val dir = densityDirFor(d)
-      graft.util.StoreLease.break(s, dir) // fixture dir
+      val dir = graft.util.Fixtures.store(s, "v29_graph", d)
       graft.util.Fs.rmTree(s, dir)
       ensure(emb, dir): Unit
       val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
@@ -1058,12 +955,8 @@ object GraphAnn {
       val queries = Similarity.probePanel(emb)
       val exactLive = Similarity.bruteForceTop1(queries, live)
         .localCheckpoint(eager = true)
-      val approx = beamSearch(queries, e2, live, k = 1)
-        .select(col("qid"), col("nid").as("nid_g"))
-      val joined = exactLive.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_g")).count().toDouble
-      joined.unpersist()
+      val recallOk =
+        Similarity.recall(exactLive, beamSearch(queries, e2, live, k = 1)) >= 0.6
       val builds0 = buildsThisProcess
       ensure(live, dir): Unit
       val noRebuild = buildsThisProcess == builds0
@@ -1071,21 +964,9 @@ object GraphAnn {
       // gate-side only
       val exact = Similarity.bruteForceTop1(queries, emb)
       emb.unpersist()
-      exact.filter(lit(autoFired && fixedPoint && nQ > 0 &&
-          hits / nQ >= 0.6 && noRebuild))
-        .select(col("qid"), col("nid"), col("sim"))
+      exact.filter(lit(autoFired && fixedPoint && recallOk && noRebuild))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin),
+    oracle = Some(Similarity.top1OracleSql()),
     // store-ops-only bench variant: build, the clone-append history
     // (auto-repair included — it IS the maintenance path under test),
     // one manual repair, beam search — without the brute-force truth
@@ -1093,8 +974,7 @@ object GraphAnn {
     benchFn = Some { (s, d) =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding")).cache()
-      val dir = densityDirFor(d)
-      graft.util.StoreLease.break(s, dir)
+      val dir = graft.util.Fixtures.store(s, "v29_graph", d)
       graft.util.Fs.rmTree(s, dir)
       ensure(emb, dir): Unit
       val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)

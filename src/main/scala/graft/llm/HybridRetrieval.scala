@@ -140,7 +140,7 @@ object HybridRetrieval {
          |dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df
          |          FROM post GROUP BY term),
          |qterms AS (SELECT DISTINCT doc AS qid, term FROM post
-         |           WHERE doc < 40),
+         |           WHERE doc < ${Similarity.ProbePanelSize}),
          |bm AS (
          |  SELECT q.qid, p.doc,
          |         round(sum(ln(1 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
@@ -157,7 +157,7 @@ object HybridRetrieval {
          |                ORDER BY score4 DESC, doc) AS rank
          |       FROM bm QUALIFY rank <= 10),
          |qv AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-         |       FROM embeddings WHERE vec_id < 40),
+         |       FROM embeddings WHERE vec_id < ${Similarity.ProbePanelSize}),
          |cs AS (SELECT qid, e.vec_id AS doc,
          |              round(list_cosine_similarity(qv,
          |                CAST(e.embedding AS DOUBLE[])), 6) AS sim

@@ -30,8 +30,8 @@ object Similarity {
     * brute-force work O(|panel| × N) = O(N) as the corpus grows; a
     * fraction panel made the same gates O(N²/50), which is exactly the
     * quadratic creep these queries exist to police in other operators.
-    * Deterministic (no sampling), identical in every DuckDB oracle
-    * (`WHERE vec_id < 40`).
+    * Deterministic (no sampling); every DuckDB oracle takes its panel
+    * bound from this constant.
     */
   val ProbePanelSize = 40
 
@@ -77,8 +77,68 @@ object Similarity {
         .filter(col("qid") =!= col("nid"))
         .withColumn("sim", round(cosine(col("qv"), col("nv")), 6)), k)
 
-  def bruteForceTop1(queries: DataFrame, corpus: DataFrame): DataFrame =
-    bruteForceTopK(queries, corpus, 1).drop("rank")
+  /** Exact top-1 per query, the truth every ANN gate measures against.
+    * With `filterCol` each query sees only corpus rows sharing its
+    * value (a filter-keyed equi-join instead of the cross join). */
+  def bruteForceTop1(queries: DataFrame, corpus: DataFrame,
+      filterCol: Option[String] = None): DataFrame = filterCol match {
+    case None => bruteForceTopK(queries, corpus, 1).drop("rank")
+    case Some(c) =>
+      val scored = queries
+        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
+          col(c).as("__f"))
+        .join(corpus.select(col("vec_id").as("nid"),
+          col("embedding").as("nv"), col(c).as("__f")), "__f")
+        .filter(col("qid") =!= col("nid"))
+        .withColumn("sim", round(cosine(col("qv"), col("nv")), 6))
+      topKPerQuery(scored, 1).drop("rank")
+  }
+
+  /** [[bruteForceTop1]]'s DuckDB oracle, the one text of the top-1
+    * truth: each probe-panel query's nearest neighbour by rounded
+    * cosine (self excluded, ties to the lower id). `live` scores over
+    * the rows the delete gates keep (`vec_id % 10 <> 3`, their
+    * tombstoned set is the rest); `filterCol` is the truth's. */
+  def top1OracleSql(live: Boolean = false,
+      filterCol: Option[String] = None): String = {
+    val f = filterCol.fold("")(c => s", $c")
+    val (head, corpus, nv) =
+      if (live) (
+        s"""WITH live AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v$f
+           |              FROM embeddings WHERE vec_id % 10 <> 3),
+           |q AS (SELECT vec_id AS qid, v AS qv$f
+           |      FROM live WHERE vec_id < $ProbePanelSize)""".stripMargin,
+        "live", "e.v")
+      else (
+        s"""WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv$f
+           |           FROM embeddings WHERE vec_id < $ProbePanelSize)""".stripMargin,
+        "embeddings", "CAST(e.embedding AS DOUBLE[])")
+    val from = filterCol.fold(s"q, $corpus e WHERE e.vec_id != qid")(c =>
+      s"q JOIN $corpus e ON e.$c = q.$c AND e.vec_id != qid")
+    s"""$head,
+       |s AS (SELECT qid, e.vec_id AS nid,
+       |             round(list_cosine_similarity(qv, $nv), 6) AS sim
+       |      FROM $from),
+       |r AS (SELECT qid, nid, sim,
+       |             row_number() OVER (PARTITION BY qid
+       |                                ORDER BY sim DESC, nid) AS rn
+       |      FROM s)
+       |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin
+  }
+
+  /** The (qid, nid) pairs of a probe-panel-sized result, collected. */
+  def pairs(top: DataFrame): Set[(Long, Long)] =
+    top.select(col("qid"), col("nid")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** The recall every ANN gate checks against its bar: the share of
+    * `truth`'s (qid, nid) rows that `approx` also returns. A query
+    * missing from `approx` is a miss, and empty truth reads 0, which
+    * closes every gate. */
+  def recall(truth: DataFrame, approx: DataFrame): Double = {
+    val t = pairs(truth)
+    if (t.isEmpty) 0.0 else (t & pairs(approx)).size.toDouble / t.size
+  }
 
   /** Seeded Rademacher (±1) hyperplane signs: bit b of the sketch is
     * sign(plane_b · v). The plane matrix (bands·bitsPerBand × dim) is
@@ -312,18 +372,7 @@ object Similarity {
   /** Brute-force exact top-1 oracle vs DuckDB list_cosine_similarity.
     * Query set = the fixed probe panel; corpus = all.
     */
-  val brute = QueryDef.sql(
-    "v1_cosine_top1",
-    """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-      |           FROM embeddings WHERE vec_id < 40),
-      |s AS (SELECT qid, e.vec_id AS nid,
-      |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-      |      FROM q, embeddings e WHERE e.vec_id != qid),
-      |r AS (SELECT qid, nid, sim,
-      |             row_number() OVER (PARTITION BY qid
-      |                                ORDER BY sim DESC, nid) AS rn
-      |      FROM s)
-      |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin) {
+  val brute = QueryDef.sql("v1_cosine_top1", top1OracleSql()) {
     (s, d) =>
       val emb = Tables.embeddings(s, d)
       bruteForceTop1(probePanel(emb), emb)
@@ -348,30 +397,14 @@ object Similarity {
     { (s, d) =>
       val emb = Tables.embeddings(s, d).cache()
       val queries = probePanel(emb)
-      // one brute-force pass serves both the recall join and the output
+      // one brute-force pass serves both the recall and the output
       // (localCheckpoint: no lingering persist to leak, blocks GC-clean)
       val exact = bruteForceTop1(queries, emb).localCheckpoint(eager = true)
-      val approx = lshTop1(queries, emb)
-        .select(col("qid"), col("nid").as("nid_lsh"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_lsh")).count().toDouble
-      val recall = hits / nQ
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(recall >= 0.7 && nQ > 0))
-        .select(col("qid"), col("nid"), col("sim"))
+      val ok = recall(exact, lshTop1(queries, emb)) >= 0.7
+      emb.unpersist()
+      exact.filter(lit(ok))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin),
+    oracle = Some(top1OracleSql()),
     benchEligible = false)
 
   /** Embedding-cosine near-dup detection: pairs above a high cosine
@@ -419,30 +452,14 @@ object Similarity {
     { (s, d) =>
       val emb = Tables.embeddings(s, d).cache()
       val queries = probePanel(emb)
-      // one brute-force pass serves both the recall join and the output
+      // one brute-force pass serves both the recall and the output
       // (localCheckpoint: no lingering persist to leak, blocks GC-clean)
       val exact = bruteForceTop1(queries, emb).localCheckpoint(eager = true)
-      val approx = ivfTop1(queries, emb)
-        .select(col("qid"), col("nid").as("nid_ivf"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_ivf")).count().toDouble
-      val recall = hits / nQ
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(recall >= 0.6 && nQ > 0))
-        .select(col("qid"), col("nid"), col("sim"))
+      val ok = recall(exact, ivfTop1(queries, emb)) >= 0.6
+      emb.unpersist()
+      exact.filter(lit(ok))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin),
+    oracle = Some(top1OracleSql()),
     benchEligible = false)
 
   /** Brute-force top-3 oracle: the same probe set as v1 with full
@@ -452,8 +469,8 @@ object Similarity {
     */
   val bruteK = QueryDef.sql(
     "v5_cosine_topk",
-    """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-      |           FROM embeddings WHERE vec_id < 40),
+    s"""WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+      |           FROM embeddings WHERE vec_id < $ProbePanelSize),
       |s AS (SELECT qid, e.vec_id AS nid,
       |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
       |      FROM q, embeddings e WHERE e.vec_id != qid),
@@ -577,28 +594,12 @@ object Similarity {
       val meanErr = recon.agg(avg(errRow)).head().getDouble(0)
       val queries = probePanel(emb)
       val exact = bruteForceTop1(queries, emb).localCheckpoint(eager = true)
-      val approx = bruteForceTop1(queries,
-          recon.select(col("vec_id"), col("embedding")))
-        .select(col("qid"), col("nid").as("nid_q"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_q")).count().toDouble
-      joined.unpersist(); recon.unpersist()
-      exact.filter(lit(
-          hits / nQ >= 0.9 && meanErr <= scales.max / 2 && nQ > 0))
-        .select(col("qid"), col("nid"), col("sim"))
+      val recallOk = recall(exact, bruteForceTop1(queries,
+        recon.select(col("vec_id"), col("embedding")))) >= 0.9
+      recon.unpersist()
+      exact.filter(lit(recallOk && meanErr <= scales.max / 2))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin))
+    oracle = Some(top1OracleSql()))
 
   /** V8 — per-group embedding centroids: mean vector per label via
     * posexplode → (label, dim)-keyed partial→final average. The
@@ -878,12 +879,7 @@ object Similarity {
       val codebooks = pqTrain(emb, m = 16, k = 16)
       val queries = probePanel(emb)
       val exact = bruteForceTop1(queries, emb).localCheckpoint(eager = true)
-      val approx = pqTopK(queries, emb, codebooks, k = 1)
-        .select(col("qid"), col("nid").as("nid_q"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_q")).count().toDouble
-      joined.unpersist()
+      val recallOk = recall(exact, pqTopK(queries, emb, codebooks, k = 1)) >= 0.9
       // code-shape invariants: m bytes per row (codes are BINARY —
       // the bytes-per-vector at-rest contract), all codes < k
       val codesOk = udf((c: Array[Byte]) =>
@@ -892,20 +888,9 @@ object Similarity {
         .filter(!codesOk(col("codes"))).count()
       emb.unpersist()
       // `exact` is localCheckpointed — safe to release its input cache
-      exact.filter(lit(hits / nQ >= 0.9 && nQ > 0 && badCodes == 0))
-        .select(col("qid"), col("nid"), col("sim"))
+      exact.filter(lit(recallOk && badCodes == 0))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin))
+    oracle = Some(top1OracleSql()))
 
   // ------------------------------------------- IVF-PQ (residual IVFADC)
 
@@ -1113,12 +1098,7 @@ object Similarity {
         .cache()
       val queries = probePanel(emb)
       val exact = bruteForceTop1(queries, emb).localCheckpoint(eager = true)
-      val approx = ivfPqTopK(queries, emb, k = 1)
-        .select(col("qid"), col("nid").as("nid_q"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_q")).count().toDouble
-      joined.unpersist()
+      val recallOk = recall(exact, ivfPqTopK(queries, emb, k = 1)) >= 0.6
       // scan-bound invariant: the coarse cells must actually partition
       // the corpus — re-derive the (deterministic) cell assignment and
       // check the default 6-probe query scans at most 4/5 of the
@@ -1134,20 +1114,9 @@ object Similarity {
       val worstProbeFrac = cellHist.take(6).sum / corpusN
       val cellsOk = cellHist.length >= 8 && worstProbeFrac <= 0.8
       emb.unpersist()
-      exact.filter(lit(hits / nQ >= 0.6 && nQ > 0 && cellsOk))
-        .select(col("qid"), col("nid"), col("sim"))
+      exact.filter(lit(recallOk && cellsOk))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin))
+    oracle = Some(top1OracleSql()))
 
   // ------------------------------------------------ multi-vector MaxSim
 
@@ -1184,7 +1153,7 @@ object Similarity {
       }.mkString(", ") + ")"
     }.mkString(" + ")
     s"""WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS v
-       |           FROM embeddings WHERE vec_id < 40),
+       |           FROM embeddings WHERE vec_id < $ProbePanelSize),
        |c AS (SELECT vec_id AS nid, CAST(embedding AS DOUBLE[]) AS v
        |      FROM embeddings),
        |s AS (SELECT qid, nid, $score AS sim
@@ -1367,14 +1336,9 @@ object Similarity {
       val emb = Tables.embeddings(s, d).cache()
       val queries = probePanel(emb)
       val exact = maxSimTop1(queries, emb).localCheckpoint(eager = true)
-      val approx = maxSimAnnTopK(queries, emb, k = 1)
-        .select(col("qid"), col("nid").as("nid_ann"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_ann")).count().toDouble
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(hits / nQ >= 0.9 && nQ > 0))
-        .select(col("qid"), col("nid"), col("sim"))
+      val ok = recall(exact, maxSimAnnTopK(queries, emb, k = 1)) >= 0.9
+      emb.unpersist()
+      exact.filter(lit(ok)).select(col("qid"), col("nid"), col("sim"))
     },
     oracle = Some(maxSimOracleSql(16, 4)))
 
@@ -1609,19 +1573,20 @@ object Similarity {
     * Scale path: ANN shortlist (v2/v12) then bar+rank on candidates —
     * here the gated query IS the brute-force truth over the probe set.
     */
-  val hardNeg = QueryDef.sql(
-    "v15_hard_negatives",
-    """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-      |           FROM embeddings WHERE vec_id < 40),
-      |s AS (SELECT qid, e.vec_id AS nid,
-      |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-      |      FROM q, embeddings e WHERE e.vec_id != qid),
-      |r AS (SELECT qid, nid, sim,
-      |             row_number() OVER (PARTITION BY qid
-      |                                ORDER BY sim DESC, nid) AS rn
-      |      FROM s WHERE sim < 0.8)
-      |SELECT qid, CAST(rn AS INT) AS rank, nid, sim
-      |FROM r WHERE rn <= 5""".stripMargin) { (s, d) =>
+  private val hardNegOracleSql =
+    s"""WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
+       |           FROM embeddings WHERE vec_id < $ProbePanelSize),
+       |s AS (SELECT qid, e.vec_id AS nid,
+       |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
+       |      FROM q, embeddings e WHERE e.vec_id != qid),
+       |r AS (SELECT qid, nid, sim,
+       |             row_number() OVER (PARTITION BY qid
+       |                                ORDER BY sim DESC, nid) AS rn
+       |      FROM s WHERE sim < 0.8)
+       |SELECT qid, CAST(rn AS INT) AS rank, nid, sim
+       |FROM r WHERE rn <= 5""".stripMargin
+
+  val hardNeg = QueryDef.sql("v15_hard_negatives", hardNegOracleSql) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     hardNegativesExact(probePanel(emb), emb, bar = 0.8, k = 5)
   }
@@ -1671,27 +1636,12 @@ object Similarity {
       val queries = probePanel(emb)
       val exact = hardNegativesExact(queries, emb, bar = 0.8, k = 5)
         .localCheckpoint(eager = true)
-      val approx = hardNegativesAnn(queries, emb, bar = 0.8, k = 5)
-        .select(col("qid"), col("nid")).withColumn("__hit", lit(1))
-      val joined = exact.join(approx, Seq("qid", "nid"), "left").cache()
-      val nExact = joined.count().toDouble
-      val hits = joined.filter(col("__hit").isNotNull).count().toDouble
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(nExact > 0 && hits / nExact >= 0.7))
-        .select(col("qid"), col("rank"), col("nid"), col("sim"))
+      val ok = recall(exact,
+        hardNegativesAnn(queries, emb, bar = 0.8, k = 5)) >= 0.7
+      emb.unpersist()
+      exact.filter(lit(ok))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s WHERE sim < 0.8)
-        |SELECT qid, CAST(rn AS INT) AS rank, nid, sim
-        |FROM r WHERE rn <= 5""".stripMargin))
+    oracle = Some(hardNegOracleSql))
 
   /** FILTERED ANN — vector search under a metadata predicate (here:
     * same `label`), the capability every production vector store
@@ -1732,20 +1682,6 @@ object Similarity {
     topKPerQuery(cands, k)
   }
 
-  /** Exact within-filter brute top-1: label-keyed equi-join instead of
-    * a cross join — the truth side of v18. */
-  def bruteForceTop1Filtered(queries: DataFrame, corpus: DataFrame,
-      filterCol: String): DataFrame = {
-    val scored = queries
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        col(filterCol).as("__f"))
-      .join(corpus.select(col("vec_id").as("nid"),
-        col("embedding").as("nv"), col(filterCol).as("__f")), "__f")
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("sim", round(cosine(col("qv"), col("nv")), 6))
-    topKPerQuery(scored, 1).drop("rank")
-  }
-
   /** V18 — filtered-ANN recall gate, v4-hardened: output is the exact
     * within-label truth (DuckDB replays the label-join brute force),
     * emitted only when the PRE-FILTER ANN path reaches recall@1 ≥ 0.6
@@ -1758,30 +1694,13 @@ object Similarity {
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label")).cache()
       val queries = probePanel(emb)
-      val exact = bruteForceTop1Filtered(queries, emb, "label")
+      val exact = bruteForceTop1(queries, emb, Some("label"))
         .localCheckpoint(eager = true)
-      val approx = filteredIvfTopK(queries, emb, 1, "label")
-        .select(col("qid"), col("nid").as("nid_ann"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_ann")).count().toDouble
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(nQ > 0 && hits / nQ >= 0.6))
-        .select(col("qid"), col("nid"), col("sim"))
+      val ok = recall(exact, filteredIvfTopK(queries, emb, 1, "label")) >= 0.6
+      emb.unpersist()
+      exact.filter(lit(ok))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
-        |                  label
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q JOIN embeddings e
-        |        ON e.label = q.label AND e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin),
+    oracle = Some(top1OracleSql(filterCol = Some("label"))),
     benchEligible = false)
 
   def all: Seq[QueryDef] =

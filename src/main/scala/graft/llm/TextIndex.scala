@@ -527,10 +527,6 @@ object TextIndex {
   // tx1/tx2 — lifecycle + search gates under full DuckDB oracles
   // ------------------------------------------------------------------
 
-  private def storeDirFor(sfDir: String, tag: String): String =
-    graft.util.Fixtures.dir + s"/text_index_${tag}_" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** tx1 — text-index ingest lifecycle: build on ⅔ of the documents,
     * append the other ⅓, merge-on-read delete every indexable corpus
     * doc with id % 5 = 0, compact. In-query gates beyond the oracle:
@@ -551,8 +547,7 @@ object TextIndex {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 3 =!= 0)
       val batch = docs.filter(col("doc_id") % 3 === 0)
-      val dir = storeDirFor(d, "tx1")
-      graft.util.StoreLease.break(s, dir) // fixture dir
+      val dir = graft.util.Fixtures.store(s, "text_index_tx1", d)
       graft.util.Fs.rmTree(s, dir)
       build(corpus, dir)
       val b0 = buildsThisProcess
@@ -627,8 +622,7 @@ object TextIndex {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 3 =!= 0)
       val batch = docs.filter(col("doc_id") % 3 === 0)
-      val dir = storeDirFor(d, "tx1")
-      graft.util.StoreLease.break(s, dir)
+      val dir = graft.util.Fixtures.store(s, "text_index_tx1", d)
       graft.util.Fs.rmTree(s, dir)
       build(corpus, dir)
       append(batch, dir)
@@ -655,8 +649,7 @@ object TextIndex {
     "tx2_text_index_bm25",
     { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val dir = storeDirFor(d, "tx2")
-      graft.util.StoreLease.break(s, dir) // fixture dir
+      val dir = graft.util.Fixtures.store(s, "text_index_tx2", d)
       graft.util.Fs.rmTree(s, dir)
       build(docs, dir)
       val panel = docs.filter(col("doc_id") < 40)
@@ -710,7 +703,7 @@ object TextIndex {
     "tx3_text_index_phrase",
     { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val dir = storeDirFor(d, "tx2")
+      val dir = graft.util.Fixtures.store(s, "text_index_tx2", d)
       ensure(docs, dir)
       val panel = docs.filter(col("doc_id") < 20 &&
           col("text").isNotNull && length(col("text")) > 0)

@@ -363,149 +363,80 @@ object VectorIndex {
       k, nProbe, shortlist, filterCol = ix.filterCol)
   }
 
-  private def indexDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/v19_index/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+  /** The corpus columns a layout's gate reads. */
+  private def gateCorpus(s: SparkSession, d: String,
+      filterCol: Option[String]): DataFrame =
+    Tables.embeddings(s, d)
+      .select((Seq("vec_id", "embedding") ++ filterCol).map(col): _*)
 
-  private def filteredDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/v23_index/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** V19 — persisted-index ANN recall gate, v12-hardened: the emitted
-    * rows are the exact brute-force truth over the fixed probe panel
-    * (DuckDB hash-verifies them — same oracle as v1/v12); they emit
-    * only when searching the STORED index reaches recall@1 ≥ 0.6 (the
-    * IVF bar) AND the store is complete (codes count == corpus count ==
-    * persisted meta count). First run builds the index on disk; every
-    * later run of the same corpus fingerprint-validates and goes
-    * straight to search — warm bench reps measure the amortized
-    * search-only path, which is the shape a production user runs.
+  /** V19/V23 — persisted-index ANN recall gate, v12-hardened, one body
+    * for both layouts: the emitted rows are the exact brute-force truth
+    * over the fixed probe panel (within-label for v23, v18's truth —
+    * DuckDB hash-verifies them); they emit only when searching the
+    * STORED index reaches recall@1 ≥ 0.6 (the IVF bar) AND the store is
+    * complete (codes count == corpus count == persisted meta count).
+    * First run builds the index on disk; every later run of the same
+    * corpus fingerprint-validates and goes straight to search — warm
+    * bench reps measure the amortized search-only path, which is the
+    * shape a production user runs. v23 is v18's pre-filter semantics
+    * delivered on the (label, cell)-partitioned store.
     */
-  val persisted = QueryDef(
-    "v19_persisted_ann_recall",
+  private def persistedGate(name: String, tag: String,
+      filterCol: Option[String]): QueryDef = QueryDef(
+    name,
     { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .cache()
-      // fixture-owned store dir: clear a lease left by a KILLED
-      // previous run (production stores must fail loud instead)
-      graft.util.StoreLease.break(s, indexDirFor(d))
-      val ix = ensure(emb, indexDirFor(d))
+      val emb = gateCorpus(s, d, filterCol).cache()
+      val ix = ensure(emb, graft.util.Fixtures.store(s, tag, d),
+        filterCol = filterCol)
       val queries = Similarity.probePanel(emb)
-      val exact = Similarity.bruteForceTop1(queries, emb)
+      val exact = Similarity.bruteForceTop1(queries, emb, filterCol)
         .localCheckpoint(eager = true)
-      val approx = search(ix, queries, emb, k = 1)
-        .select(col("qid"), col("nid").as("nid_ix"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_ix")).count().toDouble
+      val recallOk =
+        Similarity.recall(exact, search(ix, queries, emb, k = 1)) >= 0.6
       val nStored = ix.codes.count()
       val nCorpus = emb.count()
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(hits / nQ >= 0.6 && nQ > 0 &&
-          nStored == nCorpus && ix.nVectors == nCorpus))
-        .select(col("qid"), col("nid"), col("sim"))
+      emb.unpersist()
+      exact.filter(lit(recallOk && nStored == nCorpus &&
+          ix.nVectors == nCorpus))
     },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q, embeddings e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin))
+    oracle = Some(Similarity.top1OracleSql(filterCol = filterCol)))
 
-  /** V23 — pre-filtered search over the PERSISTED (label, cell)-
-    * partitioned store: v18's pre-filter semantics delivered on v19's
-    * build-once index (the layout v18's scaladoc promised). Emitted
-    * rows are the exact within-label truth (v18's DuckDB oracle);
-    * they emit only when the stored-index filtered search reaches
-    * recall@1 ≥ 0.6 and the store is complete.
-    */
-  val persistedFiltered = QueryDef(
-    "v23_persisted_filtered_ann",
-    { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), col("label")).cache()
-      graft.util.StoreLease.break(s, filteredDirFor(d)) // fixture dir
-      val ix = ensure(emb, filteredDirFor(d), filterCol = Some("label"))
-      val queries = Similarity.probePanel(emb)
-      val exact = Similarity.bruteForceTop1Filtered(queries, emb, "label")
-        .localCheckpoint(eager = true)
-      val approx = search(ix, queries, emb, k = 1)
-        .select(col("qid"), col("nid").as("nid_ix"))
-      val joined = exact.join(approx, Seq("qid"), "left").cache()
-      val nQ = joined.count().toDouble
-      val hits = joined.filter(col("nid") === col("nid_ix")).count().toDouble
-      val nStored = ix.codes.count()
-      val nCorpus = emb.count()
-      joined.unpersist(); emb.unpersist()
-      exact.filter(lit(hits / nQ >= 0.6 && nQ > 0 &&
-          nStored == nCorpus && ix.nVectors == nCorpus))
-        .select(col("qid"), col("nid"), col("sim"))
-    },
-    oracle = Some(
-      """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv,
-        |                  label
-        |           FROM embeddings WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS sim
-        |      FROM q JOIN embeddings e
-        |        ON e.label = q.label AND e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin))
+  val persisted = persistedGate("v19_persisted_ann_recall", "v19_index", None)
+  val persistedFiltered =
+    persistedGate("v23_persisted_filtered_ann", "v23_index", Some("label"))
 
-  private def deleteDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/v25_index/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** V25 — index DELETION + COMPACTION: the maintenance story every
-    * long-lived vector store needs (GDPR erasure, re-crawl retirement).
-    * Builds the v19-shaped store on the full corpus, tombstones every
+  /** V25/V27 — index DELETION + COMPACTION, one body for both layouts:
+    * the maintenance story every long-lived vector store needs (GDPR
+    * erasure, re-crawl retirement; v26 is the graph index's). Builds
+    * the v19/v23-shaped store on the full corpus, tombstones every
     * vec_id ≡ 3 (mod 10), and gates, in order:
-    *   1. merge-on-read: searching the tombstoned store reaches
-    *      recall@1 ≥ 0.6 against the LIVE brute-force truth and never
-    *      returns a deleted id;
-    *   2. compaction folds the tombstones away with ONLY the affected
-    *      cell partitions rewritten, after which the same search
-    *      returns the IDENTICAL result set (merge-on-read ==
-    *      merge-on-write);
+    *   1. merge-on-read: the loaded codes relation holds no tombstoned
+    *      nid, searching the tombstoned store reaches recall@1 ≥ 0.6
+    *      against the LIVE brute-force truth (within-label for v27)
+    *      and never returns a deleted id;
+    *   2. compaction folds the tombstones away (no tombstones left)
+    *      with ONLY the affected cell (or (label, cell)) partitions
+    *      rewritten, after which the same search returns the IDENTICAL
+    *      result set (merge-on-read == merge-on-write);
     *   3. the incrementally-maintained fingerprint is exact: ensure()
     *      over the live corpus validates the compacted store WITHOUT a
-    *      rebuild (buildsThisProcess unchanged), and counts reconcile.
+    *      rebuild (buildsThisProcess unchanged; label participates in
+    *      the v27 fingerprint), and counts reconcile.
     * Emitted rows are the exact live-corpus truth — DuckDB replays
-    * them over `vec_id % 10 <> 3` (v19's oracle with the live filter).
+    * them over `vec_id % 10 <> 3` (v19's or v23's oracle with the live
+    * filter).
     */
-  val deleteCompact = QueryDef(
-    "v25_index_delete_compact",
+  private def deleteGate(name: String, tag: String,
+      filterCol: Option[String]): QueryDef = QueryDef(
+    name,
     { (s, d) =>
-      val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .cache()
-      val dir = deleteDirFor(d)
-      graft.util.StoreLease.break(s, dir) // fixture dir
-      build(emb, dir)
+      val emb = gateCorpus(s, d, filterCol).cache()
+      val dir = graft.util.Fixtures.store(s, tag, d)
+      build(emb, dir, filterCol = filterCol)
       val deleted = emb.filter(col("vec_id") % 10 === 3)
       val live = emb.filter(col("vec_id") % 10 =!= 3)
       delete(deleted, dir)
       val ixT = load(s, dir)
-      val queries = Similarity.probePanel(live)
-      val exact = Similarity.bruteForceTop1(queries, live)
-        .localCheckpoint(eager = true)
-      def resultSet(ix: Loaded): Set[(Long, Long)] =
-        search(ix, queries, live, k = 1)
-          .select(col("qid"), col("nid")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val resT = resultSet(ixT)
-      val deletedIds = deleted.select("vec_id").collect()
-        .map(_.getLong(0)).toSet
-      val noDeletedServed = resT.forall { case (_, nid) =>
-        !deletedIds.contains(nid)
-      }
       // the FALSIFIABLE merge-on-read check: the loaded codes relation
       // itself must contain no tombstoned nid. (noDeletedServed alone
       // is vacuous here — search() re-ranks by joining the LIVE corpus,
@@ -513,156 +444,57 @@ object VectorIndex {
       val mergeOnReadApplied = ixT.codes
         .join(deleted.select(col("vec_id").as("nid")), Seq("nid"),
           "left_semi").count() == 0
+      val queries = Similarity.probePanel(live)
+      val exact = Similarity.bruteForceTop1(queries, live, filterCol)
+        .localCheckpoint(eager = true)
+      def result(ix: Loaded) = search(ix, queries, live, k = 1)
+        .select(col("qid"), col("nid")).localCheckpoint(eager = true)
+      val resT = result(ixT)
+      val recallOk = Similarity.recall(exact, resT) >= 0.6
+      val pairsT = Similarity.pairs(resT)
+      val deletedIds = deleted.select("vec_id").collect()
+        .map(_.getLong(0)).toSet
+      val noDeletedServed = pairsT.forall { case (_, nid) =>
+        !deletedIds.contains(nid)
+      }
       compact(s, dir)
       val builds0 = buildsThisProcess
-      val ixC = ensure(live, dir)
+      val ixC = ensure(live, dir, filterCol = filterCol)
       val noRebuild = buildsThisProcess == builds0
-      val resC = resultSet(ixC)
+      val sameResult = pairsT == Similarity.pairs(result(ixC))
       val nLive = live.count()
       val nStored = ixC.codes.count()
-      val exactMap = exact.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val hits = resT.count { case (q, nid) => exactMap.get(q).contains(nid) }
-      val recallOk = exactMap.nonEmpty &&
-        hits.toDouble / exactMap.size >= 0.6
+      val noTombLeft = !graft.util.Fs.exists(s, s"$dir/tombstones")
       emb.unpersist()
       exact.filter(lit(recallOk && noDeletedServed && mergeOnReadApplied &&
-          resT == resC && noRebuild && nStored == nLive &&
+          sameResult && noRebuild && noTombLeft && nStored == nLive &&
           ixC.nVectors == nLive))
-        .select(col("qid"), col("nid"), col("sim"))
     },
-    oracle = Some(
-      """WITH live AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |              FROM embeddings WHERE vec_id % 10 <> 3),
-        |q AS (SELECT vec_id AS qid, v AS qv FROM live WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, e.v), 6) AS sim
-        |      FROM q, live e WHERE e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin),
+    oracle = Some(Similarity.top1OracleSql(live = true, filterCol = filterCol)),
     // store-ops-only bench variant: build, delete, tombstoned search,
     // compact, ensure, compacted search — without the brute-force
     // truth side and result-set reconciliations (Verify runs the
     // full-gate form above)
     benchFn = Some { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding")).cache()
-      val dir = deleteDirFor(d)
-      graft.util.StoreLease.break(s, dir)
-      build(emb, dir)
+      val emb = gateCorpus(s, d, filterCol).cache()
+      val dir = graft.util.Fixtures.store(s, tag, d)
+      build(emb, dir, filterCol = filterCol)
       val deleted = emb.filter(col("vec_id") % 10 === 3)
       val live = emb.filter(col("vec_id") % 10 =!= 3)
       delete(deleted, dir)
       val queries = Similarity.probePanel(live)
       search(load(s, dir), queries, live, k = 1).count(): Unit
       compact(s, dir)
-      val ixC = ensure(live, dir)
+      val ixC = ensure(live, dir, filterCol = filterCol)
       val out = search(ixC, queries, live, k = 1)
         .localCheckpoint(eager = true)
       emb.unpersist()
       out
     })
 
-  private def filteredDeleteDirFor(sfDir: String): String =
-    graft.util.Fixtures.dir + "/v27_index/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-
-  /** V27 — deletion + compaction for the FILTERED (label, cell) store,
-    * completing the maintenance matrix (v25 = plain store, v26 = graph
-    * index): tombstone every vec_id ≡ 3 (mod 10), then gate
-    *   1. falsifiable merge-on-read (no tombstoned nid in the loaded
-    *      codes relation),
-    *   2. filtered search over the tombstoned store reaches within-
-    *      label recall@1 ≥ 0.6 vs the LIVE truth,
-    *   3. compaction rewrites only affected (label, cell) pairs and
-    *      the same search returns the IDENTICAL result set (pure fold,
-    *      no repair — merge-on-read == merge-on-write),
-    *   4. ensure() over the live corpus validates WITHOUT
-    *      rebuild (label participates in the XOR fingerprint) and
-    *      counts reconcile.
-    * Emitted rows are the exact live within-label truth — v23's oracle
-    * with the live filter. */
-  val filteredDeleteCompact = QueryDef(
-    "v27_filtered_delete_compact",
-    { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), col("label")).cache()
-      val dir = filteredDeleteDirFor(d)
-      graft.util.StoreLease.break(s, dir) // fixture dir
-      graft.util.Fs.rmTree(s, dir)
-      build(emb, dir, filterCol = Some("label"))
-      val deleted = emb.filter(col("vec_id") % 10 === 3)
-      val live = emb.filter(col("vec_id") % 10 =!= 3).cache()
-      delete(deleted, dir)
-      val ixT = load(s, dir)
-      val mergeOnReadApplied = ixT.codes
-        .join(deleted.select(col("vec_id").as("nid")), Seq("nid"),
-          "left_semi").count() == 0
-      val queries = Similarity.probePanel(live)
-      val exact = Similarity.bruteForceTop1Filtered(queries, live, "label")
-        .localCheckpoint(eager = true)
-      val exactMap = exact.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      def resultSet(ix: Loaded): Set[(Long, Long)] =
-        search(ix, queries, live, k = 1)
-          .select(col("qid"), col("nid")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val resT = resultSet(ixT)
-      compact(s, dir)
-      val builds0 = buildsThisProcess
-      val ixC = ensure(live, dir, filterCol = Some("label"))
-      val noRebuild = buildsThisProcess == builds0
-      val resC = resultSet(ixC)
-      val nLive = live.count()
-      val nStored = ixC.codes.count()
-      val hits = resT.count { case (q, nid) => exactMap.get(q).contains(nid) }
-      val recallOk = exactMap.nonEmpty &&
-        hits.toDouble / exactMap.size >= 0.6
-      val noTombLeft = !graft.util.Fs.exists(s, s"$dir/tombstones")
-      emb.unpersist(); live.unpersist()
-      exact.filter(lit(recallOk && mergeOnReadApplied && resT == resC &&
-          noRebuild && noTombLeft && nStored == nLive &&
-          ixC.nVectors == nLive))
-        .select(col("qid"), col("nid"), col("sim"))
-    },
-    oracle = Some(
-      """WITH live AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |                     label
-        |              FROM embeddings WHERE vec_id % 10 <> 3),
-        |q AS (SELECT vec_id AS qid, v AS qv, label
-        |      FROM live WHERE vec_id < 40),
-        |s AS (SELECT qid, e.vec_id AS nid,
-        |             round(list_cosine_similarity(qv, e.v), 6) AS sim
-        |      FROM q JOIN live e
-        |        ON e.label = q.label AND e.vec_id != qid),
-        |r AS (SELECT qid, nid, sim,
-        |             row_number() OVER (PARTITION BY qid
-        |                                ORDER BY sim DESC, nid) AS rn
-        |      FROM s)
-        |SELECT qid, nid, sim FROM r WHERE rn = 1""".stripMargin),
-    // store-ops-only bench variant (see v25's) for the filtered store
-    benchFn = Some { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding"), col("label")).cache()
-      val dir = filteredDeleteDirFor(d)
-      graft.util.StoreLease.break(s, dir)
-      graft.util.Fs.rmTree(s, dir)
-      build(emb, dir, filterCol = Some("label"))
-      val deleted = emb.filter(col("vec_id") % 10 === 3)
-      val live = emb.filter(col("vec_id") % 10 =!= 3).cache()
-      delete(deleted, dir)
-      val queries = Similarity.probePanel(live)
-      search(load(s, dir), queries, live, k = 1).count(): Unit
-      compact(s, dir)
-      val ixC = ensure(live, dir, filterCol = Some("label"))
-      val out = search(ixC, queries, live, k = 1)
-        .localCheckpoint(eager = true)
-      emb.unpersist(); live.unpersist()
-      out
-    })
+  val deleteCompact = deleteGate("v25_index_delete_compact", "v25_index", None)
+  val filteredDeleteCompact =
+    deleteGate("v27_filtered_delete_compact", "v27_index", Some("label"))
 
   def all: Seq[QueryDef] =
     Seq(persisted, persistedFiltered, deleteCompact, filteredDeleteCompact)

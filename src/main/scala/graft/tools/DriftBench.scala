@@ -101,7 +101,6 @@ object DriftBench {
           .select(col("doc_id"), col("text")).localCheckpoint(true)
         val nCorpus = corpus.count()
         val dir = s"$root/tick_x$f"
-        graft.util.StoreLease.break(spark, dir) // fixture dir
         graft.util.Fs.rmTree(spark, dir)
         graft.llm.DedupIndex.build(corpus, dir, threshold = 0.9)
         val nKept = graft.llm.DedupIndex
@@ -203,7 +202,6 @@ object DriftBench {
       val checks = scala.collection.mutable.Map[String, Seq[Long]]()
       modes.foreach { case (mode, rEvery) =>
         val dir = s"$root/x${f}_$mode"
-        graft.util.StoreLease.break(spark, dir) // fixture dir
         graft.util.Fs.rmTree(spark, dir)
         graft.llm.DedupIndex.build(corpus, dir, threshold = 0.9)
         var probeRound = 0

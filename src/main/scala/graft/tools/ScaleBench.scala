@@ -137,7 +137,7 @@ object ScaleBench {
       outRoot: String): String = {
     // base-specific directory + validated marker: a stale synthesis for
     // a DIFFERENT base (or factor) must never be silently reused
-    val baseTag = baseSf.replaceAll("[^A-Za-z0-9._-]", "_")
+    val baseTag = graft.util.Fixtures.sanitise(baseSf)
     val out = s"$outRoot/$baseTag/x$f"
     val marker = s"$out/_SCALE_MARKER"
     val reusable = try {
@@ -262,7 +262,7 @@ object ScaleBench {
     * the events table is written (the skew set is join-only). */
   def synthesizeSkew(spark: SparkSession, baseSf: String, f: Int,
       outRoot: String): String = {
-    val baseTag = baseSf.replaceAll("[^A-Za-z0-9._-]", "_")
+    val baseTag = graft.util.Fixtures.sanitise(baseSf)
     val out = s"$outRoot/$baseTag/x${f}skew"
     val marker = s"$out/_SCALE_MARKER"
     val reusable = try {
@@ -309,7 +309,7 @@ object ScaleBench {
     * Only the two tables the store queries read are written. */
   def synthesizeStoreSkew(spark: SparkSession, baseSf: String, f: Int,
       outRoot: String): String = {
-    val baseTag = baseSf.replaceAll("[^A-Za-z0-9._-]", "_")
+    val baseTag = graft.util.Fixtures.sanitise(baseSf)
     val out = s"$outRoot/$baseTag/x${f}storeskew"
     val marker = s"$out/_SCALE_MARKER"
     val reusable = try {

@@ -25,6 +25,19 @@ object Fixtures {
     * `{{SF_TAG}}` placeholder; Verify substitutes this tag when it
     * writes oracle_sql.json, so the driver's DuckDB reads exactly the
     * files the same run's engine query wrote. */
-  def sfTag(sfDir: String): String =
-    runTag + "_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+  def sfTag(sfDir: String): String = runTag + "_" + sanitise(sfDir)
+
+  /** Path-safe form of an sf data directory: one path segment. */
+  def sanitise(sfDir: String): String =
+    sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** A Verify gate's own store dir, `<dir>/<tag>/<sanitised sf>`, with
+    * any lease a KILLED previous run left on it broken: the fixture
+    * owns this dir, where a production store must fail loud instead. */
+  def store(spark: org.apache.spark.sql.SparkSession, tag: String,
+      sfDir: String): String = {
+    val d = s"$dir/$tag/${sanitise(sfDir)}"
+    StoreLease.break(spark, d)
+    d
+  }
 }

@@ -373,7 +373,7 @@ class TextDedupSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), col("label"))
     val queries = Similarity.probePanel(emb)
-    val exact = Similarity.bruteForceTop1Filtered(queries, emb, "label")
+    val exact = Similarity.bruteForceTop1(queries, emb, Some("label"))
       .select(col("qid"), col("nid"))
     val nQ = exact.count().toDouble
     assert(nQ > 0)

@@ -115,7 +115,7 @@ class VectorIndexSpec extends SparkSpec {
       assert(labels(r.getLong(0)) == labels(r.getLong(1)),
         s"cross-label neighbor: $r")
     }
-    val exact = Similarity.bruteForceTop1Filtered(q, c, "label")
+    val exact = Similarity.bruteForceTop1(q, c, Some("label"))
       .select(col("qid"), col("nid")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val gotSet = got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -127,6 +127,43 @@ class VectorIndexSpec extends SparkSpec {
     VectorIndex.ensure(relabeled, s"$base/f", filterCol = Some("label"))
     assert(VectorIndex.buildsThisProcess == builds + 1)
     c.unpersist()
+  }
+
+  test("recall counts a query missing from the approximate side as a miss") {
+    import spark.implicits._
+    val truth = Seq((1L, 10L, 0.9), (2L, 20L, 0.8), (3L, 30L, 0.7),
+      (4L, 40L, 0.6)).toDF("qid", "nid", "sim")
+    // qid 2 answered wrongly, qid 4 not answered at all
+    val approx = Seq((1L, 10L), (2L, 21L), (3L, 30L)).toDF("qid", "nid")
+    assert(Similarity.recall(truth, approx) == 0.5)
+  }
+
+  test("recall over empty truth closes the gate") {
+    import spark.implicits._
+    val approx = Seq((1L, 10L)).toDF("qid", "nid")
+    val r = Similarity.recall(approx.filter(lit(false)), approx)
+    assert(r == 0.0 && !(r >= 0.6))
+  }
+
+  test("filtered brute-force top-1 is the unfiltered truth per label slice") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), col("embedding"), col("label")).cache()
+    def rows(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val filtered = rows(Similarity.bruteForceTop1(Similarity.probePanel(emb),
+      emb, filterCol = Some("label")))
+    val labelOf = emb.select(col("vec_id"), col("label")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(filtered.size == Similarity.ProbePanelSize)
+    filtered.foreach { case (q, n, _) =>
+      assert(labelOf(q) == labelOf(n), s"cross-label neighbour $q -> $n")
+    }
+    val perSlice = labelOf.values.toSet.flatMap { (l: Int) =>
+      val slice = emb.filter(col("label") === l)
+      rows(Similarity.bruteForceTop1(Similarity.probePanel(slice), slice))
+    }
+    assert(filtered == perSlice)
+    emb.unpersist()
   }
 
   test("store layout is cell-partitioned and codebooks round-trip exactly") {

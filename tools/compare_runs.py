@@ -1,9 +1,13 @@
 #!/usr/bin/env python3
 """Determinism double-run comparator: row-for-row EXCEPT ALL both
 directions (multiset equality) for every query output parquet present
-in two Verify output dirs. Usage: compare_runs.py dirA dirB
+in two Verify output dirs, then the two dirs' oracle_sql.json: every
+query whose oracle text differs once whitespace is normalised and the
+per-process run tag (`r<pid>_`) and the checkout's absolute
+`.../target/fixtures/` prefix (two checkouts differ in both) are masked.
+Exits 1 if any output or oracle differs. Usage: compare_runs.py dirA dirB
 """
-import sys, os, duckdb
+import sys, os, re, json, duckdb
 
 a, b = sys.argv[1], sys.argv[2]
 def outs(d):
@@ -37,4 +41,19 @@ for n in names:
         print(f"{n}: DIFF a-b={d1} b-a={d2}")
         bad += 1
 print(f"{len(names)} compared, {bad} differ")
-sys.exit(1 if bad else 0)
+
+def normalised(q):
+    q = re.sub(r"'/[^']*?/target/fixtures/", "'<fixtures>/", q)
+    q = re.sub(r"/r\d+_", "/r<pid>_", q)
+    return re.sub(r"\s+", " ", q).strip()
+
+def oracles(d):
+    with open(os.path.join(d, "oracle_sql.json")) as f:
+        return {n: normalised(q) for n, q in json.load(f).items()}
+
+oa, ob = oracles(a), oracles(b)
+diff = sorted(n for n in oa.keys() | ob.keys() if oa.get(n) != ob.get(n))
+for n in diff:
+    print(f"{n}: ORACLE SQL DIFF")
+print(f"{len(oa.keys() | ob.keys())} oracles compared, {len(diff)} differ")
+sys.exit(1 if bad or diff else 0)
